@@ -41,10 +41,4 @@ private[graft] object CacheOps {
     persistMaterialized(
       org.apache.spark.sql.graftbridge.Bridge.truncatePlan(df))
 
-  /** [[persistMaterializedDetached]] returning the row count (the
-    * [[persistMaterializedCounted]] contract) — for loop states whose
-    * predecessor is released right after the new state materializes. */
-  def persistMaterializedDetachedCounted(df: DataFrame): (DataFrame, Long) =
-    persistMaterializedCounted(
-      org.apache.spark.sql.graftbridge.Bridge.truncatePlan(df))
 }

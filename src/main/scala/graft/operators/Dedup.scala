@@ -390,115 +390,73 @@ object Dedup {
     * them), capped by maxIterations as a runaway guard. No driver
     * iteration over rows — labels stay distributed throughout. */
   def representatives(pairs: DataFrame, maxIterations: Int = 12): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // the edge list feeds every propagation sweep — persist it or each
-    // lazy iteration re-runs the whole upstream pair-discovery pipeline
-    val spark = pairs.sparkSession
+    // lazy iteration re-runs the whole upstream pair-discovery pipeline;
     // partitioned AND sorted on `b` — the key both hops of every sweep
     // join on (SMJ under the loop conf): the edge side is then
     // exchange-free and sort-free for the whole loop
-    val edgesCache = pairs.select(col("a"), col("b"))
-      .union(pairs.select(col("b").as("a"), col("a").as("b")))
-      .repartition(col("b")).sortWithinPartitions(col("b"))
-      .persist(MEMORY_AND_DISK)
-    // Right-sized cloned loop session — the ONE shared definition (see
-    // LoopSession for the measured rationale: ~1M edge rows/partition,
-    // AQE off, hash joins, codegen off on small graphs). The count is
-    // free: it materializes the edge cache the first sweep needs anyway.
-    val nEdges = edgesCache.count()
-    val loopSession = LoopSession.forGraph(spark, nEdges)
-    // plan truncation: each sweep composes `labels` into itself ~3×, so the
-    // LOGICAL plan grows exponentially in sweep count (with a large upstream
-    // plan — e.g. a kNN graph — sweep 10+ overflows the 2 GB plan-string
-    // limit and the optimizer re-walks gigabyte trees per action). Rebuild
-    // the frame over the persisted data as a flat scan of its execution
-    // RDD (InternalRows — no Row conversion): the plan resets to O(1) per
-    // sweep while the RDD lineage keeps full recompute-on-eviction
-    // recoverability (unlike localCheckpoint, which trades lineage away
-    // and dies with an executor). Truncating INTO the loop session also
-    // rebinds each sweep's execution to the loop conf.
-    def truncated(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graftbridge.Bridge.rebind(
-        org.apache.spark.sql.graftbridge.Bridge.truncatePlan(df), loopSession)
-    // truncated WITH layout (ADVICE r16): the flat LogicalRDD keeps the
-    // cached hashpartitioning(b)+sort metadata, so the sweeps' edge side
-    // stays exchange-free and sort-free AND the upstream pair-discovery
-    // plan (e.g. a whole kNN pipeline) is no longer re-embedded ~5x into
-    // every sweep's logical plan for the analyzer/CacheManager to re-walk
-    val edges = org.apache.spark.sql.graftbridge.Bridge.rebind(
-      org.apache.spark.sql.graftbridge.Bridge.truncatePlanKeepLayout(edgesCache),
-      loopSession)
-    // labels₀ stays lazy: it is two cheap aggregations over the cached edge
-    // list, and the first sweep's materialization doubles as the first
-    // convergence check — one action per sweep, none upfront
-    var labels = edges.groupBy(col("a").as("id"))
-      .agg(least(min(col("b")), first(col("a"))).as("rep"))
-    var cached: DataFrame = null // the persisted handle backing `labels`
-    var converged = false
-    var i = 1
-    while (!converged && i < maxIterations) {
-      val t0 = System.nanoTime()
-      // hop twice: take the min label among neighbours AND self. Label
-      // FLOODING is the convergence limiter on chain-shaped components —
-      // a pointer jump only shortcuts already-discovered label trees —
-      // so a second edge hop halves the sweep count where a second jump
-      // measurably does not. Each hop is ONE join + ONE aggregation: the
-      // node's own label enters the contribution stream as a self-loop
-      // row, so min(contrib) covers self without a second join back
-      // (every sequential AQE stage a sweep schedules costs more than
-      // the nodes-sized data it moves). prev rides the self-loop row
-      // (max ignores the edge rows' nulls) so the convergence check
-      // below is a scan of the cached result, not a second join job.
+    val spark = pairs.sparkSession
+    val (edgesCache, nEdges) = CacheOps.persistMaterializedCounted(
+      pairs.select(col("a"), col("b"))
+        .union(pairs.select(col("b").as("a"), col("a").as("b")))
+        .repartition(col("b")).sortWithinPartitions(col("b")))
+    try {
+      // Right-sized cloned loop session — the ONE shared definition (see
+      // LoopSession for the measured rationale)
+      val loopSession = LoopSession.forGraph(spark, nEdges)
+      // truncated WITH layout (ADVICE r16): the flat LogicalRDD keeps the
+      // cached hashpartitioning(b)+sort metadata, so the sweeps' edge side
+      // stays exchange-free and sort-free AND the upstream pair-discovery
+      // plan (e.g. a whole kNN pipeline) is not re-embedded into every
+      // sweep's logical plan
+      val edges = org.apache.spark.sql.graftbridge.Bridge.rebind(
+        org.apache.spark.sql.graftbridge.Bridge.truncatePlanKeepLayout(edgesCache),
+        loopSession)
+      // hop: take the min label among neighbours AND self in ONE join + ONE
+      // aggregation — the node's own label enters the contribution stream
+      // as a self-loop row, so min(rep) covers self without a second join
+      // back (every sequential stage a sweep schedules costs more than the
+      // nodes-sized data it moves). prev rides the self-loop row (max
+      // ignores the edge rows' nulls).
       def hop(l: DataFrame): DataFrame =
         edges.join(l, edges("b") === l("id"))
           .select(edges("a").as("id"), col("rep"), lit(null).cast("long").as("prev"))
           .unionByName(l.select(col("id"), col("rep"), col("prev")))
           .groupBy(col("id"))
           .agg(min(col("rep")).as("rep"), max(col("prev")).as("prev"))
-      val hopped = hop(hop(labels.select(col("id"), col("rep"),
-        col("rep").as("prev"))))
-      // double: follow the label's own label (path-halving)
-      val reps = hopped.select(col("id").as("rid"), col("rep").as("rrep"))
-      val next = hopped.join(reps, hopped("rep") === reps("rid"), "left")
-        .select(hopped("id"), hopped("prev"), least(hopped("rep"),
-          coalesce(col("rrep"), hopped("rep"))).as("rep"))
-        .persist(MEMORY_AND_DISK)
-      // materialize the WHOLE sweep into the cache before releasing its
-      // predecessor — a limit(1) probe here short-circuits, leaving the
-      // persist partial so deep graphs recompute lineage quadratically.
-      // The convergence count runs as a raw RDD job over the SAME
-      // execution RDD the truncation wraps: one full-scan action both
-      // populates the persist and yields the signal, with no second
-      // QueryExecution (analyze + optimize an aggregate plan) per sweep —
-      // on a small graph that plan work, not the data, dominated sweeps.
-      // Row layout is select(id, prev, rep) → ordinals (0, 1, 2).
-      val (nextT, nextRdd) =
-        org.apache.spark.sql.graftbridge.Bridge.truncatePlanWithRdd(next)
-      val changed = nextRdd.mapPartitions { it =>
-        var c = 0L
-        while (it.hasNext) {
-          val r = it.next()
-          if (r.isNullAt(1) || r.getLong(1) != r.getLong(2)) c += 1
-        }
-        Iterator.single(c)
-      }.fold(0L)(_ + _)
-      if (cached != null) cached.unpersist(blocking = false)
-      cached = next
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] sweep $i changed=$changed t=${(System.nanoTime() - t0) / 1e9}")
-      // truncate every sweep: the label frame is nodes-sized (the scan of
-      // the just-persisted cache costs microseconds), while an untruncated
-      // plan grows 3× per sweep and Catalyst re-optimizes the whole
-      // composed tree on every action — at 8 sweeps that's the dominant
-      // cost of the loop, not the data
-      labels = nextT.select(col("id"), col("rep"))
-      converged = changed == 0
-      i += 1
-    }
-    edgesCache.unpersist(blocking = false)
-    // hand back a caller-session view: the labels themselves are the
-    // (still-persisted) final sweep cache, shared across sessions
-    org.apache.spark.sql.graftbridge.Bridge.rebind(labels, spark)
+      // the convergence count is a raw RDD fold over the persisted state's
+      // execution RDD: one full-scan action both fills the cache and yields
+      // the signal, with no second QueryExecution (analyze + optimize an
+      // aggregate plan) per sweep — on a small graph that plan work, not
+      // the data, dominated sweeps. Row layout is (id, prev, rep).
+      val unchanged: DataFrame => Boolean = state =>
+        org.apache.spark.sql.graftbridge.Bridge.toRdd(state).mapPartitions { it =>
+          var c = 0L
+          while (it.hasNext) {
+            val r = it.next()
+            if (r.isNullAt(1) || r.getLong(1) != r.getLong(2)) c += 1
+          }
+          Iterator.single(c)
+        }.fold(0L)(_ + _) == 0L
+      LoopSession.sweep(spark,
+        edges.groupBy(col("a").as("id"))
+          .agg(least(min(col("b")), first(col("a"))).as("rep")),
+        maxIterations - 1,
+        finish = states => states.last.select(col("id"), col("rep"))) {
+        (_, labels, _) =>
+          // hop twice: label FLOODING is the convergence limiter on
+          // chain-shaped components (a pointer jump only shortcuts
+          // already-discovered label trees), so a second edge hop halves
+          // the sweep count where a second jump measurably does not
+          val hopped = hop(hop(labels.select(col("id"), col("rep"),
+            col("rep").as("prev"))))
+          // double: follow the label's own label (path-halving)
+          val reps = hopped.select(col("id").as("rid"), col("rep").as("rrep"))
+          LoopSession.Sweep(hopped.join(reps, hopped("rep") === reps("rid"), "left")
+            .select(hopped("id"), hopped("prev"), least(hopped("rep"),
+              coalesce(col("rrep"), hopped("rep"))).as("rep")), unchanged)
+      }._1
+    } finally edgesCache.unpersist(blocking = false)
   }
 
   // ---- exact repeated-substring removal -----------------------------------

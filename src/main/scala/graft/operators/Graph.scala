@@ -106,7 +106,7 @@ object Graph {
       .unionByName(e.select(col("dst").as("id"), lit(null).cast("long").as("c")))
       .groupBy(col("id")).agg(sum(col("c")).as("deg"))
       .persist(MEMORY_AND_DISK)
-    finishRanks(spark, loopRanks(nd, ranks => {
+    LoopSession.handBack(spark, loopRanks(nd, ranks => {
       // map-side: deg rides the rank row, so no per-iteration deg join
       val contribs = ranks.filter(col("deg").isNotNull)
         .select(col("id").as("csrc"), expr("rank div deg").as("contrib"))
@@ -147,7 +147,7 @@ object Graph {
       .select(col("id"), col("deg"),
         when(col("__seed").isNotNull, lit(tp)).otherwise(lit(0L)).as("tp"))
       .persist(MEMORY_AND_DISK)
-    finishRanks(spark, loopRanks(nd, ranks => {
+    LoopSession.handBack(spark, loopRanks(nd, ranks => {
       val contribs = ranks.filter(col("deg").isNotNull)
         .select(col("id").as("csrc"), expr("rank div deg").as("contrib"))
       e.join(contribs, e("src") === col("csrc"))
@@ -266,27 +266,6 @@ object Graph {
     ranks.select(col("id"), col("rank"))
   }
 
-  /** Materialize the composed loop and release the edges-sized caches:
-    * the result's lineage references the edge frame `iterations` times, so
-    * those caches must outlive the first (and only) evaluation — persist+
-    * count the node-sized ranks, THEN unpersist the inputs. The ranks are
-    * rebound to the CALLER session first (the labelPropagation contract:
-    * loop-session confs must not leak into downstream queries, and the
-    * caller's unpersist() must match the cache entry). */
-  private def finishRanks(caller: org.apache.spark.sql.SparkSession,
-                          ranks: DataFrame, release: Seq[DataFrame]): DataFrame =
-    try {
-      // materialize under the LOOP session (ranks is loop-bound — the
-      // composed loop must execute at loop width, AQE off), THEN hand the
-      // caller a caller-session view of the SAME plan: the CacheManager is
-      // shared and keyed on the canonical plan, so the rebound frame is a
-      // cache hit and its unpersist() releases the entry. DETACHED: the
-      // input releases right below would otherwise recache (and so
-      // invalidate) this freshly-built result entry.
-      val p = CacheOps.persistMaterializedDetached(ranks)
-      org.apache.spark.sql.graftbridge.Bridge.rebind(p, caller)
-    } finally release.foreach(_.unpersist(blocking = false))
-
   /** Persist a graph as ONE bucketed index table serving every analysis
     * family — build once, analyze many (the graph analogue of the
     * BM25/IVF persisted-index family): each sweep's edges⋈state join
@@ -379,7 +358,7 @@ object Graph {
                         table: String, iterations: Int = 5,
                         scale: Long = 1000000L): DataFrame = {
     val (ranks, nd) = indexRankPlan(spark, table, iterations, scale)
-    finishRanks(spark, ranks, Seq(nd))
+    LoopSession.handBack(spark, ranks, Seq(nd))
   }
 
   /** The composed (unmaterialized) loop plan over a [[buildGraphIndex]]
@@ -427,7 +406,7 @@ object Graph {
         .withColumn("dist", lit(0L))
       ssspFixpointLoop(spark, e, d0, sweeps)._1
     }
-    else finishRanks(spark, indexSsspPlan(spark, table, sources, sweeps), Nil)
+    else LoopSession.handBack(spark, indexSsspPlan(spark, table, sources, sweeps), Nil)
   }
 
   /** The composed (unmaterialized) sweep loop over a [[buildGraphIndex]]
@@ -458,8 +437,7 @@ object Graph {
     * (all keyed shuffles, nothing collected), and equal alive COUNTS
     * between sweeps prove set equality (monotonicity), so convergence
     * detection is the count the materializing persist already ran —
-    * no extra pass. Sweep state is persisted per round and the
-    * previous round released (the representatives() loop hygiene);
+    * no extra pass. The peel is a [[LoopSession.sweep]] loop;
     * sweeps are data-dependent but bounded by `maxSweeps` — the
     * fixed bound keeps SQL-oracle parity (an unrolled replay of S
     * sweeps equals the fixpoint whenever the peel converges within S,
@@ -505,43 +483,19 @@ object Graph {
     // never holds TWO edge-sized caches (eLoop is built from e0's
     // truncated plan — this release cannot recache it); VERDICT r16 #6
     if (releaseInput) e0.unpersist(blocking = false)
-    def degrees(alive: Option[DataFrame]): DataFrame = {
-      val ef = alive match {
-        case None => eLoop
-        case Some(al) => eLoop
-          .join(al.select(col("id").as("a")), Seq("a"), "left_semi")
-          .join(al.select(col("id").as("b")), Seq("b"), "left_semi")
-      }
-      degreeFrame(ef)
-    }
-    var alive: Option[DataFrame] = None
-    var aliveCount = -1L
-    var sweep = 0
-    var converged = false
-    try {
-      while (!converged && sweep < maxSweeps) {
-        // DETACHED per sweep: releasing the predecessor right below
-        // would otherwise recache (invalidate) the state just built
-        val (next, c) = CacheOps.persistMaterializedDetachedCounted(
-          degrees(alive).filter(col("deg") >= k))
-        alive.foreach(_.unpersist(blocking = false))
-        alive = Some(next)
-        converged = c == aliveCount // monotone peel: equal count = equal set
-        aliveCount = c
-        sweep += 1
-      }
-    } catch { // a mid-sweep failure must not strand the round's cache
-      case t: Throwable =>
-        eLoop.unpersist(blocking = true)
-        alive.foreach(_.unpersist(blocking = true)); throw t
-    }
-    // the surviving frame already carries in-core degrees (computed
-    // against the converged alive set on the final no-op sweep) and is
-    // DETACHED, so the loop-layout release here cannot invalidate it;
-    // rebind to the CALLER session — the logical plan is unchanged, so
-    // the caller's unpersist() still matches the cache entry
-    eLoop.unpersist(blocking = false)
-    org.apache.spark.sql.graftbridge.Bridge.rebind(alive.get, spark)
+    // monotone peel: an unchanged alive count is an unchanged set
+    val stable = LoopSession.repeats(_.count())
+    // the initial state is every node at its full degree; sweep 0's
+    // semi-joins against it would filter nothing, so it peels directly
+    try LoopSession.sweep(spark, degreeFrame(eLoop), maxSweeps) { (_, alive, i) =>
+      val peeled =
+        if (i == 0) alive
+        else degreeFrame(eLoop
+          .join(alive.select(col("id").as("a")), Seq("a"), "left_semi")
+          .join(alive.select(col("id").as("b")), Seq("b"), "left_semi"))
+      LoopSession.Sweep(peeled.filter(col("deg") >= k), stable)
+    }._1
+    finally eLoop.unpersist(blocking = false)
   }
 
   /** HITS hubs & authorities (Kleinberg 1999) in EXACT fixed-point
@@ -567,9 +521,9 @@ object Graph {
     * Scale shape: per iteration two keyed joins of the persisted edge
     * frame against nodes-sized score frames + two aggregations; the
     * per-half max is a 1-row action over the persisted partial (the
-    * scalar the SQL replay reads as a subquery); iteration state is
-    * persisted per round and released (the kCore loop hygiene), all in
-    * the right-sized cloned loop session. Returns (id, hub, auth) for
+    * scalar the SQL replay reads as a subquery); iterations are
+    * [[LoopSession.sweep]] sweeps in the right-sized cloned loop
+    * session. Returns (id, hub, auth) for
     * every node in the edge list. */
   def hits(edges: DataFrame, iterations: Int = 3,
            scale: Long = 1000000L): DataFrame = {
@@ -660,79 +614,36 @@ object Graph {
   private def hitsLoop(caller: org.apache.spark.sql.SparkSession,
                        eFwd: DataFrame, eRev: DataFrame, nodes: DataFrame,
                        iterations: Int, scale: Long): DataFrame = {
-    // rescale guard: (max · scale) must fit a long — checked on the
-    // value each half-iteration already collects
-    def checkedMax(m: Long): Long = {
+    // one half-iteration: pull `score` mass along the src-keyed `e`, into
+    // a persisted partial whose max action materializes it (one job per
+    // half), then rescale by that max — the (max · scale) product is
+    // overflow-checked on the value already in hand
+    def half(scratch: LoopSession.Scratch, e: DataFrame, from: DataFrame,
+             score: String, out: String): DataFrame = {
+      val raw = scratch.persist(e.join(from.select(col("id").as("src"),
+        col(score).as("s")), "src").groupBy(col("dst").as("id"))
+        .agg(sum(col("s")).as("r")))
+      val row = raw.agg(max(col("r"))).head()
+      require(!row.isNullAt(0),
+        "hits: an orientation has no edges — the mutual " +
+          "reinforcement needs both halves non-empty")
+      val m = row.getLong(0)
       require(m <= Long.MaxValue / scale,
         s"hits: summed score $m would overflow at scale $scale " +
           s"(max-degree * scale^2 must stay below 2^63) — lower `scale`")
-      m
+      nodes.join(raw, Seq("id"), "left").select(col("id"),
+        coalesce(expr(s"(r * ${scale}L) DIV ${m}L"), lit(0L)).as(out))
     }
-    var state = CacheOps.persistMaterialized(
-      nodes.withColumn("h", lit(scale)).withColumn("a", lit(scale)))
-    try {
-      var it = 0
-      while (it < iterations) {
-        // authority half: pull hub mass along in-edges, rescale by
-        // max. The max action itself materializes the fresh persist
-        // (it scans every partition), so no separate count job —
-        // each half pays ONE job, not two.
-        def persistMax(df: DataFrame, c: String): (DataFrame, Long) = {
-          val p = df.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val row = p.agg(max(col(c))).head()
-            require(!row.isNullAt(0),
-              "hits: an orientation has no edges — the mutual " +
-                "reinforcement needs both halves non-empty")
-            (p, checkedMax(row.getLong(0)))
-          }
-          catch { case t: Throwable =>
-            p.unpersist(blocking = true); throw t }
-        }
-        val (aRaw, amax) = persistMax(
-          eFwd.join(state.select(col("id").as("src"), col("h")), "src")
-            .groupBy(col("dst").as("id")).agg(sum(col("h")).as("ar")), "ar")
-        val next =
-          try {
-            val aNew = nodes.join(aRaw, Seq("id"), "left")
-              .select(col("id"),
-                coalesce(expr(s"(ar * ${scale}L) DIV ${amax}L"), lit(0L)).as("a"))
-            // hub half: pull the fresh authority mass along out-edges
-            // (the reversed rows, joined on THEIR src = the out-target)
-            val (hRaw, hmax) = persistMax(
-              eRev.join(aNew.select(col("id").as("src"), col("a")), "src")
-                .groupBy(col("dst").as("id")).agg(sum(col("a")).as("hr")), "hr")
-            try {
-              val hNew = nodes.join(hRaw, Seq("id"), "left")
-                .select(col("id"),
-                  coalesce(expr(s"(hr * ${scale}L) DIV ${hmax}L"), lit(0L)).as("h"))
-              // DETACHED: the aRaw/hRaw releases in the finally blocks
-              // right below would otherwise recache (invalidate) this
-              // iteration's state the moment it materializes, making
-              // the next iteration re-execute the whole chain
-              CacheOps.persistMaterializedDetached(
-                hNew.join(aNew, "id").select(col("id"), col("h"), col("a")))
-            } finally hRaw.unpersist(blocking = false)
-          } finally aRaw.unpersist(blocking = false)
-        state.unpersist(blocking = false)
-        state = next
-        it += 1
-      }
-    } catch { // a mid-iteration failure must not strand the round
-      case t: Throwable => state.unpersist(blocking = true); throw t
-    }
-    // caller-session result whose persist the caller can release (see
-    // labelPropagation — same contract). The rename-only projection
-    // canonicalizes to the SAME plan as the final state, so a fresh
-    // persist would just attach to state's existing cache entry — and
-    // unpersisting state then drops the shared entry, turning every
-    // later read of the result into a full loop re-execution (caught by
-    // the r16 scan audit on hitsFromIndex). So: keep the final state's
-    // cache AS the result cache; the caller's unpersist() releases it.
-    org.apache.spark.sql.graftbridge.Bridge.rebind(
-      state.select(col("id"), col("h").as("hub"), col("a").as("auth")),
-      caller)
+    LoopSession.sweep(caller,
+      nodes.withColumn("hub", lit(scale)).withColumn("auth", lit(scale)),
+      iterations) { (scratch, state, _) =>
+      // authority half pulls hub mass along in-edges; hub half pulls the
+      // fresh authority mass along out-edges (the reversed rows)
+      val aNew = half(scratch, eFwd, state, "hub", "auth")
+      val hNew = half(scratch, eRev, aNew, "auth", "hub")
+      LoopSession.Sweep(hNew.join(aNew, "id")
+        .select(col("id"), col("hub"), col("auth")), LoopSession.materialize)
+    }._1
   }
 
   /** Connected components over an undirected edge list `(a, b)` —
@@ -771,9 +682,8 @@ object Graph {
     * Scale shape: per sweep ONE keyed join of the persisted
     * both-directions adjacency against the nodes-sized label frame, one
     * (node, label) count aggregation, and one per-node argmax as a
-    * max-of-struct aggregate — no windows, nothing collected; sweep
-    * state is persisted per round and the previous round released (the
-    * kCore loop hygiene). */
+    * max-of-struct aggregate — no windows, nothing collected; sweeps
+    * run through [[LoopSession.sweep]]. */
   def labelPropagation(edges: DataFrame, sweeps: Int = 4,
                        runToFixpoint: Boolean = false): DataFrame =
     labelPropagationCounted(edges, sweeps, runToFixpoint)._1
@@ -812,70 +722,45 @@ object Graph {
     val adj = org.apache.spark.sql.graftbridge.Bridge.rebind(
       org.apache.spark.sql.graftbridge.Bridge.truncatePlanKeepLayout(adjC),
       loopSession)
-    var sweepsRun = 0
-    try {
-      var labels = CacheOps.persistMaterialized(
-        adj.select(col("node")).distinct().withColumn("lbl", col("node")))
-      try {
-        var sweep = 0
-        var converged = false
-        while (sweep < sweeps && !converged) {
-          val counts = adj
-            .join(labels.select(col("node").as("nbr"), col("lbl")), "nbr")
-            .groupBy(col("node"), col("lbl")).agg(count(lit(1)).as("c"))
-          // argmax(count, then smallest label): min over (-c, lbl)
-          // structs — the count is what gets negated (always safe: it is
-          // a positive aggregate this sweep just computed), never the
-          // label, so negative or hashed node ids order correctly and
-          // Long.MinValue cannot overflow (ADVICE r13; the old form
-          // negated lbl twice)
-          val nextPlan = counts.groupBy(col("node"))
-            .agg(min(struct((-col("c")).as("nc"), col("lbl"))).as("m"))
-            .select(col("node"), col("m.lbl").as("lbl"))
-          val next =
-            // DETACHED per sweep: the predecessor's release two lines
-            // below would otherwise recache (drop the buffers of) the
-            // state just materialized, re-executing the whole sweep
-            // chain from the adjacency on every later read
-            if (!runToFixpoint) CacheOps.persistMaterializedDetached(nextPlan)
-            else {
-              // the changed-label count IS the materializing action (it
-              // scans every fresh partition) — one job per sweep, and
-              // zero changes proves the fixpoint (both sides persisted
-              // nodes-sized frames, so this is a cache-scan keyed join)
-              val p = org.apache.spark.sql.graftbridge.Bridge
-                .truncatePlan(nextPlan).persist(MEMORY_AND_DISK)
-              val changed =
-                try p.join(labels.select(col("node"),
-                      col("lbl").as("__prev")), "node")
-                  .filter(col("lbl") =!= col("__prev")).count()
-                catch { case t: Throwable =>
-                  p.unpersist(blocking = true); throw t
-                }
-              converged = changed == 0L
-              p
-            }
-          labels.unpersist(blocking = false)
-          labels = next
-          sweep += 1
-        }
-        sweepsRun = sweep
-      } catch { // a mid-sweep failure must not strand the round's cache
-        case t: Throwable => labels.unpersist(blocking = true); throw t
-      }
-      // hand back a CALLER-session frame (or downstream queries inherit
-      // the loop confs) whose persist the caller can actually release:
-      // the projection is persisted itself — an unpersist() on a select
-      // WRAPPER would miss the internal cache entry. DETACHED, so the
-      // adjacency/label releases below cannot invalidate it.
-      val out = CacheOps.persistMaterializedDetached(
-        org.apache.spark.sql.graftbridge.Bridge.rebind(
-          labels.select(col("node").as("id"), col("lbl").as("community")),
-          spark))
-      labels.unpersist(blocking = false)
-      (out, sweepsRun)
-    } finally adjC.unpersist(blocking = false)
+    try labelSweeps(spark, adj, "nbr", "node",
+      adj.select(col("node").as("id")).distinct(), sweeps, runToFixpoint)
+    finally adjC.unpersist(blocking = false)
   }
+
+  /** The synchronous min-tie LPA loop over an adjacency `adj` whose
+    * `nbrCol` is the label's source and `nodeCol` the adopting node —
+    * the inline operator's persisted (nbr, node) frame or an index's
+    * (src, dst) rows; `nodes(id)` is the node universe. Returns the
+    * (id, community) labels and the number of sweeps run. */
+  private def labelSweeps(caller: org.apache.spark.sql.SparkSession,
+                          adj: DataFrame, nbrCol: String, nodeCol: String,
+                          nodes: DataFrame, sweeps: Int,
+                          runToFixpoint: Boolean): (DataFrame, Int) =
+    LoopSession.sweep(caller, nodes.withColumn("community", col("id")),
+      sweeps) { (_, labels, _) =>
+      // the neighbor side keys by nbrCol (the adjacency's layout key):
+      // the edge side reaches the join exchange-free, only labels move
+      val counts = adj
+        .join(labels.select(col("id").as(nbrCol), col("community").as("lbl")),
+          nbrCol)
+        .groupBy(col(nodeCol).as("node"), col("lbl"))
+        .agg(count(lit(1)).as("c"))
+      // argmax(count, then smallest label): min over (-c, lbl) structs —
+      // the count is what gets negated (always safe: it is a positive
+      // aggregate this sweep just computed), never the label, so negative
+      // or hashed node ids order correctly and Long.MinValue cannot
+      // overflow (ADVICE r13)
+      val next = counts.groupBy(col("node"))
+        .agg(min(struct((-col("c")).as("nc"), col("lbl"))).as("m"))
+        .select(col("node").as("id"), col("m.lbl").as("community"))
+      // fixpoint mode: the changed-label count IS the materializing
+      // action, and zero changes proves the fixpoint (both sides are
+      // persisted nodes-sized frames — a cache-scan keyed join)
+      LoopSession.Sweep(next,
+        if (!runToFixpoint) LoopSession.materialize
+        else _.join(labels.select(col("id"), col("community").as("__prev")),
+            "id").filter(col("community") =!= col("__prev")).count() == 0L)
+    }
 
   /** Single-/multi-source shortest paths by synchronous integer
     * min-relaxation (Bellman-Ford sweeps; with unit weights this IS the
@@ -921,7 +806,7 @@ object Graph {
       sources.select(col("id").cast("long")).distinct()
         .withColumn("dist", lit(0L)), loop)
     for (_ <- 0 until sweeps) d = ssspSweep(e, d)
-    finishRanks(spark, d, Seq(e0))
+    LoopSession.handBack(spark, d, Seq(e0))
   }
 
   /** The persisted src-partitioned SSSP edge frame: weights defaulted /
@@ -974,10 +859,10 @@ object Graph {
     * no new nodes, and then equal sum ⟹ every distance unchanged —
     * set equality proven from two scalars the per-sweep materializing
     * aggregate computes in ONE job (the sum runs in decimal so a
-    * planet-scale dist sum cannot wrap into a false equality). Sweep
-    * state is persisted per round and the previous round released (the
-    * kCore loop hygiene — per-sweep persistence also bounds the plan at
-    * cache-scan + join + agg instead of the composed linear growth).
+    * planet-scale dist sum cannot wrap into a false equality). Sweeps
+    * run through [[LoopSession.sweep]], whose per-sweep persistence also
+    * bounds the plan at cache-scan + join + agg instead of the composed
+    * linear growth.
     *
     * Returns (distances, sweepsRun); sweepsRun < maxSweeps proves early
     * exit (spec-pinned). A state that converged at sweep k runs k+1
@@ -1017,52 +902,9 @@ object Graph {
                                 runToFixpoint: Boolean = false): DataFrame = {
     require(sweeps >= 1, s"labelPropagation needs sweeps >= 1, got $sweeps")
     val idx = Bucketing.readBucketed(spark, table)
-    val e = idx.filter(!col("self")).select(col("src"), col("dst"))
-    var labels = CacheOps.persistMaterialized(
-      idx.filter(col("self")).select(col("src").as("node"),
-        col("src").as("lbl")))
-    try {
-      var sweep = 0
-      var converged = false
-      while (sweep < sweeps && !converged) {
-        // the neighbor side keys by src (the bucket column): the edge
-        // scan reaches the join exchange-free, only labels move
-        val counts = e
-          .join(labels.select(col("node").as("src"), col("lbl")), "src")
-          .groupBy(col("dst").as("node"), col("lbl"))
-          .agg(count(lit(1)).as("c"))
-        val nextPlan = counts.groupBy(col("node"))
-          .agg(min(struct((-col("c")).as("nc"), col("lbl"))).as("m"))
-          .select(col("node"), col("m.lbl").as("lbl"))
-        val next =
-          // DETACHED per sweep (and for the final projection): the
-          // predecessor release below would otherwise recache
-          // (invalidate) the state just materialized
-          if (!runToFixpoint) CacheOps.persistMaterializedDetached(nextPlan)
-          else {
-            val p = org.apache.spark.sql.graftbridge.Bridge
-              .truncatePlan(nextPlan).persist(MEMORY_AND_DISK)
-            val changed =
-              try p.join(labels.select(col("node"),
-                    col("lbl").as("__prev")), "node")
-                .filter(col("lbl") =!= col("__prev")).count()
-              catch { case t: Throwable =>
-                p.unpersist(blocking = true); throw t
-              }
-            converged = changed == 0L
-            p
-          }
-        labels.unpersist(blocking = false)
-        labels = next
-        sweep += 1
-      }
-      val out = CacheOps.persistMaterializedDetached(
-        labels.select(col("node").as("id"), col("lbl").as("community")))
-      labels.unpersist(blocking = false)
-      out
-    } catch {
-      case t: Throwable => labels.unpersist(blocking = true); throw t
-    }
+    labelSweeps(spark, idx.filter(!col("self")).select(col("src"), col("dst")),
+      "src", "dst", idx.filter(col("self")).select(col("src").as("id")),
+      sweeps, runToFixpoint)._1
   }
 
   /** The capped SSSP convergence loop shared by the inline
@@ -1074,38 +916,15 @@ object Graph {
   private def ssspFixpointLoop(caller: org.apache.spark.sql.SparkSession,
                                e: DataFrame, d0: DataFrame,
                                maxSweeps: Int): (DataFrame, Int) = {
-    var d = CacheOps.persistMaterialized(d0)
-    var prev: (Long, String) = null
-    var sweep = 0
-    var converged = false
-    try {
-      while (!converged && sweep < maxSweeps) {
-        // truncated (DETACHED) per sweep: the predecessor release below
-        // would otherwise recache (invalidate) the fresh distance frame
-        val next = org.apache.spark.sql.graftbridge.Bridge
-          .truncatePlan(ssspSweep(e, d)).persist(MEMORY_AND_DISK)
-        // the monotone-pair scan IS the materializing action: one job
-        val pair =
-          try {
-            val row = next.agg(count(lit(1)).as("n"),
-              sum(col("dist").cast("decimal(38,0)")).as("s")).head()
-            (row.getLong(0), String.valueOf(row.get(1)))
-          } catch { case t: Throwable =>
-            next.unpersist(blocking = true); throw t
-          }
-        d.unpersist(blocking = false)
-        d = next
-        converged = pair == prev
-        prev = pair
-        sweep += 1
-      }
-    } catch { // a mid-sweep failure must not strand the round's cache
-      case t: Throwable => d.unpersist(blocking = true); throw t
+    // the monotone-pair scan IS the materializing action: one job
+    val stable = LoopSession.repeats { d =>
+      val row = d.agg(count(lit(1)).as("n"),
+        sum(col("dist").cast("decimal(38,0)")).as("s")).head()
+      (row.getLong(0), String.valueOf(row.get(1)))
     }
-    // d is persisted and fully materialized (the pair scan); hand the
-    // caller a caller-session view of the same plan — cache hit, and
-    // the caller's unpersist() matches the entry
-    (org.apache.spark.sql.graftbridge.Bridge.rebind(d, caller), sweep)
+    LoopSession.sweep(caller, d0, maxSweeps) { (_, d, _) =>
+      LoopSession.Sweep(ssspSweep(e, d), stable)
+    }
   }
 
   /** Strongly connected components of a DIRECTED graph — the directed
@@ -1142,10 +961,11 @@ object Graph {
     *
     * Scale shape: per round, two semi-joins build the active edge frame
     * (persisted — it feeds 2·sweeps joins), the sweep loops move only
-    * nodes-sized label/marked frames, and the round boundary is four
-    * materializing persists (labels, colored edges, marked, emitted) —
-    * nothing collected but per-round 1-row counts; all in the
-    * right-sized cloned loop session. */
+    * nodes-sized label/marked frames, and the round's state — every
+    * node with its scc, null while still active — is one
+    * [[LoopSession.sweep]] state: trim passes and coloring rounds are
+    * sweeps of one loop, nothing collected but a 1-row count pair per
+    * sweep; all in the right-sized cloned loop session. */
   /** `trimPasses` > 0 runs that many TRIM passes before each round's
     * coloring (the standard FW-BW accelerator — Hong et al. 2013's
     * trim step): a node with no in-edge or no out-edge WITHIN the
@@ -1168,154 +988,98 @@ object Graph {
       edges.select(col("src").cast("long"), col("dst").cast("long")).distinct())
     try {
       val loop = LoopSession.forGraph(spark, nE)
-      // Round-boundary frames are persisted AND plan-truncated (the
-      // representatives() hygiene): every round composes active/fp/ce/mp
-      // into multi-reference joins, so untruncated LOGICAL plans grow
-      // combinatorially across rounds and the ANALYZER — not the data —
-      // hangs by round 3 (measured: minutes on a 7-node fixture).
-      // Truncation resets each boundary to a flat scan of its persisted
-      // execution RDD while keeping recompute lineage; the composed
-      // sweep loops between boundaries reference their state once per
-      // sweep and stay linear.
-      def flat(df: DataFrame): ((DataFrame, DataFrame), Long) = {
-        val (p, n) = CacheOps.persistMaterializedCounted(df)
-        ((org.apache.spark.sql.graftbridge.Bridge.rebind(
-          org.apache.spark.sql.graftbridge.Bridge.truncatePlan(p), loop),
-          p), n)
-      }
-      // Edge-shaped ROUND frames (ae, ce) instead persist HASH-
-      // PARTITIONED AND SORTED on their sweep-join key, NOT truncated:
-      // their plans stay shallow (one join/union over already-truncated
-      // boundary frames) so the analyzer still grows linearly, while the
-      // preserved layout metadata (InMemoryTableScan reports its cached
-      // plan's outputPartitioning AND outputOrdering) makes the edge
-      // side of all `sweeps` per-round sort-merge joins both
-      // exchange-free and SORT-free. The loop session's broadcast-off
-      // conf (threshold -1) also vetoes shuffled-hash selection, so
-      // every loop join is an SMJ — without the pre-sort each sweep
-      // re-sorted the whole edge frame (profiled as the dominant SCC
-      // cost); now only the nodes-sized label/mark frame is exchanged
-      // and sorted per sweep (guide §2.4; truncation would erase the
-      // layout, which is why these two frames skip it).
-      def flatKeyed(df: DataFrame, key: String): (DataFrame, DataFrame) = {
-        val p = CacheOps.persistMaterialized(
-          df.repartition(col(key)).sortWithinPartitions(col(key)))
-        (p, p)
-      }
       val e = LoopSession.bindInto(e0, loop)
-      var ((active, activeP), nActive) = flat(
-        e.select(explode(array(col("src"), col("dst"))).as("id")).distinct())
-      var outs: List[DataFrame] = Nil
-      def releaseAll(frames: Seq[DataFrame]): Unit =
-        frames.foreach(_.unpersist(blocking = false))
-      try {
-        var round = 0
-        // the full node count at entry: trim only removes, so nActive
-        // still equal to it proves no pass deactivated anything — the
-        // condition the round-0 semi-join shortcut below needs
-        val nAllNodes = nActive
-        while (round < rounds && nActive > 0L) {
-          // TRIM: peel trivially-singleton nodes (no active in-edge or
-          // no active out-edge) before paying the coloring sweeps
-          var t = 0
-          while (t < trimPasses && nActive > 0L) {
-            val aeR = CacheOps.persistMaterialized(
-              e.join(active.select(col("id").as("src")), Seq("src"), "left_semi")
-                .join(active.select(col("id").as("dst")), Seq("dst"), "left_semi"))
-            try {
-              val core = active
-                .join(aeR.select(col("dst").as("id")), Seq("id"), "left_semi")
-                .join(aeR.select(col("src").as("id")), Seq("id"), "left_semi")
-              // DETACHED: aeR (which core references) is released at the
-              // end of this trim pass — an attached entry would be
-              // recached (invalidated) by that release
-              outs ::= CacheOps.persistMaterializedDetached(
-                active.join(core, Seq("id"), "left_anti")
-                  .select(col("id"), col("id").as("scc")))
-              val ((nextActive, nextActiveP), nNext) = flat(core)
-              activeP.unpersist(blocking = false)
-              active = nextActive
-              activeP = nextActiveP
-              nActive = nNext
-            } finally aeR.unpersist(blocking = false)
-            t += 1
-          }
-          if (nActive == 0L) { round = rounds }
-          else {
-          // active-subgraph edges + one self-loop per active node: the
-          // self rows carry each node's own label/mark through the
-          // sweeps' aggregations (single-reference, linear plans).
-          // When the active set is still ALL nodes (round 1 with no
-          // trim pass having deactivated anything — checked against the
-          // entry count, since trim runs BEFORE this round's coloring),
-          // the two edge-sized semi-joins filter nothing — skip them
-          // (the heaviest round pays two fewer corpus-sized joins).
-          val aeEdges =
-            if (round == 0 && nActive == nAllNodes) e
-            else e
-              .join(active.select(col("id").as("src")), Seq("src"), "left_semi")
-              .join(active.select(col("id").as("dst")), Seq("dst"), "left_semi")
-          val (ae, aeP) = flatKeyed(aeEdges.unionByName(
-            active.select(col("id").as("src"), col("id").as("dst"))), "src")
-          try {
-            var f = active.select(col("id"), col("id").as("f"))
-            for (_ <- 0 until sweeps)
-              f = ae.join(f.select(col("id").as("src"), col("f")), "src")
-                .groupBy(col("dst")).agg(min(col("f")).as("f"))
-                .select(col("dst").as("id"), col("f"))
-            val ((fp, fpP), _) = flat(f)
-            try {
-              // color-internal edges (self rows pass trivially: f = f)
-              val (ce, ceP) = flatKeyed(
-                ae.join(fp.select(col("id").as("src"), col("f").as("fs")), "src")
-                  .join(fp.select(col("id").as("dst"), col("f").as("fd")), "dst")
-                  .filter(col("fs") === col("fd"))
-                  .select(col("src"), col("dst")), "dst")
-              try {
-                // backward reach from the roots, within color: a node is
-                // marked when any color-internal out-edge hits a marked
-                // node (the self row keeps marked nodes marked)
-                var m = fp.filter(col("id") === col("f")).select(col("id"))
-                for (_ <- 0 until sweeps)
-                  m = ce.join(m.select(col("id").as("dst")), "dst")
-                    .select(col("src").as("id")).distinct()
-                val ((mp, mpP), _) = flat(m)
-                try {
-                  outs ::= CacheOps.persistMaterialized(
-                    fp.join(mp, "id").select(col("id"), col("f").as("scc")))
-                  val ((nextActive, nextActiveP), nNext) = flat(
-                    active.join(mp, Seq("id"), "left_anti"))
-                  activeP.unpersist(blocking = false)
-                  active = nextActive
-                  activeP = nextActiveP
-                  nActive = nNext
-                } finally mpP.unpersist(blocking = false)
-              } finally ceP.unpersist(blocking = false)
-            } finally fpP.unpersist(blocking = false)
-          } finally aeP.unpersist(blocking = false)
-          round += 1
-          }
-        }
-        // union the per-round persisted results into one caller-session
-        // frame whose persist the caller can release (the LPA contract)
-        val sp = spark
-        val all = outs match {
-          case Nil =>
-            import sp.implicits._
-            Seq.empty[(Long, Long)].toDF("id", "scc")
-          case more => more
-            .map(o => org.apache.spark.sql.graftbridge.Bridge.rebind(o, sp))
-            .reduce(_ unionByName _)
-        }
-        // DETACHED: releaseAll(outs) below would otherwise recache
-        // (invalidate) the union just materialized and the caller's
-        // first read would re-execute every round
-        val res = CacheOps.persistMaterializedDetached(all)
-        releaseAll(outs)
-        res
-      } catch { // a mid-round failure must not strand the round's caches
-        case t: Throwable => releaseAll(outs); throw t
-      } finally activeP.unpersist(blocking = false)
+      // The node-sized frames a round composes into multi-reference joins
+      // (colors, marks) persist AND truncate: untruncated, the LOGICAL
+      // plans grow combinatorially across rounds and the ANALYZER — not
+      // the data — hangs by round 3 (measured: minutes on a 7-node
+      // fixture). The composed sweeps between them reference their state
+      // once per sweep and stay linear.
+      def flat(scratch: LoopSession.Scratch, df: DataFrame): DataFrame =
+        org.apache.spark.sql.graftbridge.Bridge.truncatePlan(
+          scratch.persistMaterialized(df))
+      // Edge-shaped round frames (ae, ce) instead persist HASH-PARTITIONED
+      // AND SORTED on their sweep-join key, NOT truncated (truncation
+      // would erase the layout): the cached scan reports its partitioning
+      // and ordering, so the edge side of every per-round sort-merge join
+      // (the loop session vetoes broadcast and shuffled-hash) is
+      // exchange-free and sort-free — only the nodes-sized label/mark
+      // frame moves per sweep (guide §2.4).
+      def keyed(scratch: LoopSession.Scratch, df: DataFrame, key: String) =
+        scratch.persistMaterialized(
+          df.repartition(col(key)).sortWithinPartitions(col(key)))
+      // TRIM: a node with no active in-edge or no active out-edge is its
+      // own SCC
+      def trim(scratch: LoopSession.Scratch, active: DataFrame): DataFrame = {
+        val aeR = scratch.persistMaterialized(
+          e.join(active.select(col("id").as("src")), Seq("src"), "left_semi")
+            .join(active.select(col("id").as("dst")), Seq("dst"), "left_semi"))
+        val core = active
+          .join(aeR.select(col("dst").as("id")), Seq("id"), "left_semi")
+          .join(aeR.select(col("src").as("id")), Seq("id"), "left_semi")
+        active.join(core, Seq("id"), "left_anti")
+          .select(col("id"), col("id").as("found"))
+      }
+      // FW-BW coloring over the active-subgraph edges plus one self-loop
+      // per active node (the self rows carry each node's own label/mark
+      // through the sweeps' aggregations — single-reference, linear
+      // plans). `allActive` skips the two edge-sized semi-joins, which
+      // filter nothing while no node has been assigned yet.
+      def color(scratch: LoopSession.Scratch, active: DataFrame,
+                allActive: Boolean): DataFrame = {
+        val aeEdges =
+          if (allActive) e
+          else e
+            .join(active.select(col("id").as("src")), Seq("src"), "left_semi")
+            .join(active.select(col("id").as("dst")), Seq("dst"), "left_semi")
+        val ae = keyed(scratch, aeEdges.unionByName(
+          active.select(col("id").as("src"), col("id").as("dst"))), "src")
+        var f = active.select(col("id"), col("id").as("f"))
+        for (_ <- 0 until sweeps)
+          f = ae.join(f.select(col("id").as("src"), col("f")), "src")
+            .groupBy(col("dst")).agg(min(col("f")).as("f"))
+            .select(col("dst").as("id"), col("f"))
+        val fp = flat(scratch, f)
+        // color-internal edges (self rows pass trivially: f = f)
+        val ce = keyed(scratch,
+          ae.join(fp.select(col("id").as("src"), col("f").as("fs")), "src")
+            .join(fp.select(col("id").as("dst"), col("f").as("fd")), "dst")
+            .filter(col("fs") === col("fd"))
+            .select(col("src"), col("dst")), "dst")
+        // backward reach from the roots, within color: a node is marked
+        // when any color-internal out-edge hits a marked node (the self
+        // row keeps marked nodes marked)
+        var m = fp.filter(col("id") === col("f")).select(col("id"))
+        for (_ <- 0 until sweeps)
+          m = ce.join(m.select(col("id").as("dst")), "dst")
+            .select(col("src").as("id")).distinct()
+        fp.join(flat(scratch, m), "id").select(col("id"), col("f").as("found"))
+      }
+      // the state is every node with its scc label, null while active;
+      // one scan counts the still-active nodes (an empty active set exits)
+      // and the assigned ones (round 0 colors all nodes while it is 0)
+      var nAssigned = 0L
+      val signal: DataFrame => Boolean = state => {
+        val row = state.agg(count(when(col("scc").isNull, lit(1))),
+          count(col("scc"))).head()
+        nAssigned = row.getLong(1)
+        row.getLong(0) == 0L
+      }
+      // each round is trimPasses trim sweeps, then one coloring sweep
+      LoopSession.sweep(spark,
+        e.select(explode(array(col("src"), col("dst"))).as("id")).distinct()
+          .select(col("id"), lit(null).cast("long").as("scc")),
+        rounds * (trimPasses + 1),
+        finish = states => states.last.filter(col("scc").isNotNull)) {
+        (scratch, state, i) =>
+          val active = state.filter(col("scc").isNull).select(col("id"))
+          val found =
+            if (i % (trimPasses + 1) < trimPasses) trim(scratch, active)
+            else color(scratch, active, i == trimPasses && nAssigned == 0L)
+          LoopSession.Sweep(state.join(found, Seq("id"), "left")
+            .select(col("id"), coalesce(col("scc"), col("found")).as("scc")),
+            signal)
+      }._1
     } finally e0.unpersist(blocking = false)
   }
 
@@ -1354,38 +1118,32 @@ object Graph {
     val loopS = LoopSession.forGraph(caller, nE)
     val e0 = org.apache.spark.sql.graftbridge.Bridge.rebind(e0c, loopS)
     val lab = org.apache.spark.sql.graftbridge.Bridge.rebind(labC, loopS)
-    try {
-      val m = e0.agg(count(lit(1)).as("m"))
-        .select(assert_true(col("m") < 1500000000L,
-            lit("modularity: 4*m^2 must fit a long — m < 1.5e9")).as("__ck"),
-          col("m"))
-        .filter(col("__ck").isNull).drop("__ck")
-      val dsum = degreeFrame(e0).join(lab, "id")
-        .groupBy(col("community"))
-        .agg(sum(col("deg")).as("deg_sum"), count(lit(1)).as("n_nodes"))
-      val intra = e0
-        .join(lab.select(col("id").as("a"), col("community").as("ca")), "a")
-        .join(lab.select(col("id").as("b"), col("community").as("cb")), "b")
-        .filter(col("ca") === col("cb"))
-        .groupBy(col("ca").as("community"))
-        .agg(count(lit(1)).as("internal_edges"))
-      org.apache.spark.sql.graftbridge.Bridge.rebind(
-        CacheOps.persistMaterializedDetached(
-          dsum.join(intra, Seq("community"), "left")
-            .na.fill(0L, Seq("internal_edges"))
-            .crossJoin(broadcast(m))
-            .select(col("community"), col("n_nodes"), col("deg_sum"),
-              col("internal_edges"),
-              (lit(4L) * col("m") * col("internal_edges") -
-                col("deg_sum") * col("deg_sum")).as("q_num"),
-              ((lit(4L) * col("m") * col("internal_edges") -
-                col("deg_sum") * col("deg_sum")).cast("double") /
-                (lit(4L) * col("m") * col("m")).cast("double")).as("q"))),
-        caller)
-    } finally {
-      e0c.unpersist(blocking = false)
-      labC.unpersist(blocking = false)
-    }
+    val m = e0.agg(count(lit(1)).as("m"))
+      .select(assert_true(col("m") < 1500000000L,
+          lit("modularity: 4*m^2 must fit a long — m < 1.5e9")).as("__ck"),
+        col("m"))
+      .filter(col("__ck").isNull).drop("__ck")
+    val dsum = degreeFrame(e0).join(lab, "id")
+      .groupBy(col("community"))
+      .agg(sum(col("deg")).as("deg_sum"), count(lit(1)).as("n_nodes"))
+    val intra = e0
+      .join(lab.select(col("id").as("a"), col("community").as("ca")), "a")
+      .join(lab.select(col("id").as("b"), col("community").as("cb")), "b")
+      .filter(col("ca") === col("cb"))
+      .groupBy(col("ca").as("community"))
+      .agg(count(lit(1)).as("internal_edges"))
+    LoopSession.handBack(caller,
+      dsum.join(intra, Seq("community"), "left")
+        .na.fill(0L, Seq("internal_edges"))
+        .crossJoin(broadcast(m))
+        .select(col("community"), col("n_nodes"), col("deg_sum"),
+          col("internal_edges"),
+          (lit(4L) * col("m") * col("internal_edges") -
+            col("deg_sum") * col("deg_sum")).as("q_num"),
+          ((lit(4L) * col("m") * col("internal_edges") -
+            col("deg_sum") * col("deg_sum")).cast("double") /
+            (lit(4L) * col("m") * col("m")).cast("double")).as("q")),
+      Seq(e0c, labC))
   }
 
   /** Weighted PageRank over `edges(src, dst, w)` — interaction STRENGTH
@@ -1635,61 +1393,57 @@ object Graph {
             "sequence(cw_lo div cut_src, (cw_hi - 1) div cut_src)")))
           .repartition(col("src"), col("bkt"))
           .sortWithinPartitions(col("src"), col("bkt"))))
-    // H(seed, start, walk, step) as a portable 60-bit integer (15 md5
-    // hex chars — the shared sampler width; a 32-bit draw would silently
-    // cap weight-proportionality at Σw = 2³², ADVICE r15)
-    def h(step: Int): Column =
-      conv(substring(md5(concat_ws("-", lit(seed), col("start"), col("wk"),
-        lit(step.toLong)).cast("binary")), 1, 15), 16, 10).cast("long")
-    // each hop's state is PERSISTED: the final union references hop i
-    // both directly (its step-i rows) and inside hop i+1's lineage, so
-    // lazy states would re-execute the chain quadratically (hop j runs
-    // steps-j times; measured ~2x wall on the gate) — persisted, every
-    // hop executes once and the union's branches are cache scans
-    var state = CacheOps.persistMaterialized(
+    try LoopSession.sweep(spark,
       e.select(col("src").as("start"), col("deg_src").as("deg"),
           col("cut_src").as("cut"))
         .distinct()
         .withColumn("wk", explode(array((0 until walksPerNode)
           .map(i => lit(i.toLong)): _*)))
         .select(col("start"), col("wk"), col("start").as("node"), col("deg"),
-          col("cut")))
-    var hops: List[DataFrame] = List(state)
-    var out = state.select(col("start"), col("wk"), lit(0L).as("step"),
-      col("node"))
-    try {
-      for (i <- 1 to steps) {
-        val draw = state.filter(col("deg").isNotNull)
-          .select(col("start"), col("wk"), col("node").as("src"),
-            pmod(h(i), col("deg")).as("x"), col("cut"))
-        val hop =
-          if (!weighted)
-            // unit widths: the drawn x IS the target cw_lo — O(1) match
-            e.join(draw.withColumnRenamed("x", "cw_lo").drop("cut"),
-              Seq("src", "cw_lo"))
-          else
-            // cutpoint lookup: equi-join on the drawn bucket, then match
-            // the (expected ≤ 2) candidate intervals
-            ebOpt.get.join(
-                draw.withColumn("bkt", expr("x div cut")).drop("cut"),
-                Seq("src", "bkt"))
-              .filter(col("x") >= col("cw_lo") && col("x") < col("cw_hi"))
-        state = CacheOps.persistMaterialized(
-          hop.select(col("start"), col("wk"), col("dst").as("node"),
-            col("deg_dst").as("deg"), col("cut_dst").as("cut")))
-        hops ::= state
-        out = out.unionByName(state.select(col("start"), col("wk"),
-          lit(i.toLong).as("step"), col("node")))
-      }
-    } catch { // a mid-hop failure must not strand the hop caches
-      case t: Throwable =>
-        hops.foreach(_.unpersist(blocking = true))
-        ebOpt.foreach(_.unpersist(blocking = true))
-        e0.unpersist(blocking = true)
-        throw t
+          col("cut")),
+      steps, LoopSession.Release.KeepAll, walkCorpus) { (_, state, i) =>
+      val draw = state.filter(col("deg").isNotNull)
+        .select(col("start"), col("wk"), col("node").as("src"),
+          pmod(walkDraw(seed, i + 1), col("deg")).as("x"), col("cut"))
+      val hop =
+        if (!weighted)
+          // unit widths: the drawn x IS the target cw_lo — O(1) match
+          e.join(draw.withColumnRenamed("x", "cw_lo").drop("cut"),
+            Seq("src", "cw_lo"))
+        else
+          // cutpoint lookup: equi-join on the drawn bucket, then match
+          // the (expected ≤ 2) candidate intervals
+          ebOpt.get.join(
+              draw.withColumn("bkt", expr("x div cut")).drop("cut"),
+              Seq("src", "bkt"))
+            .filter(col("x") >= col("cw_lo") && col("x") < col("cw_hi"))
+      LoopSession.Sweep(hop.select(col("start"), col("wk"),
+        col("dst").as("node"), col("deg_dst").as("deg"),
+        col("cut_dst").as("cut")), LoopSession.materialize)
+    }._1
+    finally {
+      e0.unpersist(blocking = false)
+      ebOpt.foreach(_.unpersist(blocking = false))
     }
-    finishRanks(spark, out, e0 :: ebOpt.toList ::: hops)
   }
+
+  /** H(seed, start, walk, step) as a portable 60-bit integer (15 md5 hex
+    * chars — the shared sampler width; a 32-bit draw would silently cap
+    * weight-proportionality at Σw = 2³², ADVICE r15). The walk oracles
+    * pin this exact expression. */
+  private def walkDraw(seed: String, step: Int): Column =
+    conv(substring(md5(concat_ws("-", lit(seed), col("start"), col("wk"),
+      lit(step.toLong)).cast("binary")), 1, 15), 16, 10).cast("long")
+
+  /** The walk corpus from every hop state (oldest first, hop i = step i):
+    * each hop is KEPT until this union materializes — it references hop
+    * i both directly and inside hop i+1's lineage, so released or lazy
+    * states would re-execute the chain quadratically (measured ~2x wall
+    * on the gate). */
+  private def walkCorpus(hops: Seq[DataFrame]): DataFrame =
+    hops.zipWithIndex.map { case (h, i) =>
+      h.select(col("start"), col("wk"), lit(i.toLong).as("step"), col("node"))
+    }.reduce(_ unionByName _)
 
   /** [[randomWalks]] over a [[buildGraphIndex]] table — identical draws
     * (the gate shares [[randomWalks]]'s oracle: layout changes the plan,
@@ -1722,42 +1476,27 @@ object Graph {
       spark, Map("spark.sql.requireAllClusterKeysForCoPartition" -> "false"))
     val idx = Bucketing.readBucketed(walkSession, table)
     val eb = indexWalkExpansion(idx)
-    def h(step: Int): Column =
-      conv(substring(md5(concat_ws("-", lit(seed), col("start"), col("wk"),
-        lit(step.toLong)).cast("binary")), 1, 15), 16, 10).cast("long")
     // starts = the self rows with drawable out-mass — a filtered bucket
     // scan, not an explode+distinct shuffle
-    var state = CacheOps.persistMaterialized(
+    LoopSession.sweep(spark,
       idx.filter(col("self") && col("wsum").isNotNull && col("wsum") > 0L)
         .select(col("src").as("start"), col("wsum").as("deg"), col("cut"))
         .withColumn("wk", explode(array((0 until walksPerNode)
           .map(i => lit(i.toLong)): _*)))
         .select(col("start"), col("wk"), col("start").as("node"), col("deg"),
-          col("cut")))
-    var hops: List[DataFrame] = List(state)
-    var out = state.select(col("start"), col("wk"), lit(0L).as("step"),
-      col("node"))
-    try {
-      for (i <- 1 to steps) {
-        val draw = state.filter(col("deg").isNotNull && col("deg") > 0L)
-          .select(col("start"), col("wk"), col("node").as("src"),
-            pmod(h(i), col("deg")).as("x"), col("cut"))
-        val hop = eb.join(
-            draw.withColumn("bkt", expr("x div cut")).drop("cut"),
-            Seq("src", "bkt"))
-          .filter(col("x") >= col("cw_lo") && col("x") < col("cw_hi"))
-        state = CacheOps.persistMaterialized(
-          hop.select(col("start"), col("wk"), col("dst").as("node"),
-            col("wsum_dst").as("deg"), col("cut_dst").as("cut")))
-        hops ::= state
-        out = out.unionByName(state.select(col("start"), col("wk"),
-          lit(i.toLong).as("step"), col("node")))
-      }
-    } catch { case t: Throwable =>
-      hops.foreach(_.unpersist(blocking = true))
-      throw t
-    }
-    finishRanks(spark, out, hops)
+          col("cut")),
+      steps, LoopSession.Release.KeepAll, walkCorpus) { (_, state, i) =>
+      val draw = state.filter(col("deg").isNotNull && col("deg") > 0L)
+        .select(col("start"), col("wk"), col("node").as("src"),
+          pmod(walkDraw(seed, i + 1), col("deg")).as("x"), col("cut"))
+      val hop = eb.join(
+          draw.withColumn("bkt", expr("x div cut")).drop("cut"),
+          Seq("src", "bkt"))
+        .filter(col("x") >= col("cw_lo") && col("x") < col("cw_hi"))
+      LoopSession.Sweep(hop.select(col("start"), col("wk"),
+        col("dst").as("node"), col("wsum_dst").as("deg"),
+        col("cut_dst").as("cut")), LoopSession.materialize)
+    }._1
   }
 
   /** The cutpoint expansion of a [[buildGraphIndex]] scan — map-side
@@ -1837,67 +1576,54 @@ object Graph {
       e.select(col("src").as("prev"), col("dst"), lit(1L).as("isn"))
         .repartition(col("prev"), col("dst"))
         .sortWithinPartitions(col("prev"), col("dst")))
-    def h(step: Int): Column =
-      conv(substring(md5(concat_ws("-", lit(seed), col("start"), col("wk"),
-        lit(step.toLong)).cast("binary")), 1, 15), 16, 10).cast("long")
-    var state = CacheOps.persistMaterialized(
+    try LoopSession.sweep(spark,
       e.select(col("src").as("start")).distinct()
         .withColumn("wk", explode(array((0 until walksPerNode)
           .map(i => lit(i.toLong)): _*)))
         .select(col("start"), col("wk"), col("start").as("prev"),
-          col("start").as("node")))
-    var hops: List[DataFrame] = List(state)
-    var out = state.select(col("start"), col("wk"), lit(0L).as("step"),
-      col("node"))
-    try {
-      for (i <- 1 to steps) {
-        // the walk's out-list with the second-order bias applied: return
-        // beats neighbor beats far (dst = prev is never an edge of
-        // (prev, dst) since the graph has no self-loops). The 60-bit
-        // draw hash is computed HERE, on the walks-sized state — one
-        // md5 per walk per step, carried through the join — not on the
-        // Σ outdeg(cur)-sized candidate stream (the r16 shard bench
-        // read the per-candidate md5/conv pair as a top cost).
-        val st = state.withColumn("hh", h(i))
-        val cand = st.join(e, st("node") === e("src"))
-          .select(col("start"), col("wk"), col("prev"), col("node"),
-            col("hh"), col("dst"), col("w"))
-          .join(nb, Seq("prev", "dst"), "left")
-          .select(col("start"), col("wk"), col("node"), col("hh"),
-            col("dst"),
-            (when(col("dst") === col("prev"), lit(biasReturn))
-              .when(col("isn").isNotNull, lit(biasNeighbor))
-              .otherwise(lit(biasFar)) * col("w")).as("aw"))
-        val wWalk = Window.partitionBy(col("start"), col("wk"))
-          .orderBy(col("dst"))
-        // the partition total shares wWalk's partitioning AND ordering
-        // (an unbounded frame over the same sorted run), so Catalyst
-        // plans ONE Window operator — a separate unordered spec costs a
-        // second Sort+Window pass over the corpus-sized candidate stream
-        // per step (VERDICT r16 #5). Sums are longs: frame-order exact.
-        val wTot = wWalk.rowsBetween(Window.unboundedPreceding,
-          Window.unboundedFollowing)
-        val cum = cand.select(col("start"), col("wk"), col("node"),
-          col("hh"), col("dst"),
-          (sum(col("aw")).over(wWalk) - col("aw")).as("lo"),
-          sum(col("aw")).over(wWalk).as("hi"),
-          sum(col("aw")).over(wTot).as("tot"))
-        val hop = cum.withColumn("x", pmod(col("hh"), col("tot")))
-          .filter(col("x") >= col("lo") && col("x") < col("hi"))
-        state = CacheOps.persistMaterialized(
-          hop.select(col("start"), col("wk"), col("node").as("prev"),
-            col("dst").as("node")))
-        hops ::= state
-        out = out.unionByName(state.select(col("start"), col("wk"),
-          lit(i.toLong).as("step"), col("node")))
-      }
-    } catch { case t: Throwable =>
-      hops.foreach(_.unpersist(blocking = true))
-      nb.unpersist(blocking = true)
-      e0.unpersist(blocking = true)
-      throw t
+          col("start").as("node")),
+      steps, LoopSession.Release.KeepAll, walkCorpus) { (_, state, i) =>
+      // the walk's out-list with the second-order bias applied: return
+      // beats neighbor beats far (dst = prev is never an edge of
+      // (prev, dst) since the graph has no self-loops). The 60-bit draw
+      // hash is computed HERE, on the walks-sized state — one md5 per
+      // walk per step, carried through the join — not on the
+      // Σ outdeg(cur)-sized candidate stream (the r16 shard bench read
+      // the per-candidate md5/conv pair as a top cost).
+      val st = state.withColumn("hh", walkDraw(seed, i + 1))
+      val cand = st.join(e, st("node") === e("src"))
+        .select(col("start"), col("wk"), col("prev"), col("node"),
+          col("hh"), col("dst"), col("w"))
+        .join(nb, Seq("prev", "dst"), "left")
+        .select(col("start"), col("wk"), col("node"), col("hh"),
+          col("dst"),
+          (when(col("dst") === col("prev"), lit(biasReturn))
+            .when(col("isn").isNotNull, lit(biasNeighbor))
+            .otherwise(lit(biasFar)) * col("w")).as("aw"))
+      val wWalk = Window.partitionBy(col("start"), col("wk"))
+        .orderBy(col("dst"))
+      // the partition total shares wWalk's partitioning AND ordering (an
+      // unbounded frame over the same sorted run), so Catalyst plans ONE
+      // Window operator — a separate unordered spec costs a second
+      // Sort+Window pass over the corpus-sized candidate stream per step
+      // (VERDICT r16 #5). Sums are longs: frame-order exact.
+      val wTot = wWalk.rowsBetween(Window.unboundedPreceding,
+        Window.unboundedFollowing)
+      val cum = cand.select(col("start"), col("wk"), col("node"),
+        col("hh"), col("dst"),
+        (sum(col("aw")).over(wWalk) - col("aw")).as("lo"),
+        sum(col("aw")).over(wWalk).as("hi"),
+        sum(col("aw")).over(wTot).as("tot"))
+      val hop = cum.withColumn("x", pmod(col("hh"), col("tot")))
+        .filter(col("x") >= col("lo") && col("x") < col("hi"))
+      LoopSession.Sweep(hop.select(col("start"), col("wk"),
+        col("node").as("prev"), col("dst").as("node")),
+        LoopSession.materialize)
+    }._1
+    finally {
+      e0.unpersist(blocking = false)
+      nb.unpersist(blocking = false)
     }
-    finishRanks(spark, out, e0 :: nb :: hops)
   }
 
   /** One synchronous Louvain refinement step (Blondel et al. 2008, the
@@ -1959,9 +1685,9 @@ object Graph {
     * (node, nbr, w) adjacency — built ONCE and shared by every sweep
     * (the r17 q_louvain profile showed each step call rebuilding all
     * three plus re-persisting the already-cached edges). Only the
-    * label-dependent joins run per sweep. Returns the final labels as a
-    * DETACHED caller-session persist (the labelPropagation contract);
-    * `labels0` is never unpersisted here.
+    * label-dependent joins run per sweep. Returns the final labels as
+    * the [[LoopSession.sweep]] hand-back; `labels0` is never unpersisted
+    * here.
     *
     * The step is a fixed pipeline of keyed joins/aggs whose frames are
     * nodes-or-edges-sized — the same profile as the sweep loops, so it
@@ -2007,72 +1733,49 @@ object Graph {
       if (sweeps > 1) Some(CacheOps.persistMaterialized(adjPlan)) else None
     val adj = adjShared.getOrElse(adjPlan)
     // each sweep references its label frame twice (degree join + mass
-    // join) — the incoming frame is persisted so a lazy caller plan
-    // can't execute twice; stepped states are already persisted
-    val labC = labels0.select(col("id").cast("long"),
-      col("community").cast("long")).persist(MEMORY_AND_DISK)
-    var labCur: DataFrame = null // internal stepped persists (released here)
-    try {
-      var out: DataFrame = null
-      for (_ <- 1 to sweeps) {
-        val lab =
-          if (labCur != null) labCur
-          else org.apache.spark.sql.graftbridge.Bridge.rebind(labC, loopS)
-        // per-sweep: the label-dependent joins only
-        val degL = CacheOps.persistMaterialized(degW.join(lab, "id"))
-        try {
-          val dc = degL.groupBy(col("community"))
-            .agg(sum(col("deg")).as("dsum"))
-          // the one corpus-sized aggregation; referenced twice
-          // (own-community lookup + move candidates), hence persisted
-          val evd = CacheOps.persistMaterialized(
-            adj.join(lab.select(col("id").as("nbr"), col("community").as("d")),
-                "nbr")
-              .groupBy(col("node").as("id"), col("d"))
-              .agg(sum(col("w")).as("ec")))
-          try {
-            val base = degL
-              .join(dc, "community")
-              .join(evd.select(col("id"), col("d"), col("ec").as("evc")),
-                degL("id") === evd("id") && col("d") === degL("community"),
-                "left")
-              .select(degL("id").as("id"), col("deg"),
-                col("community").as("c"), col("dsum").as("dcur"),
-                coalesce(col("evc"), lit(0L)).as("evc"))
-            val cand = base
-              .join(evd.select(col("id"), col("d"), col("ec")), Seq("id"))
-              .filter(col("d") =!= col("c"))
-              .join(dc.select(col("community").as("d"), col("dsum").as("dnew")),
-                "d")
-              .crossJoin(broadcast(m))
-              .select(col("id"), col("d"),
-                (lit(4L) * col("m") * (col("ec") - col("evc")) -
-                  lit(2L) * col("deg") * (col("dnew") - col("dcur")) -
-                  lit(2L) * col("deg") * col("deg")).as("dnum"))
-            val best = cand.groupBy(col("id"))
-              .agg(min(struct((-col("dnum")).as("nd"), col("d"))).as("b"))
-              .select(col("id"), col("b.nd").as("nd"), col("b.d").as("bd"))
-            // DETACHED: the degL/evd/predecessor releases cannot
-            // invalidate the state just materialized
-            val next = CacheOps.persistMaterializedDetached(
-              base.join(best, Seq("id"), "left")
-                .select(col("id"),
-                  when(col("nd").isNotNull && col("nd") < 0L, col("bd"))
-                    .otherwise(col("c")).as("community")))
-            if (labCur != null) labCur.unpersist(blocking = false)
-            labCur = next
-            out = next
-          } finally evd.unpersist(blocking = false)
-        } finally degL.unpersist(blocking = false)
-      }
-      // hand back a CALLER-session view (the labelPropagation contract):
-      // the caller's unpersist() matches the shared cache entry
-      org.apache.spark.sql.graftbridge.Bridge.rebind(out, caller)
-    } catch { case t: Throwable =>
-      if (labCur != null) labCur.unpersist(blocking = true)
-      throw t
-    } finally {
-      labC.unpersist(blocking = false)
+    // join) — the loop persists the incoming frame, so a lazy caller
+    // plan can't execute twice
+    try LoopSession.sweep(caller, org.apache.spark.sql.graftbridge.Bridge.rebind(
+      labels0.select(col("id").cast("long"), col("community").cast("long")),
+      loopS), sweeps) { (scratch, lab, _) =>
+      // per-sweep: the label-dependent joins only
+      val degL = scratch.persistMaterialized(degW.join(lab, "id"))
+      val dc = degL.groupBy(col("community"))
+        .agg(sum(col("deg")).as("dsum"))
+      // the one corpus-sized aggregation; referenced twice (own-community
+      // lookup + move candidates), hence persisted
+      val evd = scratch.persistMaterialized(
+        adj.join(lab.select(col("id").as("nbr"), col("community").as("d")),
+            "nbr")
+          .groupBy(col("node").as("id"), col("d"))
+          .agg(sum(col("w")).as("ec")))
+      val base = degL
+        .join(dc, "community")
+        .join(evd.select(col("id"), col("d"), col("ec").as("evc")),
+          degL("id") === evd("id") && col("d") === degL("community"),
+          "left")
+        .select(degL("id").as("id"), col("deg"),
+          col("community").as("c"), col("dsum").as("dcur"),
+          coalesce(col("evc"), lit(0L)).as("evc"))
+      val cand = base
+        .join(evd.select(col("id"), col("d"), col("ec")), Seq("id"))
+        .filter(col("d") =!= col("c"))
+        .join(dc.select(col("community").as("d"), col("dsum").as("dnew")),
+          "d")
+        .crossJoin(broadcast(m))
+        .select(col("id"), col("d"),
+          (lit(4L) * col("m") * (col("ec") - col("evc")) -
+            lit(2L) * col("deg") * (col("dnew") - col("dcur")) -
+            lit(2L) * col("deg") * col("deg")).as("dnum"))
+      val best = cand.groupBy(col("id"))
+        .agg(min(struct((-col("dnum")).as("nd"), col("d"))).as("b"))
+        .select(col("id"), col("b.nd").as("nd"), col("b.d").as("bd"))
+      LoopSession.Sweep(base.join(best, Seq("id"), "left")
+        .select(col("id"),
+          when(col("nd").isNotNull && col("nd") < 0L, col("bd"))
+            .otherwise(col("c")).as("community")), LoopSession.materialize)
+    }._1
+    finally {
       degWShared.foreach(_.unpersist(blocking = false))
       adjShared.foreach(_.unpersist(blocking = false))
     }
@@ -2199,7 +1902,7 @@ object Graph {
       .unionByName(e.select(col("dst").as("id"), lit(null).cast("long").as("c")))
       .groupBy(col("id")).agg(sum(col("c")).as("wsum"))
       .persist(MEMORY_AND_DISK)
-    finishRanks(spark, loopRanks(nd, ranks => {
+    LoopSession.handBack(spark, loopRanks(nd, ranks => {
       // per-edge (rank·w) div wsum happens on the routed edge row: carry
       // rank and wsum to the join, divide after multiplying by the edge w
       val r = ranks.filter(col("wsum").isNotNull)

@@ -2,10 +2,13 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 /** ONE definition of the right-sized cloned session every iterative
   * graph loop runs in (connected components, k-core, label propagation,
-  * HITS) — measured in representatives(): label/alive/score frames are
+  * HITS), and of the persisted-state loop itself ([[sweep]], whose
+  * scaladoc states the loop contract). The session is measured in
+  * representatives(): label/alive/score frames are
   * nodes-sized, and at the caller's corpus-scale shuffle width each
   * sweep's stage-submission latency exceeds the data it moves, while
   * AQE's per-exchange materialize-and-replan and fresh per-sweep
@@ -58,4 +61,134 @@ private[graft] object LoopSession {
     * loop anyway) and keeps lineage-recompute recoverability. */
   def bindInto(df: DataFrame, loop: SparkSession): DataFrame =
     Bridge.rebind(Bridge.truncatePlan(df), loop)
+
+  /** One sweep of a [[sweep]] loop: the next state's plan, and its
+    * signal — the sweep's ONE materializing action, run over the
+    * persisted next state (a count, a changed-label count, a
+    * convergence pair, a raw-RDD fold), true once the loop converged. */
+  final case class Sweep(next: DataFrame, signal: DataFrame => Boolean)
+
+  /** Which states a [[sweep]] loop holds. */
+  sealed trait Release
+  object Release {
+    /** Only the newest: each predecessor goes once its successor has
+      * materialized (every loop whose result is its final state). */
+    case object Predecessor extends Release
+    /** Every state until the hand-back has materialized (the walk
+      * builders: the result is the union of all hops). */
+    case object KeepAll extends Release
+  }
+
+  /** Per-sweep scratch caches of a running [[sweep]] loop: persisted
+    * here, released once the sweep's state has materialized, or at once
+    * if anything throws. */
+  final class Scratch private[LoopSession] {
+    private var held: List[DataFrame] = Nil
+    def persist(df: DataFrame): DataFrame = {
+      val p = df.persist(MEMORY_AND_DISK)
+      held ::= p
+      p
+    }
+    /** [[persist]], eagerly materialized by a count. */
+    def persistMaterialized(df: DataFrame): DataFrame = {
+      val p = persist(df)
+      p.count()
+      p
+    }
+    private[LoopSession] def release(blocking: Boolean): Unit = {
+      held.foreach(_.unpersist(blocking))
+      held = Nil
+    }
+  }
+
+  /** The ONE persisted-state loop every iterative operator runs:
+    * `step(scratch, state, i)` maps sweep i's input state to a [[Sweep]],
+    * for at most `maxSweeps` sweeps or until a signal reports
+    * convergence. Returns the hand-back and the number of sweeps run.
+    *
+    * The contract, stated once for every loop:
+    *  1. DETACH. Each state persists over a truncated plan (a flat scan
+    *     of its execution RDD), so its cache entry references no
+    *     upstream cache: Spark's non-cascading unpersist RECACHES
+    *     dependent entries, and an attached state would be invalidated
+    *     by the very release of its predecessor, re-executing the whole
+    *     sweep chain on every later read. Truncation also keeps the
+    *     logical plan O(1) per sweep while the RDD lineage keeps
+    *     recompute-on-eviction.
+    *  2. SIGNAL IS THE MATERIALIZATION. The step's signal is the one
+    *     full-scan action per sweep: it fills the fresh cache and yields
+    *     the convergence test in the same job — no separate count.
+    *  3. RELEASE ORDER. The predecessor (under [[Release.Predecessor]])
+    *     and the sweep's [[Scratch]] caches go only after the new state
+    *     has materialized.
+    *  4. FAILURE RELEASE. If the step, a signal or the hand-back throws,
+    *     every cache the loop still holds — states, scratch, the fresh
+    *     persist — is released (blocking) before the error propagates.
+    *  5. CALLER-SESSION HAND-BACK. `finish` maps the held states (oldest
+    *     first) to the result. The final state itself is handed over as
+    *     is; anything else is persisted detached and the states released
+    *     ([[handBack]]). Either way the result is rebound to `caller`, so
+    *     downstream queries never inherit the loop session's confs, and
+    *     the caller's unpersist() releases its cache entry.
+    *
+    * `init` is a lazy plan (not already cached): the loop persists and
+    * owns it, and its cache fills during the first sweep's action. */
+  def sweep(caller: SparkSession, init: DataFrame, maxSweeps: Int,
+            policy: Release = Release.Predecessor,
+            finish: Seq[DataFrame] => DataFrame = _.last)
+           (step: (Scratch, DataFrame, Int) => Sweep): (DataFrame, Int) = {
+    val scratch = new Scratch
+    var held = List(init.persist(MEMORY_AND_DISK)) // newest first
+    var sweeps = 0
+    var converged = false
+    try {
+      while (!converged && sweeps < maxSweeps) {
+        val Sweep(next, signal) = step(scratch, held.head, sweeps)
+        held ::= Bridge.truncatePlan(next).persist(MEMORY_AND_DISK)
+        converged = signal(held.head)
+        scratch.release(blocking = false)
+        if (policy == Release.Predecessor) {
+          held.tail.foreach(_.unpersist(blocking = false))
+          held = held.take(1)
+        }
+        sweeps += 1
+      }
+      val out = finish(held.reverse)
+      if (out eq held.head) {
+        held.tail.foreach(_.unpersist(blocking = false))
+        (Bridge.rebind(out, caller), sweeps)
+      }
+      else (handBack(caller, out, held), sweeps)
+    } catch { case t: Throwable =>
+      scratch.release(blocking = true)
+      held.foreach(_.unpersist(blocking = true))
+      throw t
+    }
+  }
+
+  /** The fixed-sweep signal: a count materializes the state; never
+    * converges. */
+  val materialize: DataFrame => Boolean = df => { df.count(); false }
+
+  /** A signal that converges once `measure` repeats the previous sweep's
+    * value — the monotone-loop test (an alive count, a (count, Σdist)
+    * pair). Stateful: build one per loop run. */
+  def repeats[A](measure: DataFrame => A): DataFrame => Boolean = {
+    var prev: Option[A] = None
+    df => {
+      val m = measure(df)
+      val same = prev.contains(m)
+      prev = Some(m)
+      same
+    }
+  }
+
+  /** Persist `result` detached, materialize it, release `release`, and
+    * hand the result back rebound to `caller` — the [[sweep]] hand-back,
+    * also used by the composed fixed-count loops (rank, fixed-sweep
+    * SSSP), whose single final action is this materialization. */
+  def handBack(caller: SparkSession, result: DataFrame,
+               release: Seq[DataFrame]): DataFrame =
+    try Bridge.rebind(CacheOps.persistMaterializedDetached(result), caller)
+    finally release.foreach(_.unpersist(blocking = false))
 }

@@ -632,7 +632,7 @@ object Similarity {
     // fetch-back join) AND the probe side — persist or the corpus-scale
     // broadcast-join + heap aggregation executes three times per run.
     // The returned edge list is MATERIALIZED so this cache can be
-    // released on return (the finishRanks discipline); callers doing
+    // released on return (the LoopSession.handBack discipline); callers doing
     // further passes over the graph (mutual filter, clustering sweeps)
     // then read the k·|corpus| edge cache, never the vectors again.
     val ranked = knnRankedPlan(corpus, cents, nprobe, idCol, vecCol)

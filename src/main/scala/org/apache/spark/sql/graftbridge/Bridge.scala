@@ -49,18 +49,13 @@ object Bridge {
       ClassicConversions.castToImpl(df.sparkSession), lr)
   }
 
-  /** [[truncatePlan]] exposing the raw execution RDD alongside the
-    * truncated frame: an iterative operator can run its per-sweep
-    * convergence scan as ONE RDD job over InternalRows instead of paying
-    * a second full QueryExecution (analyze + optimize + codegen of an
-    * aggregate plan) per sweep. */
-  def truncatePlanWithRdd(df: org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame,
-         org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
-    val classic = ClassicConversions.castToImpl(df.sparkSession)
-    val rdd = ClassicConversions.castToImpl(df).queryExecution.toRdd
-    (classic.internalCreateDataFrame(rdd, df.schema), rdd)
-  }
+  /** The raw execution RDD of `df` (InternalRows): an iterative operator
+    * runs its per-sweep convergence scan over a persisted state as ONE
+    * RDD job instead of paying a second full QueryExecution (analyze +
+    * optimize + codegen of an aggregate plan) per sweep. */
+  def toRdd(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
+    ClassicConversions.castToImpl(df).queryExecution.toRdd
 
   /** Release the block-manager storage behind a localCheckpoint'd frame
     * (Dataset.unpersist only covers CacheManager entries; a local

@@ -4,15 +4,18 @@ import graft.pipeline.Pipeline
 import graft.sources.{Documents, JsonConcat}
 import org.apache.spark.sql.functions._
 
-/** Compatibility against the reference's OWN fixture files
-  * (/root/reference/data/multi_lines.* — read-only): every document format
-  * the reference ships parses to the same logical records, and a
-  * chewdata-shaped config with transformer actions + a referential mapping
-  * produces the mapped output its transform-mapping example expects. */
+/** Compatibility with chewdata's document shapes: hand-authored fixtures
+  * under `src/test/resources/compat/` (multi_lines.* in every format the
+  * reference ships, plus its referential mapping) parse to the same logical
+  * records, and a chewdata-shaped config with transformer actions + a
+  * referential mapping produces the mapped output its transform-mapping
+  * example expects. The two tree sweeps read a chewdata checkout at
+  * /root/reference (read-only). */
 class CompatSpec extends SparkSpec {
   import spark.implicits._
 
-  private val data = "/root/reference/data"
+  private val data =
+    new java.io.File(getClass.getResource("/compat/mapping.json").toURI).getParent
   private val expectedNumbers = Seq(10L, 20L, 30L)
 
   private def numbers(df: org.apache.spark.sql.DataFrame): Seq[Long] =

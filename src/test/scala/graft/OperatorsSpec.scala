@@ -595,7 +595,7 @@ class OperatorsSpec extends SparkSpec {
     sc.getPersistentRDDs.values.foreach(_.unpersist(true))
     val e0 = Seq((1L, 2L), (2L, 1L))
     val out = Graph.pageRank(e0.toDF("src", "dst"), iterations = 3)
-    // finishRanks persisted + forced the node-sized result and dropped the
+    // the hand-back persisted + forced the node-sized result and dropped the
     // edges-sized cache — exactly one persisted dataset may remain.
     assert(sc.getPersistentRDDs.size <= 1,
       s"edge cache leaked: ${sc.getPersistentRDDs.size} persisted RDDs")
