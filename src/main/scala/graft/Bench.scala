@@ -32,12 +32,12 @@ object Bench {
         case Some(id) => s"BENCH_SHARD_$id.json"
         case None => if (only.isEmpty) "BENCH_FULL.json" else "BENCH_PARTIAL.json"
       }
-      val results = sweep(sfDir, only)
+      val (results, failed) = sweep(sfDir, only)
       val isolated = adjudicate(results, sfDir)
-      writeFull(outPath, results, isolated, sfDir)
+      writeFull(outPath, results, isolated, failed, sfDir)
       // Children write their file and stay quiet on stdout (the harness
       // reads the coordinator's tail); solo/dev runs print the line.
-      if (shardId.isEmpty) printBudgeted(results, isolated, sfDir)
+      if (shardId.isEmpty) printBudgeted(results, isolated, failed, sfDir)
       if (sharedSpark != null) sharedSpark.stop()
     }
   }
@@ -63,7 +63,23 @@ object Bench {
     sharedSpark
   }
 
-  private def sweep(sfDir: String, only: Option[Set[String]]): Seq[(String, Double)] = {
+  /** Best of `runs` timed executions of gate `name`, each after a fresh
+    * ballast drop; None if any run throws — a failure is never timed. */
+  private def timed(s: SparkSession, name: String, sfDir: String,
+                    runs: Int): Option[Double] = {
+    val times = (0 until runs).map { _ =>
+      BenchUtil.dropBallast(s)
+      val t0 = System.nanoTime()
+      val ok = try { SparkEntry.queries(name)(s, sfDir).count(); true }
+               catch { case _: Throwable => false }
+      if (ok) Some((System.nanoTime() - t0) / 1e9) else None
+    }
+    if (times.forall(_.isDefined)) Some(times.flatten.min) else None
+  }
+
+  /** Per-gate best time, and the gates that threw (no time). */
+  private def sweep(sfDir: String, only: Option[Set[String]])
+      : (Seq[(String, Double)], Seq[String]) = {
     val s = spark()
     // best-of-2 per query: one shared JVM means JIT/GC/run-order noise can
     // swamp sub-second queries; the min of two back-to-back runs is the
@@ -71,21 +87,17 @@ object Bench {
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
     // Cache-ballast discipline: drop all persisted data between queries so
     // each timing reads the PLAN, not the heap history (see BenchUtil).
-    SparkEntry.queries.toSeq.sortBy(_._1)
+    val timings = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
         // One UNTIMED warm-up execution per query: the first run of a plan
         // in a JVM pays one-off Janino codegen + JIT.
         BenchUtil.dropBallast(s)
         try { fn(s, sfDir).count() } catch { case _: Throwable => () }
-        val times = (0 until math.max(runs, 1)).map { _ =>
-          BenchUtil.dropBallast(s)
-          val t0 = System.nanoTime()
-          try { fn(s, sfDir).count() } catch { case _: Throwable => -1L }
-          (System.nanoTime() - t0) / 1e9
-        }
-        name -> times.min
+        name -> timed(s, name, sfDir, math.max(runs, 1))
       }
+    (timings.collect { case (n, Some(t)) => n -> t },
+      timings.collect { case (n, None) => n })
   }
 
   private def parseBaseline(): Map[String, Double] = {
@@ -102,7 +114,7 @@ object Bench {
   /** Self-adjudication (VERDICT r13 #2): re-measure every gate whose
     * in-suite time exceeded 2x its BASELINE.md row (3 runs, fresh ballast
     * drop, best); a run that THROWS must not publish its fast-failure
-    * elapsed time — all-failed records the -1 sentinel.
+    * elapsed time — it records the -1 sentinel.
     *
     * r17 (VERDICT r16 #2): the fixed 2x-anchor trigger tripped 83/222
     * gates when machine drift inflated the whole suite — the anchor is a
@@ -122,16 +134,7 @@ object Bench {
     results.collect {
       case (name, t) if t > 1.0 &&
           baseline.get(name).exists(b => t > 2.0 * b * drift) =>
-        val s = spark()
-        val fn = SparkEntry.queries(name)
-        val times = (0 until 3).flatMap { _ =>
-          BenchUtil.dropBallast(s)
-          val t0 = System.nanoTime()
-          val ok = try { fn(s, sfDir).count(); true }
-                   catch { case _: Throwable => false }
-          if (ok) Some((System.nanoTime() - t0) / 1e9) else None
-        }
-        name -> (if (times.isEmpty) -1.0 else times.min)
+        name -> timed(spark(), name, sfDir, 3).getOrElse(-1.0)
     }
   }
 
@@ -154,6 +157,7 @@ object Bench {
     val assignment = bins.map(_.sorted)
     val merged = scala.collection.mutable.LinkedHashMap[String, Double]()
     val mergedIso = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val mergedFailed = scala.collection.mutable.LinkedHashSet[String]()
     val forkOk = (0 until shards).forall { i =>
       val f = new java.io.File(s"BENCH_SHARD_$i.json")
       if (f.exists()) f.delete()
@@ -161,25 +165,28 @@ object Bench {
     }
     if (forkOk) {
       (0 until shards).foreach { i =>
-        val (qs, iso) = parseShard(s"BENCH_SHARD_$i.json")
+        val (qs, iso, failed) = parseShard(s"BENCH_SHARD_$i.json")
         qs.foreach { case (k, v) => merged(k) = v }
         iso.foreach { case (k, v) => mergedIso(k) = v }
+        mergedFailed ++= failed
       }
     }
     // Completeness backstop: any gate missing a shard result (fork
     // infrastructure failure, child crash) re-runs in-process so the
     // driver artifact is never partial.
-    val missing = gates.filterNot(merged.contains).toSet
+    val missing = gates.filterNot(g => merged.contains(g) || mergedFailed(g)).toSet
     if (missing.nonEmpty) {
       System.err.println(s"[bench] re-running ${missing.size} gates in-process (shard gap)")
-      val res = sweep(sfDir, Some(missing))
+      val (res, failed) = sweep(sfDir, Some(missing))
       res.foreach { case (k, v) => merged(k) = v }
+      mergedFailed ++= failed
       adjudicate(res, sfDir).foreach { case (k, v) => mergedIso(k) = v }
     }
     val results = merged.toSeq.sortBy(_._1)
     val isolated = mergedIso.toSeq.sortBy(_._1)
-    writeFull("BENCH_FULL.json", results, isolated, sfDir)
-    printBudgeted(results, isolated, sfDir)
+    val failed = mergedFailed.toSeq.sorted
+    writeFull("BENCH_FULL.json", results, isolated, failed, sfDir)
+    printBudgeted(results, isolated, failed, sfDir)
     if (sharedSpark != null) sharedSpark.stop()
   }
 
@@ -209,11 +216,12 @@ object Bench {
     } catch { case _: Throwable => false }
   }
 
-  private def parseShard(path: String): (Seq[(String, Double)], Seq[(String, Double)]) = {
+  private def parseShard(path: String)
+      : (Seq[(String, Double)], Seq[(String, Double)], Seq[String]) = {
     val txt = try {
       new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
         java.nio.charset.StandardCharsets.UTF_8)
-    } catch { case _: Throwable => return (Nil, Nil) }
+    } catch { case _: Throwable => return (Nil, Nil, Nil) }
     def obj(key: String): Seq[(String, Double)] = {
       val start = txt.indexOf("\"" + key + "\":{")
       if (start < 0) return Nil
@@ -224,21 +232,34 @@ object Bench {
       pair.findAllMatchIn(txt.substring(open, close + 1))
         .map(m => m.group(1) -> m.group(2).toDouble).toSeq
     }
-    (obj("queries"), obj("isolated"))
+    val failed = """"failed":\[([^\]]*)\]""".r.findFirstMatchIn(txt).toSeq
+      .flatMap(m => """"([^"]+)"""".r.findAllMatchIn(m.group(1)).map(_.group(1)))
+    (obj("queries"), obj("isolated"), failed)
   }
+
+  /** The gates that threw, as a JSON array of names. */
+  private def failedJson(failed: Seq[String]): String =
+    failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+
+  /** The headline `value`: the sum of the per-gate times, or null when
+    * any gate threw — a sum over only the gates that succeeded would read
+    * a newly failing gate as a speedup, so it is not published. */
+  private def value(results: Seq[(String, Double)], failed: Seq[String],
+                    fmt: Double => String): String =
+    if (failed.isEmpty) fmt(results.map(_._2).sum) else "null"
 
   // ------------------------------------------------------------ artifacts
 
   /** Full-precision record for humans / the repo history. */
   private def writeFull(path: String, results: Seq[(String, Double)],
-                        isolated: Seq[(String, Double)], sfDir: String): Unit = {
-    val total = results.map(_._2).sum
+                        isolated: Seq[(String, Double)], failed: Seq[String],
+                        sfDir: String): Unit = {
     val fullQs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val fullIso = isolated.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"isolated":$fullIso,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${value(results, failed, _.toString)},"unit":"sec","queries":$fullQs,"isolated":$fullIso,"failed":${failedJson(failed)},"sf":"$sfDir"}"""
     java.nio.file.Files.write(
       java.nio.file.Paths.get(path),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -262,43 +283,49 @@ object Bench {
     * run with dozens of adjudicated gates that drove the budget negative
     * and the line shipped `"queries":{}` — the round's entire per-query
     * ground truth was lost. The queries map is now budgeted FIRST (the
-    * slowest gates are what the driver diffs round-over-round) and the
-    * isolated map gets only the remaining space, slowest entries first;
-    * neither map can ever render the other empty. BENCH_FULL.json always
-    * carries both maps in full. */
+    * slowest gates are what the driver diffs round-over-round), then the
+    * names of the gates that threw, then the isolated map, each in the
+    * space the one before left; `failed_n` always counts every failed
+    * gate, so no list can render another empty. BENCH_FULL.json always
+    * carries every map and list in full. */
   private def printBudgeted(results: Seq[(String, Double)],
-                            isolated: Seq[(String, Double)], sfDir: String): Unit = {
+                            isolated: Seq[(String, Double)], failed: Seq[String],
+                            sfDir: String): Unit = {
     val total = results.map(_._2).sum
     def fmt(v: Double): String = f"$v%.3f"
     def entry(k: String, v: Double): String = "\"" + k + "\":" + fmt(v)
     def cost(k: String, v: Double): Int = entry(k, v).length + 1 // comma
+    def fit[T](items: Seq[T], room: Int)(size: T => Int): (Seq[T], Int) = {
+      var used = 0
+      val kept = items.takeWhile { x =>
+        if (used + size(x) <= room) { used += size(x); true } else false
+      }
+      (kept, room - used)
+    }
     val header =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":{"""
+      s"""{"metric":"total","value":${value(results, failed, fmt)},"unit":"sec","queries":{"""
     // Worst-case fixed parts reserved up front so the budget can't go
-    // negative: the other_n/other_sec aggregate, an (possibly empty)
-    // isolated wrapper, and the trailer.
+    // negative: the other_n/other_sec aggregate, the failed count and an
+    // (possibly empty) name list, an (possibly empty) isolated wrapper,
+    // and the trailer — every part is bounded whatever the gate count.
     val fixed =
       s"""},"other_n":${results.length},"other_sec":${fmt(total)}""" +
+        s""","failed_n":${failed.length},"failed":[]""" +
         s""","isolated":{}""" + s""","sf":"$sfDir"}"""
-    val budget = 1800 - header.length - fixed.length
     val sortedDesc = results.sortBy(-_._2)
-    var used = 0
-    val kept = sortedDesc.takeWhile { case (k, v) =>
-      if (used + cost(k, v) <= budget) { used += cost(k, v); true } else false
-    }
+    val (kept, failRoom) =
+      fit(sortedDesc, 1800 - header.length - fixed.length) { case (k, v) => cost(k, v) }
+    val (failKept, isoRoom) = fit(failed, failRoom)(_.length + 3) // quotes, comma
+    val (isoKept, _) = fit(isolated.sortBy(-_._2), isoRoom) { case (k, v) => cost(k, v) }
     val rest = sortedDesc.drop(kept.length)
-    val isoRoom = budget - used
-    var isoUsed = 0
-    val isoKept = isolated.sortBy(-_._2).takeWhile { case (k, v) =>
-      if (isoUsed + cost(k, v) <= isoRoom) { isoUsed += cost(k, v); true }
-      else false
-    }
     val keptQs = kept.map { case (k, v) => entry(k, v) }.mkString(",")
     val otherPart =
       if (rest.isEmpty) ""
       else s""","other_n":${rest.length},"other_sec":${fmt(rest.map(_._2).sum)}"""
+    val failPart = s""","failed_n":${failed.length},"failed":${failedJson(failKept)}"""
     val isoPart = s""","isolated":{${isoKept.sortBy(_._1)
       .map { case (k, v) => entry(k, v) }.mkString(",")}}"""
-    println(header + keptQs + "}" + otherPart + isoPart + s""","sf":"$sfDir"}""")
+    println(header + keptQs + "}" + otherPart + failPart + isoPart +
+      s""","sf":"$sfDir"}""")
   }
 }

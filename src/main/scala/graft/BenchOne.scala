@@ -1,16 +1,17 @@
 package graft
 /** One-off steady-state re-measure of named queries (3 runs each, best
-  * reported). SPARK_GRAFT_SF_DIR overrides the data dir (e.g. the
-  * ScaleBench target/scale10x corpus); SPARK_GRAFT_NOOP=1 materializes
-  * through the noop sink (the ScaleBench methodology) instead of count(). */
+  * reported) on the shipped session config (GraftSession.builder) sized
+  * to SPARK_GRAFT_CPUS cores, else to every core the JVM sees.
+  * SPARK_GRAFT_SF_DIR overrides the data dir (e.g. the ScaleBench
+  * target/scale10x corpus); SPARK_GRAFT_NOOP=1 materializes through the
+  * noop sink (the ScaleBench methodology) instead of count(). */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val noop = sys.env.get("SPARK_GRAFT_NOOP").contains("1")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val n = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val spark = GraftSession.builder(s"local[$n]", n)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }

@@ -428,16 +428,17 @@ object Dedup {
       // execution RDD: one full-scan action both fills the cache and yields
       // the signal, with no second QueryExecution (analyze + optimize an
       // aggregate plan) per sweep — on a small graph that plan work, not
-      // the data, dominated sweeps. Row layout is (id, prev, rep).
+      // the data, dominated sweeps. It runs under the loop session's confs
+      // (Bridge.onRdd). Row layout is (id, prev, rep).
       val unchanged: DataFrame => Boolean = state =>
-        org.apache.spark.sql.graftbridge.Bridge.toRdd(state).mapPartitions { it =>
+        org.apache.spark.sql.graftbridge.Bridge.onRdd(state)(_.mapPartitions { it =>
           var c = 0L
           while (it.hasNext) {
             val r = it.next()
             if (r.isNullAt(1) || r.getLong(1) != r.getLong(2)) c += 1
           }
           Iterator.single(c)
-        }.fold(0L)(_ + _) == 0L
+        }.fold(0L)(_ + _)) == 0L
       LoopSession.sweep(spark,
         edges.groupBy(col("a").as("id"))
           .agg(least(min(col("b")), first(col("a"))).as("rep")),

@@ -538,8 +538,9 @@ object Graph {
         return Seq.empty[(Long, Long, Long)].toDF("id", "hub", "auth")
       }
       // HITS exchanges the edge frame in every half-iteration's join —
-      // size the width to that edge traffic (codegen stays off at this
-      // scale: keeping it on was A/B-measured worse, per-sweep Janino
+      // size the width to that edge traffic (whole-stage codegen stays
+      // off at this scale, expression codegen too on small graphs:
+      // keeping whole-stage on was A/B-measured worse, per-sweep Janino
       // compiles outweigh interpreting the joins)
       val loopSession = LoopSession.forGraph(spark, nEdges,
         rowsPerPartition = 100000L)
@@ -1561,9 +1562,9 @@ object Graph {
       base.repartition(col("src")).sortWithinPartitions(col("src")))
     // Unlike the first-order walks, the per-step traffic here is
     // Σ outdeg(cur) — CORPUS-sized, not walks-sized — so the loop keeps
-    // whole-stage codegen ON (codegenCutoff = 0: the r16 shard bench read
-    // the interpreted out-list windows as the dominant cost) and sizes
-    // its width to the edge frame like HITS.
+    // whole-stage and expression codegen ON (codegenCutoff = 0: the r16
+    // shard bench read the interpreted out-list windows as the dominant
+    // cost) and sizes its width to the edge frame like HITS.
     val loop = LoopSession.forGraph(spark, nE, rowsPerPartition = 100000L,
       codegenCutoff = 0L)
     val e = org.apache.spark.sql.graftbridge.Bridge.rebind(e0, loop)

@@ -11,16 +11,23 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   * representatives(): label/alive/score frames are
   * nodes-sized, and at the caller's corpus-scale shuffle width each
   * sweep's stage-submission latency exceeds the data it moves, while
-  * AQE's per-exchange materialize-and-replan and fresh per-sweep
-  * whole-stage Janino compiles dominate SMALL graphs outright.
+  * AQE's per-exchange materialize-and-replan and fresh per-sweep Janino
+  * compiles dominate SMALL graphs outright.
   *
   * The width lives in a CLONED session (shared SparkContext, cache
   * manager, catalog) — never a session-global conf flip, which would
   * silently down-size every concurrent query (ADVICE r12). Sizing is
   * ~1M edge rows (~16 MB) per partition capped at the session setting,
   * so a billion-edge graph keeps the caller's full width; under 10M
-  * edges codegen is off (the compile dwarfs interpreting a nodes-sized
-  * frame — the classic iterative-small-data tradeoff).
+  * edges whole-stage codegen is off (the compile dwarfs interpreting a
+  * nodes-sized frame — the classic iterative-small-data tradeoff), and
+  * under 100k edges per-operator expression codegen is off too
+  * (projections, predicates, orderings, aggregation buffers are
+  * interpreted, in every task of every SQL execution the session runs).
+  * What still generates code is what Spark has no interpreted path for:
+  * the cached-batch column accessors of `DefaultCachedBatchSerializer`
+  * (every read of a persisted state) and `GenerateUnsafeRowJoiner` in
+  * hash aggregation.
   *
   * CONTRACT: frames the loop should execute must be rebound into the
   * loop session ([[bindInto]]); frames handed BACK to the caller must
@@ -31,10 +38,11 @@ private[graft] object LoopSession {
   /** `rowsPerPartition` sizes the loop width to what the sweeps MOVE:
     * 1M for loops whose per-sweep traffic is nodes-sized (components,
     * peel, label propagation), smaller for loops that exchange the edge
-    * frame every sweep (HITS). `codegenCutoff` disables whole-stage
-    * codegen below that many rows (per-sweep Janino compiles dwarf
-    * interpreting nodes-sized frames); pass 0 to always keep codegen —
-    * right when edge-sized joins run inside the loop. */
+    * frame every sweep (HITS). At or below `codegenCutoff` rows
+    * whole-stage codegen is off, and at or below 1% of it the expression
+    * factory runs interpreted too (per-sweep Janino compiles dwarf
+    * interpreting nodes-sized frames); pass 0 to always keep both kinds
+    * of codegen — right when edge-sized joins run inside the loop. */
   def forGraph(spark: SparkSession, nEdgeRows: Long,
                rowsPerPartition: Long = 1000000L,
                codegenCutoff: Long = 10000000L): SparkSession = {
@@ -52,7 +60,14 @@ private[graft] object LoopSession {
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.join.preferSortMergeJoin" -> "false") ++
       (if (nEdgeRows <= codegenCutoff)
-        Map("spark.sql.codegen.wholeStage" -> "false") else Map.empty))
+        Map("spark.sql.codegen.wholeStage" -> "false") else Map.empty) ++
+      // interpreting costs per row, a compile per generated class, so
+      // expression codegen pays off far below stage fusion's cutoff
+      // (4 cores: every loop up to 99k edge rows ran faster interpreted,
+      // the 58k-edge SCC, 49k HITS and 99k SSSP in every timed pair;
+      // the 0.6M-edge SCC ran ~20% slower)
+      (if (nEdgeRows <= codegenCutoff / 100)
+        Map("spark.sql.codegen.factoryMode" -> "NO_CODEGEN") else Map.empty))
   }
 
   /** Truncate a (persisted) frame's plan to a flat scan of its execution

@@ -49,13 +49,20 @@ object Bridge {
       ClassicConversions.castToImpl(df.sparkSession), lr)
   }
 
-  /** The raw execution RDD of `df` (InternalRows): an iterative operator
-    * runs its per-sweep convergence scan over a persisted state as ONE
-    * RDD job instead of paying a second full QueryExecution (analyze +
-    * optimize + codegen of an aggregate plan) per sweep. */
-  def toRdd(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
-    ClassicConversions.castToImpl(df).queryExecution.toRdd
+  /** Run `action` over the raw execution RDD of `df` (InternalRows): an
+    * iterative operator runs its per-sweep convergence scan over a
+    * persisted state as ONE RDD job instead of paying a second full
+    * QueryExecution (analyze + optimize + codegen of an aggregate plan)
+    * per sweep. The job runs under `df`'s session confs: outside a SQL
+    * execution Spark hands them only to the final stage's plan, so the
+    * tasks of every shuffle-map stage below it would read the DEFAULT
+    * confs (and lose, e.g., a loop session's interpreted expressions). */
+  def onRdd[T](df: org.apache.spark.sql.DataFrame)
+      (action: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] => T): T = {
+    val classic = ClassicConversions.castToImpl(df)
+    org.apache.spark.sql.execution.SQLExecution.withSQLConfPropagated(
+      classic.sparkSession)(action(classic.queryExecution.toRdd))
+  }
 
   /** Release the block-manager storage behind a localCheckpoint'd frame
     * (Dataset.unpersist only covers CacheManager entries; a local

@@ -1,10 +1,14 @@
 package graft
 
 import graft.operators.{Dedup, Graph, LoopSession}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The sweep-loop contract: a loop that fails part-way releases every
-  * cache it holds, and a loop that finishes leaves only its hand-back. */
+  * cache it holds, a loop that finishes leaves only its hand-back, and a
+  * small-graph loop session interprets instead of compiling. */
 class LoopSessionSpec extends SparkSpec {
   import spark.implicits._
 
@@ -79,5 +83,50 @@ class LoopSessionSpec extends SparkSpec {
         col("b"))
     intercept[Exception](Dedup.representatives(pairs).collect())
     assertNoCaches("failed representatives")
+  }
+
+  /** Janino compiles so far in this JVM. */
+  private def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Janino compiles while `run` executes, the fewest of three tries: a
+    * concurrent query's compile (a thread an earlier suite left running)
+    * can land in one window, a compile `run` causes lands in all three. */
+  private def fewestCompiles(run: => Unit): Long =
+    (1 to 3).map { _ => val before = compiles(); run; compiles() - before }.min
+
+  /** A projection no earlier query generated: a fresh literal `k` makes
+    * its generated class a miss in Spark's compile cache. It runs below a
+    * shuffle, in a map stage: the stage a raw-RDD action would leave
+    * without the session's confs. */
+  private def freshProjection(s: SparkSession, k: Long = System.nanoTime()): DataFrame =
+    s.range(100).select((col("id") + lit(k)).as("x")).repartition(2, col("x"))
+
+  /** Run the projection as a Dataset action (the noop sink executes
+    * every row and deserializes nothing on the driver). */
+  private def runAction(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  test("the small-graph loop session generates no expression code") {
+    val loop = LoopSession.forGraph(spark, 1000L)
+    assert(fewestCompiles(runAction(freshProjection(loop))) == 0,
+      "a Dataset action in the loop session compiled")
+    // a raw-RDD fold is an action outside any SQL execution: it must
+    // still run under the loop session's confs
+    assert(fewestCompiles {
+      val k = System.nanoTime()
+      val sum = Bridge.onRdd(freshProjection(loop, k))(_.map(_.getLong(0)).fold(0L)(_ + _))
+      assert(sum == 100L * k + 4950L)
+    } == 0, "a raw-RDD fold over a loop frame compiled")
+  }
+
+  test("the caller session, a 1M-edge and a codegenCutoff = 0 loop session compile") {
+    Seq("caller" -> spark,
+      "1M-edge loop" -> LoopSession.forGraph(spark, 1000000L),
+      "codegenCutoff = 0" -> LoopSession.forGraph(spark, 1000L, codegenCutoff = 0L))
+      .foreach { case (what, s) =>
+        val before = compiles()
+        runAction(freshProjection(s))
+        assert(compiles() > before, s"the $what session compiled nothing")
+      }
   }
 }
