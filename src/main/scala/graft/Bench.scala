@@ -47,7 +47,7 @@ object Bench {
   private var sharedSpark: SparkSession = _
   private def spark(): SparkSession = {
     if (sharedSpark == null) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+      val cpus = BenchUtil.cpus
       sharedSpark = SparkSession.builder()
         .master(s"local[$cpus]")
         .config("spark.sql.shuffle.partitions", cpus)
@@ -267,7 +267,7 @@ object Bench {
     // run was overwritten by the subsequent 8-core scaling run, losing the
     // per-query record. Keep a per-core-count copy alongside.
     if (path == "BENCH_FULL.json") {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+      val cpus = BenchUtil.cpus
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"BENCH_FULL_c$cpus.json"),
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -9,8 +9,7 @@ object BenchOne {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val noop = sys.env.get("SPARK_GRAFT_NOOP").contains("1")
-    val n = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val n = BenchUtil.cpus
     val spark = GraftSession.builder(s"local[$n]", n)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -7,6 +7,11 @@ package graft
   * measurements. Shared so the discipline can't drift between Bench,
   * BenchOne, ScaleBench, Verify, and the plan audits. */
 object BenchUtil {
+  /** Cores for a harness main's `local[n]` master and shuffle width:
+    * SPARK_GRAFT_CPUS, else every core the JVM sees. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
   def dropBallast(spark: org.apache.spark.sql.SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))

@@ -12,7 +12,7 @@ object PlanDump {
     val tag = args(1) // before | after
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = BenchUtil.cpus
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -27,7 +27,7 @@ object PlanDump {
       val df = SparkEntry.queries(n)(spark, sfDir)
       df.count() // execute: settles AQE final plans + materializes persists
       val txt = org.apache.spark.sql.graftbridge.Bridge.explainFormatted(df)
-      def c(op: String): Int = (op + " \\(").r.findAllIn(txt).length
+      def c(op: String): Int = opCount(txt, op)
       val summary = s"== plan summary: Exchange=${c("Exchange")} " +
         s"SortMergeJoin=${c("SortMergeJoin")} " +
         s"ShuffledHashJoin=${c("ShuffledHashJoin")} " +
@@ -40,4 +40,12 @@ object PlanDump {
     }
     spark.stop()
   }
+
+  /** Tree nodes named `op` in a formatted explain: a node header is the
+    * tree prefix (`+-`, `:-`, `:`, `*`, spaces), the operator name, its
+    * optional arguments (`SortMergeJoin Inner`) and its `(id)`; so
+    * `BroadcastExchange (5)` and `ReusedExchange (7)` are not `Exchange`. */
+  def opCount(txt: String, op: String): Int =
+    ("(?m)^[ :|+*-]*" + java.util.regex.Pattern.quote(op) + "( [^()\\n]*)? \\(\\d+\\)$")
+      .r.findAllIn(txt).length
 }

@@ -181,7 +181,7 @@ object ScaleBench {
     df.write.format("noop").mode("overwrite").save()
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val cpus = BenchUtil.cpus
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

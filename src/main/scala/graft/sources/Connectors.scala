@@ -120,7 +120,7 @@ final case class InMemoryConnector(data: String, docType: String = "json",
   val written: scala.collection.mutable.ArrayBuffer[String] =
     scala.collection.mutable.ArrayBuffer.empty
   override def load(spark: SparkSession): DataFrame =
-    Documents.readString(spark, docType, data, opts)
+    Documents.readString(spark, docType, data, opts, memo = true)
   override def save(df: DataFrame, mode: SaveMode): Unit = {
     if (mode == SaveMode.Overwrite) written.clear()
     written ++= df.toJSON.collect()

@@ -60,21 +60,101 @@ object Documents {
   private[sources] def withEntryPath(df: DataFrame, opts: DocOptions): DataFrame =
     if (opts.entryPath.nonEmpty) applyEntryPath(df, opts.entryPath) else df
 
+  /** The reader for a document type whose read infers its schema with a
+    * scan of the input; a schema set on `r` beforehand skips that scan. */
+  private def inferring(r: DataFrameReader, docType: String, opts: DocOptions): DataFrameReader =
+    docType match {
+      case "json"  => r.format("json").option("multiLine", value = true)
+      case "jsonl" => r.format("json")
+      case "csv"   => r.format("csv")
+        .option("header", opts.header).option("sep", opts.delimiter)
+        .option("quote", opts.quote).option("inferSchema", value = true)
+        .option("multiLine", opts.multiLine).option("escape", "\"")
+      case "xml"   => r.format("xml").option("rowTag", opts.rowTag)
+        .option("attributePrefix", opts.attributePrefix)
+        .option("valueTag", opts.valueTag)
+    }
+
+  /** Schemas inferred earlier in this JVM, reused while their input is
+    * unchanged: a config run again, or a referential loaded once per step,
+    * reads an unchanged input without another inference scan. Process-wide,
+    * one entry per key.
+    *
+    * A path entry is keyed by path, document type, options and the
+    * session's SQL conf. It holds a digest of the file listing (path,
+    * length, modification time of each file) and the inferred data schema.
+    * A hit builds the frame with that schema and keeps it only when the
+    * frame's own listing, the one its scans read, digests the same, so no
+    * file can change between the check and the scan; otherwise the read
+    * infers afresh and replaces the entry. Partition columns are discovered
+    * from the listing as on any read. A literal entry (in_memory data) is
+    * keyed by a digest of the text, which cannot change. */
+  private object SchemaMemo {
+    import org.apache.spark.sql.graftbridge.Bridge
+    import org.apache.spark.sql.types.StructType
+
+    private final case class Key(literal: Boolean, source: String, docType: String,
+                                 opts: DocOptions, conf: String)
+    private final case class Entry(listing: String, schema: StructType)
+    private val entries = new java.util.concurrent.ConcurrentHashMap[Key, Entry]()
+
+    private def sha256(parts: Iterator[String]): String = {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      parts.foreach { p =>
+        md.update(p.getBytes(java.nio.charset.StandardCharsets.UTF_8)); md.update(0: Byte)
+      }
+      md.digest().map(b => f"$b%02x").mkString
+    }
+
+    private def key(spark: SparkSession, literal: Boolean, source: String, docType: String,
+                    opts: DocOptions): Key =
+      Key(literal, source, docType, opts,
+        sha256(spark.conf.getAll.toSeq.sorted.iterator.flatMap { case (k, v) => Iterator(k, v) }))
+
+    private def listing(files: Seq[org.apache.hadoop.fs.FileStatus]): String =
+      sha256(files.sortBy(_.getPath.toString).iterator.flatMap(f =>
+        Iterator(f.getPath.toString, f.getLen.toString, f.getModificationTime.toString)))
+
+    def path(spark: SparkSession, docType: String, path: String, opts: DocOptions)
+            (load: DataFrameReader => DataFrame): DataFrame = {
+      val k = key(spark, literal = false, path, docType, opts)
+      val hit = Option(entries.get(k)).flatMap { e =>
+        val df = load(spark.read.schema(e.schema))
+        Bridge.fileScan(df).collect { case (files, _) if listing(files) == e.listing => df }
+      }
+      hit.getOrElse {
+        val df = load(spark.read)
+        Bridge.fileScan(df).foreach { case (files, schema) =>
+          entries.put(k, Entry(listing(files), schema))
+        }
+        df
+      }
+    }
+
+    def literal(spark: SparkSession, docType: String, data: String, opts: DocOptions)
+               (load: DataFrameReader => DataFrame): DataFrame = {
+      val k = key(spark, literal = true, sha256(Iterator(data)), docType, opts)
+      Option(entries.get(k)) match {
+        case Some(e) => load(spark.read.schema(e.schema))
+        case None =>
+          val df = load(spark.read)
+          entries.put(k, Entry("", df.schema))
+          df
+      }
+    }
+  }
+
+  private def inferred(spark: SparkSession, docType: String, path: String,
+                       opts: DocOptions): DataFrame =
+    SchemaMemo.path(spark, docType, path, opts)(inferring(_, docType, opts).load(path))
+
   def read(spark: SparkSession, docType: String, path: String,
            opts: DocOptions = DocOptions()): DataFrame = docType match {
     case "parquet" => spark.read.parquet(path)
     case "orc"     => spark.read.orc(path)
-    case "json"    => withEntryPath(spark.read.option("multiLine", value = true).json(path), opts)
-    case "jsonl"   => withEntryPath(spark.read.json(path), opts)
-    case "csv"     => spark.read
-      .option("header", opts.header).option("sep", opts.delimiter)
-      .option("quote", opts.quote).option("inferSchema", value = true)
-      .option("multiLine", opts.multiLine).option("escape", "\"")
-      .csv(path)
+    case "json" | "jsonl" => withEntryPath(inferred(spark, docType, path, opts), opts)
+    case "csv" | "xml" => inferred(spark, docType, path, opts)
     case "text"    => spark.read.option("wholetext", opts.wholetext).text(path)
-    case "xml"     => spark.read.format("xml").option("rowTag", opts.rowTag)
-      .option("attributePrefix", opts.attributePrefix)
-      .option("valueTag", opts.valueTag).load(path)
     case "yaml"    => Yaml.read(spark, path)
     case "toml"    => Toml.read(spark, path)
     case "avro"    => Avro.read(spark, path)
@@ -86,16 +166,20 @@ object Documents {
     * reference: in_memory.rs accepts any document type). json/jsonl/csv/
     * yaml/toml parse straight from the string through the same per-partition
     * machinery as the file path; xml (needs a file-based rowTag scan) stages
-    * the literal to a temp file and reuses the path reader. */
+    * the literal to a temp file and reads that. `memo` reuses the schema
+    * inferred earlier for the same text (config literals repeat on every
+    * run); paged HTTP bodies leave it off, as each page is new content. */
   def readString(spark: SparkSession, docType: String, data: String,
-                 opts: DocOptions = DocOptions()): DataFrame = {
+                 opts: DocOptions = DocOptions(), memo: Boolean = false): DataFrame = {
     import spark.implicits._
+    def parsed(load: DataFrameReader => DataFrame): DataFrame =
+      if (memo) SchemaMemo.literal(spark, docType, data, opts)(load) else load(spark.read)
     docType match {
-      case "json" | "jsonl" => withEntryPath(spark.read.json(Seq(data).toDS()), opts)
+      case "json" | "jsonl" => withEntryPath(parsed(_.json(Seq(data).toDS())), opts)
       case "csv" =>
-        spark.read.option("header", opts.header).option("sep", opts.delimiter)
+        parsed(_.option("header", opts.header).option("sep", opts.delimiter)
           .option("quote", opts.quote).option("inferSchema", value = true)
-          .csv(data.linesIterator.toSeq.toDS())
+          .csv(data.linesIterator.toSeq.toDS()))
       case "text" => Seq(data).toDF("value")
       case "yaml" => Yaml.parse(spark, Seq(data).toDS())
       case "toml" => Toml.parse(spark, Seq(data).toDS())
@@ -104,7 +188,7 @@ object Documents {
         val f = dir.resolve("data.xml")
         java.nio.file.Files.writeString(f, data)
         f.toFile.deleteOnExit(); dir.toFile.deleteOnExit()
-        read(spark, "xml", f.toString, opts)
+        parsed(inferring(_, "xml", opts).load(f.toString))
       case other => throw new IllegalArgumentException(s"in_memory does not support $other")
     }
   }

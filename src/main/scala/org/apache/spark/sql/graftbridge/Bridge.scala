@@ -98,6 +98,27 @@ object Bridge {
     c
   }
 
+  /** The file listing and data schema of `df` when `df` is one file-source
+    * read (`spark.read...json(path)`). The listing is the one every scan
+    * of `df` reads: the index lists once, when the frame is built. None
+    * for any other plan, and when a partition column also appears in the
+    * files (a read given that data schema would move the column to the
+    * end, where inference keeps it in place). */
+  def fileScan(df: org.apache.spark.sql.DataFrame)
+      : Option[(Seq[org.apache.hadoop.fs.FileStatus], org.apache.spark.sql.types.StructType)] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+    ClassicConversions.castToImpl(df).queryExecution.analyzed match {
+      case l: LogicalRelation => l.relation match {
+        case r: HadoopFsRelation if r.overlappedPartCols.isEmpty => r.location match {
+          case index: PartitioningAwareFileIndex => Some((index.allFiles(), r.dataSchema))
+          case _ => None
+        }
+        case _ => None
+      }
+      case _ => None
+    }
+  }
+
   /** The formatted explain text as a string (Dataset.explain only prints)
     * — for the plan-dump evidence files. */
   def explainFormatted(df: org.apache.spark.sql.DataFrame): String =

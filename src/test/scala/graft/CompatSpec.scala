@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * reference ships, plus its referential mapping) parse to the same logical
   * records, and a chewdata-shaped config with transformer actions + a
   * referential mapping produces the mapped output its transform-mapping
-  * example expects. The two tree sweeps read a chewdata checkout at
-  * /root/reference (read-only). */
+  * example expects. The two tree sweeps cover graft's own `examples/` and
+  * these fixtures. */
 class CompatSpec extends SparkSpec {
   import spark.implicits._
 
@@ -66,37 +66,32 @@ class CompatSpec extends SparkSpec {
       == "Long val\nto test")
   }
 
-  test("every reference example config parses") {
-    // extract the raw r#"[...]"# config literals the reference's own
-    // examples feed to chewdata, and parse each with graft's pipeline
-    // compiler — the "a chewdata user can bring their configs" claim,
-    // checked against the reference's real configs (parse-level: the
-    // examples point at live endpoints/paths this environment lacks)
-    import scala.jdk.CollectionConverters._
-    val exampleDir = java.nio.file.Paths.get("/root/reference/examples")
-    val rsFiles = java.nio.file.Files.list(exampleDir).iterator().asScala
-      .filter(_.toString.endsWith(".rs")).toSeq.sortBy(_.toString)
-    assert(rsFiles.nonEmpty)
-    val ConfigBlock = raw"""(?s)r#"\s*(\[.*?\])\s*"#""".r
+  /** Files under the repo's example configs and compat fixtures (test
+    * JVMs run from the repository root). */
+  private def files(dirs: String*): Seq[java.io.File] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(walk)
+      else Seq(f)
+    dirs.flatMap(d => walk(new java.io.File(d)))
+  }
+
+  test("every example config parses") {
+    // graft's own examples/ mirror the chewdata example set: each parses
+    // with the pipeline compiler (parse-level: several point at inputs or
+    // endpoints a spec does not provide)
+    val configs = files("examples").filter(_.getName.endsWith(".json"))
+    assert(configs.nonEmpty)
     var parsed = 0
     val failures = Seq.newBuilder[String]
-    rsFiles.foreach { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      ConfigBlock.findAllMatchIn(src).foreach { m =>
-        // the reference substitutes {{ ENV_VAR }} into the raw config text
-        // BEFORE parsing (src/main.rs: apply_with_prefix); an unquoted
-        // `"jwk": {{ JWK }}` is only parseable post-substitution, so stand
-        // in a literal for bare (unquoted) substitution slots
-        val cfg = m.group(1).replaceAll(":\\s*\\{\\{[^}]*\\}\\}", ": \"substituted\"")
-        try { pipeline.Pipeline.parse(cfg); parsed += 1 }
-        catch { case e: Throwable =>
-          failures += s"${f.getFileName}: ${e.getMessage.linesIterator.next()}"
-        }
+    configs.foreach { f =>
+      try { Pipeline.parse(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")); parsed += 1 }
+      catch { case e: Throwable =>
+        failures += s"${f.getName}: ${String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse("")}"
       }
     }
     val failed = failures.result()
-    assert(parsed >= 25, s"only $parsed configs extracted/parsed")
     assert(failed.isEmpty, s"${failed.size} configs failed:\n${failed.mkString("\n")}")
+    assert(parsed == configs.size)
   }
 
   test("transform-mapping example shape: actions + referential mapping") {
@@ -127,29 +122,28 @@ class CompatSpec extends SparkSpec {
     assert(rows.forall(_.getString(3) == "replaced"))
   }
 
-  test("every tera tag the reference's own sources use is supported here") {
-    // sweep the reference tree (read-only) for {% tag %} keywords; each
-    // must be in the compiler's supported set, so any chewdata config built
-    // from reference examples/docs compiles. The engine also supports tags
-    // the examples never use (macro/include/import/extends/block/filter —
-    // tera engine features the reference exposes via Tera::default()).
+  test("every tera tag the example configs and fixtures use is supported here") {
+    // sweep examples/ and the compat fixtures for {% tag %} keywords; each
+    // must be in the compiler's supported set. The engine also supports tags
+    // the configs never use (macro/include/import/extends/block — tera
+    // engine features the reference exposes via Tera::default()).
     val supported = Set("if", "elif", "else", "endif", "for", "endfor", "set",
       "macro", "endmacro", "include", "import", "extends", "block", "endblock",
       "filter", "endfilter")
     val tag = raw"\{%-?\s*([a-z_]+)".r
-    val used = scala.collection.mutable.Set[String]()
-    def walk(f: java.io.File): Unit =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(walk)
-      else if (Seq(".rs", ".json", ".yaml", ".yml", ".hjson", ".md", ".toml")
-                 .exists(f.getName.endsWith)) {
-        val src = try new String(
-          java.nio.file.Files.readAllBytes(f.toPath), "UTF-8") catch { case _: Exception => "" }
-        tag.findAllMatchIn(src).foreach(m => used += m.group(1))
-      }
-    walk(new java.io.File("/root/reference/examples"))
-    walk(new java.io.File("/root/reference/src"))
-    assert(used.nonEmpty, "expected the reference tree to use tera tags")
-    val missing = used.toSet -- supported
-    assert(missing.isEmpty, s"reference uses unsupported tera tags: $missing")
+    val used = files("examples", "src/test/resources/compat")
+      .filter(f => Seq(".json", ".yaml", ".yml", ".hjson", ".md", ".toml").exists(f.getName.endsWith))
+      .flatMap(f => tag.findAllMatchIn(
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).map(_.group(1)))
+      .toSet
+    assert(used.nonEmpty, "expected the example configs and fixtures to use tera tags")
+    val missing = used -- supported
+    assert(missing.isEmpty, s"configs use unsupported tera tags: $missing")
+    // the fixture carrying the chewdata tag forms runs, not just scans
+    val cfg = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$data/tera_tags.json")), "UTF-8")
+    val rows = Pipeline.run(spark, cfg).ok.get.orderBy("number")
+      .select("size", "words", "double", "shout").as[(String, String, String, String)].collect().toSeq
+    assert(rows == Seq(("mid", "[long][val]", "20", "LONG VAL"), ("big", "[to][test]", "40", "TO TEST")))
   }
 }

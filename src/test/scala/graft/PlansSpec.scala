@@ -29,6 +29,26 @@ class PlansSpec extends SparkSpec {
     case _ => p +: p.children.flatMap(nodes)
   }
 
+  test("PlanDump counts operator node headers, not names that end in one") {
+    val txt =
+      """== Physical Plan ==
+        |AdaptiveSparkPlan (9)
+        |+- SortMergeJoin Inner (8)
+        |   :- * Sort (3)
+        |   :  +- Exchange (2)
+        |   :     +- Scan ExistingRDD (1)
+        |   +- BroadcastHashJoin LeftOuter BuildRight (7)
+        |      :- ReusedExchange (4)
+        |      +- BroadcastExchange (6)
+        |         +- LocalTableScan (5)
+        |
+        |(2) Exchange
+        |Input [1]: [id#0L]
+        |""".stripMargin
+    assert(Seq("Exchange", "BroadcastExchange", "ReusedExchange", "SortMergeJoin", "Sort")
+      .map(PlanDump.opCount(txt, _)) == Seq(1, 1, 1, 1, 1))
+  }
+
   test("q_filter_project: filters push to the scan, schema is pruned") {
     val df = queries.Relational.qFilterProject(spark, sf)
     val leaf = df.queryExecution.executedPlan.collectLeaves().head.toString
