@@ -46,20 +46,8 @@ object Bench {
 
   private var sharedSpark: SparkSession = _
   private def spark(): SparkSession = {
-    if (sharedSpark == null) {
-      val cpus = BenchUtil.cpus
-      sharedSpark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      sharedSpark.sparkContext.setLogLevel("WARN")
-      // JVM/codegen warmup outside the timed section (first action in a
-      // fresh JVM pays ~4s of Spark bootstrap unrelated to any query).
-      try SparkEntry.entry(sharedSpark).count() catch { case _: Throwable => () }
-    }
+    // lazy: the fork coordinator starts no Spark of its own
+    if (sharedSpark == null) sharedSpark = BenchUtil.session()
     sharedSpark
   }
 
@@ -216,25 +204,17 @@ object Bench {
     } catch { case _: Throwable => false }
   }
 
-  private def parseShard(path: String)
+  /** The timed map, the isolated map and the failed list of a shard's
+    * artifact (the `writeFull` line); empty on an unreadable file. */
+  private[graft] def parseShard(path: String)
       : (Seq[(String, Double)], Seq[(String, Double)], Seq[String]) = {
-    val txt = try {
-      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-        java.nio.charset.StandardCharsets.UTF_8)
-    } catch { case _: Throwable => return (Nil, Nil, Nil) }
-    def obj(key: String): Seq[(String, Double)] = {
-      val start = txt.indexOf("\"" + key + "\":{")
-      if (start < 0) return Nil
-      val open = txt.indexOf('{', start)
-      val close = txt.indexOf('}', open)
-      if (close < 0) return Nil
-      val pair = """"([^"]+)":(-?[0-9][0-9.eE+-]*)""".r
-      pair.findAllMatchIn(txt.substring(open, close + 1))
-        .map(m => m.group(1) -> m.group(2).toDouble).toSeq
-    }
-    val failed = """"failed":\[([^\]]*)\]""".r.findFirstMatchIn(txt).toSeq
-      .flatMap(m => """"([^"]+)"""".r.findAllMatchIn(m.group(1)).map(_.group(1)))
-    (obj("queries"), obj("isolated"), failed)
+    import scala.jdk.CollectionConverters._
+    val root = try new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(path))
+    catch { case _: Throwable => return (Nil, Nil, Nil) }
+    def obj(key: String): Seq[(String, Double)] =
+      root.path(key).properties().asScala.map(e => e.getKey -> e.getValue.asDouble).toSeq
+    (obj("queries"), obj("isolated"), root.path("failed").asScala.map(_.asText).toSeq)
   }
 
   /** The gates that threw, as a JSON array of names. */
@@ -251,26 +231,19 @@ object Bench {
   // ------------------------------------------------------------ artifacts
 
   /** Full-precision record for humans / the repo history. */
-  private def writeFull(path: String, results: Seq[(String, Double)],
+  private[graft] def writeFull(path: String, results: Seq[(String, Double)],
                         isolated: Seq[(String, Double)], failed: Seq[String],
                         sfDir: String): Unit = {
-    val fullQs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val fullIso = isolated.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    def obj(m: Seq[(String, Double)]): String =
+      m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":${value(results, failed, _.toString)},"unit":"sec","queries":$fullQs,"isolated":$fullIso,"failed":${failedJson(failed)},"sf":"$sfDir"}"""
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(path),
-      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      s"""{"metric":"total","value":${value(results, failed, _.toString)},"unit":"sec","queries":${obj(results)},"isolated":${obj(isolated)},"failed":${failedJson(failed)},"sf":"$sfDir"}"""
     // r17 (VERDICT r16 #1): the 32-core BENCH_FULL of the driver's main
     // run was overwritten by the subsequent 8-core scaling run, losing the
     // per-query record. Keep a per-core-count copy alongside.
-    if (path == "BENCH_FULL.json") {
-      val cpus = BenchUtil.cpus
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"BENCH_FULL_c$cpus.json"),
-        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val copies = if (path == "BENCH_FULL.json") Seq(s"BENCH_FULL_c${BenchUtil.cpus}.json") else Nil
+    (path +: copies).foreach { p =>
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(p), line + "\n")
     }
   }
 

@@ -1,31 +1,21 @@
 package graft
 /** One-off steady-state re-measure of named queries (3 runs each, best
-  * reported) on the shipped session config (GraftSession.builder) sized
-  * to SPARK_GRAFT_CPUS cores, else to every core the JVM sees.
+  * reported) on the harness session (`BenchUtil.session`).
   * SPARK_GRAFT_SF_DIR overrides the data dir (e.g. the ScaleBench
-  * target/scale10x corpus); SPARK_GRAFT_NOOP=1 materializes through the
-  * noop sink (the ScaleBench methodology) instead of count(). */
+  * target/scale10x corpus). */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val noop = sys.env.get("SPARK_GRAFT_NOOP").contains("1")
-    val n = BenchUtil.cpus
-    val spark = GraftSession.builder(s"local[$n]", n)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    val spark = BenchUtil.session()
     // Drop all cached data before every run (same discipline as Bench):
     // operators that MATERIALIZE their result (pageRank, jaccardJoin, the
     // ANN/BM25 family) otherwise make runs 2-3 CacheManager canonical-plan
-    // hits — "best" would time a cache scan, not the query. Set
-    // SPARK_GRAFT_KEEP_CACHE=1 to deliberately probe the cache-warm path.
-    val keepCache = sys.env.get("SPARK_GRAFT_KEEP_CACHE").contains("1")
+    // hits — "best" would time a cache scan, not the query.
     args.foreach { n =>
       val times = (0 until 3).map { _ =>
-        if (!keepCache) BenchUtil.dropBallast(spark)
+        BenchUtil.dropBallast(spark)
         val t0 = System.nanoTime()
-        val df = SparkEntry.queries(n)(spark, dir)
-        if (noop) df.write.format("noop").mode("overwrite").save() else df.count()
+        SparkEntry.queries(n)(spark, dir).count()
         (System.nanoTime() - t0) / 1e9
       }
       println(f"### $n best=${times.min}%.2f all=${times.map(t => f"$t%.2f").mkString(",")}")

@@ -1,7 +1,6 @@
 package graft
 
-import scala.collection.mutable
-import org.apache.spark.scheduler._
+import graft.pipeline.QueryMetricsListener
 
 /** Per-job profiler for a named gate: runs the query once warm, once
   * profiled, and prints every Spark job's wall time, stage count, task
@@ -11,81 +10,33 @@ object JobProf {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "1m"))
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_COALESCE", "true"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    val spark = BenchUtil.session()
     // warm (codegen/JIT) run, then the profiled run on cold caches
     BenchUtil.dropBallast(spark)
     try SparkEntry.queries(name)(spark, sfDir).count()
     catch { case _: Throwable => () }
     BenchUtil.dropBallast(spark)
 
-    case class Job(start: Long, var end: Long = -1L, var stages: Int = 0,
-                   var tasks: Int = 0, var taskMs: Long = 0L,
-                   var shuffleRead: Long = 0L, var desc: String = "")
-    val jobs = mutable.LinkedHashMap[Int, Job]()
-    val stageToJob = mutable.HashMap[Int, Int]()
-    val execDesc = mutable.HashMap[Long, String]()
-    val listener = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-          execDesc(s.executionId) = s.description.linesIterator.take(1)
-            .mkString.take(100)
-        case _ => ()
-      }
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val j = Job(e.time)
-        j.desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-          .map(id => s"exec#$id " +
-            execDesc.getOrElse(id.toLong, "")).getOrElse("")
-        j.stages = e.stageIds.size
-        e.stageIds.foreach(s => stageToJob(s) = e.jobId)
-        jobs(e.jobId) = j
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        jobs.get(e.jobId).foreach(_.end = e.time)
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        for (jid <- stageToJob.get(e.stageId); j <- jobs.get(jid)) {
-          j.tasks += 1
-          if (e.taskMetrics != null) {
-            j.taskMs += e.taskMetrics.executorRunTime
-            j.shuffleRead += e.taskMetrics.shuffleReadMetrics.totalBytesRead
-          }
-        }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val si = e.stageInfo
-        val dur = (for (a <- si.submissionTime; b <- si.completionTime)
-          yield b - a).getOrElse(-1L)
-        val scopes = si.rddInfos.flatMap(_.scope)
-          .map(_.name.split("\n").head).distinct.mkString(">")
-        println(f"[stage] #${si.stageId}%-4d job=${stageToJob.getOrElse(si.stageId, -1)}%-4d " +
-          f"${dur / 1000.0}%7.2f s tasks=${si.numTasks}%-5d ${scopes.take(120)}")
-      }
+    val ((n, wall), l) = QueryMetricsListener.during(spark) {
+      val t0 = System.nanoTime()
+      val n = SparkEntry.queries(name)(spark, sfDir).count()
+      (n, (System.nanoTime() - t0) / 1e9)
     }
-    spark.sparkContext.addSparkListener(listener)
-    val t0 = System.nanoTime()
-    val n = SparkEntry.queries(name)(spark, sfDir).count()
-    val wall = (System.nanoTime() - t0) / 1e9
-    org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark)
+    l.stages.foreach { s =>
+      println(f"[stage] #${s.id}%-4d job=${s.job}%-4d " +
+        f"${s.durMs / 1000.0}%7.2f s tasks=${s.tasks}%-5d ${s.scopes.take(120)}")
+    }
+    val jobs = l.jobs
     println(f"### $name wall=$wall%.2f s rows=$n jobs=${jobs.size}")
     var acc = 0L
     var prevEnd = -1L
-    jobs.foreach { case (id, j) =>
+    jobs.foreach { j =>
       val dur = if (j.end >= 0) j.end - j.start else -1L
       val gap = if (prevEnd >= 0) j.start - prevEnd else 0L
       prevEnd = math.max(prevEnd, j.end)
       acc += math.max(dur, 0L)
-      println(f"[job] #$id%-4d ${dur / 1000.0}%7.2f s  gap=${gap / 1000.0}%6.2f  " +
-        f"stages=${j.stages}%-3d tasks=${j.tasks}%-5d taskTime=${j.taskMs / 1000.0}%8.2f s " +
+      println(f"[job] #${j.id}%-4d ${dur / 1000.0}%7.2f s  gap=${gap / 1000.0}%6.2f  " +
+        f"stages=${j.stageCount}%-3d tasks=${j.tasks}%-5d taskTime=${j.runMs / 1000.0}%8.2f s " +
         f"shufRead=${j.shuffleRead / 1024 / 1024}%6d MB  ${j.desc}")
     }
     println(f"[job] sum of job durations: ${acc / 1000.0}%.2f s (wall $wall%.2f)")

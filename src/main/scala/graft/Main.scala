@@ -1,10 +1,11 @@
 package graft
 
 import graft.pipeline.Pipeline
-import org.apache.spark.sql.SparkSession
 
 /** CLI entry point (reference: src/main.rs): run a JSON/YAML pipeline config
-  * given inline or via --file. `graft.Main '<json>'` or `graft.Main -f cfg`. */
+  * given inline or via --file, on the shipped session config
+  * (`GraftSession.builder`, SPARK_MASTER else `local[*]`).
+  * `graft.Main '<json>'` or `graft.Main -f cfg`. */
 object Main {
   def main(args: Array[String]): Unit = {
     val config = args.toList match {
@@ -16,13 +17,7 @@ object Main {
         """[{"type":"reader","connector":{"type":"cli"},"document":{"type":"json"}},
           | {"type":"writer","connector":{"type":"cli"},"document":{"type":"json"}}]""".stripMargin
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try Pipeline.run(spark, config)
     finally spark.stop()

@@ -1,10 +1,10 @@
 package graft
 
 /** Write executed-plan dumps for named gates to plans/<dir>/<gate>_<tag>.txt
-  * (the optimization-round evidence files): runs each gate once under the
-  * bench session confs so AQE final plans and persisted-operator internals
-  * are visible, then records a one-line operator census plus the full
-  * `explain("formatted")` text.
+  * (the optimization-round evidence files): runs each gate once on the
+  * harness session (`BenchUtil.session`) so AQE final plans and
+  * persisted-operator internals are visible, then records a one-line
+  * operator census plus the full `explain("formatted")` text.
   * `sbt "runMain graft.PlanDump r17 before q_hits q_scc ..."` */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -12,15 +12,7 @@ object PlanDump {
     val tag = args(1) // before | after
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = BenchUtil.cpus
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    val spark = BenchUtil.session()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"plans/$outDir"))
     names.foreach { n =>
       BenchUtil.dropBallast(spark)

@@ -183,15 +183,7 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val cpus = BenchUtil.cpus
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () } // JVM warmup
+    val spark = BenchUtil.session()
     val dropBallast: () => Unit = () => BenchUtil.dropBallast(spark)
 
     val sfs = Seq("0.001", "0.01", "0.1")

@@ -835,6 +835,15 @@ object Pipeline {
     * uncommitted dir is cleared and retrained; the fresh model writes to
     * a temp path and renames in, so no reader ever sees a half-written
     * model at the canonical path. */
+  /** Keep each row of `df` that is its component's representative in `reps`
+    * (`Dedup.representatives`' `id`/`rep` frame) or in no component. */
+  private def keepRepresentatives(df: DataFrame, id: String, reps: DataFrame): DataFrame = {
+    val r = reps.withColumnRenamed("id", "__rep_id").withColumnRenamed("rep", "__rep")
+    df.join(r, df(id) === col("__rep_id"), "left")
+      .filter(col("__rep").isNull || col("__rep") === df(id))
+      .drop("__rep_id", "__rep")
+  }
+
   private def resolveCentroids(spark: SparkSession, df: DataFrame,
                                centroidsPath: String, k: Int, iters: Int,
                                id: String, vec: String): DataFrame =
@@ -956,12 +965,7 @@ object Pipeline {
                 val pairs = graft.operators.Dedup.jaccardJoin(df, id, text,
                     tNum = tNum, tDen = 100, maxBucket = maxBucket)
                   .select(col("id_a").as("a"), col("id_b").as("b"))
-                val reps = graft.operators.Dedup.representatives(pairs)
-                  .withColumnRenamed("id", "__rep_id")
-                  .withColumnRenamed("rep", "__rep")
-                df.join(reps, df(id) === col("__rep_id"), "left")
-                  .filter(col("__rep").isNull || col("__rep") === df(id))
-                  .drop("__rep_id", "__rep")
+                keepRepresentatives(df, id, graft.operators.Dedup.representatives(pairs))
               case "editdist" =>
                 // collapse near-identical short strings (names, titles,
                 // SKUs) within Levenshtein 1 — FastSS-blocked pairs →
@@ -986,11 +990,7 @@ object Pipeline {
                 // scale; max_bucket is the skew cap
                 val pairs = graft.operators.Dedup.minhashPairs(df, id, text,
                   threshold, k = hashes, bands = bands, maxBucket = maxBucket)
-                val reps = graft.operators.Dedup.representatives(pairs)
-                  .withColumnRenamed("id", "__rep_id").withColumnRenamed("rep", "__rep")
-                df.join(reps, df(id) === col("__rep_id"), "left")
-                  .filter(col("__rep").isNull || col("__rep") === df(id))
-                  .drop("__rep_id", "__rep")
+                keepRepresentatives(df, id, graft.operators.Dedup.representatives(pairs))
               case "containment" =>
                 // drop documents swallowed by a larger one (Broder
                 // containment >= threshold of the SMALLER side's tokens);
@@ -1019,23 +1019,15 @@ object Pipeline {
                 val pairs = graft.operators.Dedup.winnowPairs(df, id, text,
                   maxBucket = maxBucket,
                   minShared = math.max(1, threshold.toInt))
-                val reps = graft.operators.Dedup.representatives(
-                    pairs.select(col("a"), col("b")))
-                  .withColumnRenamed("id", "__rep_id").withColumnRenamed("rep", "__rep")
-                df.join(reps, df(id) === col("__rep_id"), "left")
-                  .filter(col("__rep").isNull || col("__rep") === df(id))
-                  .drop("__rep_id", "__rep")
+                keepRepresentatives(df, id,
+                  graft.operators.Dedup.representatives(pairs.select(col("a"), col("b"))))
               case "simhash" =>
                 // near-dup graph on 64-bit simhash (hamming <= max_hamming,
                 // banded blocking, max_bucket skew cap) -> min-id
                 // representative per connected component
                 val pairs = graft.operators.Dedup.simhashPairs(
                   df, id, text, maxHamming, maxBucket)
-                val reps = graft.operators.Dedup.representatives(pairs)
-                  .withColumnRenamed("id", "__rep_id").withColumnRenamed("rep", "__rep")
-                df.join(reps, df(id) === col("__rep_id"), "left")
-                  .filter(col("__rep").isNull || col("__rep") === df(id))
-                  .drop("__rep_id", "__rep")
+                keepRepresentatives(df, id, graft.operators.Dedup.representatives(pairs))
               case "semdedup" =>
                 // `field` names the embedding column; threshold is tau.
                 val cents = resolveCentroids(spark, df, centroidsPath,

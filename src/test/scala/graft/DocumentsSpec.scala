@@ -2,12 +2,9 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
 
-import graft.pipeline.Pipeline
+import graft.pipeline.{Pipeline, QueryMetricsListener}
 import graft.sources.Documents
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.graftbridge.Bridge
 
 /** The schema memo behind `Documents.read` and in_memory literals: a
   * repeat read of an unchanged input infers no schema (no Spark job), and
@@ -23,17 +20,8 @@ class DocumentsSpec extends SparkSpec {
 
   /** `f`'s result and the number of Spark jobs it started. */
   private def jobsDuring[T](f: => T): (T, Int) = {
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
-    }
-    Bridge.drainListenerBus(spark)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val r = f
-      Bridge.drainListenerBus(spark)
-      (r, n.get)
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (r, l) = QueryMetricsListener.during(spark)(f)
+    (r, l.jobsStarted.intValue)
   }
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =

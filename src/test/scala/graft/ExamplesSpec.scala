@@ -10,7 +10,8 @@ import graft.pipeline.Pipeline
 class ExamplesSpec extends SparkSpec {
   import spark.implicits._
 
-  private val exDir = "/root/repo/examples"
+  // repository-relative: specs run with the checkout root as working dir
+  private val exDir = "examples"
 
   private def load(name: String, in: String, out: String): String =
     java.nio.file.Files.readString(java.nio.file.Paths.get(s"$exDir/$name"))

@@ -1973,9 +1973,9 @@ tab	end"""), Some(1.5), Some(true)),
   }
 
   test("metrics listener aggregates task counters") {
-    val l = graft.pipeline.QueryMetricsListener.attach(spark)
-    spark.range(1000).selectExpr("sum(id)").collect()
-    Thread.sleep(500)  // let the listener bus drain
+    val (_, l) = graft.pipeline.QueryMetricsListener.during(spark) {
+      spark.range(1000).selectExpr("sum(id)").collect()
+    }
     val snap = l.snapshot
     assert(snap("tasks_completed") > 0)
     assert(snap("stages_completed") > 0)

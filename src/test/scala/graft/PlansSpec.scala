@@ -953,11 +953,9 @@ class PlansSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val docs = Tables(spark, sf).documents
     def measure(out: => org.apache.spark.sql.DataFrame): (Long, Set[(Long, String, Long)]) = {
-      val l = graft.pipeline.QueryMetricsListener.attach(spark)
-      val rows = out.collect().map(r =>
-        (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-      Thread.sleep(500) // let the listener bus drain
-      spark.sparkContext.removeSparkListener(l)
+      val (rows, l) = graft.pipeline.QueryMetricsListener.during(spark) {
+        out.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+      }
       (l.snapshot("shuffle_bytes_written"), rows)
     }
     val (hashBytes, hashed) = measure(
