@@ -37,7 +37,7 @@ object JobProf {
       acc += math.max(dur, 0L)
       println(f"[job] #${j.id}%-4d ${dur / 1000.0}%7.2f s  gap=${gap / 1000.0}%6.2f  " +
         f"stages=${j.stageCount}%-3d tasks=${j.tasks}%-5d taskTime=${j.runMs / 1000.0}%8.2f s " +
-        f"shufRead=${j.shuffleRead / 1024 / 1024}%6d MB  ${j.desc}")
+        f"shufRead=${j.shuffleRead / 1024 / 1024}%6d MB  ${j.sqlDesc}")
     }
     println(f"[job] sum of job durations: ${acc / 1000.0}%.2f s (wall $wall%.2f)")
     spark.stop()

@@ -19,6 +19,7 @@ final class QueryMetricsListener extends SparkListener {
   import QueryMetricsListener.{JobRecord, StageRecord}
 
   val jobsStarted = new LongAdder
+  val sqlExecutionsStarted = new LongAdder
   val tasksCompleted = new LongAdder
   val stagesCompleted = new LongAdder
   val recordsRead = new LongAdder
@@ -39,17 +40,19 @@ final class QueryMetricsListener extends SparkListener {
 
   override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
     case s: SparkListenerSQLExecutionStart =>
+      sqlExecutionsStarted.increment()
       execDesc(s.executionId) = s.description.linesIterator.take(1).mkString.take(100)
     case _ => ()
   }
 
   override def onJobStart(e: SparkListenerJobStart): Unit = {
     jobsStarted.increment()
-    val desc = Option(e.properties)
-      .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+    def property(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+    val sqlDesc = property("spark.sql.execution.id")
       .map(id => s"exec#$id " + execDesc.getOrElse(id.toLong, "")).getOrElse("")
     e.stageIds.foreach(s => stageToJob(s) = e.jobId)
-    jobRecs(e.jobId) = new JobRecord(e.jobId, e.time, e.stageIds.size, desc)
+    jobRecs(e.jobId) = new JobRecord(e.jobId, e.time, e.stageIds.size, sqlDesc,
+      property("spark.job.description").getOrElse(""))
   }
 
   override def onJobEnd(e: SparkListenerJobEnd): Unit =
@@ -87,6 +90,7 @@ final class QueryMetricsListener extends SparkListener {
 
   def snapshot: Map[String, Long] = Map(
     "jobs_started" -> jobsStarted.sum(),
+    "sql_executions_started" -> sqlExecutionsStarted.sum(),
     "tasks_completed" -> tasksCompleted.sum(),
     "stages_completed" -> stagesCompleted.sum(),
     "records_read" -> recordsRead.sum(),
@@ -99,10 +103,12 @@ final class QueryMetricsListener extends SparkListener {
 object QueryMetricsListener {
   /** One Spark job: start/end times (ms; `end` -1 until it ends), stage
     * count, the tasks ended in its stages with their summed executor run
-    * time and shuffle bytes read, and its SQL execution's description. */
-  final class JobRecord(val id: Int, val start: Long, val stageCount: Int, val desc: String,
-                        var end: Long = -1L, var tasks: Int = 0, var runMs: Long = 0L,
-                        var shuffleRead: Long = 0L)
+    * time and shuffle bytes read, its SQL execution's id and description
+    * (`sqlDesc`), and its job description (`description`; `Pipeline.run`
+    * sets `step <i>: <type>`). */
+  final class JobRecord(val id: Int, val start: Long, val stageCount: Int, val sqlDesc: String,
+                        val description: String, var end: Long = -1L, var tasks: Int = 0,
+                        var runMs: Long = 0L, var shuffleRead: Long = 0L)
 
   /** One completed stage: its job (-1 if unseen), submission-to-completion
     * ms (-1 if unknown), task count and distinct RDD scopes joined by `>`. */

@@ -6,6 +6,8 @@ import graft.functions.Template
 import graft.sources.{CliConnector, Connector, Documents}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
 
 /** Config-driven pipeline (reference: src/step/mod.rs + src/main.rs): a
@@ -307,7 +309,9 @@ object Pipeline {
       trim(Template.render(pattern, env, templates)) === "true"
     else expr(pattern)
 
-  final case class Parsed(steps: Seq[Step])
+  /** A parsed config: its steps, and each step's `type` as the config
+    * spells it (`run` tags the step's jobs with it). */
+  final case class Parsed(steps: Seq[Step], types: Seq[String])
 
   // ---- config parsing ----------------------------------------------------
 
@@ -334,7 +338,9 @@ object Pipeline {
           jsonMapper.readTree(Hjson.toJson(trimmed))
         }
       else yamlMapper.readTree(trimmed)
-    Parsed(root.elements().asScala.map(parseStep(_, transport, mongoClient)).toSeq)
+    val nodes = root.elements().asScala.toSeq
+    Parsed(nodes.map(parseStep(_, transport, mongoClient)),
+      nodes.map(n => Option(n.get("type")).fold("")(_.asText())))
   }
 
   /** HJSON-lite normalization (the reference accepts hjson configs): strip
@@ -747,12 +753,14 @@ object Pipeline {
     * as indexable context: `{{ mapping.2.number }}`,
     * examples/transform-mapping.rs). The bare alias binds to the dataset's
     * JSON. Referentials are lookup tables by design; the row cap keeps a
-    * mis-declared fact table from being collected to the driver. */
+    * mis-declared fact table from being collected to the driver. One
+    * collect per alias brings each row with its JSON text. */
   def referentialEnv(spark: SparkSession, refs: Seq[(String, Connector)],
                      maxRows: Int = 10000): Map[String, Column] =
     refs.flatMap { case (alias, conn) =>
       val df = conn.load(spark)
-      val rows = df.limit(maxRows + 1).collect()
+      val rows = df.limit(maxRows + 1)
+        .select(col("*"), to_json(struct(col("*")))).collect()
       require(rows.length <= maxRows,
         s"referential '$alias' exceeds $maxRows rows — use a referential step (broadcast join) for large mappings")
       val fields = df.schema.fields
@@ -772,7 +780,7 @@ object Pipeline {
         }
       }
       val asJson = alias -> lit(
-        df.limit(maxRows).toJSON.collect().mkString("[", ",", "]"))
+        rows.map(_.getString(fields.length)).mkString("[", ",", "]"))
       cells.toSeq :+ asJson
     }.toMap
 
@@ -816,13 +824,51 @@ object Pipeline {
     applyRules(df, rules, sep, env, Map.empty)
 
   def applyRules(df: DataFrame, rules: Seq[Rule], sep: String, env: Map[String, Column],
-                 templates: Map[String, String]): (DataFrame, DataFrame) = {
-    val err = nullif(concat_ws(sep,
-      rules.map(r => when(!compileBoolPattern(r.pattern, env, templates), lit(r.message))): _*), lit(""))
-    val tagged = df.withColumn("_error", err)
+                 templates: Map[String, String]): (DataFrame, DataFrame) =
+    splitTagged(tagErrors(df, rules, sep, env, templates))
+
+  /** `df` plus `_error`: the failed rules' messages, or null when all hold. */
+  private def tagErrors(df: DataFrame, rules: Seq[Rule], sep: String, env: Map[String, Column],
+                        templates: Map[String, String]): DataFrame =
+    df.withColumn("_error", nullif(concat_ws(sep,
+      rules.map(r => when(!compileBoolPattern(r.pattern, env, templates), lit(r.message))): _*),
+      lit("")))
+
+  /** The ok and err streams of a tagged frame: each row lands in exactly one. */
+  private def splitTagged(tagged: DataFrame): (DataFrame, DataFrame) =
     (tagged.filter(col("_error").isNull).drop("_error"),
      tagged.filter(col("_error").isNotNull))
+
+  /** Indices of the validator steps whose ok and err streams are each read
+    * by a later writer. Any other step leaves a stream's link to its split
+    * in place (it rewrites the stream lazily); a later reader or generator
+    * on a stream cuts that stream's link, and a later validator starts a
+    * new split of both. */
+  private def sharedSplits(steps: Seq[Step]): Set[Int] = {
+    def stream(dt: String) = if (dt == "err") "err" else "ok" // as Flow.apply reads it
+    val from = scala.collection.mutable.Map.empty[String, Int]
+    val written = scala.collection.mutable.Set.empty[(Int, String)]
+    steps.zipWithIndex.foreach {
+      case (_: Validator, i) => from("ok") = i; from("err") = i
+      case (r: Reader, _) => from -= stream(r.dataType)
+      case (g: Generator, _) => from -= stream(g.dataType)
+      case (w: Writer, _) =>
+        from.get(stream(w.dataType)).foreach(i => written += (i -> stream(w.dataType)))
+      case _ => ()
+    }
+    written.collect { case (i, "ok") if written((i, "err")) => i }.toSet
   }
+
+  /** Whether a split whose ok and err streams are both written persists
+    * its tagged rows: not for a streaming frame, nor when the frame's
+    * input ([[Bridge.inputBytes]]) is over `maxInputBytes` or has no size
+    * estimate. The stored rows are about the input's size, and they spill
+    * to executor disk past the storage memory; under the bound that is a
+    * small share of either. Above it each writer re-runs the plan, as an
+    * unshared split does, and nothing is stored. */
+  private[graft] def sharesRows(tagged: DataFrame,
+                                maxInputBytes: Long = 256L << 20): Boolean =
+    !tagged.isStreaming && Bridge.inputBytes(tagged) <= maxInputBytes
 
   /** Centroid model resolution shared by the embedding-space steps
     * (`dedup method=semdedup`, `cluster`, …). Empty path → train inline.
@@ -883,7 +929,23 @@ object Pipeline {
     * embedding many runs should `spark.catalog.clearCache()` (or
     * unpersist the returned flow's frames) once a run's outputs are no
     * longer consumed, or one result-sized cache per operator call
-    * accumulates for the session's lifetime. */
+    * accumulates for the session's lifetime.
+    *
+    * A validator whose ok and err streams are each read by a later writer
+    * ([[sharedSplits]]) evaluates its tagged frame once when its input is
+    * at most 256 MiB and not streaming ([[sharesRows]]): the rows persist
+    * (`MEMORY_AND_DISK`, `Bridge.persistRows`) as the first writer runs,
+    * the second writer reads them, and every record lands in exactly one
+    * stream. The stored rows hold every column of the tagged frame (a
+    * later step's projection no longer prunes the scan), and the frame's
+    * exchanges, such as a referential broadcast, run as the validator step
+    * prepares the plan. Those rows are released when the run ends or
+    * throws; the returned flow's frames then recompute through lineage. A
+    * split with one written stream, or a larger input, persists nothing.
+    *
+    * Each step's jobs carry the job description `step <i>: <type>`, the
+    * type as the config spells it; the caller's description is restored
+    * when the run ends or throws. */
   def run(spark: SparkSession, parsed: Parsed): Flow = {
     // make the graft SQL surface available to config patterns
     try graft.plans.GraftExtensions.register(spark) catch { case _: Throwable => () }
@@ -891,7 +953,12 @@ object Pipeline {
     // the pipeline regardless of step order (tera loads all templates first)
     val registry = parsed.steps.collect { case TemplatesStep(m) => m }
       .foldLeft(Map.empty[String, String])(_ ++ _)
-    parsed.steps.foldLeft(Flow(None, None)) { (flow, step) =>
+    val shared = sharedSplits(parsed.steps)
+    val held = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
+    val sc = spark.sparkContext
+    val callerDesc = sc.getLocalProperty("spark.job.description")
+    try parsed.steps.zipWithIndex.foldLeft(Flow(None, None)) { case (flow, (step, i)) =>
+      sc.setJobDescription(s"step $i: ${parsed.types(i)}")
       step match {
         case Reader(_, conn, dt, stream) =>
           flow.updated(dt, if (stream) conn.loadStream(spark) else conn.load(spark))
@@ -904,7 +971,14 @@ object Pipeline {
           ).getOrElse(flow)
         case Validator(rules, sep, dt, refs) =>
           flow(dt).map { df =>
-            val (ok, err) = applyRules(df, rules, sep, referentialEnv(spark, refs), registry)
+            val tagged = tagErrors(df, rules, sep, referentialEnv(spark, refs), registry)
+            val (ok, err) = splitTagged(
+              if (!shared(i) || !sharesRows(tagged)) tagged
+              else {
+                val (rows, rdd) = Bridge.persistRows(tagged, StorageLevel.MEMORY_AND_DISK)
+                held += rdd
+                rows
+              })
             Flow(Some(ok), Some(err))
           }.getOrElse(flow)
         case Referential(name, conn, leftOn, rightOn, dt) =>
@@ -1415,6 +1489,9 @@ object Pipeline {
           flow(dt).foreach(df => if (df.isStreaming) conn.saveStream(df) else conn.save(df))
           flow
       }
+    } finally {
+      sc.setLocalProperty("spark.job.description", callerDesc)
+      held.foreach(_.unpersist(blocking = true))
     }
   }
 

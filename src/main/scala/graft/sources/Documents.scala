@@ -131,13 +131,14 @@ object Documents {
       }
     }
 
+    /** `load` gets the remembered schema, or None to infer one. */
     def literal(spark: SparkSession, docType: String, data: String, opts: DocOptions)
-               (load: DataFrameReader => DataFrame): DataFrame = {
+               (load: Option[StructType] => DataFrame): DataFrame = {
       val k = key(spark, literal = true, sha256(Iterator(data)), docType, opts)
       Option(entries.get(k)) match {
-        case Some(e) => load(spark.read.schema(e.schema))
+        case Some(e) => load(Some(e.schema))
         case None =>
-          val df = load(spark.read)
+          val df = load(None)
           entries.put(k, Entry("", df.schema))
           df
       }
@@ -168,14 +169,19 @@ object Documents {
     * machinery as the file path; xml (needs a file-based rowTag scan) stages
     * the literal to a temp file and reads that. `memo` reuses the schema
     * inferred earlier for the same text (config literals repeat on every
-    * run); paged HTTP bodies leave it off, as each page is new content. */
+    * run); paged HTTP bodies leave it off, as each page is new content. A
+    * json/jsonl literal parses on the driver into a local relation
+    * (`Bridge.jsonLiteral`), so a schema hit starts no SQL execution. */
   def readString(spark: SparkSession, docType: String, data: String,
                  opts: DocOptions = DocOptions(), memo: Boolean = false): DataFrame = {
     import spark.implicits._
+    def withSchema(load: Option[org.apache.spark.sql.types.StructType] => DataFrame): DataFrame =
+      if (memo) SchemaMemo.literal(spark, docType, data, opts)(load) else load(None)
     def parsed(load: DataFrameReader => DataFrame): DataFrame =
-      if (memo) SchemaMemo.literal(spark, docType, data, opts)(load) else load(spark.read)
+      withSchema(s => load(s.fold(spark.read)(spark.read.schema)))
     docType match {
-      case "json" | "jsonl" => withEntryPath(parsed(_.json(Seq(data).toDS())), opts)
+      case "json" | "jsonl" => withEntryPath(withSchema(
+        org.apache.spark.sql.graftbridge.Bridge.jsonLiteral(spark, data, _)), opts)
       case "csv" =>
         parsed(_.option("header", opts.header).option("sep", opts.delimiter)
           .option("quote", opts.quote).option("inferSchema", value = true)

@@ -49,6 +49,71 @@ object Bridge {
       ClassicConversions.castToImpl(df.sparkSession), lr)
   }
 
+  /** `df` as a flat frame over a persisted copy of its execution rows, and
+    * the RDD that holds them (the caller unpersists it). The first action on
+    * the frame fills the cache; later ones read it instead of re-running
+    * `df`'s plan. Rows are cached as they come out of the executed plan
+    * (not a columnar InMemoryRelation), and the lineage stays, so an
+    * evicted or released block recomputes through `df`'s plan. The plan is
+    * prepared by [[onRdd]], under `df`'s session confs; under AQE that
+    * runs `df`'s exchanges (broadcasts, shuffles) here, not in the first
+    * action. */
+  def persistRows(df: org.apache.spark.sql.DataFrame,
+                  level: org.apache.spark.storage.StorageLevel)
+      : (org.apache.spark.sql.DataFrame,
+         org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
+    val rows = onRdd(df)(_.map(_.copy()).setName("graft shared rows").persist(level))
+    (ClassicConversions.castToImpl(df.sparkSession).internalCreateDataFrame(rows, df.schema),
+     rows)
+  }
+
+  /** The summed size estimates of the leaves of `df`'s optimized plan: the
+    * listed bytes of a file scan, the rows of a local relation. A leaf
+    * without an estimate (an RDD scan) counts the session's default size,
+    * `Long.MaxValue` unless configured. */
+  def inputBytes(df: org.apache.spark.sql.DataFrame): BigInt =
+    ClassicConversions.castToImpl(df).queryExecution.optimizedPlan
+      .collectLeaves().map(_.stats.sizeInBytes).sum
+
+  /** `spark.read.json(Seq(data).toDS())` (or `.schema(s)` first when
+    * `schema` is given) parsed on the driver into a local relation: the same
+    * schema handling and the same record parser (JacksonParser under
+    * FailureSafeParser) that the reader runs per partition, without the SQL
+    * execution the reader's `Dataset.rdd` opens. Only a missing schema
+    * starts work (the reader's inference job). */
+  def jsonLiteral(spark: SparkSession, data: String,
+                  schema: Option[org.apache.spark.sql.types.StructType])
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JSONOptions, JacksonParser}
+    import org.apache.spark.sql.catalyst.util.FailureSafeParser
+    import org.apache.spark.sql.internal.SQLConf
+    import org.apache.spark.sql.types.StructType
+    val session = ClassicConversions.castToImpl(spark)
+    val conf = session.sessionState.conf
+    val options = new JSONOptions(Map.empty[String, String], conf.sessionLocalTimeZone,
+      conf.columnNameOfCorruptRecord)
+    val full = schema.map { s =>
+      org.apache.spark.sql.execution.datasources.json.JsonUtils.checkJsonSchema(s)
+      if (conf.getConf(SQLConf.LEGACY_RESPECT_NULLABILITY_IN_TEXT_DATASET_CONVERSION)) s
+      else s.asNullable
+    }.getOrElse(org.apache.spark.sql.execution.datasources.json.TextInputJsonDataSource
+      .inferFromDataset(session.createDataset(Seq(data))(org.apache.spark.sql.Encoders.STRING),
+        options))
+    org.apache.spark.sql.catalyst.expressions.ExprUtils
+      .verifyColumnNameOfCorruptRecord(full, options.columnNameOfCorruptRecord)
+    val raw = new JacksonParser(
+      StructType(full.filterNot(_.name == options.columnNameOfCorruptRecord)),
+      options, allowArrayAsStructs = true)
+    val parser = new FailureSafeParser[String](
+      raw.parse(_, CreateJacksonParser.string _,
+        org.apache.spark.unsafe.types.UTF8String.fromString),
+      options.parseMode, full, options.columnNameOfCorruptRecord)
+    val rows = parser.parse(data).map(_.copy()).toVector
+    org.apache.spark.sql.classic.Dataset.ofRows(session,
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(full), rows))
+  }
+
   /** Run `action` over the raw execution RDD of `df` (InternalRows): an
     * iterative operator runs its per-sweep convergence scan over a
     * persisted state as ONE RDD job instead of paying a second full

@@ -94,6 +94,31 @@ class DocumentsSpec extends SparkSpec {
     assert(rows(hit).exists(_.contains("""{\"a\":2,""")))
   }
 
+  test("a json literal parses like the reader, and a memo hit starts no SQL execution") {
+    import spark.implicits._
+    // tagged literals no other spec uses, so the first read misses
+    val tag = java.util.UUID.randomUUID().toString
+    val literals = Seq(
+      "array" -> s"""[{"a":1,"s":"$tag"},{"a":2,"n":{"x":1.5,"l":[1,2]}},{"a":null}]""",
+      "jsonl" -> s"""{"a":1,"s":"$tag"}
+                    |{"a":2}""".stripMargin,
+      "malformed" -> s"""{"a":1,"s":"$tag",
+                        |{"a":2}""".stripMargin)
+    literals.foreach { case (what, data) =>
+      val fresh = spark.read.json(Seq(data).toDS())
+      val miss = Documents.readString(spark, "json", data, memo = true)
+      val (hit, l) = QueryMetricsListener.during(spark)(
+        Documents.readString(spark, "json", data, memo = true))
+      assert(l.sqlExecutionsStarted.sum() == 0 && l.jobsStarted.sum() == 0, what)
+      val unmemoized = Documents.readString(spark, "json", data)
+      Seq(miss, hit, unmemoized).foreach { df =>
+        assert(df.schema == fresh.schema, what)
+        assert(rows(df) == rows(fresh), what)
+      }
+      if (what == "malformed") assert(fresh.columns.contains("_corrupt_record"))
+    }
+  }
+
   test("a k=v partitioned glob keeps its partition column on a memo hit") {
     val dir = tmp("memo_part")
     write(dir.resolve("t1/k=a/x.jsonl"), """{"v":1}""", """{"v":2}""")

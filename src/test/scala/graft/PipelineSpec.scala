@@ -2130,11 +2130,237 @@ tab	end"""), Some(1.5), Some(true)),
     // RMS of a 0.5-amplitude sine ≈ 0.5/sqrt(2)
     assert(math.abs(f.rmsEnergy - 0.5 / math.sqrt(2)) < 0.01)
   }
+
+  // ---- the validator split, evaluated once when both streams are written ----
+
+  /** Two JSONL files: three valid records, one with a non-positive qty and
+    * one without a name. */
+  private def etlInputs(dir: String): Unit = {
+    val in = java.nio.file.Paths.get(dir, "in")
+    java.nio.file.Files.createDirectories(in)
+    java.nio.file.Files.writeString(in.resolve("a.jsonl"),
+      """{"id":1,"name":"ann","qty":2,"category":"A"}
+        |{"id":2,"name":"bob","qty":0,"category":"B"}
+        |{"id":3,"name":"cy","qty":5,"category":"Z"}
+        |""".stripMargin)
+    java.nio.file.Files.writeString(in.resolve("b.jsonl"),
+      """{"id":4,"qty":1,"category":"A"}
+        |{"id":5,"name":"dee","qty":3,"category":"B"}
+        |""".stripMargin)
+  }
+
+  /** records_etl's steps over the JSONL glob under `dir/in` (glob reader, in_memory
+    * referential, transformer, validator), then one jsonl writer per
+    * (data_type, output directory under `dir`). */
+  private def etlConfig(dir: String, writers: (String, String)*): String = {
+    val ws = writers.map { case (dt, out) =>
+      s""",
+         | {"type":"writer","data_type":"$dt",
+         |  "connector":{"type":"local","path":"$dir/$out"},"document":{"type":"jsonl"}}""".stripMargin
+    }
+    s"""[
+       | {"type":"reader","connector":{"type":"local","path":"$dir/in/*.jsonl"},
+       |  "document":{"type":"jsonl"}},
+       | {"type":"referential","name":"cat","left_on":"category","right_on":"code",
+       |  "connector":{"type":"in_memory",
+       |   "data":"[{\\"code\\":\\"A\\",\\"label\\":\\"books\\"},{\\"code\\":\\"B\\",\\"label\\":\\"music\\"}]"},
+       |  "document":{"type":"json"}},
+       | {"type":"transformer","actions":[
+       |   {"field":"name_uc","pattern":"{{ name | upper }}"},
+       |   {"field":"label","pattern":"coalesce(cat_label, 'other')"}]},
+       | {"type":"validator","rules":{
+       |   "qty_positive":{"pattern":"qty > 0","message":"qty must be positive"},
+       |   "has_name":{"pattern":"{% if name is defined %}true{% else %}false{% endif %}",
+       |     "message":"name is missing"}}}${ws.mkString}
+       |]""".stripMargin
+  }
+
+  /** `f`'s result and what it ran ([[PipelineSpec.Trace]]). */
+  private def traced[T](f: => T): (T, PipelineSpec.Trace) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val persisted = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val broadcasts = new java.util.concurrent.atomic.AtomicInteger
+    val probe = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.contains("broadcast"))) broadcasts.incrementAndGet()
+        e.stageInfos.flatMap(_.rddInfos).filter(_.storageLevel.isValid)
+          .foreach(r => persisted.add(r.name))
+      }
+    }
+    def fileBytes: Long = Option(org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics
+      .get("file")).flatMap(s => Option(s.getLong("bytesRead"))).map(_.longValue).getOrElse(0L)
+    org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(probe)
+    try {
+      val before = fileBytes
+      val (r, l) = graft.pipeline.QueryMetricsListener.during(spark)(f)
+      (r, PipelineSpec.Trace(l.jobs.map(_.description), broadcasts.get, persisted.asScala.toSet,
+        fileBytes - before))
+    } finally spark.sparkContext.removeSparkListener(probe)
+  }
+
+  private def jsonRows(path: String): Seq[String] =
+    spark.read.json(path).toJSON.collect().sorted.toSeq
+
+  test("both streams written: the input is scanned and the referential broadcast once") {
+    val dir = tmp("split_shared")
+    etlInputs(dir)
+    Pipeline.run(spark, etlConfig(dir, "ok" -> "ok0", "err" -> "err0")) // fills the schema memos
+    // the unshared split: with no writer the steps stay lazy, and the
+    // streams (applyRules over the transformed frame) are written by hand
+    val (_, unshared) = traced {
+      val flow = Pipeline.run(spark, etlConfig(dir))
+      LocalConnector(s"$dir/ok1", "jsonl").save(flow.ok.get)
+      LocalConnector(s"$dir/err1", "jsonl").save(flow.err.get)
+    }
+    val (_, shared) = traced(Pipeline.run(spark, etlConfig(dir, "ok" -> "ok2", "err" -> "err2")))
+    assert(unshared.broadcasts == 2 && shared.broadcasts == 1, s"$unshared / $shared")
+    assert(unshared.jobs - shared.jobs == 1, s"$unshared / $shared")
+    assert(shared.fileBytes > 0 && unshared.fileBytes == 2 * shared.fileBytes,
+      s"$unshared / $shared")
+    assert(unshared.persisted.isEmpty && shared.persisted == Set("graft shared rows"))
+    assert(!spark.sparkContext.getPersistentRDDs.values.exists(_.name == "graft shared rows"))
+    assert(jsonRows(s"$dir/ok2") == jsonRows(s"$dir/ok1"))
+    assert(jsonRows(s"$dir/err2") == jsonRows(s"$dir/err1"))
+    assert(jsonRows(s"$dir/ok2").size == 3 && jsonRows(s"$dir/err2").size == 2)
+  }
+
+  test("only the ok stream written: nothing persists and the job count is the unshared one") {
+    val dir = tmp("split_ok_only")
+    etlInputs(dir)
+    Pipeline.run(spark, etlConfig(dir, "ok" -> "ok0"))
+    val (_, byHand) = traced(
+      LocalConnector(s"$dir/ok1", "jsonl").save(Pipeline.run(spark, etlConfig(dir)).ok.get))
+    val (_, run) = traced(Pipeline.run(spark, etlConfig(dir, "ok" -> "ok2")))
+    assert(run.persisted.isEmpty && run.jobs == byHand.jobs, s"$byHand / $run")
+    // step tags add no job: the tagged run's count is the untagged one's
+    assert(byHand.descriptions.forall(d => !d.startsWith("step ")))
+    assert(run.descriptions.forall(_.startsWith("step ")))
+    assert(jsonRows(s"$dir/ok2") == jsonRows(s"$dir/ok1"))
+  }
+
+  test("a split's rows are shared only for a bounded, sized input") {
+    val dir = tmp("split_bound")
+    etlInputs(dir)
+    val tagged = Pipeline.run(spark, etlConfig(dir)).err.get
+    val inputBytes = java.nio.file.Files.list(java.nio.file.Paths.get(dir, "in"))
+      .mapToLong(java.nio.file.Files.size(_)).sum()
+    assert(Pipeline.sharesRows(tagged))
+    assert(Pipeline.sharesRows(tagged, maxInputBytes = inputBytes + 1024))
+    assert(!Pipeline.sharesRows(tagged, maxInputBytes = inputBytes - 1))
+    // an RDD-backed input has no size estimate
+    val rdd = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      org.apache.spark.sql.Row(1L))), tagged.select("id").schema)
+    assert(!Pipeline.sharesRows(rdd))
+  }
+
+  test("a step's job tag spells its type as the config does") {
+    val p = Pipeline.parse("""[{"type":"generator","size":2},
+      |{"type":"sample","budget":10},{"type":"w","connector":{"type":"local","path":"x"}}]""".stripMargin)
+    assert(p.types == Seq("generator", "sample", "w"))
+  }
+
+  test("every job of a run carries its step, and the caller's description comes back") {
+    val dir = tmp("split_tags")
+    etlInputs(dir)
+    Pipeline.run(spark, etlConfig(dir, "ok" -> "ok0", "err" -> "err0"))
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      val (_, t) = traced(Pipeline.run(spark, etlConfig(dir, "ok" -> "ok1", "err" -> "err1")))
+      assert(t.descriptions.sorted ==
+        Seq("step 3: validator", "step 4: writer", "step 5: writer"), t)
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+    } finally sc.setJobDescription(null)
+  }
+
+  test("a failing err writer leaves no persisted rows behind") {
+    val dir = tmp("split_fail")
+    etlInputs(dir)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "blocker"), "a regular file")
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    sc.setJobDescription("caller")
+    try {
+      val (_, t) = traced(intercept[Exception](
+        Pipeline.run(spark, etlConfig(dir, "ok" -> "ok", "err" -> "blocker/err"))))
+      assert(t.persisted == Set("graft shared rows")) // the ok writer filled them
+      assert(sc.getPersistentRDDs.isEmpty)
+      assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sharedState.cacheManager.isEmpty)
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      assert(jsonRows(s"$dir/ok").size == 3)
+    } finally sc.setJobDescription(null)
+  }
+
+  test("a streaming validator with both streams written runs as before") {
+    val dir = tmp("split_stream")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "in"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "in", "part1.jsonl"),
+      """{"id":1,"v":10}
+        |{"id":2,"v":-3}
+        |{"id":3,"v":7}
+        |""".stripMargin)
+    val (_, t) = traced(Pipeline.run(spark,
+      s"""[
+         | {"type":"reader","stream":true,
+         |  "connector":{"type":"local","path":"$dir/in"},"document":{"type":"jsonl"}},
+         | {"type":"validator","rules":{"pos":{"pattern":"v > 0","message":"v must be positive"}}},
+         | {"type":"writer","connector":{"type":"local","path":"$dir/ok"},
+         |  "document":{"type":"parquet"}},
+         | {"type":"writer","data_type":"err","connector":{"type":"local","path":"$dir/err"},
+         |  "document":{"type":"parquet"}}
+         |]""".stripMargin))
+    assert(t.persisted.isEmpty)
+    assert(spark.read.parquet(s"$dir/ok").orderBy("id").collect()
+      .map(_.getAs[Long]("id")).toSeq == Seq(1L, 3L))
+    val err = spark.read.parquet(s"$dir/err").collect()
+    assert(err.map(r => (r.getAs[Long]("id"), r.getAs[String]("_error"))).toSeq ==
+      Seq((2L, "v must be positive")))
+  }
+
+  test("referentialEnv collects each alias once; its cells and JSON are unchanged") {
+    val dir = tmp("refenv")
+    spark.sql(
+      """select * from values
+        |  (1L, 'a', named_struct('x', 'p', 'y', 1), cast(12.34 as decimal(10, 2)),
+        |   timestamp'2024-01-02 03:04:05'),
+        |  (2L, cast(null as string), cast(null as struct<x:string,y:int>),
+        |   cast(null as decimal(10, 2)), cast(null as timestamp))
+        |  as t(id, name, nested, amt, ts)""".stripMargin)
+      .coalesce(1).write.parquet(s"$dir/ref")
+    val conn = LocalConnector(s"$dir/ref", "parquet")
+    val (ref, loadJobs) = traced(conn.load(spark))
+    val (env, t) = traced(Pipeline.referentialEnv(spark, Seq("m" -> conn)))
+    assert(t.jobs - loadJobs.jobs == 1, s"$loadJobs / $t")
+    def value(k: String): Any = spark.range(1).select(env(k)).head().get(0)
+    // the bare alias is the frame's own toJSON text
+    assert(value("m") == ref.toJSON.collect().mkString("[", ",", "]"))
+    val first = ref.orderBy("id").head()
+    assert(value("m.0.id") == 1L && value("m.0.name") == "a")
+    assert(value("m.0.nested") == "[p,1]")
+    assert(value("m.0.amt") == new java.math.BigDecimal("12.34"))
+    assert(value("m.0.ts") == first.getAs[java.sql.Timestamp]("ts"))
+    assert(value("m.1.id") == 2L)
+    assert(Seq("name", "nested", "amt", "ts").forall(f => value(s"m.1.$f") == null))
+  }
 }
 
 /** Serializable loopback transports for the curl-config e2e specs (defined
   * on the companion so executor tasks don't capture the suite instance). */
 object PipelineSpec {
+  /** What a traced call ran: each job's description, the broadcast jobs,
+    * the names of the persisted RDDs its jobs' stages hold, and the bytes
+    * read through the local filesystem (input scans; a cached block is not
+    * a file read). */
+  final case class Trace(descriptions: Seq[String], broadcasts: Int,
+                         persisted: Set[String], fileBytes: Long) {
+    def jobs: Int = descriptions.size
+  }
+
   /** Fake mongodb driver adapter for the live-binding recipe spec: serves
     * 5 docs in pages, recording every call in a static queue (static so
     * executor-side find() calls in local mode land in the same registry
