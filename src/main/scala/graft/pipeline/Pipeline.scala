@@ -890,6 +890,26 @@ object Pipeline {
       .drop("__rep_id", "__rep")
   }
 
+  /** A graph step's undirected edges: each pair once as long (`a`, `b`),
+    * `a < b`; self-loops dropped. */
+  private[graft] def undirectedEdges(df: DataFrame, src: String, dst: String): DataFrame =
+    df.select(
+        least(col(src).cast("long"), col(dst).cast("long")).as("a"),
+        greatest(col(src).cast("long"), col(dst).cast("long")).as("b"))
+      .filter(col("a") < col("b")).distinct()
+
+  /** A graph step's directed edges as long (`src`, `dst`), plus `w` when a
+    * weight column is named; `symmetric` unions the reversed edges. */
+  private[graft] def directedEdges(df: DataFrame, src: String, dst: String, w: String = "",
+                                   symmetric: Boolean = false): DataFrame = {
+    val weight = if (w.nonEmpty) Seq(col(w).cast("long").as("w")) else Nil
+    val fwd = df.select(Seq(col(src).cast("long").as("src"),
+      col(dst).cast("long").as("dst")) ++ weight: _*)
+    if (!symmetric) fwd
+    else fwd.unionByName(fwd.select(Seq(col("dst").as("src"), col("src").as("dst")) ++
+      weight.map(_ => col("w")): _*))
+  }
+
   private def resolveCentroids(spark: SparkSession, df: DataFrame,
                                centroidsPath: String, k: Int, iters: Int,
                                id: String, vec: String): DataFrame =
@@ -1269,114 +1289,44 @@ object Pipeline {
           flow(dt).map(df => flow.updated(dt,
             graft.operators.Quantiles.winsorizePerGroup(df, g, v, lo, hi, out))).getOrElse(flow)
         case PageRankStep(src, dst, iters, symmetric, dt) =>
-          flow(dt).map { df =>
-            val fwd = df.select(col(src).cast("long").as("src"),
-              col(dst).cast("long").as("dst"))
-            val edges = if (symmetric)
-              fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-            else fwd
-            flow.updated(dt, graft.operators.Graph.pageRank(edges, iters))
-          }.getOrElse(flow)
+          flow(dt).map(df => flow.updated(dt, graft.operators.Graph.pageRank(
+            directedEdges(df, src, dst, symmetric = symmetric), iters))).getOrElse(flow)
         case HitsStep(src, dst, iters, dt) =>
-          flow(dt).map { df =>
-            flow.updated(dt, graft.operators.Graph.hits(
-              df.select(col(src).cast("long").as("src"),
-                col(dst).cast("long").as("dst")), iters))
-          }.getOrElse(flow)
+          flow(dt).map(df => flow.updated(dt, graft.operators.Graph.hits(
+            directedEdges(df, src, dst), iters))).getOrElse(flow)
         case TriangleStep(src, dst, dt) =>
-          flow(dt).map { df =>
-            val e = df.select(
-                least(col(src).cast("long"), col(dst).cast("long")).as("a"),
-                greatest(col(src).cast("long"), col(dst).cast("long")).as("b"))
-              .filter(col("a") < col("b")).distinct()
-            flow.updated(dt, graft.operators.Graph.triangleCounts(e))
-          }.getOrElse(flow)
+          flow(dt).map(df => flow.updated(dt, graft.operators.Graph.triangleCounts(
+            undirectedEdges(df, src, dst)))).getOrElse(flow)
         case KCoreStep(src, dst, k, sweeps, dt) =>
-          flow(dt).map { df =>
-            val e = df.select(
-                least(col(src).cast("long"), col(dst).cast("long")).as("a"),
-                greatest(col(src).cast("long"), col(dst).cast("long")).as("b"))
-              .filter(col("a") < col("b")).distinct()
-            flow.updated(dt, graft.operators.Graph.kCore(e, k, sweeps))
-          }.getOrElse(flow)
+          flow(dt).map(df => flow.updated(dt, graft.operators.Graph.kCore(
+            undirectedEdges(df, src, dst), k, sweeps))).getOrElse(flow)
         case CommunitiesStep(src, dst, sweeps, fixpoint, dt) =>
-          flow(dt).map { df =>
-            val e = df.select(
-                least(col(src).cast("long"), col(dst).cast("long")).as("a"),
-                greatest(col(src).cast("long"), col(dst).cast("long")).as("b"))
-              .filter(col("a") < col("b")).distinct()
-            flow.updated(dt,
-              graft.operators.Graph.labelPropagation(e, sweeps, fixpoint))
-          }.getOrElse(flow)
+          flow(dt).map(df => flow.updated(dt, graft.operators.Graph.labelPropagation(
+            undirectedEdges(df, src, dst), sweeps, fixpoint))).getOrElse(flow)
         case PprStep(src, dst, seeds, iters, symmetric, dt) =>
           flow(dt).map { df =>
             val spark = df.sparkSession
             import spark.implicits._
             require(seeds.nonEmpty, "ppr step needs a non-empty seeds list")
-            val fwd = df.select(col(src).cast("long").as("src"),
-              col(dst).cast("long").as("dst"))
-            val edges = if (symmetric)
-              fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-            else fwd
+            val edges = directedEdges(df, src, dst, symmetric = symmetric)
             flow.updated(dt, graft.operators.Graph.pageRankPersonalized(
               edges, seeds.toDF("id"), iters))
           }.getOrElse(flow)
         case WalksStep(src, dst, steps, wpn, seed, symmetric, dt, w) =>
-          flow(dt).map { df =>
-            val fwd =
-              if (w.nonEmpty)
-                df.select(col(src).cast("long").as("src"),
-                  col(dst).cast("long").as("dst"), col(w).cast("long").as("w"))
-              else df.select(col(src).cast("long").as("src"),
-                col(dst).cast("long").as("dst"))
-            val edges = if (symmetric)
-              fwd.unionByName(
-                if (w.nonEmpty)
-                  fwd.select(col("dst").as("src"), col("src").as("dst"), col("w"))
-                else fwd.select(col("dst").as("src"), col("src").as("dst")))
-            else fwd
-            flow.updated(dt,
-              graft.operators.Graph.randomWalks(edges, steps, wpn, seed))
-          }.getOrElse(flow)
+          flow(dt).map(df => flow.updated(dt, graft.operators.Graph.randomWalks(
+            directedEdges(df, src, dst, w, symmetric), steps, wpn, seed))).getOrElse(flow)
         case Node2vecStep(src, dst, w, steps, wpn, bR, bN, bF, seed,
                           symmetric, dt) =>
-          flow(dt).map { df =>
-            val fwd =
-              if (w.nonEmpty)
-                df.select(col(src).cast("long").as("src"),
-                  col(dst).cast("long").as("dst"), col(w).cast("long").as("w"))
-              else df.select(col(src).cast("long").as("src"),
-                col(dst).cast("long").as("dst"))
-            val edges = if (symmetric)
-              fwd.unionByName(
-                if (w.nonEmpty)
-                  fwd.select(col("dst").as("src"), col("src").as("dst"), col("w"))
-                else fwd.select(col("dst").as("src"), col("src").as("dst")))
-            else fwd
-            flow.updated(dt, graft.operators.Graph.node2vecWalks(
-              edges, steps, wpn, bR, bN, bF, seed))
-          }.getOrElse(flow)
+          flow(dt).map(df => flow.updated(dt, graft.operators.Graph.node2vecWalks(
+            directedEdges(df, src, dst, w, symmetric), steps, wpn, bR, bN, bF, seed)))
+            .getOrElse(flow)
         case SccStep(src, dst, rounds, sweeps, trim, dt) =>
-          flow(dt).map { df =>
-            flow.updated(dt, graft.operators.Graph.stronglyConnectedComponents(
-              df.select(col(src).cast("long").as("src"),
-                col(dst).cast("long").as("dst")), rounds, sweeps, trim))
-          }.getOrElse(flow)
+          flow(dt).map(df => flow.updated(dt, graft.operators.Graph.stronglyConnectedComponents(
+            directedEdges(df, src, dst), rounds, sweeps, trim))).getOrElse(flow)
         case SsspStep(src, dst, w, seeds, sweeps, symmetric, fixpoint, dt) =>
           flow(dt).map { df =>
             val spark = df.sparkSession
-            val fwd =
-              if (w.nonEmpty)
-                df.select(col(src).cast("long").as("src"),
-                  col(dst).cast("long").as("dst"), col(w).cast("long").as("w"))
-              else df.select(col(src).cast("long").as("src"),
-                col(dst).cast("long").as("dst"))
-            val edges = if (symmetric)
-              fwd.unionByName(
-                if (w.nonEmpty)
-                  fwd.select(col("dst").as("src"), col("src").as("dst"), col("w"))
-                else fwd.select(col("dst").as("src"), col("src").as("dst")))
-            else fwd
+            val edges = directedEdges(df, src, dst, w, symmetric)
             val seedDf =
               if (seeds.nonEmpty) {
                 import spark.implicits._
@@ -1391,13 +1341,8 @@ object Pipeline {
                 fixpoint))
           }.getOrElse(flow)
         case LouvainStep(src, dst, levels, sweeps, dt) =>
-          flow(dt).map { df =>
-            val e = df.select(
-                least(col(src).cast("long"), col(dst).cast("long")).as("a"),
-                greatest(col(src).cast("long"), col(dst).cast("long")).as("b"))
-              .filter(col("a") < col("b")).distinct()
-            flow.updated(dt, graft.operators.Graph.louvain(e, levels, sweeps))
-          }.getOrElse(flow)
+          flow(dt).map(df => flow.updated(dt, graft.operators.Graph.louvain(
+            undirectedEdges(df, src, dst), levels, sweeps))).getOrElse(flow)
         case SketchPercentilesStep(group, id, field, k, specs, dt) =>
           flow(dt).map { df =>
             flow.updated(dt, graft.operators.Quantiles
@@ -1406,10 +1351,7 @@ object Pipeline {
         case ModularityStep(src, dst, sweeps, dt) =>
           flow(dt).map { df =>
             val e = graft.operators.CacheOps.persistMaterialized(
-              df.select(
-                  least(col(src).cast("long"), col(dst).cast("long")).as("a"),
-                  greatest(col(src).cast("long"), col(dst).cast("long")).as("b"))
-                .filter(col("a") < col("b")).distinct())
+              undirectedEdges(df, src, dst))
             val labels = graft.operators.Graph.labelPropagation(e, sweeps)
             try flow.updated(dt, graft.operators.Graph.modularity(e, labels))
             finally {

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import graft.sources.Documents.DocOptions
 
 /** Connectors (reference: src/connector (Rust modules) — local, in_memory, cli, curl,
@@ -11,14 +11,13 @@ import graft.sources.Documents.DocOptions
   *   file-split parallelism; "S3 Select" pushdown is Catalyst predicate/
   *   column pushdown, which the scan does natively.
   * - psql maps to Spark JDBC with partitioned reads.
-  * - curl maps to a partitioned page-fetch (offset/cursor paginator becomes
-  *   a page-per-partition plan). The HTTP call itself is injectable and the
-  *   default transport refuses (this environment has zero egress) — the
-  *   plumbing (pagination plan, parallelism, parsing) is real and tested.
-  * - mongodb executes against an injectable client surface (MongoConnector
-  *   below: pagination planning, distributed parse, batched insert, erase —
-  *   fake-client e2e specs); on a real deployment the client binds to the
-  *   official driver (no driver jar in this environment).
+  * - curl and mongodb are the paged sources, and both read through
+  *   [[Pages]]: a known page count runs the one parallel page plan (a page
+  *   per task on executors), an unknown count or a cursor chain runs the one
+  *   sequential walk, which spills each page to a file as it is fetched. The
+  *   HTTP call is an injectable transport and the mongodb driver an
+  *   injectable client surface; the defaults refuse (no egress, no driver
+  *   jar), while pagination, parallelism and parsing are real and tested.
   */
 sealed trait Connector {
   def load(spark: SparkSession): DataFrame
@@ -252,6 +251,20 @@ object Http {
   type FullTransport = (String, Map[String, String]) => Response
   def full(t: Transport): FullTransport = (u, h) => Response(t(u, h))
 
+  /** Fill a URL template's pagination slots: mustache `{{ paginator.<k> }}`
+    * substitution if the template has any, else query parameters. */
+  private[sources] def pageUrl(template: String, subst: Map[String, String]): String =
+    if (template.contains("{{"))
+      subst.foldLeft(template) { case (u, (k, v)) =>
+        u.replaceAll("\\{\\{\\s*paginator\\." + k + "\\s*\\}\\}",
+          java.util.regex.Matcher.quoteReplacement(v))
+      }
+    else {
+      val params = subst.map { case (k, v) => s"$k=$v" }.mkString("&")
+      if (params.isEmpty) template
+      else template + (if (template.contains("?")) "&" else "?") + params
+    }
+
   /** Write transport: (url, request headers, request body) -> response
     * body (reference: curl.rs send — POST/PUT/PATCH per method config). */
   type WriteTransport = (String, Map[String, String], String) => String
@@ -330,47 +343,9 @@ final case class OffsetPaginator(limit: Int = 100, skip: Int = 0,
 final case class CursorPaginator(limit: Int = 100,
                                  entryPath: String = "/next") extends HttpPaginator
 
-object HttpConnector {
-  /** Page fetcher: pageIndex -> raw page body. Injectable for tests; the
-    * default refuses — this environment is zero-egress. */
-  type Fetch = Int => String
-  val noTransport: Fetch = _ =>
-    throw new UnsupportedOperationException("HTTP transport unavailable (no egress)")
-
-  /** Auth header factories (reference: src/connector/authenticator). */
-  def basicAuth(user: String, pass: String): (String, String) =
-    "Authorization" -> ("Basic " + java.util.Base64.getEncoder
-      .encodeToString(s"$user:$pass".getBytes("UTF-8")))
-  def bearerAuth(token: String): (String, String) = "Authorization" -> s"Bearer $token"
-  /** Pre-signed JWT pass-through. */
-  def jwtAuth(token: String): (String, String) = bearerAuth(token)
-  /** JWT signed from claims (reference: authenticator/jwt.rs). */
-  def jwtSignedAuth(claimsJson: String, key: String, algorithm: String = "HS256",
-                    signingType: String = "secret"): (String, String) =
-    bearerAuth(Jwt.sign(claimsJson, key, algorithm, signingType))
-}
-
-/** HTTP endpoint with offset pagination (reference: curl.rs +
-  * paginator/curl/offset.rs): `pages` page indices fetched one-per-task in
-  * parallel, each page parsed as a JSON array/object body. */
-final case class HttpConnector(endpoint: String, pages: Int = 1,
-                               headers: Map[String, String] = Map.empty,
-                               fetch: HttpConnector.Fetch = HttpConnector.noTransport)
-    extends Connector {
-  override def load(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val f = fetch
-    // one page per partition: page fetches run concurrently on executors
-    val bodies = spark.range(pages).repartition(pages)
-      .mapPartitions(it => it.map(i => f(i.toInt)))
-    spark.read.json(bodies)
-  }
-}
-
-/** Spill surface for sequential page walks: pages go to one file each AS
+/** Spill surface for the sequential page walk: pages go to one file each AS
   * FETCHED, so driver memory holds a single page at a time no matter how
-  * long the walk is (a 100k-page cursor chain used to pin every body in an
-  * ArrayBuffer).
+  * long the walk is.
   *
   * Cluster contract: the spill path must be readable by EXECUTORS (the
   * json parse is a distributed file read). A driver-local tempdir only
@@ -399,14 +374,22 @@ private[sources] final class PageSpill(spark: SparkSession) {
         else None
       }
   private val mem = scala.collection.mutable.ArrayBuffer.empty[String]
+  private var n = 0
 
-  def write(i: Int, body: String): Unit = dir match {
-    case Some(d) =>
-      val fs = d.getFileSystem(hadoopConf)
-      val out = fs.create(new org.apache.hadoop.fs.Path(d, f"page-$i%08d.body"), true)
-      try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    case None => mem += body
+  /** Pages written so far. */
+  def pages: Int = n
+
+  /** Append the next page. */
+  def write(body: String): Unit = {
+    dir match {
+      case Some(d) =>
+        val fs = d.getFileSystem(hadoopConf)
+        val out = fs.create(new org.apache.hadoop.fs.Path(d, f"page-$n%08d.body"), true)
+        try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        finally out.close()
+      case None => mem += body
+    }
+    n += 1
   }
 
   def readPage(i: Int): String = dir match {
@@ -440,45 +423,84 @@ private[sources] final class PageSpill(spark: SparkSession) {
     dir.foreach(d => d.getFileSystem(hadoopConf).delete(d, true))
 }
 
-object CursorHttpConnector {
-  /** Cursor fetch: (cursorOrNull) -> (body, nextCursorOrNull). */
-  type CursorFetch = Option[String] => (String, Option[String])
-}
-
-/** Cursor-paginated HTTP source (reference: paginator/curl/cursor.rs).
-  * Cursor chains are inherently sequential — each page's token comes from
-  * the previous response — so pages are walked on the driver (bounded by
-  * maxPages) and PARSING is distributed. Use offset pagination
-  * (HttpConnector) when the API supports it; this exists for APIs that
-  * only hand out next-tokens. */
-final case class CursorHttpConnector(endpoint: String, maxPages: Int = 1000,
-                                     fetch: CursorHttpConnector.CursorFetch =
-                                       _ => throw new UnsupportedOperationException(
-                                         "HTTP transport unavailable (no egress)"))
-    extends Connector {
-  override def load(spark: SparkSession): DataFrame = {
-    // sequential by protocol, bounded by memory: each body spills to a
-    // file as fetched; the json parse reads the files distributed
-    val spill = new PageSpill(spark)
-    var cursor: Option[String] = None
-    var pages = 0
-    var done = false
-    while (!done && pages < maxPages) {
-      val (body, next) = fetch(cursor)
-      spill.write(pages, body)
-      cursor = next
-      pages += 1
-      done = next.isEmpty
-    }
-    if (pages == 0) { spill.delete(); spark.emptyDataFrame }
-    else spill.parseJson()
+/** The two ways a paged source (curl, mongodb) reads a remote collection
+  * (reference: paginator/curl and paginator/mongodb, offset and cursor):
+  * a known page count fetches pages in parallel ([[parallel]]); a cursor
+  * chain, or an offset walk with an unknown count, fetches them one after
+  * another ([[walk]]). A page body is a JSON array or object (a mongodb
+  * page is its documents as one JSON array), or a body in the configured
+  * document type. */
+private[sources] object Pages {
+  /** A page that carries no rows; it ends a walk and is dropped from a plan. */
+  def blank(body: String): Boolean = {
+    val t = body.trim
+    t.isEmpty || t == "[]" || t == "{}" || t == "null"
   }
+
+  /** The parallel page plan: page `i`'s body is `fetch(i)`, one page per
+    * task on executors (at most 64 partitions). The non-blank bodies STAY
+    * distributed (a collect() would bottleneck the driver at 100k-page
+    * collections) and persist, so json inference and downstream actions
+    * re-read the cache instead of re-fetching every page; the blocks are
+    * LRU-evictable and die with the session. None when every page is
+    * blank. `fetch` runs on executors. */
+  def parallel(spark: SparkSession, nPages: Int)
+              (fetch: Int => String): Option[Dataset[String]] =
+    if (nPages <= 0) None
+    else {
+      import spark.implicits._
+      val bodies = spark.range(nPages).repartition(math.min(nPages, 64))
+        .map(i => fetch(i.toInt)).filter(b => !blank(b))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (bodies.isEmpty) { bodies.unpersist(blocking = false); None }
+      else Some(bodies)
+    }
+
+  /** The sequential walk, on the driver, from token `first`: `fetch` gives
+    * a page's body and the next token. Each page names the next, so the
+    * walk cannot parallelize; its memory is bounded all the same, as each
+    * body spills as it is fetched. It stops at a blank page or a missing
+    * next token. */
+  def walk[T](spark: SparkSession, first: T)
+             (fetch: T => (String, Option[T])): PageSpill = {
+    val spill = new PageSpill(spark)
+    var token: Option[T] = Some(first)
+    while (token.nonEmpty) {
+      val (body, next) = fetch(token.get)
+      if (blank(body)) token = None
+      else { spill.write(body); token = next }
+    }
+    spill
+  }
+
+  /** Parse spilled pages per the DOCUMENT type (reference: curl.rs
+    * delegates body decode to the document layer, so a csv- or xml-speaking
+    * API works too). json/jsonl stays fully distributed: wholetext gives one
+    * row per page file and inference reads from the files, so the bodies
+    * never re-assemble on the driver; entry_path unwraps envelopes. Other
+    * document types decode through Documents.readString one page at a time
+    * (the plan union stays distributed). No pages -> a schemaless empty
+    * frame instead of json inference's "Unable to infer schema" crash. The
+    * spill dir is deleted before returning in every branch. */
+  def parseSpilled(spark: SparkSession, spill: PageSpill, docType: String = "json",
+                   opts: DocOptions = DocOptions()): DataFrame =
+    if (spill.pages == 0) { spill.delete(); spark.emptyDataFrame }
+    else docType match {
+      case "json" | "jsonl" | "" =>
+        Documents.withEntryPath(spill.parseJson(), opts)
+      case other =>
+        val parsed = (0 until spill.pages).map(i =>
+          Documents.readString(spark, other, spill.readPage(i), opts))
+          .reduce(_.unionByName(_))
+        spill.delete()
+        parsed
+    }
 }
 
 /** Total-count probes (reference: src/connector/counter/curl): one
   * driver-side request that learns the collection size, upgrading an
-  * unknown-count offset paginator to the parallel page-per-partition
-  * path. `path`, when set, overrides the connector path for the probe. */
+  * unknown-count offset paginator to the parallel page plan. `path`, when
+  * set, overrides the connector path for the probe. */
 sealed trait HttpCounter { def path: Option[String] }
 /** Size read from the response body at a json pointer
   * (reference: counter/curl/body.rs — entry_path). */
@@ -495,19 +517,20 @@ final case class HeaderCounter(name: String = "X-Total-Count",
   * `{{ paginator.limit }}` / `{{ paginator.skip }}` / `{{ paginator.next }}`
   * mustache slots in `path` (chewdata-style); without slots the values are
   * appended as query parameters. The HTTP call itself is the injectable
-  * `transport` — zero egress here — while pagination planning, parallelism
-  * and parsing are real:
-  *  - offset + known count → page-per-partition parallel fetch on executors
-  *  - offset + unknown count → sequential driver walk until an empty page
-  *  - cursor → sequential driver walk on the next-token chain
-  * and every body parses through distributed JSON inference. */
+  * `transport` (a full transport: header counters read response headers;
+  * `Http.full` lifts a body-only one) — zero egress here — while
+  * pagination planning, parallelism and parsing are real:
+  *  - offset + known count → the parallel page plan ([[Pages.parallel]])
+  *  - offset + unknown count → the sequential walk ([[Pages.walk]]) on
+  *    `skip`, until an empty page
+  *  - cursor → the sequential walk on the next-token chain
+  * and every body parses per the configured document type. */
 final case class CurlConnector(endpoint: String, path: String = "",
                                headers: Map[String, String] = Map.empty,
                                paginator: HttpPaginator = OffsetPaginator(),
-                               transport: Http.Transport = Http.noTransport,
+                               transport: Http.FullTransport = Http.full(Http.noTransport),
                                counter: Option[HttpCounter] = None,
                                auth: Option[() => (String, String)] = None,
-                               fullTransport: Option[Http.FullTransport] = None,
                                isCached: Boolean = false,
                                docType: String = "json",
                                opts: DocOptions = DocOptions(),
@@ -533,80 +556,12 @@ final case class CurlConnector(endpoint: String, path: String = "",
     }
   }
 
-  /** The effective exchange: a full transport if provided (needed by
-    * header counters), else the body-only transport lifted; wrapped in
-    * the file cache when `is_cached` is on (reference: curl.rs:46). */
-  private def exchange: Http.FullTransport = {
-    val base = fullTransport.getOrElse(Http.full(transport))
-    if (isCached) HttpCache.cached(base) else base
-  }
-
-  /** Fill pagination slots: mustache substitution if present, else query
-    * params. Exposed for spec assertions. */
-  def urlFor(subst: Map[String, String]): String = {
-    val raw = endpoint + path
-    if (raw.contains("{{"))
-      subst.foldLeft(raw) { case (u, (k, v)) =>
-        u.replaceAll("\\{\\{\\s*paginator\\." + k + "\\s*\\}\\}",
-          java.util.regex.Matcher.quoteReplacement(v))
-      }
-    else {
-      val params = subst.map { case (k, v) => s"$k=$v" }.mkString("&")
-      if (params.isEmpty) raw
-      else raw + (if (raw.contains("?")) "&" else "?") + params
-    }
-  }
-
-  private def blankPage(body: String): Boolean = {
-    val t = body.trim
-    t.isEmpty || t == "[]" || t == "{}" || t == "null"
-  }
-
-  /** Parse driver-collected page bodies per the configured DOCUMENT type
-    * (reference: curl.rs delegates body decode to the document layer, so
-    * a csv- or xml-speaking API works too). json/jsonl parse distributed
-    * with entry_path envelope unwrap; other document types go through
-    * Documents.readString per page (pages are bounded — the walk already
-    * buffered them). No pages -> a schemaless empty frame instead of
-    * json inference's "Unable to infer schema" crash. */
-  private def parsePages(spark: SparkSession, bodies: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val nonBlank = bodies.filterNot(blankPage)
-    if (nonBlank.isEmpty) spark.emptyDataFrame
-    else docType match {
-      case "json" | "jsonl" | "" =>
-        Documents.withEntryPath(spark.read.json(spark.createDataset(
-          spark.sparkContext.parallelize(nonBlank))), opts)
-      case other =>
-        nonBlank.map(b => Documents.readString(spark, other, b, opts))
-          .reduce(_.unionByName(_))
-    }
-  }
-
-  /** Parse spilled page files. json/jsonl stays fully distributed: wholetext
-    * gives one row per page file and inference reads from the files, so the
-    * bodies never re-assemble on the driver. Other document types decode
-    * through Documents.readString one page at a time — bounded at a single
-    * body in driver memory (the plan union stays distributed). The spill
-    * dir is deleted before returning in every branch. */
-  private def parseSpilled(spark: SparkSession, spill: PageSpill,
-                           n: Int): DataFrame = {
-    if (n == 0) { spill.delete(); spark.emptyDataFrame }
-    else docType match {
-      case "json" | "jsonl" | "" =>
-        Documents.withEntryPath(spill.parseJson(), opts)
-      case other =>
-        val parsed = (0 until n).map(i =>
-          Documents.readString(spark, other, spill.readPage(i), opts))
-          .reduce(_.unionByName(_))
-        spill.delete()
-        parsed
-    }
-  }
+  /** Fill pagination slots ([[Http.pageUrl]]). Exposed for spec assertions. */
+  def urlFor(subst: Map[String, String]): String = Http.pageUrl(endpoint + path, subst)
 
   override def load(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val ex = exchange
+    // wrapped in the file cache when `is_cached` is on (reference: curl.rs:46)
+    val ex = if (isCached) HttpCache.cached(transport) else transport
     // auth evaluates at LOAD time, not config-parse time (the reference
     // authenticates per request; key material may come from a refresh
     // flow only reachable when the job runs)
@@ -636,73 +591,36 @@ final case class CurlConnector(endpoint: String, path: String = "",
     effective match {
       case OffsetPaginator(limit, skip, Some(count)) =>
         val nPages = math.max(0L, (count - skip + limit - 1) / limit).toInt
-        if (nPages == 0) spark.emptyDataFrame
-        else {
-          // URLs planned on the driver (cheap strings), fetched one page
-          // per partition so page fetches run concurrently on executors;
-          // the bodies STAY distributed (a collect() here would bottleneck
-          // the driver at 100k-page collections) and persist so json
-          // inference + downstream actions re-parse the cache instead of
-          // re-fetching every page. The cached blocks are LRU-evictable
-          // and die with the session.
-          val urls = (0 until nPages).map(i =>
-            urlFor(Map("limit" -> limit.toString, "skip" -> (skip + i.toLong * limit).toString)))
-          val fetched = urls.toDS().repartition(math.min(nPages, 64))
-            .map(u => ex(u, hs).body)
-          docType match {
-            case "json" | "jsonl" | "" =>
-              val bodies = fetched.filter(b => !blankPage(b))
-                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              if (bodies.isEmpty) { bodies.unpersist(blocking = false); spark.emptyDataFrame }
-              else Documents.withEntryPath(spark.read.json(bodies), opts)
-            case _ =>
-              // non-json documents decode through the per-page document
-              // layer; the fetch still ran in parallel on executors, and
-              // the bodies stream to a spill dir one page at a time
-              // (toLocalIterator) instead of assembling on the driver
-              val spill = new PageSpill(spark)
-              var n = 0
-              fetched.toLocalIterator().forEachRemaining { body =>
-                if (!blankPage(body)) { spill.write(n, body); n += 1 }
-              }
-              parseSpilled(spark, spill, n)
-          }
+        val template = endpoint + path
+        Pages.parallel(spark, nPages)(i => ex(Http.pageUrl(template,
+            Map("limit" -> limit.toString, "skip" -> (skip + i.toLong * limit).toString)),
+          hs).body) match {
+          case None => spark.emptyDataFrame
+          case Some(bodies) if Set("json", "jsonl", "")(docType) =>
+            Documents.withEntryPath(spark.read.json(bodies), opts)
+          case Some(bodies) =>
+            // non-json documents decode through the per-page document
+            // layer; the bodies stream to a spill dir one page at a time
+            // (toLocalIterator) instead of assembling on the driver
+            val spill = new PageSpill(spark)
+            bodies.toLocalIterator().forEachRemaining(b => spill.write(b))
+            bodies.unpersist(blocking = false)
+            Pages.parseSpilled(spark, spill, docType, opts)
         }
       case OffsetPaginator(limit, skip, None) =>
-        // unknown total: the page count is data-dependent, so the walk is
-        // sequential on the driver; each body spills to disk as fetched
-        // (driver holds ONE page) and parsing reads the files distributed
-        val spill = new PageSpill(spark)
-        var n = 0
-        var s = skip.toLong
-        var done = false
-        while (!done) {
-          val body = ex(urlFor(Map("limit" -> limit.toString, "skip" -> s.toString)), hs).body
-          if (blankPage(body)) done = true
-          else { spill.write(n, body); n += 1; s += limit }
-        }
-        parseSpilled(spark, spill, n)
+        Pages.parseSpilled(spark, Pages.walk(spark, skip.toLong) { s =>
+          (ex(urlFor(Map("limit" -> limit.toString, "skip" -> s.toString)), hs).body,
+            Some(s + limit))
+        }, docType, opts)
       case CursorPaginator(limit, entryPath) =>
-        // cursor chains are inherently sequential (each page names the
-        // next); memory is NOT — bodies spill as fetched, same as above
         val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        val spill = new PageSpill(spark)
-        var n = 0
-        var cursor: Option[String] = None
-        var done = false
-        while (!done) {
-          val subst = Map("limit" -> limit.toString) ++ cursor.map("next" -> _)
-          val body = ex(urlFor(subst), hs).body
-          if (blankPage(body)) done = true
-          else {
-            spill.write(n, body); n += 1
-            val at = mapper.readTree(body).at(entryPath)
-            cursor = if (at.isMissingNode || at.isNull || at.asText().isEmpty) None
-                     else Some(at.asText())
-            done = cursor.isEmpty
-          }
-        }
-        parseSpilled(spark, spill, n)
+        Pages.parseSpilled(spark, Pages.walk(spark, Option.empty[String]) { cursor =>
+          val body = ex(urlFor(Map("limit" -> limit.toString) ++ cursor.map("next" -> _)),
+            hs).body
+          val at = if (Pages.blank(body)) None else Some(mapper.readTree(body).at(entryPath))
+          (body, at.filterNot(a => a.isMissingNode || a.isNull || a.asText().isEmpty)
+            .map(a => Some(a.asText())))
+        }, docType, opts)
     }
   }
 }
@@ -740,16 +658,15 @@ object MongoConnector {
 
 /** MongoDB connector (reference: mongodb.rs — endpoint/db/collection,
   * `filter` find query, offset OR cursor pagination, update/erase). With
-  * a client the whole execution path runs: offset pagination plans
-  * page-per-partition parallel finds off a count probe (the curl
-  * known-count shape); cursor pagination (reference:
-  * paginator/mongodb/cursor.rs) walks the driver's next-token chain
-  * sequentially on the driver — each page names the next, so the walk
-  * cannot parallelize, exactly like the curl cursor paginator — and
-  * parses distributed. Bodies parse with distributed JSON inference,
-  * saves insert in per-partition batches. Without a client (this
-  * container has no driver jar and no egress) the operations fail fast
-  * with a clear message instead of a classpath error. */
+  * a client the whole execution path runs, through the same [[Pages]] as
+  * curl, a page's documents being one JSON array body: offset pagination
+  * runs the parallel page plan off a count probe (a `find` per task);
+  * cursor pagination (reference: paginator/mongodb/cursor.rs) runs the
+  * sequential walk on the driver's next-token chain, so it holds one page
+  * in driver memory, not the collection, and parses the spilled pages
+  * distributed. Saves insert in per-partition batches. Without a client
+  * (this container has no driver jar and no egress) the operations fail
+  * fast with a clear message instead of a classpath error. */
 final case class MongoConnector(uri: String, database: String, collection: String,
                                 filter: String = "{}", batchSize: Int = 1000,
                                 client: Option[MongoConnector.Client] = None,
@@ -759,39 +676,21 @@ final case class MongoConnector(uri: String, database: String, collection: Strin
     "MongoDB support requires a client (mongo driver jar) on the classpath " +
       s"(would read $database.$collection from $uri)")
 
-  override def load(spark: SparkSession): DataFrame = client match {
-    case None => throw unavailable
-    case Some(c) if pagination == "cursor" =>
-      import spark.implicits._
-      // sequential token-chain walk (driver-side buffer, bounded by the
-      // collection — the curl cursor paginator's documented contract);
-      // page bodies then parse distributed
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      var cursor: Option[String] = None
-      var done = false
-      while (!done) {
-        val (docs, next) =
-          c.findWithCursor(database, collection, filter, cursor, batchSize)
-        buf ++= docs
-        cursor = next
-        done = next.isEmpty || docs.isEmpty
-      }
-      if (buf.isEmpty) spark.emptyDataFrame
-      else spark.read.json(spark.createDataset(buf.toSeq))
-    case Some(c) =>
-      import spark.implicits._
-      val total = c.count(database, collection, filter)
-      val nPages = math.max(0L, (total + batchSize - 1) / batchSize).toInt
-      if (nPages == 0) spark.emptyDataFrame
-      else {
-        val (db, coll, f, bs) = (database, collection, filter, batchSize)
-        val docs = spark.range(nPages).repartition(math.min(nPages, 64))
-          .mapPartitions(_.flatMap(p => c.find(db, coll, f, p * bs.toLong, bs)))
-        // persisted so json inference + downstream actions re-parse the
-        // cache instead of re-querying every page; blocks are
-        // LRU-evictable and die with the session
-        spark.read.json(docs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      }
+  override def load(spark: SparkSession): DataFrame = {
+    val c = client.getOrElse(throw unavailable)
+    val (db, coll, f, bs) = (database, collection, filter, batchSize)
+    if (pagination == "cursor")
+      // the token is the driver's cursor; the first page is asked for without one
+      Pages.parseSpilled(spark, Pages.walk(spark, Option.empty[String]) { cursor =>
+        val (docs, next) = c.findWithCursor(db, coll, f, cursor, bs)
+        (docs.mkString("[", ",", "]"), next.map(Some(_)))
+      })
+    else {
+      val nPages = ((c.count(db, coll, f) + bs - 1) / bs).toInt
+      Pages.parallel(spark, nPages)(p =>
+          c.find(db, coll, f, p.toLong * bs, bs).mkString("[", ",", "]"))
+        .fold(spark.emptyDataFrame)(spark.read.json(_))
+    }
   }
 
   override def save(df: DataFrame, mode: SaveMode): Unit = client match {
@@ -811,15 +710,22 @@ final case class MongoConnector(uri: String, database: String, collection: Strin
 object Connector {
   import com.fasterxml.jackson.databind.JsonNode
 
+  /** Auth header factories (reference: src/connector/authenticator). */
+  def basicAuth(user: String, pass: String): (String, String) =
+    "Authorization" -> ("Basic " + java.util.Base64.getEncoder
+      .encodeToString(s"$user:$pass".getBytes("UTF-8")))
+  def bearerAuth(token: String): (String, String) = "Authorization" -> s"Bearer $token"
+
   /** Parse a chewdata authenticator config node → auth header
     * (reference: src/connector/authenticator/{basic,bearer,jwt}.rs). */
   def authHeader(a: JsonNode): (String, String) = {
     def s(f: String, d: String = ""): String = if (a.has(f)) a.get(f).asText() else d
     s("type") match {
-      case "basic" => HttpConnector.basicAuth(
+      case "basic" => basicAuth(
         if (a.has("username")) s("username") else s("user"), s("password"))
-      case "bearer" => HttpConnector.bearerAuth(s("token"))
-      case "jwt" if a.has("token") => HttpConnector.jwtAuth(s("token"))
+      case "bearer" => bearerAuth(s("token"))
+      // a pre-signed jwt travels as a bearer token
+      case "jwt" if a.has("token") => bearerAuth(s("token"))
       case "jwt" =>
         val claims =
           if (a.has("claims")) a.get("claims").toString
@@ -830,8 +736,7 @@ object Connector {
         val key =
           if (a.has("jwk") && signing.startsWith("rsa")) a.get("jwk").toString
           else s("key")
-        HttpConnector.jwtSignedAuth(claims, key,
-          s("algorithm", s("algo", "HS256")), signing)
+        bearerAuth(Jwt.sign(claims, key, s("algorithm", s("algo", "HS256")), signing))
       case other => throw new IllegalArgumentException(
         s"unknown authenticator type: $other (basic/bearer/jwt)")
     }
@@ -906,8 +811,8 @@ object Connector {
         // reference: curl.rs:181 — `is_cached`, aliases `cache`/`cache_enabled`
         val isCached = Seq("is_cached", "cache", "cache_enabled")
           .exists(f => node.has(f) && node.get(f).asBoolean())
-        CurlConnector(str("endpoint"), str("path"), headers, pag, transport, counter,
-          auth, isCached = isCached, docType = docType, opts = opts)
+        CurlConnector(str("endpoint"), str("path"), headers, pag, Http.full(transport),
+          counter, auth, isCached = isCached, docType = docType, opts = opts)
       case "mongodb" | "mongo"    =>
         // reference: paginator/mongodb/{offset,cursor}.rs — the paginator
         // node picks the walk; limit maps onto the page/batch size

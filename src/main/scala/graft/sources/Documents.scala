@@ -171,7 +171,9 @@ object Documents {
     * inferred earlier for the same text (config literals repeat on every
     * run); paged HTTP bodies leave it off, as each page is new content. A
     * json/jsonl literal parses on the driver into a local relation
-    * (`Bridge.jsonLiteral`), so a schema hit starts no SQL execution. */
+    * (`Bridge.jsonLiteral`), so a schema hit starts no SQL execution: a json
+    * literal is one record (an array of objects gives a row per object), a
+    * jsonl literal one record per non-empty line. */
   def readString(spark: SparkSession, docType: String, data: String,
                  opts: DocOptions = DocOptions(), memo: Boolean = false): DataFrame = {
     import spark.implicits._
@@ -180,8 +182,12 @@ object Documents {
     def parsed(load: DataFrameReader => DataFrame): DataFrame =
       withSchema(s => load(s.fold(spark.read)(spark.read.schema)))
     docType match {
-      case "json" | "jsonl" => withEntryPath(withSchema(
-        org.apache.spark.sql.graftbridge.Bridge.jsonLiteral(spark, data, _)), opts)
+      case "json" | "jsonl" =>
+        val records =
+          if (docType == "jsonl") data.linesIterator.filter(_.trim.nonEmpty).toSeq
+          else Seq(data)
+        withEntryPath(withSchema(
+          org.apache.spark.sql.graftbridge.Bridge.jsonLiteral(spark, records, _)), opts)
       case "csv" =>
         parsed(_.option("header", opts.header).option("sep", opts.delimiter)
           .option("quote", opts.quote).option("inferSchema", value = true)

@@ -75,13 +75,13 @@ object Bridge {
     ClassicConversions.castToImpl(df).queryExecution.optimizedPlan
       .collectLeaves().map(_.stats.sizeInBytes).sum
 
-  /** `spark.read.json(Seq(data).toDS())` (or `.schema(s)` first when
+  /** `spark.read.json(records.toDS())` (or `.schema(s)` first when
     * `schema` is given) parsed on the driver into a local relation: the same
     * schema handling and the same record parser (JacksonParser under
     * FailureSafeParser) that the reader runs per partition, without the SQL
     * execution the reader's `Dataset.rdd` opens. Only a missing schema
     * starts work (the reader's inference job). */
-  def jsonLiteral(spark: SparkSession, data: String,
+  def jsonLiteral(spark: SparkSession, records: Seq[String],
                   schema: Option[org.apache.spark.sql.types.StructType])
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JSONOptions, JacksonParser}
@@ -97,7 +97,7 @@ object Bridge {
       if (conf.getConf(SQLConf.LEGACY_RESPECT_NULLABILITY_IN_TEXT_DATASET_CONVERSION)) s
       else s.asNullable
     }.getOrElse(org.apache.spark.sql.execution.datasources.json.TextInputJsonDataSource
-      .inferFromDataset(session.createDataset(Seq(data))(org.apache.spark.sql.Encoders.STRING),
+      .inferFromDataset(session.createDataset(records)(org.apache.spark.sql.Encoders.STRING),
         options))
     org.apache.spark.sql.catalyst.expressions.ExprUtils
       .verifyColumnNameOfCorruptRecord(full, options.columnNameOfCorruptRecord)
@@ -108,7 +108,7 @@ object Bridge {
       raw.parse(_, CreateJacksonParser.string _,
         org.apache.spark.unsafe.types.UTF8String.fromString),
       options.parseMode, full, options.columnNameOfCorruptRecord)
-    val rows = parser.parse(data).map(_.copy()).toVector
+    val rows = records.flatMap(r => parser.parse(r).map(_.copy())).toVector
     org.apache.spark.sql.classic.Dataset.ofRows(session,
       org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
         org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(full), rows))

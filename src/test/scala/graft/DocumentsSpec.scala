@@ -119,6 +119,37 @@ class DocumentsSpec extends SparkSpec {
     }
   }
 
+  test("a jsonl literal reads one row per line, a malformed line alone corrupt") {
+    import spark.implicits._
+    // tagged literals no other spec uses, so the first read misses
+    val tag = java.util.UUID.randomUUID().toString
+    val literals = Seq(
+      "three lines" -> s"""{"a":1,"s":"$tag"}
+                          |{"a":2}
+                          |
+                          |{"a":3,"n":{"x":1.5}}""".stripMargin,
+      "malformed middle" -> s"""{"a":1,"s":"$tag"}
+                               |{"a":2,
+                               |{"a":3}""".stripMargin)
+    literals.foreach { case (what, data) =>
+      // the reader over the same lines is the reference
+      val fresh = spark.read.json(data.linesIterator.filter(_.trim.nonEmpty).toSeq.toDS())
+      val miss = Documents.readString(spark, "jsonl", data, memo = true)
+      val hit = Documents.readString(spark, "jsonl", data, memo = true)
+      val unmemoized = Documents.readString(spark, "jsonl", data)
+      Seq(miss, hit, unmemoized).foreach { df =>
+        assert(df.count() == 3, what)
+        assert(df.schema == fresh.schema, what)
+        assert(rows(df) == rows(fresh), what)
+      }
+      if (what == "malformed middle") {
+        val corrupt = miss.filter($"_corrupt_record".isNotNull)
+          .select("_corrupt_record").as[String].collect().toSeq
+        assert(corrupt == Seq("""{"a":2,"""), s"only the middle line is corrupt: $corrupt")
+      }
+    }
+  }
+
   test("a k=v partitioned glob keeps its partition column on a memo hit") {
     val dir = tmp("memo_part")
     write(dir.resolve("t1/k=a/x.jsonl"), """{"v":1}""", """{"v":2}""")

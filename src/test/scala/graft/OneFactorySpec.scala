@@ -9,7 +9,8 @@ import scala.util.Using
 /** Every main takes its session from `GraftSession` (the harness mains
   * through `BenchUtil.session`) and every job/task count from
   * `pipeline.QueryMetricsListener`: no other main source may build a
-  * session or define a listener of its own. */
+  * session or define a listener of its own. Every source a config can
+  * name is built by `Connector.fromConfig`, and no other exists. */
 class OneFactorySpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -32,5 +33,25 @@ class OneFactorySpec extends AnyFunSuite {
   test("the one SparkListener in main sources is pipeline/Metrics.scala's") {
     assert(sourcesMatching("""(new|extends|with)\s+SparkListener\b""") ==
       Set("pipeline/Metrics.scala"))
+  }
+
+  test("every Connector class in main sources is built by Connector.fromConfig") {
+    val texts = Using.resource(Files.walk(root)) { paths =>
+      paths.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => Files.readString(p)).toSeq
+    }
+    // each class up to its first `extends`, never crossing the next class
+    val connectors = texts.flatMap(t =>
+      """class\s+(\w+)\b(?:(?!\bclass\s)[\s\S])*?\bextends\s+(\w+)""".r
+        .findAllMatchIn(t).filter(_.group(2) == "Connector").map(_.group(1))).toSet
+    assert(connectors.contains("CurlConnector") && connectors.contains("MongoConnector"),
+      s"the scan found $connectors")
+    val fromConfig = texts.flatMap { t =>
+      val at = t.indexOf("def fromConfig(")
+      if (at < 0) None else Some(t.substring(at, t.indexOf("\n  }\n", at)))
+    }.mkString
+    assert(fromConfig.nonEmpty, "Connector.fromConfig not found")
+    val unbuilt = connectors.filterNot(c => fromConfig.contains(c + "("))
+    assert(unbuilt.isEmpty, s"no config can reach $unbuilt")
   }
 }

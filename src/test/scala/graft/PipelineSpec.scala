@@ -178,16 +178,18 @@ tab	end"""), Some(1.5), Some(true)),
   }
 
   test("http connector: pagination plan fetches every page in parallel") {
-    val fetched = HttpConnector("http://example/api", pages = 4,
-      fetch = i => s"""[{"page":$i,"v":${i * 10}}]""")
-    val rows = fetched.load(spark).orderBy("page").collect()
+    // a known count runs the parallel page plan: one page per task
+    val fetched = CurlConnector("http://example/api",
+      paginator = OffsetPaginator(limit = 1, count = Some(4L)),
+      transport = Http.full { (url, _) =>
+        val i = url.split("skip=")(1).split("&")(0).toInt
+        s"""[{"page":$i,"v":${i * 10}}]"""
+      })
+    val df = fetched.load(spark)
+    assert(df.rdd.getNumPartitions == 4)
+    val rows = df.orderBy("page").collect()
     assert(rows.map(_.getAs[Long]("page")).toSeq == Seq(0L, 1L, 2L, 3L))
     assert(rows.map(_.getAs[Long]("v")).toSeq == Seq(0L, 10L, 20L, 30L))
-  }
-
-  test("http auth header factories") {
-    assert(HttpConnector.basicAuth("u", "p")._2 == "Basic dTpw")
-    assert(HttpConnector.bearerAuth("tok")._2 == "Bearer tok")
   }
 
   test("eraser removes a local target") {
@@ -1673,7 +1675,7 @@ tab	end"""), Some(1.5), Some(true)),
     val parsed = sources.Connector.fromConfig(cfg, "json", Documents.DocOptions())
       .asInstanceOf[CurlConnector]
     assert(parsed.counter.contains(sources.HeaderCounter("X-Total-Count", Some("/items/count"))))
-    val conn = parsed.copy(fullTransport = Some(PipelineSpec.headerCountingTransport))
+    val conn = parsed.copy(transport = PipelineSpec.headerCountingTransport)
     val rows = conn.load(spark).orderBy("id").collect()
     assert(rows.map(_.getAs[Long]("id")).toSeq == (0L until 6L))
     // the counter name match is case-insensitive (HTTP header semantics)
@@ -1689,7 +1691,7 @@ tab	end"""), Some(1.5), Some(true)),
     PipelineSpec.fetchCount.set(0)
     val conn = CurlConnector("http://api.test", "/items",
       paginator = OffsetPaginator(limit = 2, count = Some(6L)),
-      transport = PipelineSpec.countingTransport,
+      transport = Http.full(PipelineSpec.countingTransport),
       isCached = true)
     assert(conn.load(spark).count() == 6)
     val callsAfterFirst = PipelineSpec.fetchCount.get()
@@ -1708,20 +1710,32 @@ tab	end"""), Some(1.5), Some(true)),
     // unknown-count walk whose FIRST page is already blank
     val empty = CurlConnector("http://api.test", "/void",
       paginator = OffsetPaginator(limit = 10),
-      transport = (_, _) => "[]")
+      transport = Http.full((_, _) => "[]"))
     assert(empty.load(spark).isEmpty)
     // a counter probe that finds nothing leaves the walk sequential but
     // still yields an empty frame on a blank body
     val probed = CurlConnector("http://api.test", "/void",
       paginator = OffsetPaginator(limit = 10),
-      transport = (_, _) => "",
+      transport = Http.full((_, _) => ""),
       counter = Some(sources.BodyCounter("/total")))
     assert(probed.load(spark).isEmpty)
     // known count whose pages all come back blank (server lied)
     val liar = CurlConnector("http://api.test", "/void",
       paginator = OffsetPaginator(limit = 2, count = Some(4L)),
-      transport = (_, _) => "{}")
+      transport = Http.full((_, _) => "{}"))
     assert(liar.load(spark).isEmpty)
+  }
+
+  test("http auth header factories") {
+    assert(sources.Connector.basicAuth("u", "p")._2 == "Basic dTpw")
+    assert(sources.Connector.bearerAuth("tok")._2 == "Bearer tok")
+    // config nodes reach the same factories; a pre-signed jwt is a bearer token
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def hdr(node: String) = sources.Connector.authHeader(mapper.readTree(node))
+    assert(hdr("""{"type":"basic","username":"u","password":"p"}""") ==
+      ("Authorization" -> "Basic dTpw"))
+    assert(hdr("""{"type":"bearer","token":"tok"}""") == ("Authorization" -> "Bearer tok"))
+    assert(hdr("""{"type":"jwt","token":"a.b.c"}""") == ("Authorization" -> "Bearer a.b.c"))
   }
 
   test("jwt HS256 signing matches the RFC 7515 reference vector") {
@@ -1855,7 +1869,7 @@ tab	end"""), Some(1.5), Some(true)),
     }
     val env = CurlConnector("http://api.test", "/items",
       paginator = OffsetPaginator(limit = 1, count = Some(2L)),
-      transport = envelopeApi,
+      transport = Http.full(envelopeApi),
       docType = "json", opts = Documents.DocOptions(entryPath = "/data"))
     assert(env.load(spark).orderBy("id").collect().map(_.getAs[Long]("id")).toSeq ==
       Seq(0L, 1L, 10L, 11L))
@@ -1863,7 +1877,7 @@ tab	end"""), Some(1.5), Some(true)),
       if (url.contains("skip=0")) "id;name\n1;ada\n2;bob" else ""
     val csv = CurlConnector("http://api.test", "/report",
       paginator = OffsetPaginator(limit = 10),
-      transport = csvApi,
+      transport = Http.full(csvApi),
       docType = "csv", opts = Documents.DocOptions(delimiter = ";"))
     val rows = csv.load(spark).orderBy("id").collect()
     assert(rows.map(r => (r.getAs[Int]("id"), r.getAs[String]("name"))).toSeq ==
@@ -1875,7 +1889,7 @@ tab	end"""), Some(1.5), Some(true)),
     import spark.implicits._
     val conn = CurlConnector("http://api.test", "/ingest",
       headers = Map("X-Trace" -> "t1"),
-      auth = Some(() => HttpConnector.bearerAuth("tok")),
+      auth = Some(() => sources.Connector.bearerAuth("tok")),
       writeTransport = PipelineSpec.captureWrites,
       writeBatchSize = 2)
     conn.save(spark.range(5).select(col("id")).coalesce(1),
@@ -1897,19 +1911,42 @@ tab	end"""), Some(1.5), Some(true)),
     val conn = CurlConnector("http://api.test", "/items",
       paginator = OffsetPaginator(limit = 2),
       counter = Some(sources.HeaderCounter(path = Some("/count"))),
-      fullTransport = Some(garbage))
+      transport = garbage)
     assert(conn.load(spark).count() == 6) // sequential walk still succeeds
   }
 
+  /** Cursor-paged API over the `next` query parameter: page `i`'s body is
+    * `{"next":"<i+1>","data":rows(i)}`, and the last page names no next. */
+  private def cursorApi(nPages: Int, onFetch: Int => Unit)
+                       (rows: Int => String): Http.FullTransport = Http.full { (url, _) =>
+    val i = "next=(\\d+)".r.findFirstMatchIn(url).map(_.group(1).toInt).getOrElse(0)
+    onFetch(i)
+    val next = if (i + 1 < nPages) s""""next":"${i + 1}",""" else ""
+    s"""{$next"data":${rows(i)}}"""
+  }
+
+  /** Spill dirs under the JVM tempdir, and the page files in them. */
+  private def spillDirs(): Set[String] =
+    new java.io.File(System.getProperty("java.io.tmpdir")).listFiles()
+      .filter(_.getName.startsWith("graft-curl-pages")).map(_.getName).toSet
+  private def pageFiles(dirs: Set[String]): Int = dirs.toSeq.map(d =>
+    new java.io.File(System.getProperty("java.io.tmpdir"), d)
+      .listFiles().count(_.getName.endsWith(".body"))).sum
+
   test("cursor paginator walks the token chain and stops at the end") {
-    val conn = CursorHttpConnector("http://example/api", maxPages = 10,
-      fetch = {
-        case None      => ("""[{"v":1}]""", Some("c1"))
-        case Some("c1") => ("""[{"v":2}]""", Some("c2"))
-        case Some(_)   => ("""[{"v":3}]""", None)
+    val tokens = scala.collection.mutable.ArrayBuffer.empty[String]
+    val conn = CurlConnector("http://example/api",
+      paginator = CursorPaginator(limit = 1),
+      transport = Http.full { (url, _) =>
+        tokens += "next=(\\w+)".r.findFirstMatchIn(url).map(_.group(1)).getOrElse("-")
+        if (!url.contains("next=")) """{"v":1,"next":"c1"}"""
+        else if (url.contains("next=c1")) """{"v":2,"next":"c2"}"""
+        else """{"v":3}"""
       })
     val vs = conn.load(spark).select("v").as[Long].collect().sorted.toSeq
     assert(vs == Seq(1L, 2L, 3L))
+    // the chain stops at the page that names no next token
+    assert(tokens.toSeq == Seq("-", "c1", "c2"), s"unexpected chain: $tokens")
   }
 
   test("long cursor walk spills pages to disk — driver holds one page at a time") {
@@ -1919,32 +1956,57 @@ tab	end"""), Some(1.5), Some(true)),
     // the spill dir is deleted eagerly once the parse has materialized
     // (no deleteOnExit accumulation in a long-lived JVM).
     val nPages = 400
-    def tmpDirs(): Set[String] = {
-      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-      tmp.listFiles().filter(_.getName.startsWith("graft-curl-pages"))
-        .map(_.getName).toSet
-    }
-    val before = tmpDirs()
+    val before = spillDirs()
     // observe the spill from inside the LAST fetch: pages 0..n-2 must
     // already be on disk while the walk is still running
     var filesSeenAtLastFetch = -1
-    val conn = CursorHttpConnector("http://example/api", maxPages = 100000,
-      fetch = cur => {
-        val i = cur.map(_.toInt).getOrElse(0)
-        if (i == nPages - 1)
-          filesSeenAtLastFetch = (tmpDirs() -- before).toSeq.map(d =>
-            new java.io.File(System.getProperty("java.io.tmpdir"), d)
-              .listFiles().count(_.getName.endsWith(".body"))).sum
-        val body = s"""[{"v":${i * 2}},{"v":${i * 2 + 1}}]"""
-        (body, if (i + 1 < nPages) Some((i + 1).toString) else None)
-      })
+    val conn = CurlConnector("http://example/api",
+      paginator = CursorPaginator(limit = 2),
+      opts = Documents.DocOptions(entryPath = "/data"),
+      transport = cursorApi(nPages,
+        i => if (i == nPages - 1) filesSeenAtLastFetch = pageFiles(spillDirs() -- before))(
+        i => s"""[{"v":${i * 2}},{"v":${i * 2 + 1}}]"""))
     val df = conn.load(spark)
     assert(df.count() == nPages * 2L)
     assert(df.agg(org.apache.spark.sql.functions.sum("v")).head().getLong(0) ==
       (0L until nPages * 2L).sum)
     assert(filesSeenAtLastFetch == nPages - 1,
       s"expected ${nPages - 1} page files on disk mid-walk, saw $filesSeenAtLastFetch")
-    assert((tmpDirs() -- before).isEmpty,
+    assert((spillDirs() -- before).isEmpty,
+      "spill dir must be deleted eagerly after the parse materializes")
+  }
+
+  test("mongodb cursor walk spills pages to disk — driver holds one page at a time") {
+    // the mongodb cursor paginator runs the same spilled walk as curl: at
+    // the last findWithCursor every earlier page is already a file, and
+    // the files are gone once the parse has materialized
+    val nPages = 400
+    val before = spillDirs()
+    var filesSeenAtLastFetch = -1
+    val client = new sources.MongoConnector.Client {
+      override def count(db: String, coll: String, f: String): Long = nPages * 2L
+      override def find(db: String, coll: String, f: String,
+                        skip: Long, limit: Int): Seq[String] =
+        (skip until math.min(skip + limit, nPages * 2L)).map(v => s"""{"v":$v}""")
+      override def insert(db: String, coll: String, d: Seq[String]): Unit = ()
+      override def drop(db: String, coll: String): Unit = ()
+      override def findWithCursor(db: String, coll: String, f: String,
+                                  cursor: Option[String],
+                                  limit: Int): (Seq[String], Option[String]) = {
+        val i = cursor.map(_.toInt).getOrElse(0)
+        if (i == nPages - 1) filesSeenAtLastFetch = pageFiles(spillDirs() -- before)
+        (Seq(s"""{"v":${i * 2}}""", s"""{"v":${i * 2 + 1}}"""),
+          if (i + 1 < nPages) Some((i + 1).toString) else None)
+      }
+    }
+    val df = sources.MongoConnector("mongodb://test", "db1", "big", batchSize = 2,
+      client = Some(client), pagination = "cursor").load(spark)
+    assert(df.count() == nPages * 2L)
+    assert(df.agg(org.apache.spark.sql.functions.sum("v")).head().getLong(0) ==
+      (0L until nPages * 2L).sum)
+    assert(filesSeenAtLastFetch == nPages - 1,
+      s"expected ${nPages - 1} page files on disk mid-walk, saw $filesSeenAtLastFetch")
+    assert((spillDirs() -- before).isEmpty,
       "spill dir must be deleted eagerly after the parse materializes")
   }
 
@@ -1956,13 +2018,12 @@ tab	end"""), Some(1.5), Some(true)),
     spark.conf.set("spark.graft.http.spillDir", "file://" + base)
     try {
       var filesInStagingMidWalk = -1
-      val conn = CursorHttpConnector("http://example/api", maxPages = 10,
-        fetch = cur => {
-          val i = cur.map(_.toInt).getOrElse(0)
-          if (i == 2) filesInStagingMidWalk = base.toFile.listFiles()
-            .map(d => d.listFiles().count(_.getName.endsWith(".body"))).sum
-          (s"""[{"v":$i}]""", if (i < 2) Some((i + 1).toString) else None)
-        })
+      val conn = CurlConnector("http://example/api",
+        paginator = CursorPaginator(limit = 1),
+        opts = Documents.DocOptions(entryPath = "/data"),
+        transport = cursorApi(3, i => if (i == 2) filesInStagingMidWalk =
+          base.toFile.listFiles().map(d => d.listFiles().count(_.getName.endsWith(".body"))).sum)(
+          i => s"""[{"v":$i}]"""))
       assert(conn.load(spark).select("v").as[Long].collect().sorted.toSeq ==
         Seq(0L, 1L, 2L))
       assert(filesInStagingMidWalk == 2,

@@ -49,6 +49,34 @@ class PlansSpec extends SparkSpec {
       .map(PlanDump.opCount(txt, _)) == Seq(1, 1, 1, 1, 1))
   }
 
+  test("graph steps' edge frames plan as the hand-written selects they replace") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{greatest, least}
+    import graft.pipeline.Pipeline
+    val df = Seq((1, 2, 5), (2, 1, 3), (3, 3, 1)).toDF("s", "d", "wt")
+    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit = {
+      assert(a.schema == b.schema)
+      assert(a.queryExecution.optimizedPlan.sameResult(b.queryExecution.optimizedPlan),
+        s"${a.queryExecution.optimizedPlan}\nvs\n${b.queryExecution.optimizedPlan}")
+    }
+    // the scc step (graph_loops' workload): plain directed edges
+    val fwd = df.select(col("s").cast("long").as("src"), col("d").cast("long").as("dst"))
+    same(Pipeline.directedEdges(df, "s", "d"), fwd)
+    same(Pipeline.directedEdges(df, "s", "d", symmetric = true),
+      fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst"))))
+    val wfwd = df.select(col("s").cast("long").as("src"), col("d").cast("long").as("dst"),
+      col("wt").cast("long").as("w"))
+    same(Pipeline.directedEdges(df, "s", "d", "wt", symmetric = true),
+      wfwd.unionByName(wfwd.select(col("dst").as("src"), col("src").as("dst"), col("w"))))
+    same(Pipeline.undirectedEdges(df, "s", "d"),
+      df.select(least(col("s").cast("long"), col("d").cast("long")).as("a"),
+          greatest(col("s").cast("long"), col("d").cast("long")).as("b"))
+        .filter(col("a") < col("b")).distinct())
+    // the comparison tells plans apart: an uncast frame is not the same
+    assert(!Pipeline.directedEdges(df, "s", "d").queryExecution.optimizedPlan.sameResult(
+      df.select(col("s").as("src"), col("d").as("dst")).queryExecution.optimizedPlan))
+  }
+
   test("q_filter_project: filters push to the scan, schema is pruned") {
     val df = queries.Relational.qFilterProject(spark, sf)
     val leaf = df.queryExecution.executedPlan.collectLeaves().head.toString
