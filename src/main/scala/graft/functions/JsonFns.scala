@@ -28,9 +28,6 @@ object JsonFns {
   def jsonPointerLong(c: Column, pointer: String): Column =
     jsonPointer(c, pointer).cast("bigint")
 
-  def jsonPointerDouble(c: Column, pointer: String): Column =
-    jsonPointer(c, pointer).cast("double")
-
   /** Set/overwrite a top-level field of a one-level JSON object column.
     * An existing `"key": value` pair whose value is a SCALAR (string,
     * number, bool, null) is removed first so the result never carries

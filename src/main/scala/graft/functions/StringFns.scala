@@ -18,16 +18,9 @@ object StringFns {
   def find(c: Column, pattern: String): Column =
     nullif(regexp_extract(c, pattern, 0), lit(""))
 
-  /** All regex matches. */
-  def findAll(c: Column, pattern: String): Column =
-    regexp_extract_all(c, lit(pattern), lit(0))
-
   /** Checksums (chewdata src/helper/checksum.rs supports md5/sha families). */
   def checksumMd5(c: Column): Column    = md5(c.cast("binary"))
-  def checksumSha1(c: Column): Column   = sha1(c.cast("binary"))
   def checksumSha256(c: Column): Column = sha2(c.cast("binary"), 256)
-  def checksumSha512(c: Column): Column = sha2(c.cast("binary"), 512)
-  def checksumCrc32(c: Column): Column  = crc32(c.cast("binary"))
 
   /** Environment variable as literal (driver-side resolution, like tera's
     * `env` function — the value is fixed at plan time). */

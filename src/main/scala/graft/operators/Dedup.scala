@@ -154,17 +154,6 @@ object Dedup {
 
   // ---- shingles + minhash ------------------------------------------------
 
-  /** Word n-gram shingles from a PRE-TOKENIZED column (whole text when
-    * shorter). `toks` must be an attribute reference, never an inline
-    * `split(...)` expression: HOF lambdas re-evaluate captured argument
-    * expressions per element, so an inline split would tokenize the text
-    * once per shingle — O(len²) per row (observed: single task pegged for
-    * minutes on 500 docs). */
-  def shinglesFromTokens(toks: Column, n: Int = 3): Column =
-    when(size(toks) < n, array(concat_ws(" ", toks)))
-      .otherwise(transform(sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
-
   /** k-permutation MinHash signature — native expression (one tight loop:
     * S shingle hashes + S·k affine mixes per row). The equivalent HOF
     * (`transform`+`array_min`) formulation is interpreted per element and

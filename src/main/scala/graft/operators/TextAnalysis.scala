@@ -37,13 +37,6 @@ object TextAnalysis {
     "de" -> Seq("der", "die", "und", "das", "von", "mit", "ein"),
     "zh" -> Seq("的", "是", "了", "在", "和", "有", "我"))
 
-  def stopwordHits(c: Column, lang: String): Column =
-    size(array_intersect(tokens(lower(c)),
-      array(stopwords(lang).map(lit): _*)))
-
-  def stopwordRatio(c: Column, lang: String = "en"): Column =
-    stopwordHits(c, lang).cast("double") / tokenCountWs(c).cast("double")
-
   /** Language ID: argmax of per-language stopword hits with a fixed
     * precedence order on ties; "und" when nothing matches. */
   val langOrder: Seq[String] = Seq("en", "es", "fr", "de", "zh")
@@ -131,11 +124,6 @@ object TextAnalysis {
         i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
     lit(1.0) - size(array_distinct(grams)).cast("double") / size(grams).cast("double")
   }
-
-  /** Polynomial rolling hash over tokens (order-sensitive fingerprint). */
-  def rollingHash(c: Column): Column =
-    aggregate(tokens(c), lit(0L),
-      (acc, t) => acc * lit(1000003L) + xxhash64(t))
 
   /** EXACT heavy hitters at bounded memory — every term whose frequency
     * exceeds N/k token occurrences, two passes (Misra & Gries 1982):

@@ -754,13 +754,14 @@ object Connector {
   }
 
   /** Build from a chewdata-style connector config node. `transport` is the
-    * injectable HTTP call for curl connectors (default: zero-egress);
+    * injectable HTTP call for curl connectors (default: zero-egress; a
+    * full transport, so a header counter sees the response headers);
     * `mongoClient` is the injectable mongodb driver adapter (default:
     * none — mongodb operations fail fast). The config node itself is
     * identical with or without the live bindings. */
   def fromConfig(node: com.fasterxml.jackson.databind.JsonNode,
                  docType: String, opts: DocOptions,
-                 transport: Http.Transport = Http.noTransport,
+                 transport: Http.FullTransport = Http.full(Http.noTransport),
                  mongoClient: Option[MongoConnector.Client] = None): Connector = {
     def str(field: String, default: String = ""): String =
       if (node.has(field)) node.get(field).asText() else default
@@ -811,7 +812,7 @@ object Connector {
         // reference: curl.rs:181 — `is_cached`, aliases `cache`/`cache_enabled`
         val isCached = Seq("is_cached", "cache", "cache_enabled")
           .exists(f => node.has(f) && node.get(f).asBoolean())
-        CurlConnector(str("endpoint"), str("path"), headers, pag, Http.full(transport),
+        CurlConnector(str("endpoint"), str("path"), headers, pag, transport,
           counter, auth, isCached = isCached, docType = docType, opts = opts)
       case "mongodb" | "mongo"    =>
         // reference: paginator/mongodb/{offset,cursor}.rs — the paginator

@@ -11,15 +11,63 @@ class PipelineSpec extends SparkSpec {
     java.nio.file.Files.createTempDirectory(prefix).toString
 
   test("pipeline config parses all step types and aliases") {
-    val p = Pipeline.parse(
-      """[
-        | {"type":"reader","connector":{"type":"mem","data":"[{\"a\":1}]"}},
-        | {"type":"t","actions":[{"field":"b","pattern":"a + 1"}]},
-        | {"type":"v","rules":{"r1":{"pattern":"a > 0"}}},
-        | {"type":"generator","count":5},
-        | {"type":"writer","connector":{"type":"cli"}}
-        |]""".stripMargin)
-    assert(p.steps.length == 5)
+    val mem = """"connector":{"type":"mem","data":"[{\"a\":1}]"}"""
+    // (type, the fields it needs to parse), every spelling parseStep accepts
+    val steps = Seq(
+      "reader" -> mem, "read" -> mem, "r" -> mem,
+      "writer" -> """"connector":{"type":"cli"}""", "write" -> "", "w" -> "",
+      "transformer" -> "", "transform" -> "", "t" -> """"actions":[{"field":"b","pattern":"a + 1"}]""",
+      "validator" -> "", "validate" -> "", "v" -> """"rules":{"r1":{"pattern":"a > 0"}}""",
+      "templates" -> """"templates":{"m":"x"}""", "tmpl" -> "",
+      "referential" -> mem, "ref" -> mem,
+      "generator" -> """"count":5""", "g" -> "",
+      "eraser" -> "", "erase" -> "", "e" -> "",
+      "dedup" -> "", "substring_dedup" -> "", "boilerplate" -> "", "paragraph_dedup" -> "",
+      "scrub" -> "", "quality_filter" -> "", "dsir_select" -> "", "quality_buckets" -> "",
+      "mixture" -> "", "sample" -> "", "sample" -> """"budget":100""", "sample" -> """"weight":"w"""",
+      "split" -> "", "cluster" -> "", "normalize" -> "", "zscore" -> "", "sessionize" -> "",
+      "funnel" -> """"stages":["view","buy"]""", "debounce" -> "", "attribution" -> "",
+      "winsorize" -> "", "triangle" -> "", "communities" -> "",
+      "ppr" -> """"seeds":[1]""", "pagerank_personalized" -> """"seeds":[1]""",
+      "walks" -> "", "random_walks" -> "", "node2vec" -> "", "scc" -> "", "sssp" -> "",
+      "modularity" -> "", "louvain" -> "", "sketch_percentiles" -> "", "kcore" -> "",
+      "pagerank" -> "", "hits" -> "", "knn_classify" -> "", "chunk" -> "", "pack" -> "",
+      "shard" -> "", "pareto" -> "", "layout" -> """"table":"t","buckets":4""")
+    val p = Pipeline.parse(steps.map { case (t, fields) =>
+      s"""{"type":"$t"${if (fields.isEmpty) "" else "," + fields}}"""
+    }.mkString("[", ",\n", "]"))
+    assert(p.steps.length == steps.length)
+    assert(p.types == steps.map(_._1))
+    val chewdata = Set("reader", "read", "r", "writer", "write", "w", "transformer",
+      "transform", "t", "validator", "validate", "v", "templates", "tmpl",
+      "generator", "g", "eraser", "erase", "e")
+    p.steps.zip(p.types).foreach { case (step, t) =>
+      assert(step.isInstanceOf[Pipeline.FrameStep] == !chewdata(t), s"$t parsed to $step")
+    }
+    intercept[IllegalArgumentException](Pipeline.parse("""[{"type":"nope"}]"""))
+  }
+
+  test("a step's config errors throw at parse, before any step runs") {
+    Seq("""{"type":"dedup","method":"nope"}""",
+      """{"type":"dedup","method":"incremental"}""",
+      """{"type":"ppr"}""",
+      """{"type":"ppr","seeds":[]}""",
+      """{"type":"layout","table":"t","mode":"nope","buckets":4}""",
+      """{"type":"layout","table":"t","mode":"bucket"}""",
+      """{"type":"layout","path":"/p","mode":"zorder","by":["a"]}""",
+      """{"type":"layout","path":"/p","mode":"shuffle"}"""
+    ).foreach(step => intercept[IllegalArgumentException](Pipeline.parse(s"[$step]")))
+    // so an eraser ahead of a bad step never runs
+    val dir = tmp("erase_guard")
+    val target = java.nio.file.Files.write(java.nio.file.Paths.get(dir, "keep.json"),
+      """{"a":1}""".getBytes)
+    intercept[IllegalArgumentException](Pipeline.run(spark,
+      s"""[
+         | {"type":"eraser","connector":{"type":"local","path":"$target"}},
+         | {"type":"generator","count":1},
+         | {"type":"dedup","method":"nope"}
+         |]""".stripMargin))
+    assert(java.nio.file.Files.exists(target))
   }
 
   test("pipeline run: read mem → transform → validate splits ok/err") {
@@ -1171,7 +1219,7 @@ tab	end"""), Some(1.5), Some(true)),
         |  "authenticator_type":{"type":"basic","username":"u","password":"p"},
         |  "paginator_type":{"type":"offset","limit":2,"skip":0,"count":6}}""".stripMargin)
     val conn = sources.Connector.fromConfig(cfg, "json", Documents.DocOptions(),
-      transport = PipelineSpec.loopbackTransport)
+      transport = Http.full(PipelineSpec.loopbackTransport))
     assert(conn.isInstanceOf[CurlConnector])
     val rows = conn.load(spark).orderBy("id").collect()
     assert(rows.map(_.getAs[Long]("id")).toSeq == (0L until 6L))
@@ -1190,7 +1238,7 @@ tab	end"""), Some(1.5), Some(true)),
         |  "authenticator_type":{"type":"bearer","token":"tok"},
         |  "paginator_type":{"type":"cursor","limit":10,"entry_path":"/meta/next"}}""".stripMargin)
     val conn = sources.Connector.fromConfig(cfg, "json", Documents.DocOptions(),
-      transport = PipelineSpec.cursorTransport)
+      transport = Http.full(PipelineSpec.cursorTransport))
     val vs = conn.load(spark).select("v").as[Long].collect().sorted.toSeq
     assert(vs == Seq(1L, 2L, 3L))
   }
@@ -1202,7 +1250,7 @@ tab	end"""), Some(1.5), Some(true)),
         |  "authenticator_type":{"type":"basic","username":"u","password":"p"},
         |  "paginator_type":{"type":"offset","limit":2}}""".stripMargin)
     val conn = sources.Connector.fromConfig(cfg, "json", Documents.DocOptions(),
-      transport = PipelineSpec.loopbackTransport)
+      transport = Http.full(PipelineSpec.loopbackTransport))
     assert(conn.load(spark).count() == 6)
   }
 
@@ -1233,7 +1281,7 @@ tab	end"""), Some(1.5), Some(true)),
         |   "endpoint":"mongodb://db.test:27017","database":"corpus",
         |   "collection":"docs","batch_size":3}}
         |]""".stripMargin,
-      transport = graft.sources.Http.noTransport,
+      transport = Http.full(Http.noTransport),
       mongoClient = Some(new PipelineSpec.FakeMongo))
     assert(flow.ok.get.count() == 5)
     assert(PipelineSpec.mongoCalls.asScala.exists(_.startsWith("count:corpus/docs/")))
@@ -1265,7 +1313,7 @@ tab	end"""), Some(1.5), Some(true)),
         |   "authenticator_type":{"type":"basic","username":"u","password":"p"},
         |   "paginator_type":{"type":"offset","limit":2,"skip":0,"count":6}}}
         |]""".stripMargin,
-      transport = PipelineSpec.loopbackTransport)
+      transport = Http.full(PipelineSpec.loopbackTransport))
     assert(flow.ok.get.count() == 6)
   }
 
@@ -1430,7 +1478,7 @@ tab	end"""), Some(1.5), Some(true)),
         |   "paginator_type":{"type":"offset","limit":2,"count":6}}},
         | {"type":"transformer","actions":[{"field":"id2","pattern":"id * 2"}]}
         |]""".stripMargin,
-      transport = PipelineSpec.loopbackTransport)
+      transport = Http.full(PipelineSpec.loopbackTransport))
     val rows = flow.ok.get.orderBy("id").collect()
     assert(rows.map(_.getAs[Long]("id")).toSeq == (0L until 6L))
     assert(rows.map(_.getAs[Long]("id2")).toSeq == (0L until 6L).map(_ * 2))
@@ -1444,7 +1492,7 @@ tab	end"""), Some(1.5), Some(true)),
         |  "paginator_type":{"type":"offset","limit":2},
         |  "counter_type":{"type":"body","entry_path":"/total","path":"/items/count"}}""".stripMargin)
     val conn = sources.Connector.fromConfig(cfg, "json", Documents.DocOptions(),
-      transport = PipelineSpec.loopbackTransport)
+      transport = Http.full(PipelineSpec.loopbackTransport))
     val rows = conn.load(spark).orderBy("id").collect()
     assert(rows.map(_.getAs[Long]("id")).toSeq == (0L until 6L))
   }
@@ -1682,6 +1730,25 @@ tab	end"""), Some(1.5), Some(true)),
     val lower = conn.copy(counter =
       Some(sources.HeaderCounter("x-total-count", Some("/items/count"))))
     assert(lower.load(spark).count() == 6)
+  }
+
+  test("curl config: a header counter sees the response headers through Pipeline.run") {
+    PipelineSpec.headerCalls.clear()
+    val flow = Pipeline.run(spark,
+      """[
+        | {"type":"reader","connector":{"type":"curl",
+        |   "endpoint":"http://api.test","path":"/items",
+        |   "authenticator_type":{"type":"basic","username":"u","password":"p"},
+        |   "paginator_type":{"type":"offset","limit":2},
+        |   "counter_type":{"type":"header","name":"X-Total-Count","path":"/items/count"}}}
+        |]""".stripMargin,
+      transport = PipelineSpec.headerCountingTransport)
+    assert(flow.ok.get.orderBy("id").select("id").as[Long].collect().toSeq == (0L until 6L))
+    import scala.jdk.CollectionConverters._
+    val urls = PipelineSpec.headerCalls.asScala.toSeq
+    assert(urls.contains("http://api.test/items/count"), s"no count probe: $urls")
+    // the probed count planned the pages: no walk to the empty page after them
+    assert(!urls.exists(_.contains("skip=6")), s"walked past the count: $urls")
   }
 
   test("curl cache: second load serves every page with zero transport calls") {
@@ -2459,8 +2526,10 @@ object PipelineSpec {
 
   /** Header-counter API: the count path answers with an X-Total-Count
     * response header (and an empty body); item pages reuse the offset
-    * logic. */
+    * logic. Every requested URL is recorded in `headerCalls`. */
+  val headerCalls = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   val headerCountingTransport: Http.FullTransport = (url, headers) => {
+    headerCalls.add(url)
     require(headers.get("Authorization").contains("Basic dTpw"),
       s"unauthenticated call: $url")
     if (url.contains("/items/count"))
