@@ -384,23 +384,19 @@ object Dedup {
     // partitioned AND sorted on `b` — the key both hops of every sweep
     // join on (SMJ under the loop conf): the edge side is then
     // exchange-free and sort-free for the whole loop
-    val spark = pairs.sparkSession
-    val (edgesCache, nEdges) = CacheOps.persistMaterializedCounted(
-      pairs.select(col("a"), col("b"))
+    LoopSession.onEdges(pairs.select(col("a"), col("b"))
         .union(pairs.select(col("b").as("a"), col("a").as("b")))
-        .repartition(col("b")).sortWithinPartitions(col("b")))
-    try {
-      // Right-sized cloned loop session — the ONE shared definition (see
-      // LoopSession for the measured rationale)
-      val loopSession = LoopSession.forGraph(spark, nEdges)
-      // truncated WITH layout (ADVICE r16): the flat LogicalRDD keeps the
-      // cached hashpartitioning(b)+sort metadata, so the sweeps' edge side
-      // stays exchange-free and sort-free AND the upstream pair-discovery
-      // plan (e.g. a whole kNN pipeline) is not re-embedded into every
-      // sweep's logical plan
+        .repartition(col("b")).sortWithinPartitions(col("b"))) { g =>
+      // the loop runs in the right-sized cloned loop session (see
+      // LoopSession for the measured rationale); truncated WITH layout
+      // (ADVICE r16): the flat LogicalRDD keeps the cached
+      // hashpartitioning(b)+sort metadata, so the sweeps' edge side stays
+      // exchange-free and sort-free AND the upstream pair-discovery plan
+      // (e.g. a whole kNN pipeline) is not re-embedded into every sweep's
+      // logical plan
       val edges = org.apache.spark.sql.graftbridge.Bridge.rebind(
-        org.apache.spark.sql.graftbridge.Bridge.truncatePlanKeepLayout(edgesCache),
-        loopSession)
+        org.apache.spark.sql.graftbridge.Bridge.truncatePlanKeepLayout(g.frame),
+        g.loop)
       // hop: take the min label among neighbours AND self in ONE join + ONE
       // aggregation — the node's own label enters the contribution stream
       // as a self-loop row, so min(rep) covers self without a second join
@@ -428,7 +424,7 @@ object Dedup {
           }
           Iterator.single(c)
         }.fold(0L)(_ + _)) == 0L
-      LoopSession.sweep(spark,
+      LoopSession.sweep(g.caller,
         edges.groupBy(col("a").as("id"))
           .agg(least(min(col("b")), first(col("a"))).as("rep")),
         maxIterations - 1,
@@ -446,7 +442,7 @@ object Dedup {
             .select(hopped("id"), hopped("prev"), least(hopped("rep"),
               coalesce(col("rrep"), hopped("rep"))).as("rep")), unchanged)
       }._1
-    } finally edgesCache.unpersist(blocking = false)
+    }
   }
 
   // ---- exact repeated-substring removal -----------------------------------

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Iterative graph propagation (PageRank) in EXACT fixed-point integer
   * arithmetic — authority/centrality scoring over entity graphs (host link
@@ -45,7 +45,7 @@ object Graph {
     * The RETURNED frame is persisted (and forced): that lets this method
     * release the edge and node caches before returning instead of leaking
     * an edges-sized cached dataset per invocation — callers ranking many
-    * graphs in one session should `unpersist()` the result when done. */
+    * graphs in one session should unpersist the result when done. */
   /** `salts` > 1 splits each source's edges into salt sub-partitions
     * keyed by the DESTINATION hash — the skew lever for power-law hub
     * sources, whose edges the src-keyed layout otherwise pins to ONE
@@ -55,65 +55,10 @@ object Graph {
     * addition is order-independent, so the salted result is IDENTICAL
     * to the unsalted one (spec-pinned) — layout changes the plan, never
     * the answer. Default 1 = the plain src layout; 0 = AUTO-DETECT from
-    * the measured hub share ([[withDerivedSalts]]). */
+    * the measured hub share ([[derivedSalts]]). */
   def pageRank(edges: DataFrame, iterations: Int = 5,
-               scale: Long = 1000000L, salts: Int = 1): DataFrame = {
-    require(salts >= 0,
-      s"pageRank needs salts >= 1 (or 0 = auto-detect), got $salts")
-    if (salts == 0)
-      return withDerivedSalts(edges.select(col("src").cast("long"),
-        col("dst").cast("long")))((e, s) => pageRank(e, iterations, scale, s))
-    // the edge list feeds deg, the node set, AND every iteration's join —
-    // without a persist the (possibly join-shaped) upstream plan would
-    // re-execute 2 + iterations times; materialize it once (at cluster
-    // scale a bucketed edge table on `src` additionally makes the
-    // per-iteration join exchange-free on the edge side)
-    // persist HASH-PARTITIONED ON src (+ the dst-hash salt when salted):
-    // deg's aggregation and all 5 iterations' edge joins then reuse the
-    // layout exchange-free — the in-session analogue of the bucketed
-    // index (one up-front shuffle of the edge list buys 1+iterations
-    // exchange-free reads). The materializing count also sizes the loop
-    // session below.
-    val spark = edges.sparkSession
-    val base = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    // partitioned AND sorted on the per-iteration join keys: the loop
-    // session's broadcast-off conf plans every iteration join as a
-    // sort-merge join (threshold -1 also vetoes shuffled-hash), and the
-    // cached InMemoryTableScan preserves outputPartitioning AND
-    // outputOrdering — so the edge side of all `iterations` joins is
-    // exchange-free AND sort-free (without the pre-sort each iteration
-    // re-sorted the whole edge frame; profiled as the dominant loop cost)
-    val (e0, nEdges) = CacheOps.persistMaterializedCounted(
-      saltEdges(base, salts).repartition(saltKeys(salts): _*)
-        .sortWithinPartitions(saltKeys(salts): _*))
-    // The fixed-count rank loop runs in the shared right-sized cloned
-    // session like kCore/LPA/HITS (r13's A/B left it in the caller
-    // session; r14's re-run measured the move a ~35% win — AQE's
-    // per-exchange materialize-and-replan was the remaining cost, not
-    // the width). rebind, NOT truncate: the logical plan must stay
-    // identical so the shared CacheManager serves the src-partitioned
-    // persist exchange-free inside the loop.
-    val loop = LoopSession.forGraph(spark, nEdges, rowsPerPartition = 100000L)
-    val e = org.apache.spark.sql.graftbridge.Bridge.rebind(e0, loop)
-    // node set with outdeg embedded (null deg = sink), ONE shuffle: src
-    // rows carry 1, dst rows carry null, and sum() skipping nulls makes
-    // deg = outdeg for sources and null for pure sinks — exactly the
-    // distinct ∪ groupBy ∪ left-join result, minus two exchanges.
-    // Persisted because every iteration's rank rebuild references it —
-    // lazy, the final plan re-executes this edges-sized pass 1+iterations
-    // times (r12's measured 30× driver-bench regression).
-    val nd = e.select(col("src").as("id"), lit(1L).as("c"))
-      .unionByName(e.select(col("dst").as("id"), lit(null).cast("long").as("c")))
-      .groupBy(col("id")).agg(sum(col("c")).as("deg"))
-      .persist(MEMORY_AND_DISK)
-    LoopSession.handBack(spark, loopRanks(nd, ranks => {
-      // map-side: deg rides the rank row, so no per-iteration deg join
-      val contribs = ranks.filter(col("deg").isNotNull)
-        .select(col("id").as("csrc"), expr("rank div deg").as("contrib"))
-      saltedEdgeJoin(e, contribs, salts)
-        .select(col("dst"), col("contrib"))
-    }, iterations, scale), Seq(e0, nd))
-  }
+               scale: Long = 1000000L, salts: Int = 1): DataFrame =
+    rankLoop(edges, weighted = false, None, iterations, scale, salts)
 
   /** Personalized PageRank: the teleport mass lands ONLY on `seeds(id)`
     * instead of uniformly — random-walk-with-restart proximity to a seed
@@ -127,42 +72,102 @@ object Graph {
     * (they neither hold nor route mass). */
   def pageRankPersonalized(edges: DataFrame, seeds: DataFrame,
                            iterations: Int = 5,
-                           scale: Long = 1000000L): DataFrame = {
-    val spark = edges.sparkSession
-    val base = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    val (e0, nEdges) = CacheOps.persistMaterializedCounted(
-      base.repartition(col("src")).sortWithinPartitions(col("src")))
-    val loop = LoopSession.forGraph(spark, nEdges, rowsPerPartition = 100000L)
-    val e = org.apache.spark.sql.graftbridge.Bridge.rebind(e0, loop)
-    val sd = org.apache.spark.sql.graftbridge.Bridge.rebind(
-      seeds.select(col("id").cast("long")).distinct()
-        .withColumn("__seed", lit(1L)), loop)
-    val tp = (15L * scale) / 100L
-    // the pageRank node frame + a left join marking seeds: tp and rank₀
-    // become per-node columns the shared loop carries
-    val nd = e.select(col("src").as("id"), lit(1L).as("c"))
-      .unionByName(e.select(col("dst").as("id"), lit(null).cast("long").as("c")))
-      .groupBy(col("id")).agg(sum(col("c")).as("deg"))
-      .join(sd, Seq("id"), "left")
-      .select(col("id"), col("deg"),
-        when(col("__seed").isNotNull, lit(tp)).otherwise(lit(0L)).as("tp"))
-      .persist(MEMORY_AND_DISK)
-    LoopSession.handBack(spark, loopRanks(nd, ranks => {
-      val contribs = ranks.filter(col("deg").isNotNull)
-        .select(col("id").as("csrc"), expr("rank div deg").as("contrib"))
-      e.join(contribs, e("src") === col("csrc"))
-        .select(col("dst"), col("contrib"))
-    }, iterations, scale,
-      init = Some(when(col("tp") > 0L, lit(scale)).otherwise(lit(0L)))),
-      Seq(e0, nd))
+                           scale: Long = 1000000L): DataFrame =
+    rankLoop(edges, weighted = false, Some(seeds), iterations, scale, salts = 1)
+
+  /** Weighted PageRank over `edges(src, dst, w)` — interaction STRENGTH
+    * (order counts, link multiplicity) steers the walk: each edge carries
+    * contrib = (rank·w) div Σw(src), the per-edge integer division making
+    * the result exactly reproducible like [[pageRank]]. Overflow bound:
+    * rank·w < 2⁶³ (at scale 10⁶, weights up to ~9·10¹² — route heavier
+    * multiplicities through a pre-normalized weight). */
+  def pageRankWeighted(edges: DataFrame, iterations: Int = 5,
+                       scale: Long = 1000000L, salts: Int = 1): DataFrame =
+    rankLoop(edges, weighted = true, None, iterations, scale, salts)
+
+  /** The ONE rank path of the three operators above: each routed edge
+    * carries contrib = (rank·w) div Σw(src), with w = 1 for the
+    * unweighted ones — (rank·1) div Σ1 is rank div outdeg exactly, so
+    * their ranks are those of the per-node division. `seeds` personalize
+    * the teleport ([[pageRankPersonalized]]). */
+  private def rankLoop(edges: DataFrame, weighted: Boolean,
+                       seeds: Option[DataFrame], iterations: Int, scale: Long,
+                       salts: Int): DataFrame = {
+    require(salts >= 0,
+      s"pageRank needs salts >= 1 (or 0 = auto-detect), got $salts")
+    val base = edges.select(Seq(col("src").cast("long"), col("dst").cast("long")) ++
+      (if (weighted) Seq(col("w").cast("long")) else Nil): _*)
+    if (salts == 0) return LoopSession.holding { h =>
+      val (b0, n) = h.persistCounted(base)
+      rankLoop(b0, weighted, seeds, iterations, scale, derivedSalts(b0, n))
+    }
+    // the edge list feeds deg, the node set, AND every iteration's join —
+    // without a persist the (possibly join-shaped) upstream plan would
+    // re-execute 2 + iterations times; materialize it once (at cluster
+    // scale a bucketed edge table on `src` additionally makes the
+    // per-iteration join exchange-free on the edge side)
+    // persist HASH-PARTITIONED ON src (+ the dst-hash salt when salted):
+    // deg's aggregation and all 5 iterations' edge joins then reuse the
+    // layout exchange-free — the in-session analogue of the bucketed
+    // index (one up-front shuffle of the edge list buys 1+iterations
+    // exchange-free reads). The materializing count also sizes the loop
+    // session.
+    // Partitioned AND sorted on the per-iteration join keys: the loop
+    // session's broadcast-off conf plans every iteration join as a
+    // sort-merge join (threshold -1 also vetoes shuffled-hash), and the
+    // cached InMemoryTableScan preserves outputPartitioning AND
+    // outputOrdering — so the edge side of all `iterations` joins is
+    // exchange-free AND sort-free (without the pre-sort each iteration
+    // re-sorted the whole edge frame; profiled as the dominant loop cost)
+    LoopSession.onEdges(saltEdges(base, salts).repartition(saltKeys(salts): _*)
+        .sortWithinPartitions(saltKeys(salts): _*), rowsPerPartition = 100000L) { g =>
+      // The fixed-count rank loop runs in the shared right-sized cloned
+      // session like kCore/LPA/HITS (r13's A/B left it in the caller
+      // session; r14's re-run measured the move a ~35% win — AQE's
+      // per-exchange materialize-and-replan was the remaining cost, not
+      // the width). rebind, NOT truncate: the logical plan must stay
+      // identical so the shared CacheManager serves the src-partitioned
+      // persist exchange-free inside the loop. w = 1 is added AFTER the
+      // persist, so the unweighted edge cache is not widened.
+      val e = Bridge.rebind(g.frame, g.loop)
+      val ew = if (weighted) e else e.withColumn("w", lit(1L))
+      // node set with Σw embedded (null wsum = sink), ONE shuffle: src
+      // rows carry w, dst rows carry null, and sum() skipping nulls makes
+      // wsum the out-weight for sources and null for pure sinks — exactly
+      // the distinct ∪ groupBy ∪ left-join result, minus two exchanges.
+      // Persisted because every iteration's rank rebuild references it —
+      // lazy, the final plan re-executes this edges-sized pass 1+iterations
+      // times (r12's measured 30× driver-bench regression).
+      val nd = ew.select(col("src").as("id"), col("w").as("c"))
+        .unionByName(ew.select(col("dst").as("id"), lit(null).cast("long").as("c")))
+        .groupBy(col("id")).agg(sum(col("c")).as("wsum"))
+      // personalized: a left join marking seeds makes tp and rank₀
+      // per-node columns the shared loop carries
+      val tp = (15L * scale) / 100L
+      val held = g.persist(seeds.fold(nd)(s => nd.join(Bridge.rebind(
+          s.select(col("id").cast("long")).distinct().withColumn("__seed", lit(1L)),
+          g.loop), Seq("id"), "left")
+        .select(col("id"), col("wsum"),
+          when(col("__seed").isNotNull, lit(tp)).otherwise(lit(0L)).as("tp"))))
+      LoopSession.handBack(g.caller, loopRanks(held, ranks => {
+        // per-edge (rank·w) div wsum happens on the routed edge row: carry
+        // rank and wsum to the join, divide after multiplying by the edge w
+        val r = ranks.filter(col("wsum").isNotNull)
+          .select(col("id").as("csrc"), col("rank").as("crank"),
+            col("wsum").as("cwsum"))
+        saltedEdgeJoin(ew, r, salts)
+          .select(col("dst"), expr("(crank * w) div cwsum").as("contrib"))
+      }, iterations, scale,
+        init = seeds.map(_ => when(col("tp") > 0L, lit(scale)).otherwise(lit(0L)))))
+    }
   }
 
   /** AUTO-SKEW detection for the rank loops (VERDICT r14 #3): measure
     * the hottest source's share of the edge list and derive the `salts`
     * knob from it — a 100×-scale caller shouldn't have to know a hub
     * exists to avoid pinning its edges to one task. `salts = 0` on
-    * [[pageRank]]/[[pageRankWeighted]] routes here: the edge frame is
-    * persisted ONCE (so a join-shaped upstream doesn't execute twice),
+    * [[pageRank]]/[[pageRankWeighted]] persists the edge frame ONCE (so a
+    * join-shaped upstream doesn't execute twice) as `b0`, of `n` rows;
     * the max source-degree share comes from one keyed aggregation whose
     * driver side is a single row, and the measured salt count is handed
     * to the normal (layout-building) path, which re-reads the probe
@@ -174,20 +179,13 @@ object Graph {
     * listener-spec'd spread; share < 10% stays effectively unsalted —
     * AQE-sized tasks absorb it). Derived from data, deterministic, and
     * answer-invariant: salting changes the layout, never a rank. */
-  private def withDerivedSalts(base: DataFrame)
-                              (run: (DataFrame, Int) => DataFrame): DataFrame = {
-    val (b0, n) = CacheOps.persistMaterializedCounted(base)
-    try {
-      val s =
-        if (n == 0L) 1
-        else {
-          val maxDeg = b0.groupBy(col("src")).agg(count(lit(1)).as("d"))
-            .agg(max(col("d"))).head().getLong(0)
-          math.min(16, math.max(1, (20.0 * maxDeg / n).toInt))
-        }
-      run(b0, s)
-    } finally b0.unpersist(blocking = false)
-  }
+  private def derivedSalts(b0: DataFrame, n: Long): Int =
+    if (n == 0L) 1
+    else {
+      val maxDeg = b0.groupBy(col("src")).agg(count(lit(1)).as("d"))
+        .agg(max(col("d"))).head().getLong(0)
+      math.min(16, math.max(1, (20.0 * maxDeg / n).toInt))
+    }
 
   /** Append the dst-hash salt column for `salts` > 1 (a hub source's
     * edges then spread over `salts` layout partitions). */
@@ -312,8 +310,8 @@ object Graph {
     // e feeds the degree aggregation, the node universe AND the probe
     // side of the deg join: unpersisted, a join-shaped upstream edge
     // plan would execute three times inside the one build action
-    val e = checked.persist(MEMORY_AND_DISK)
-    try {
+    LoopSession.holding { h =>
+      val e = h.persist(checked)
       import org.apache.spark.sql.expressions.Window
       val deg = e.groupBy(col("src").as("id"))
         .agg(count(lit(1)).as("deg"), sum(col("w")).as("wsum"))
@@ -346,7 +344,7 @@ object Graph {
         nullL.as("wsum_dst"), nullL.as("cut_dst"))
       Bucketing.writeBucketed(real.unionByName(selfRows), table, buckets,
         keys = Seq("src"))
-    } finally e.unpersist(blocking = false)
+    }
   }
 
   /** [[pageRank]] over a [[buildGraphIndex]] table — identical integer
@@ -354,34 +352,31 @@ object Graph {
     * plan, never the answer). The edge side stays on disk bucket-
     * partitioned (never cached — the index IS the materialization); the
     * nodes-sized frames get the same persist/truncate loop hygiene. */
-  def pageRankFromIndex(spark: org.apache.spark.sql.SparkSession,
+  def pageRankFromIndex(spark: SparkSession,
                         table: String, iterations: Int = 5,
-                        scale: Long = 1000000L): DataFrame = {
-    val (ranks, nd) = indexRankPlan(spark, table, iterations, scale)
-    LoopSession.handBack(spark, ranks, Seq(nd))
-  }
+                        scale: Long = 1000000L): DataFrame =
+    LoopSession.holding(h =>
+      LoopSession.handBack(spark, indexRankPlan(h, spark, table, iterations, scale)))
 
   /** The composed (unmaterialized) loop plan over a [[buildGraphIndex]]
-    * table plus the persisted node frame backing it — the public
+    * table, its node frame persisted through `held` — the public
     * [[pageRankFromIndex]] materializes and releases; plan-shape audits
     * read the composed tree directly (a materialized result is just a
-    * cache scan and hides the loop). Callers of THIS method own the
-    * returned node frame's unpersist. */
-  private[graft] def indexRankPlan(spark: org.apache.spark.sql.SparkSession,
+    * cache scan and hides the loop). */
+  private[graft] def indexRankPlan(held: LoopSession.Scratch, spark: SparkSession,
                                    table: String, iterations: Int,
-                                   scale: Long): (DataFrame, DataFrame) = {
+                                   scale: Long): DataFrame = {
     val idx = Bucketing.readBucketed(spark, table)
     val e = idx.filter(!col("self"))
     // deg already rides the edge rows; the node frame only needs ids —
     // and the index's self rows ARE the node universe, so the init frame
     // is a filtered bucket scan, not an explode+distinct shuffle
-    val nd = idx.filter(col("self")).select(col("src").as("id"))
-      .persist(MEMORY_AND_DISK)
-    (loopRanks(nd, ranks => {
+    val nd = held.persist(idx.filter(col("self")).select(col("src").as("id")))
+    loopRanks(nd, ranks => {
       val r = ranks.select(col("id").as("csrc"), col("rank").as("crank"))
       e.join(r, e("src") === col("csrc"))
         .select(col("dst"), expr("crank div deg").as("contrib"))
-    }, iterations, scale), nd)
+    }, iterations, scale)
   }
 
   /** [[shortestPaths]] over a [[buildGraphIndex]] table — identical
@@ -393,35 +388,28 @@ object Graph {
     * distance frame moves, and a nightly depth map never re-shuffles the
     * graph. `runToFixpoint` runs the capped convergence loop of
     * [[shortestPathsFixpoint]] over the same on-disk edge side. */
-  def shortestPathsFromIndex(spark: org.apache.spark.sql.SparkSession,
+  def shortestPathsFromIndex(spark: SparkSession,
                              table: String, sources: DataFrame,
                              sweeps: Int = 8,
                              runToFixpoint: Boolean = false): DataFrame = {
     require(sweeps >= 1, s"shortestPaths needs sweeps >= 1, got $sweeps")
     // the fixed-sweep branch derives its own frames inside indexSsspPlan
-    if (runToFixpoint) {
-      val e = Bucketing.readBucketed(spark, table)
-        .select(col("src"), col("dst"), col("w"))
-      val d0 = sources.select(col("id").cast("long")).distinct()
-        .withColumn("dist", lit(0L))
-      ssspFixpointLoop(spark, e, d0, sweeps)._1
-    }
-    else LoopSession.handBack(spark, indexSsspPlan(spark, table, sources, sweeps), Nil)
+    if (runToFixpoint)
+      ssspFixpointLoop(spark, Bucketing.readBucketed(spark, table)
+        .select(col("src"), col("dst"), col("w")), ssspSeeds(sources), sweeps)._1
+    else LoopSession.handBack(spark, indexSsspPlan(spark, table, sources, sweeps))
   }
 
   /** The composed (unmaterialized) sweep loop over a [[buildGraphIndex]]
     * table — [[shortestPathsFromIndex]] materializes it; plan-shape
     * audits read the composed tree directly (the materialized result is
     * just a cache scan and hides the loop). */
-  private[graft] def indexSsspPlan(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def indexSsspPlan(spark: SparkSession,
                                    table: String, sources: DataFrame,
                                    sweeps: Int): DataFrame = {
     val e = Bucketing.readBucketed(spark, table)
       .select(col("src"), col("dst"), col("w"))
-    var d = sources.select(col("id").cast("long")).distinct()
-      .withColumn("dist", lit(0L))
-    for (_ <- 0 until sweeps) d = ssspSweep(e, d)
-    d
+    ssspSweeps(e, ssspSeeds(sources), sweeps)
   }
 
   /** The k-core of an undirected graph — iteratively peel nodes of
@@ -442,12 +430,9 @@ object Graph {
     * fixed bound keeps SQL-oracle parity (an unrolled replay of S
     * sweeps equals the fixpoint whenever the peel converges within S,
     * since extra sweeps are no-ops). */
-  def kCore(edges: DataFrame, k: Int, maxSweeps: Int = 20): DataFrame = {
-    val (e0, n) = CacheOps.persistMaterializedCounted(
-      edges.select(col("a").cast("long"), col("b").cast("long")))
-    try kCoreOn(e0, k, maxSweeps, n, releaseInput = true)
-    finally e0.unpersist(blocking = false)
-  }
+  def kCore(edges: DataFrame, k: Int, maxSweeps: Int = 20): DataFrame =
+    LoopSession.onEdges(edges.select(col("a").cast("long"), col("b").cast("long")))(
+      kCoreOn(_, k, maxSweeps))
 
   /** The (id, degree) frame of an undirected edge list — ONE definition
     * for the three consumers (kCore sweeps, triangleCounts, the k-core
@@ -457,37 +442,29 @@ object Graph {
     edges.select(explode(array(col("a"), col("b"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))
 
-  /** [[kCore]] over a CALLER-persisted canonical `(a: long, b: long)`
-    * edge frame — callers that already hold the edges cached (the gate
-    * derives its k from the same frame) avoid a second corpus-sized
-    * cache of identical data. The caller owns e0's release. */
-  private[graft] def kCoreOn(e0: DataFrame, k: Int, maxSweeps: Int,
-                             nEdges: Long = -1L,
-                             releaseInput: Boolean = false): DataFrame = {
+  /** [[kCore]] over the canonical `(a: long, b: long)` edge frame of an
+    * [[LoopSession.onEdges]] holder — callers that already hold the edges
+    * cached (the gate derives its k from the same frame) avoid a second
+    * corpus-sized cache of identical data. The peel releases the holder's
+    * edge cache once its own layout copy has materialized. */
+  private[graft] def kCoreOn(g: LoopSession.Edges, k: Int, maxSweeps: Int): DataFrame = {
     require(k >= 1, s"k-core needs k >= 1, got $k")
     require(maxSweeps >= 1, s"k-core needs maxSweeps >= 1, got $maxSweeps")
-    // Peel sweeps run in the shared right-sized loop session; callers
-    // that materialized e0 with a counted persist pass nEdges so the
-    // sizing doesn't pay a second (cache-scan) count job.
-    val spark = e0.sparkSession
-    val n = if (nEdges >= 0L) nEdges else e0.count()
-    val loopSession = LoopSession.forGraph(spark, n)
     // the peel's first semi-join keys the edge frame by `a` every sweep
     // (an SMJ under the loop conf): persist it partitioned AND sorted on
     // `a` once so that side is exchange-free and sort-free for the whole
     // peel; only the alive set and the already-filtered stream move
-    val eLoop = CacheOps.persistMaterialized(
-      LoopSession.bindInto(e0, loopSession)
-        .repartition(col("a")).sortWithinPartitions(col("a")))
-    // a caller with no later use of e0 hands its release here so the peel
-    // never holds TWO edge-sized caches (eLoop is built from e0's
-    // truncated plan — this release cannot recache it); VERDICT r16 #6
-    if (releaseInput) e0.unpersist(blocking = false)
+    val eLoop = g.persistMaterialized(LoopSession.bindInto(g.frame, g.loop)
+      .repartition(col("a")).sortWithinPartitions(col("a")))
+    // the peel never holds TWO edge-sized caches (eLoop is built from the
+    // edge frame's truncated plan — this release cannot recache it);
+    // VERDICT r16 #6
+    g.release(g.frame)
     // monotone peel: an unchanged alive count is an unchanged set
     val stable = LoopSession.repeats(_.count())
     // the initial state is every node at its full degree; sweep 0's
     // semi-joins against it would filter nothing, so it peels directly
-    try LoopSession.sweep(spark, degreeFrame(eLoop), maxSweeps) { (_, alive, i) =>
+    LoopSession.sweep(g.caller, degreeFrame(eLoop), maxSweeps) { (_, alive, i) =>
       val peeled =
         if (i == 0) alive
         else degreeFrame(eLoop
@@ -495,7 +472,6 @@ object Graph {
           .join(alive.select(col("id").as("b")), Seq("b"), "left_semi"))
       LoopSession.Sweep(peeled.filter(col("deg") >= k), stable)
     }._1
-    finally eLoop.unpersist(blocking = false)
   }
 
   /** HITS hubs & authorities (Kleinberg 1999) in EXACT fixed-point
@@ -529,52 +505,48 @@ object Graph {
            scale: Long = 1000000L): DataFrame = {
     require(iterations >= 1, s"hits needs iterations >= 1, got $iterations")
     require(scale >= 1L, s"hits needs scale >= 1, got $scale")
-    val (e0, nEdges) = CacheOps.persistMaterializedCounted(
-      edges.select(col("src").cast("long"), col("dst").cast("long")).distinct())
-    try {
-      val spark = edges.sparkSession
-      if (nEdges == 0) { // no graph: no scores (matches the oracle's joins)
-        import spark.implicits._
-        return Seq.empty[(Long, Long, Long)].toDF("id", "hub", "auth")
+    // HITS exchanges the edge frame in every half-iteration's join —
+    // size the width to that edge traffic (whole-stage codegen stays
+    // off at this scale, expression codegen too on small graphs:
+    // keeping whole-stage on was A/B-measured worse, per-sweep Janino
+    // compiles outweigh interpreting the joins)
+    LoopSession.onEdges(edges.select(col("src").cast("long"),
+        col("dst").cast("long")).distinct(), rowsPerPartition = 100000L) { g =>
+      if (g.rows == 0) noScores(g.caller) // no graph (matches the oracle's joins)
+      else {
+        val e = LoopSession.bindInto(g.frame, g.loop)
+        // the node universe feeds every iteration's rebuild — persist once
+        // (the r12 PageRank lesson: lazy, it re-runs an edges-sized
+        // distinct per reference); explode, not a union of two
+        // projections — the union scans the edge cache once per branch
+        val nodes = g.persistMaterialized(
+          e.select(explode(array(col("src"), col("dst"))).as("id")).distinct())
+        // the hub half pulls along out-edges — expressed as a src-keyed
+        // join over the REVERSED frame (a map over the same cache scan),
+        // so hitsLoop has one join shape both hits and hitsFromIndex share
+        // both orientation frames persist partitioned AND sorted on src —
+        // the key every half-iteration's sort-merge join uses, so the
+        // edge side of all 2*iterations pulls is exchange-free and
+        // sort-free (only the nodes-sized score frame moves per half)
+        val eFwd = g.persistMaterialized(
+          e.repartition(col("src")).sortWithinPartitions(col("src")))
+        val eRev = g.persistMaterialized(
+          e.select(col("dst").as("src"), col("src").as("dst"))
+            .repartition(col("src")).sortWithinPartitions(col("src")))
+        // the edge cache has no consumer past this point — nodes/eFwd/eRev
+        // are all materialized from its TRUNCATED plan (bindInto), so this
+        // release cannot recache them; holding it through the loop tripled
+        // the edge-sized cache residency for nothing (ADVICE r16)
+        g.release(g.frame)
+        hitsLoop(g.caller, eFwd, eRev, nodes, iterations, scale)
       }
-      // HITS exchanges the edge frame in every half-iteration's join —
-      // size the width to that edge traffic (whole-stage codegen stays
-      // off at this scale, expression codegen too on small graphs:
-      // keeping whole-stage on was A/B-measured worse, per-sweep Janino
-      // compiles outweigh interpreting the joins)
-      val loopSession = LoopSession.forGraph(spark, nEdges,
-        rowsPerPartition = 100000L)
-      val e = LoopSession.bindInto(e0, loopSession)
-      // the node universe feeds every iteration's rebuild — persist once
-      // (the r12 PageRank lesson: lazy, it re-runs an edges-sized
-      // distinct per reference); explode, not a union of two
-      // projections — the union scans the edge cache once per branch
-      val nodes = CacheOps.persistMaterialized(
-        e.select(explode(array(col("src"), col("dst"))).as("id")).distinct())
-      // the hub half pulls along out-edges — expressed as a src-keyed
-      // join over the REVERSED frame (a map over the same cache scan),
-      // so hitsLoop has one join shape both hits and hitsFromIndex share
-      // both orientation frames persist partitioned AND sorted on src —
-      // the key every half-iteration's sort-merge join uses, so the
-      // edge side of all 2*iterations pulls is exchange-free and
-      // sort-free (only the nodes-sized score frame moves per half)
-      val eFwd = CacheOps.persistMaterialized(
-        e.repartition(col("src")).sortWithinPartitions(col("src")))
-      val eRev = CacheOps.persistMaterialized(
-        e.select(col("dst").as("src"), col("src").as("dst"))
-          .repartition(col("src")).sortWithinPartitions(col("src")))
-      // e0 has no consumer past this point — nodes/eFwd/eRev are all
-      // materialized from its TRUNCATED plan (bindInto), so this release
-      // cannot recache them; holding e0 through the loop tripled the
-      // edge-sized cache residency for nothing (ADVICE r16)
-      e0.unpersist(blocking = false)
-      try hitsLoop(spark, eFwd, eRev, nodes, iterations, scale)
-      finally {
-        nodes.unpersist(blocking = false)
-        eFwd.unpersist(blocking = false)
-        eRev.unpersist(blocking = false)
-      }
-    } finally e0.unpersist(blocking = false)
+    }
+  }
+
+  /** The empty (id, hub, auth) result of a graph with no edges. */
+  private def noScores(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq.empty[(Long, Long, Long)].toDF("id", "hub", "auth")
   }
 
   /** [[hits]] over a [[buildGraphIndex]] table — identical dynamics (the
@@ -587,7 +559,7 @@ object Graph {
     * half over the reverse rows (each reverse row (s, c) IS the reversed
     * forward edge (c, s), so joining the fresh authority mass on its src
     * and aggregating on its dst is exactly the out-edge pull). */
-  def hitsFromIndex(spark: org.apache.spark.sql.SparkSession, table: String,
+  def hitsFromIndex(spark: SparkSession, table: String,
                     forward: Column, iterations: Int = 3,
                     scale: Long = 1000000L): DataFrame = {
     require(iterations >= 1, s"hits needs iterations >= 1, got $iterations")
@@ -596,23 +568,20 @@ object Graph {
     val real = idx.filter(!col("self"))
     val eFwd = real.filter(forward).select(col("src"), col("dst"))
     val eRev = real.filter(!forward).select(col("src"), col("dst"))
-    val (nodes, nNodes) = CacheOps.persistMaterializedCounted(
-      idx.filter(col("self")).select(col("src").as("id")))
-    try {
-      if (nNodes == 0) { // no graph: no scores (matches the oracle's joins)
-        import spark.implicits._
-        Seq.empty[(Long, Long, Long)].toDF("id", "hub", "auth")
-      }
+    LoopSession.holding { h =>
+      val (nodes, nNodes) =
+        h.persistCounted(idx.filter(col("self")).select(col("src").as("id")))
+      if (nNodes == 0) noScores(spark) // no graph (matches the oracle's joins)
       else hitsLoop(spark, eFwd, eRev, nodes, iterations, scale)
-    } finally nodes.unpersist(blocking = false)
+    }
   }
 
   /** The HITS mutual-reinforcement loop over pre-shaped halves: `eFwd`
     * serves the authority pull (join hub mass on src, aggregate on dst),
     * `eRev` — the REVERSED forward edges — serves the hub pull the same
     * way, so the edge side's join key is always src (the bucketed-index
-    * layout key). Caller owns `nodes`' release. */
-  private def hitsLoop(caller: org.apache.spark.sql.SparkSession,
+    * layout key). */
+  private def hitsLoop(caller: SparkSession,
                        eFwd: DataFrame, eRev: DataFrame, nodes: DataFrame,
                        iterations: Int, scale: Long): DataFrame = {
     // one half-iteration: pull `score` mass along the src-keyed `e`, into
@@ -646,17 +615,6 @@ object Graph {
         .select(col("id"), col("hub"), col("auth")), LoopSession.materialize)
     }._1
   }
-
-  /** Connected components over an undirected edge list `(a, b)` —
-    * returns (id, rep) with rep = the component's minimum member id.
-    * This is the graph-module surface for [[Dedup.representatives]]
-    * (min-id label flooding + pointer doubling, O(log diameter)
-    * sweeps, loop-width cloned session, per-sweep plan truncation) —
-    * one implementation, documented once, discoverable from both the
-    * dedup family that built it and the graph family it belongs to. */
-  def connectedComponents(edges: DataFrame, maxIterations: Int = 12): DataFrame =
-    Dedup.representatives(
-      edges.select(col("a"), col("b")), maxIterations)
 
   /** Synchronous label-propagation communities (Raghavan et al. 2007) —
     * the community detector completing the graph family next to
@@ -708,24 +666,19 @@ object Graph {
     // every sweep's sort-merge join uses — so the corpus-sized side of
     // all `sweeps` joins is exchange-free and sort-free; only the
     // nodes-sized label frame moves per sweep
-    val (adjC, nAdj) = CacheOps.persistMaterializedCounted(
-      edges.select(col("a").cast("long"), col("b").cast("long"))
+    LoopSession.onEdges(edges.select(col("a").cast("long"), col("b").cast("long"))
         .select(explode(array(
           struct(col("a").as("node"), col("b").as("nbr")),
           struct(col("b").as("node"), col("a").as("nbr")))).as("e"))
         .select(col("e.node").as("node"), col("e.nbr").as("nbr"))
-        .repartition(col("nbr")).sortWithinPartitions(col("nbr")))
-    val spark = edges.sparkSession
-    val loopSession = LoopSession.forGraph(spark, nAdj)
-    // truncated WITH layout (ADVICE r16): keeps the hashpartitioning(nbr)
-    // + sort metadata while flattening the upstream adjacency plan out of
-    // every sweep's logical tree
-    val adj = org.apache.spark.sql.graftbridge.Bridge.rebind(
-      org.apache.spark.sql.graftbridge.Bridge.truncatePlanKeepLayout(adjC),
-      loopSession)
-    try labelSweeps(spark, adj, "nbr", "node",
-      adj.select(col("node").as("id")).distinct(), sweeps, runToFixpoint)
-    finally adjC.unpersist(blocking = false)
+        .repartition(col("nbr")).sortWithinPartitions(col("nbr"))) { g =>
+      // truncated WITH layout (ADVICE r16): keeps the hashpartitioning(nbr)
+      // + sort metadata while flattening the upstream adjacency plan out of
+      // every sweep's logical tree
+      val adj = Bridge.rebind(Bridge.truncatePlanKeepLayout(g.frame), g.loop)
+      labelSweeps(g.caller, adj, "nbr", "node",
+        adj.select(col("node").as("id")).distinct(), sweeps, runToFixpoint)
+    }
   }
 
   /** The synchronous min-tie LPA loop over an adjacency `adj` whose
@@ -733,7 +686,7 @@ object Graph {
     * the inline operator's persisted (nbr, node) frame or an index's
     * (src, dst) rows; `nodes(id)` is the node universe. Returns the
     * (id, community) labels and the number of sweeps run. */
-  private def labelSweeps(caller: org.apache.spark.sql.SparkSession,
+  private def labelSweeps(caller: SparkSession,
                           adj: DataFrame, nbrCol: String, nodeCol: String,
                           nodes: DataFrame, sweeps: Int,
                           runToFixpoint: Boolean): (DataFrame, Int) =
@@ -798,23 +751,29 @@ object Graph {
                     sweeps: Int = 8,
                     runToFixpoint: Boolean = false): DataFrame = {
     require(sweeps >= 1, s"shortestPaths needs sweeps >= 1, got $sweeps")
-    if (runToFixpoint) return shortestPathsFixpoint(edges, sources, sweeps)._1
-    val spark = edges.sparkSession
-    val (e0, nEdges) = ssspEdges(edges)
-    val loop = LoopSession.forGraph(spark, nEdges, rowsPerPartition = 100000L)
-    val e = org.apache.spark.sql.graftbridge.Bridge.rebind(e0, loop)
-    var d = org.apache.spark.sql.graftbridge.Bridge.rebind(
-      sources.select(col("id").cast("long")).distinct()
-        .withColumn("dist", lit(0L)), loop)
-    for (_ <- 0 until sweeps) d = ssspSweep(e, d)
-    LoopSession.handBack(spark, d, Seq(e0))
+    if (runToFixpoint) shortestPathsFixpoint(edges, sources, sweeps)._1
+    else onSsspEdges(edges, sources)((caller, e, d0) =>
+      LoopSession.handBack(caller, ssspSweeps(e, d0, sweeps)))
   }
 
-  /** The persisted src-partitioned SSSP edge frame: weights defaulted /
-    * checked non-negative, plus the ZERO-WEIGHT SELF-LOOP per node that
-    * lets each sweep carry a node's own distance through ONE
-    * min-aggregation (no second reference to the distance frame). */
-  private def ssspEdges(edges: DataFrame): (DataFrame, Long) = {
+  /** `run(caller, e, d0)` over the persisted SSSP edge frame [[ssspEdges]]
+    * and the seed distances, both rebound into the loop session. */
+  private def onSsspEdges[A](edges: DataFrame, sources: DataFrame)
+                            (run: (SparkSession, DataFrame, DataFrame) => A): A =
+    LoopSession.onEdges(ssspEdges(edges), rowsPerPartition = 100000L) { g =>
+      run(g.caller, Bridge.rebind(g.frame, g.loop),
+        Bridge.rebind(ssspSeeds(sources), g.loop))
+    }
+
+  /** The (id, dist = 0) seed frame of the `sources(id)` nodes. */
+  private def ssspSeeds(sources: DataFrame): DataFrame =
+    sources.select(col("id").cast("long")).distinct().withColumn("dist", lit(0L))
+
+  /** The src-partitioned SSSP edge frame: weights defaulted / checked
+    * non-negative, plus the ZERO-WEIGHT SELF-LOOP per node that lets each
+    * sweep carry a node's own distance through ONE min-aggregation (no
+    * second reference to the distance frame). */
+  private def ssspEdges(edges: DataFrame): DataFrame = {
     val weighted =
       if (edges.columns.contains("w"))
         edges.select(col("src").cast("long"), col("dst").cast("long"),
@@ -830,12 +789,11 @@ object Graph {
             "(min-relaxation has no fixpoint under negative weights)"))
           .as("__ck"), col("w"))
       .filter(col("__ck").isNull).drop("__ck")
-    CacheOps.persistMaterializedCounted(
-      checked.unionByName(
-        checked.select(explode(array(col("src"), col("dst"))).as("src"))
-          .distinct()
-          .select(col("src"), col("src").as("dst"), lit(0L).as("w")))
-        .repartition(col("src")).sortWithinPartitions(col("src")))
+    checked.unionByName(
+      checked.select(explode(array(col("src"), col("dst"))).as("src"))
+        .distinct()
+        .select(col("src"), col("src").as("dst"), lit(0L).as("w")))
+      .repartition(col("src")).sortWithinPartitions(col("src"))
   }
 
   /** One min-relaxation: edges ⋈ distances keyed by src, min(dist+w) by
@@ -845,6 +803,10 @@ object Graph {
       .groupBy(col("dst"))
       .agg(min(col("dist") + col("w")).as("dist"))
       .select(col("dst").as("id"), col("dist"))
+
+  /** `sweeps` min-relaxations composed into one plan. */
+  private def ssspSweeps(e: DataFrame, d0: DataFrame, sweeps: Int): DataFrame =
+    (0 until sweeps).foldLeft(d0)((d, _) => ssspSweep(e, d))
 
   /** [[shortestPaths]] run to the TRUE fixpoint, capped at `maxSweeps` —
     * the production mode for graphs whose diameter may exceed a fixed
@@ -873,16 +835,7 @@ object Graph {
                                            maxSweeps: Int): (DataFrame, Int) = {
     require(maxSweeps >= 1,
       s"shortestPaths needs maxSweeps >= 1, got $maxSweeps")
-    val spark = edges.sparkSession
-    val (e0, nEdges) = ssspEdges(edges)
-    try {
-      val loop = LoopSession.forGraph(spark, nEdges, rowsPerPartition = 100000L)
-      val e = org.apache.spark.sql.graftbridge.Bridge.rebind(e0, loop)
-      val d0 = org.apache.spark.sql.graftbridge.Bridge.rebind(
-        sources.select(col("id").cast("long")).distinct()
-          .withColumn("dist", lit(0L)), loop)
-      ssspFixpointLoop(spark, e, d0, maxSweeps)
-    } finally e0.unpersist(blocking = false)
+    onSsspEdges(edges, sources)(ssspFixpointLoop(_, _, _, maxSweeps))
   }
 
   /** [[labelPropagation]] over a SYMMETRIZED [[buildGraphIndex]] table —
@@ -898,7 +851,7 @@ object Graph {
     * oracle. Input contract: the index must have been built over a
     * both-directions edge list (src→dst and dst→src both present);
     * `sweeps`/`runToFixpoint` as in [[labelPropagation]]. */
-  def labelPropagationFromIndex(spark: org.apache.spark.sql.SparkSession,
+  def labelPropagationFromIndex(spark: SparkSession,
                                 table: String, sweeps: Int = 4,
                                 runToFixpoint: Boolean = false): DataFrame = {
     require(sweeps >= 1, s"labelPropagation needs sweeps >= 1, got $sweeps")
@@ -914,7 +867,7 @@ object Graph {
     * (src, dst, w) edge frame, `d0` the (id, dist=0) seed frame; the
     * result is handed back rebound to `caller` with its persist intact
     * (the caller's unpersist matches the cache entry). */
-  private def ssspFixpointLoop(caller: org.apache.spark.sql.SparkSession,
+  private def ssspFixpointLoop(caller: SparkSession,
                                e: DataFrame, d0: DataFrame,
                                maxSweeps: Int): (DataFrame, Int) = {
     // the monotone-pair scan IS the materializing action: one job
@@ -929,7 +882,7 @@ object Graph {
   }
 
   /** Strongly connected components of a DIRECTED graph — the directed
-    * complement of [[connectedComponents]] (spider-trap / link-farm loop
+    * complement of [[Dedup.representatives]] (spider-trap / link-farm loop
     * detection in crawl graphs, mutual-trade cycles in interaction
     * graphs). Deterministic forward-backward min-label coloring (the
     * classic distributed FW-BW/coloring scheme — cf. Orzan 2004; the
@@ -984,12 +937,9 @@ object Graph {
     require(rounds >= 1, s"scc needs rounds >= 1, got $rounds")
     require(sweeps >= 1, s"scc needs sweeps >= 1, got $sweeps")
     require(trimPasses >= 0, s"scc needs trimPasses >= 0, got $trimPasses")
-    val spark = edges.sparkSession
-    val (e0, nE) = CacheOps.persistMaterializedCounted(
-      edges.select(col("src").cast("long"), col("dst").cast("long")).distinct())
-    try {
-      val loop = LoopSession.forGraph(spark, nE)
-      val e = LoopSession.bindInto(e0, loop)
+    LoopSession.onEdges(edges.select(col("src").cast("long"),
+        col("dst").cast("long")).distinct()) { g =>
+      val e = LoopSession.bindInto(g.frame, g.loop)
       // The node-sized frames a round composes into multi-reference joins
       // (colors, marks) persist AND truncate: untruncated, the LOGICAL
       // plans grow combinatorially across rounds and the ANALYZER — not
@@ -997,7 +947,7 @@ object Graph {
       // fixture). The composed sweeps between them reference their state
       // once per sweep and stay linear.
       def flat(scratch: LoopSession.Scratch, df: DataFrame): DataFrame =
-        org.apache.spark.sql.graftbridge.Bridge.truncatePlan(
+        Bridge.truncatePlan(
           scratch.persistMaterialized(df))
       // Edge-shaped round frames (ae, ce) instead persist HASH-PARTITIONED
       // AND SORTED on their sweep-join key, NOT truncated (truncation
@@ -1067,7 +1017,7 @@ object Graph {
         row.getLong(0) == 0L
       }
       // each round is trimPasses trim sweeps, then one coloring sweep
-      LoopSession.sweep(spark,
+      LoopSession.sweep(g.caller,
         e.select(explode(array(col("src"), col("dst"))).as("id")).distinct()
           .select(col("id"), lit(null).cast("long").as("scc")),
         rounds * (trimPasses + 1),
@@ -1081,7 +1031,7 @@ object Graph {
             .select(col("id"), coalesce(col("scc"), col("found")).as("scc")),
             signal)
       }._1
-    } finally e0.unpersist(blocking = false)
+    }
   }
 
   /** Newman-Girvan modularity of a community assignment over an
@@ -1107,52 +1057,41 @@ object Graph {
     * Scale shape: two keyed joins of the edge frame against the
     * nodes-sized label frame, two keyed aggregations, and a broadcast of
     * the 1-row global (m) — nothing collected, no windows. */
-  def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val caller = edges.sparkSession
-    val (e0c, nE) = CacheOps.persistMaterializedCounted(
-      edges.select(col("a").cast("long"), col("b").cast("long")))
-    val labC = labels.select(col("id").cast("long"),
-      col("community").cast("long")).persist(MEMORY_AND_DISK)
-    // fixed pipeline of keyed joins/aggs over nodes/edges-sized frames —
-    // run at the shared right-sized loop width like the sweep loops
-    // (same rationale as louvainStepWeighted)
-    val loopS = LoopSession.forGraph(caller, nE)
-    val e0 = org.apache.spark.sql.graftbridge.Bridge.rebind(e0c, loopS)
-    val lab = org.apache.spark.sql.graftbridge.Bridge.rebind(labC, loopS)
-    val m = e0.agg(count(lit(1)).as("m"))
-      .select(assert_true(col("m") < 1500000000L,
-          lit("modularity: 4*m^2 must fit a long — m < 1.5e9")).as("__ck"),
-        col("m"))
-      .filter(col("__ck").isNull).drop("__ck")
-    val dsum = degreeFrame(e0).join(lab, "id")
-      .groupBy(col("community"))
-      .agg(sum(col("deg")).as("deg_sum"), count(lit(1)).as("n_nodes"))
-    val intra = e0
-      .join(lab.select(col("id").as("a"), col("community").as("ca")), "a")
-      .join(lab.select(col("id").as("b"), col("community").as("cb")), "b")
-      .filter(col("ca") === col("cb"))
-      .groupBy(col("ca").as("community"))
-      .agg(count(lit(1)).as("internal_edges"))
-    LoopSession.handBack(caller,
-      dsum.join(intra, Seq("community"), "left")
-        .na.fill(0L, Seq("internal_edges"))
-        .crossJoin(broadcast(m))
-        .select(col("community"), col("n_nodes"), col("deg_sum"),
-          col("internal_edges"),
-          (lit(4L) * col("m") * col("internal_edges") -
-            col("deg_sum") * col("deg_sum")).as("q_num"),
-          ((lit(4L) * col("m") * col("internal_edges") -
-            col("deg_sum") * col("deg_sum")).cast("double") /
-            (lit(4L) * col("m") * col("m")).cast("double")).as("q")),
-      Seq(e0c, labC))
-  }
+  def modularity(edges: DataFrame, labels: DataFrame): DataFrame =
+    LoopSession.onEdges(edges.select(col("a").cast("long"), col("b").cast("long"))) { g =>
+      // fixed pipeline of keyed joins/aggs over nodes/edges-sized frames —
+      // run at the shared right-sized loop width like the sweep loops
+      // (same rationale as louvainStepWeighted)
+      val e0 = Bridge.rebind(g.frame, g.loop)
+      val lab = Bridge.rebind(g.persist(labels.select(col("id").cast("long"),
+        col("community").cast("long"))), g.loop)
+      val m = e0.agg(count(lit(1)).as("m"))
+        .select(assert_true(col("m") < 1500000000L,
+            lit("modularity: 4*m^2 must fit a long — m < 1.5e9")).as("__ck"),
+          col("m"))
+        .filter(col("__ck").isNull).drop("__ck")
+      val dsum = degreeFrame(e0).join(lab, "id")
+        .groupBy(col("community"))
+        .agg(sum(col("deg")).as("deg_sum"), count(lit(1)).as("n_nodes"))
+      val intra = e0
+        .join(lab.select(col("id").as("a"), col("community").as("ca")), "a")
+        .join(lab.select(col("id").as("b"), col("community").as("cb")), "b")
+        .filter(col("ca") === col("cb"))
+        .groupBy(col("ca").as("community"))
+        .agg(count(lit(1)).as("internal_edges"))
+      LoopSession.handBack(g.caller,
+        dsum.join(intra, Seq("community"), "left")
+          .na.fill(0L, Seq("internal_edges"))
+          .crossJoin(broadcast(m))
+          .select(col("community"), col("n_nodes"), col("deg_sum"),
+            col("internal_edges"),
+            (lit(4L) * col("m") * col("internal_edges") -
+              col("deg_sum") * col("deg_sum")).as("q_num"),
+            ((lit(4L) * col("m") * col("internal_edges") -
+              col("deg_sum") * col("deg_sum")).cast("double") /
+              (lit(4L) * col("m") * col("m")).cast("double")).as("q")))
+    }
 
-  /** Weighted PageRank over `edges(src, dst, w)` — interaction STRENGTH
-    * (order counts, link multiplicity) steers the walk: each edge carries
-    * contrib = (rank·w) div Σw(src), the per-edge integer division making
-    * the result exactly reproducible like [[pageRank]]. Overflow bound:
-    * rank·w < 2⁶³ (at scale 10⁶, weights up to ~9·10¹² — route heavier
-    * multiplicities through a pre-normalized weight). */
   /** Per-node triangle participation counts over an undirected graph —
     * the standard cohesion / clustering signal (community density in a
     * similarity graph, link-farm detection in a host graph). Input:
@@ -1172,11 +1111,9 @@ object Graph {
     * join on (y, z)); nothing is collected, no windows, no cartesians.
     * The edge frame feeds four plan branches, so it is persisted and
     * released after the (triangle-sized) result materializes. */
-  def triangleCounts(edges: DataFrame): DataFrame = {
-    val e0 = CacheOps.persistMaterialized(
-      edges.select(col("a").cast("long"), col("b").cast("long")))
-    try {
-      val deg = degreeFrame(e0)
+  def triangleCounts(edges: DataFrame): DataFrame =
+    LoopSession.onEdges(edges.select(col("a").cast("long"), col("b").cast("long"))) { g =>
+      val deg = degreeFrame(g.frame)
       // total-order key packing (deg, id) into one long: orientation and
       // every downstream comparison become plain integer < on kk.
       // The packing contract (ids in [0, 2^40), degrees < 2^23) is
@@ -1191,28 +1128,25 @@ object Graph {
               " < 2^23 (remap hashed/negative ids first)")).as("__ck"),
           (col("deg") * lit(1099511627776L) + col("id")).as("kk"))
         .filter(col("__ck").isNull).drop("__ck")
-      val ek = e0
+      val ek = g.frame
         .join(kmap.select(col("id").as("a"), col("kk").as("ka")), "a")
         .join(kmap.select(col("id").as("b"), col("kk").as("kb")), "b")
         .select(least(col("ka"), col("kb")).as("ks"),
           greatest(col("ka"), col("kb")).as("kd"))
       // oriented edges feed the wedge join twice + the closing probe
-      val ekp = CacheOps.persistMaterialized(ek)
-      try {
-        val wedges = ekp.select(col("ks").as("x"), col("kd").as("y"))
-          .join(ekp.select(col("ks").as("x"), col("kd").as("z")), "x")
-          .filter(col("y") < col("z"))
-        val tri = wedges.join(
-          ekp.select(col("ks").as("y"), col("kd").as("z")), Seq("y", "z"))
-        // DETACHED: the ekp release right below would otherwise recache
-        // (invalidate) the result and re-run the wedge join on first read
-        CacheOps.persistMaterializedDetached(
-          tri.select(explode(array(col("x"), col("y"), col("z"))).as("kk"))
-            .groupBy(col("kk")).agg(count(lit(1)).as("tri"))
-            .select(pmod(col("kk"), lit(1099511627776L)).as("id"), col("tri")))
-      } finally ekp.unpersist(blocking = false)
-    } finally e0.unpersist(blocking = false)
-  }
+      val ekp = g.persistMaterialized(ek)
+      val wedges = ekp.select(col("ks").as("x"), col("kd").as("y"))
+        .join(ekp.select(col("ks").as("x"), col("kd").as("z")), "x")
+        .filter(col("y") < col("z"))
+      val tri = wedges.join(
+        ekp.select(col("ks").as("y"), col("kd").as("z")), Seq("y", "z"))
+      // DETACHED: the ekp release on return would otherwise recache
+      // (invalidate) the result and re-run the wedge join on first read
+      CacheOps.persistMaterializedDetached(
+        tri.select(explode(array(col("x"), col("y"), col("z"))).as("kk"))
+          .groupBy(col("kk")).agg(count(lit(1)).as("tri"))
+          .select(pmod(col("kk"), lit(1099511627776L)).as("id"), col("tri")))
+    }
 
   /** Per-node local clustering coefficient (Watts & Strogatz 1998) —
     * [[triangleCounts]] normalized by the possible wedge count:
@@ -1224,22 +1158,17 @@ object Graph {
     * deg·(deg−1), cc) — exact integer rational plus ONE IEEE division,
     * so any engine replays the doubles bit-for-bit. Scale shape: the
     * triangle count's wedge join plus one nodes-sized keyed join. */
-  def clusteringCoefficients(edges: DataFrame): DataFrame = {
-    val e0 = CacheOps.persistMaterialized(
-      edges.select(col("a").cast("long"), col("b").cast("long")))
-    try {
-      val tri = triangleCounts(e0) // persisted+materialized by contract
-      try {
-        CacheOps.persistMaterializedDetached(
-          tri.join(degreeFrame(e0), "id")
-            .select(col("id"), col("tri"), col("deg"),
-              (lit(2L) * col("tri")).as("cc_num"),
-              (col("deg") * (col("deg") - 1L)).as("cc_den"),
-              ((lit(2L) * col("tri")).cast("double") /
-                (col("deg") * (col("deg") - 1L)).cast("double")).as("cc")))
-      } finally tri.unpersist(blocking = false)
-    } finally e0.unpersist(blocking = false)
-  }
+  def clusteringCoefficients(edges: DataFrame): DataFrame =
+    LoopSession.onEdges(edges.select(col("a").cast("long"), col("b").cast("long"))) { g =>
+      val tri = g.hold(triangleCounts(g.frame)) // persisted+materialized by contract
+      CacheOps.persistMaterializedDetached(
+        tri.join(degreeFrame(g.frame), "id")
+          .select(col("id"), col("tri"), col("deg"),
+            (lit(2L) * col("tri")).as("cc_num"),
+            (col("deg") * (col("deg") - 1L)).as("cc_den"),
+            ((lit(2L) * col("tri")).cast("double") /
+              (col("deg") * (col("deg") - 1L)).cast("double")).as("cc")))
+    }
 
   /** Degree assortativity coefficient (Newman 2002) — the Pearson
     * correlation of endpoint degrees over the SYMMETRIZED edge list:
@@ -1254,32 +1183,27 @@ object Graph {
     * curation graph; beyond it, pre-scale degrees. Scale shape: two
     * keyed joins of the edge frame against the nodes-sized degree frame
     * plus one total aggregate — nothing collected. */
-  def assortativity(edges: DataFrame): DataFrame = {
-    val e0 = CacheOps.persistMaterialized(
-      edges.select(col("a").cast("long"), col("b").cast("long")))
-    try {
-      val deg = CacheOps.persistMaterialized(degreeFrame(e0))
-      try {
-        val sym = e0.select(explode(array(
-            struct(col("a").as("a"), col("b").as("b")),
-            struct(col("b").as("a"), col("a").as("b")))).as("e"))
-          .select(col("e.a").as("a"), col("e.b").as("b"))
-        val j = sym
-          .join(deg.select(col("id").as("a"), col("deg").as("dx")), "a")
-          .join(deg.select(col("id").as("b"), col("deg").as("dy")), "b")
-        val num = col("n") * col("sxy") - col("sx") * col("sx")
-        val den = col("n") * col("sxx") - col("sx") * col("sx")
-        CacheOps.persistMaterializedDetached(
-          j.agg(count(lit(1)).as("n"), sum(col("dx")).as("sx"),
-              sum(col("dx") * col("dx")).as("sxx"),
-              sum(col("dx") * col("dy")).as("sxy"))
-            .select(col("n"), col("sx"), col("sxx"), col("sxy"),
-              num.as("r_num"), den.as("r_den"),
-              when(den =!= 0L, num.cast("double") / den.cast("double"))
-                .as("r")))
-      } finally deg.unpersist(blocking = false)
-    } finally e0.unpersist(blocking = false)
-  }
+  def assortativity(edges: DataFrame): DataFrame =
+    LoopSession.onEdges(edges.select(col("a").cast("long"), col("b").cast("long"))) { g =>
+      val deg = g.persistMaterialized(degreeFrame(g.frame))
+      val sym = g.frame.select(explode(array(
+          struct(col("a").as("a"), col("b").as("b")),
+          struct(col("b").as("a"), col("a").as("b")))).as("e"))
+        .select(col("e.a").as("a"), col("e.b").as("b"))
+      val j = sym
+        .join(deg.select(col("id").as("a"), col("deg").as("dx")), "a")
+        .join(deg.select(col("id").as("b"), col("deg").as("dy")), "b")
+      val num = col("n") * col("sxy") - col("sx") * col("sx")
+      val den = col("n") * col("sxx") - col("sx") * col("sx")
+      CacheOps.persistMaterializedDetached(
+        j.agg(count(lit(1)).as("n"), sum(col("dx")).as("sx"),
+            sum(col("dx") * col("dx")).as("sxx"),
+            sum(col("dx") * col("dy")).as("sxy"))
+          .select(col("n"), col("sx"), col("sxx"), col("sxy"),
+            num.as("r_num"), den.as("r_den"),
+            when(den =!= 0L, num.cast("double") / den.cast("double"))
+              .as("r")))
+    }
 
   /** Deterministic random-walk corpus over a directed graph — the
     * DeepWalk / node2vec-style training-data generator (Perozzi et al.
@@ -1330,7 +1254,6 @@ object Graph {
     require(steps >= 1, s"randomWalks needs steps >= 1, got $steps")
     require(walksPerNode >= 1,
       s"randomWalks needs walksPerNode >= 1, got $walksPerNode")
-    val spark = edges.sparkSession
     import org.apache.spark.sql.expressions.Window
     // WEIGHTED edges (a `w` column, positive longs — enforced: a zero
     // weight would be an edge that exists but can never be taken) draw
@@ -1341,19 +1264,7 @@ object Graph {
     // (see the scaladoc): an exact (src, bucket) equi-join with ≤ 2
     // expected candidate rows, then interval containment.
     val weighted = edges.columns.contains("w")
-    val base =
-      if (!weighted)
-        edges.select(col("src").cast("long"), col("dst").cast("long"))
-          .distinct().withColumn("w", lit(1L))
-      else {
-        val checked = assert_true(col("w") > 0L,
-          lit("randomWalks: edge weights must be positive " +
-            "(a zero/negative weight has no draw interval)"))
-        // parallel edges combine their weights (one interval per pair)
-        edges.select(col("src").cast("long"), col("dst").cast("long"),
-            when(checked.isNull, col("w").cast("long")).as("w"))
-          .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-      }
+    val base = walkEdges(edges, "randomWalks")
     val wSrc = Window.partitionBy(col("src")).orderBy(col("dst"))
     // per-src totals share wSrc's partitioning and ordering (unbounded
     // frame) so all four ride ONE Window operator — a separate unordered
@@ -1363,70 +1274,92 @@ object Graph {
     val rk0 = base.select(col("src"), col("dst"),
       (sum(col("w")).over(wSrc) - col("w")).as("cw_lo"),
       sum(col("w")).over(wSrc).as("cw_hi"),
-      sum(col("w")).over(wAll).as("deg_src"),
+      sum(col("w")).over(wAll).as("wsum"),
       count(lit(1)).over(wAll).as("n_src"))
     // draw-mass AND cutpoint width of the DESTINATION ride each edge row
     // so the walk state always carries its current node's draw modulus
     // and bucket width (the next target is then map-side); null marks a
     // sink. Unweighted, cw_lo IS the edge's 0-based rank (unit widths),
     // so the hop stays an exact two-key equi-join with no expansion.
+    // The column names are the graph index's, so both builders share
+    // one walk sweep.
     val degs = base.groupBy(col("src").as("dst"))
-      .agg(sum(col("w")).as("deg_dst"), count(lit(1)).as("n_dst"))
-      .select(col("dst"), col("deg_dst"),
-        expr("(deg_dst + n_dst - 1) div n_dst").as("cut_dst"))
-    val (e0, nE) = CacheOps.persistMaterializedCounted(
-      rk0.join(degs, Seq("dst"), "left")
+      .agg(sum(col("w")).as("wsum_dst"), count(lit(1)).as("n_dst"))
+      .select(col("dst"), col("wsum_dst"),
+        expr("(wsum_dst + n_dst - 1) div n_dst").as("cut_dst"))
+    LoopSession.onEdges(rk0.join(degs, Seq("dst"), "left")
         .select(col("src"), col("dst"), col("cw_lo"), col("cw_hi"),
-          col("deg_src"),
-          expr("(deg_src + n_src - 1) div n_src").as("cut_src"),
-          col("deg_dst"), col("cut_dst"))
+          col("wsum"), expr("(wsum + n_src - 1) div n_src").as("cut"),
+          col("wsum_dst"), col("cut_dst"))
         .repartition(col("src"))
-        .sortWithinPartitions(col("src"), col("cw_lo")))
-    val loop = LoopSession.forGraph(spark, nE, rowsPerPartition = 100000L)
-    val e = org.apache.spark.sql.graftbridge.Bridge.rebind(e0, loop)
-    // Cutpoint expansion (weighted only): one row per (edge, bucket its
-    // interval intersects) — ≤ 2|E| rows — co-partitioned on the hop
-    // join key. Unit weights never build it (cw_lo is already the rank).
-    val ebOpt =
-      if (!weighted) None
-      else Some(CacheOps.persistMaterialized(
-        e.withColumn("bkt", explode(expr(
-            "sequence(cw_lo div cut_src, (cw_hi - 1) div cut_src)")))
-          .repartition(col("src"), col("bkt"))
-          .sortWithinPartitions(col("src"), col("bkt"))))
-    try LoopSession.sweep(spark,
-      e.select(col("src").as("start"), col("deg_src").as("deg"),
-          col("cut_src").as("cut"))
-        .distinct()
-        .withColumn("wk", explode(array((0 until walksPerNode)
+        .sortWithinPartitions(col("src"), col("cw_lo")),
+      rowsPerPartition = 100000L) { g =>
+      val e = Bridge.rebind(g.frame, g.loop)
+      val hop: DataFrame => DataFrame =
+        if (!weighted)
+          // unit widths: the drawn x IS the target cw_lo — O(1) match
+          draw => e.join(draw.withColumnRenamed("x", "cw_lo").drop("cut"),
+            Seq("src", "cw_lo"))
+        else
+          // Cutpoint expansion: one row per (edge, bucket its interval
+          // intersects) — ≤ 2|E| rows — co-partitioned on the hop join
+          // key. Unit weights never build it (cw_lo is already the rank).
+          cutpointHop(g.persistMaterialized(
+            e.withColumn("bkt", explode(expr(
+                "sequence(cw_lo div cut, (cw_hi - 1) div cut)")))
+              .repartition(col("src"), col("bkt"))
+              .sortWithinPartitions(col("src"), col("bkt"))))
+      walkSweep(g.caller, e.select(col("src").as("start"), col("wsum").as("deg"),
+        col("cut")).distinct(), steps, walksPerNode, seed)(hop)
+    }
+  }
+
+  /** The (src, dst, w) edges a walk draws from: w = 1 without a `w`
+    * column, else the positive weights (checked: a zero/negative weight
+    * has no draw interval), parallel edges combined into one interval. */
+  private def walkEdges(edges: DataFrame, op: String): DataFrame =
+    if (!edges.columns.contains("w"))
+      edges.select(col("src").cast("long"), col("dst").cast("long"))
+        .distinct().withColumn("w", lit(1L))
+    else {
+      val checked = assert_true(col("w") > 0L,
+        lit(s"$op: edge weights must be positive " +
+          "(a zero/negative weight has no draw interval)"))
+      edges.select(col("src").cast("long"), col("dst").cast("long"),
+          when(checked.isNull, col("w").cast("long")).as("w"))
+        .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
+    }
+
+  /** The walk sweep of both first-order builders ([[randomWalks]],
+    * [[randomWalksFromIndex]]): `starts(start, deg, cut)` seeds
+    * `walksPerNode` walks per start node, and each step draws x =
+    * H(seed, start, walk, step) mod deg for every walk not at a sink;
+    * `hop` maps the (start, wk, src, x, cut) draws to the taken edges,
+    * whose (dst, wsum_dst, cut_dst) are the next state. */
+  private def walkSweep(caller: SparkSession, starts: DataFrame, steps: Int,
+                        walksPerNode: Int, seed: String)
+                       (hop: DataFrame => DataFrame): DataFrame =
+    LoopSession.sweep(caller,
+      starts.withColumn("wk", explode(array((0 until walksPerNode)
           .map(i => lit(i.toLong)): _*)))
         .select(col("start"), col("wk"), col("start").as("node"), col("deg"),
           col("cut")),
       steps, LoopSession.Release.KeepAll, walkCorpus) { (_, state, i) =>
-      val draw = state.filter(col("deg").isNotNull)
+      val draw = state.filter(col("deg") > 0L)
         .select(col("start"), col("wk"), col("node").as("src"),
           pmod(walkDraw(seed, i + 1), col("deg")).as("x"), col("cut"))
-      val hop =
-        if (!weighted)
-          // unit widths: the drawn x IS the target cw_lo — O(1) match
-          e.join(draw.withColumnRenamed("x", "cw_lo").drop("cut"),
-            Seq("src", "cw_lo"))
-        else
-          // cutpoint lookup: equi-join on the drawn bucket, then match
-          // the (expected ≤ 2) candidate intervals
-          ebOpt.get.join(
-              draw.withColumn("bkt", expr("x div cut")).drop("cut"),
-              Seq("src", "bkt"))
-            .filter(col("x") >= col("cw_lo") && col("x") < col("cw_hi"))
-      LoopSession.Sweep(hop.select(col("start"), col("wk"),
-        col("dst").as("node"), col("deg_dst").as("deg"),
+      LoopSession.Sweep(hop(draw).select(col("start"), col("wk"),
+        col("dst").as("node"), col("wsum_dst").as("deg"),
         col("cut_dst").as("cut")), LoopSession.materialize)
     }._1
-    finally {
-      e0.unpersist(blocking = false)
-      ebOpt.foreach(_.unpersist(blocking = false))
-    }
-  }
+
+  /** The cutpoint lookup over an expansion `eb(src, bkt, …)`: equi-join
+    * on the drawn bucket, then match the (expected ≤ 2) candidate
+    * intervals. */
+  private def cutpointHop(eb: DataFrame)(draw: DataFrame): DataFrame =
+    eb.join(draw.withColumn("bkt", expr("x div cut")).drop("cut"),
+        Seq("src", "bkt"))
+      .filter(col("x") >= col("cw_lo") && col("x") < col("cw_hi"))
 
   /** H(seed, start, walk, step) as a portable 60-bit integer (15 md5 hex
     * chars — the shared sampler width; a 32-bit draw would silently cap
@@ -1459,7 +1392,7 @@ object Graph {
     * bucket per edge). Zero-weight edges own empty draw intervals and
     * are filtered from the expansion; a node whose out-weights are all
     * zero is a walk sink. */
-  def randomWalksFromIndex(spark: org.apache.spark.sql.SparkSession,
+  def randomWalksFromIndex(spark: SparkSession,
                            table: String, steps: Int, walksPerNode: Int = 1,
                            seed: String = "graft"): DataFrame = {
     require(steps >= 1, s"randomWalks needs steps >= 1, got $steps")
@@ -1473,31 +1406,14 @@ object Graph {
     // session so the caller's conf never mutates (measured: the default
     // inserts `Exchange hashpartitioning(src, bkt)` over the bucketed
     // scan; relaxed, the edge side carries no exchange)
-    val walkSession = org.apache.spark.sql.graftbridge.Bridge.sessionWithConf(
+    val walkSession = Bridge.sessionWithConf(
       spark, Map("spark.sql.requireAllClusterKeysForCoPartition" -> "false"))
     val idx = Bucketing.readBucketed(walkSession, table)
-    val eb = indexWalkExpansion(idx)
     // starts = the self rows with drawable out-mass — a filtered bucket
     // scan, not an explode+distinct shuffle
-    LoopSession.sweep(spark,
-      idx.filter(col("self") && col("wsum").isNotNull && col("wsum") > 0L)
-        .select(col("src").as("start"), col("wsum").as("deg"), col("cut"))
-        .withColumn("wk", explode(array((0 until walksPerNode)
-          .map(i => lit(i.toLong)): _*)))
-        .select(col("start"), col("wk"), col("start").as("node"), col("deg"),
-          col("cut")),
-      steps, LoopSession.Release.KeepAll, walkCorpus) { (_, state, i) =>
-      val draw = state.filter(col("deg").isNotNull && col("deg") > 0L)
-        .select(col("start"), col("wk"), col("node").as("src"),
-          pmod(walkDraw(seed, i + 1), col("deg")).as("x"), col("cut"))
-      val hop = eb.join(
-          draw.withColumn("bkt", expr("x div cut")).drop("cut"),
-          Seq("src", "bkt"))
-        .filter(col("x") >= col("cw_lo") && col("x") < col("cw_hi"))
-      LoopSession.Sweep(hop.select(col("start"), col("wk"),
-        col("dst").as("node"), col("wsum_dst").as("deg"),
-        col("cut_dst").as("cut")), LoopSession.materialize)
-    }._1
+    walkSweep(spark, idx.filter(col("self") && col("wsum") > 0L)
+        .select(col("src").as("start"), col("wsum").as("deg"), col("cut")),
+      steps, walksPerNode, seed)(cutpointHop(indexWalkExpansion(idx)))
   }
 
   /** The cutpoint expansion of a [[buildGraphIndex]] scan — map-side
@@ -1544,86 +1460,69 @@ object Graph {
     require(biasReturn >= 1L && biasNeighbor >= 1L && biasFar >= 1L,
       "node2vecWalks biases must be positive integers (clear the " +
         "rational (p, q) of denominators)")
-    val spark = edges.sparkSession
     import org.apache.spark.sql.expressions.Window
-    val weighted = edges.columns.contains("w")
-    val base =
-      if (!weighted)
-        edges.select(col("src").cast("long"), col("dst").cast("long"))
-          .distinct().withColumn("w", lit(1L))
-      else {
-        val checked = assert_true(col("w") > 0L,
-          lit("node2vecWalks: edge weights must be positive"))
-        edges.select(col("src").cast("long"), col("dst").cast("long"),
-            when(checked.isNull, col("w").cast("long")).as("w"))
-          .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-      }
-    val (e0, nE) = CacheOps.persistMaterializedCounted(
-      base.repartition(col("src")).sortWithinPartitions(col("src")))
     // Unlike the first-order walks, the per-step traffic here is
     // Σ outdeg(cur) — CORPUS-sized, not walks-sized — so the loop keeps
     // whole-stage and expression codegen ON (codegenCutoff = 0: the r16
     // shard bench read the interpreted out-list windows as the dominant
     // cost) and sizes its width to the edge frame like HITS.
-    val loop = LoopSession.forGraph(spark, nE, rowsPerPartition = 100000L,
-      codegenCutoff = 0L)
-    val e = org.apache.spark.sql.graftbridge.Bridge.rebind(e0, loop)
-    // the (prev, dst) membership side is STEP-INVARIANT: shape and
-    // hash-partition it once on the probe keys, so each step's bias
-    // left-join reads this side exchange-free and only the candidate
-    // stream shuffles to match (guide §2.4 applied to the one edge-sized
-    // join the steps repeat)
-    val nb = CacheOps.persistMaterialized(
-      e.select(col("src").as("prev"), col("dst"), lit(1L).as("isn"))
-        .repartition(col("prev"), col("dst"))
-        .sortWithinPartitions(col("prev"), col("dst")))
-    try LoopSession.sweep(spark,
-      e.select(col("src").as("start")).distinct()
-        .withColumn("wk", explode(array((0 until walksPerNode)
-          .map(i => lit(i.toLong)): _*)))
-        .select(col("start"), col("wk"), col("start").as("prev"),
-          col("start").as("node")),
-      steps, LoopSession.Release.KeepAll, walkCorpus) { (_, state, i) =>
-      // the walk's out-list with the second-order bias applied: return
-      // beats neighbor beats far (dst = prev is never an edge of
-      // (prev, dst) since the graph has no self-loops). The 60-bit draw
-      // hash is computed HERE, on the walks-sized state — one md5 per
-      // walk per step, carried through the join — not on the
-      // Σ outdeg(cur)-sized candidate stream (the r16 shard bench read
-      // the per-candidate md5/conv pair as a top cost).
-      val st = state.withColumn("hh", walkDraw(seed, i + 1))
-      val cand = st.join(e, st("node") === e("src"))
-        .select(col("start"), col("wk"), col("prev"), col("node"),
-          col("hh"), col("dst"), col("w"))
-        .join(nb, Seq("prev", "dst"), "left")
-        .select(col("start"), col("wk"), col("node"), col("hh"),
-          col("dst"),
-          (when(col("dst") === col("prev"), lit(biasReturn))
-            .when(col("isn").isNotNull, lit(biasNeighbor))
-            .otherwise(lit(biasFar)) * col("w")).as("aw"))
-      val wWalk = Window.partitionBy(col("start"), col("wk"))
-        .orderBy(col("dst"))
-      // the partition total shares wWalk's partitioning AND ordering (an
-      // unbounded frame over the same sorted run), so Catalyst plans ONE
-      // Window operator — a separate unordered spec costs a second
-      // Sort+Window pass over the corpus-sized candidate stream per step
-      // (VERDICT r16 #5). Sums are longs: frame-order exact.
-      val wTot = wWalk.rowsBetween(Window.unboundedPreceding,
-        Window.unboundedFollowing)
-      val cum = cand.select(col("start"), col("wk"), col("node"),
-        col("hh"), col("dst"),
-        (sum(col("aw")).over(wWalk) - col("aw")).as("lo"),
-        sum(col("aw")).over(wWalk).as("hi"),
-        sum(col("aw")).over(wTot).as("tot"))
-      val hop = cum.withColumn("x", pmod(col("hh"), col("tot")))
-        .filter(col("x") >= col("lo") && col("x") < col("hi"))
-      LoopSession.Sweep(hop.select(col("start"), col("wk"),
-        col("node").as("prev"), col("dst").as("node")),
-        LoopSession.materialize)
-    }._1
-    finally {
-      e0.unpersist(blocking = false)
-      nb.unpersist(blocking = false)
+    LoopSession.onEdges(walkEdges(edges, "node2vecWalks").repartition(col("src"))
+        .sortWithinPartitions(col("src")),
+      rowsPerPartition = 100000L, codegenCutoff = 0L) { g =>
+      val e = Bridge.rebind(g.frame, g.loop)
+      // the (prev, dst) membership side is STEP-INVARIANT: shape and
+      // hash-partition it once on the probe keys, so each step's bias
+      // left-join reads this side exchange-free and only the candidate
+      // stream shuffles to match (guide §2.4 applied to the one edge-sized
+      // join the steps repeat)
+      val nb = g.persistMaterialized(
+        e.select(col("src").as("prev"), col("dst"), lit(1L).as("isn"))
+          .repartition(col("prev"), col("dst"))
+          .sortWithinPartitions(col("prev"), col("dst")))
+      LoopSession.sweep(g.caller,
+        e.select(col("src").as("start")).distinct()
+          .withColumn("wk", explode(array((0 until walksPerNode)
+            .map(i => lit(i.toLong)): _*)))
+          .select(col("start"), col("wk"), col("start").as("prev"),
+            col("start").as("node")),
+        steps, LoopSession.Release.KeepAll, walkCorpus) { (_, state, i) =>
+        // the walk's out-list with the second-order bias applied: return
+        // beats neighbor beats far (dst = prev is never an edge of
+        // (prev, dst) since the graph has no self-loops). The 60-bit draw
+        // hash is computed HERE, on the walks-sized state — one md5 per
+        // walk per step, carried through the join — not on the
+        // Σ outdeg(cur)-sized candidate stream (the r16 shard bench read
+        // the per-candidate md5/conv pair as a top cost).
+        val st = state.withColumn("hh", walkDraw(seed, i + 1))
+        val cand = st.join(e, st("node") === e("src"))
+          .select(col("start"), col("wk"), col("prev"), col("node"),
+            col("hh"), col("dst"), col("w"))
+          .join(nb, Seq("prev", "dst"), "left")
+          .select(col("start"), col("wk"), col("node"), col("hh"),
+            col("dst"),
+            (when(col("dst") === col("prev"), lit(biasReturn))
+              .when(col("isn").isNotNull, lit(biasNeighbor))
+              .otherwise(lit(biasFar)) * col("w")).as("aw"))
+        val wWalk = Window.partitionBy(col("start"), col("wk"))
+          .orderBy(col("dst"))
+        // the partition total shares wWalk's partitioning AND ordering (an
+        // unbounded frame over the same sorted run), so Catalyst plans ONE
+        // Window operator — a separate unordered spec costs a second
+        // Sort+Window pass over the corpus-sized candidate stream per step
+        // (VERDICT r16 #5). Sums are longs: frame-order exact.
+        val wTot = wWalk.rowsBetween(Window.unboundedPreceding,
+          Window.unboundedFollowing)
+        val cum = cand.select(col("start"), col("wk"), col("node"),
+          col("hh"), col("dst"),
+          (sum(col("aw")).over(wWalk) - col("aw")).as("lo"),
+          sum(col("aw")).over(wWalk).as("hi"),
+          sum(col("aw")).over(wTot).as("tot"))
+        val hop = cum.withColumn("x", pmod(col("hh"), col("tot")))
+          .filter(col("x") >= col("lo") && col("x") < col("hi"))
+        LoopSession.Sweep(hop.select(col("start"), col("wk"),
+          col("node").as("prev"), col("dst").as("node")),
+          LoopSession.materialize)
+      }._1
     }
   }
 
@@ -1672,16 +1571,12 @@ object Graph {
     * gain algebra over the common denominator 4m² with m = Σw — the
     * contraction preserves m, so the [[modularity]] m < 1.5·10⁹ bound
     * holds once for the whole level loop (ENFORCED per step). */
-  def louvainStepWeighted(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val (e0c, nE) = CacheOps.persistMaterializedCounted(
-      edges.select(col("a").cast("long"), col("b").cast("long"),
-        col("w").cast("long")))
-    try louvainSweeps(e0c, nE, labels, sweeps = 1)
-    finally e0c.unpersist(blocking = false)
-  }
+  def louvainStepWeighted(edges: DataFrame, labels: DataFrame): DataFrame =
+    LoopSession.onEdges(edges.select(col("a").cast("long"), col("b").cast("long"),
+      col("w").cast("long")))(louvainSweeps(_, labels, sweeps = 1))
 
-  /** `sweeps` synchronous [[louvainStepWeighted]] moves over ONE
-    * persisted edge frame, with the level-invariant pieces — the loop
+  /** `sweeps` synchronous [[louvainStepWeighted]] moves over the ONE
+    * persisted edge frame of `g`, with the level-invariant pieces — the loop
     * session, the m scalar check, the weighted degree frame and the
     * (node, nbr, w) adjacency — built ONCE and shared by every sweep
     * (the r17 q_louvain profile showed each step call rebuilding all
@@ -1696,13 +1591,9 @@ object Graph {
     * materialize-and-replan and per-join codegen dominate small graphs;
     * at cluster scale loopParts keeps the caller's width). rebind, not
     * truncate: the shared CacheManager serves the persists inside. */
-  private[graft] def louvainSweeps(e0c: DataFrame, nE: Long,
-                                   labels0: DataFrame,
-                                   sweeps: Int): DataFrame = {
-    require(sweeps >= 1, s"louvainSweeps needs sweeps >= 1, got $sweeps")
-    val caller = e0c.sparkSession
-    val loopS = LoopSession.forGraph(caller, nE)
-    val e0 = org.apache.spark.sql.graftbridge.Bridge.rebind(e0c, loopS)
+  private def louvainSweeps(g: LoopSession.Edges, labels0: DataFrame,
+                            sweeps: Int): DataFrame = {
+    val e0 = Bridge.rebind(g.frame, g.loop)
     val m = e0.agg(sum(col("w")).as("m"))
       .select(assert_true(col("m") < 1500000000L,
           lit("louvainStep: 4*m^2 must fit a long — m < 1.5e9")).as("__ck"),
@@ -1719,9 +1610,7 @@ object Graph {
         struct(col("b").as("id"), col("w")))).as("e"))
       .select(col("e.id").as("id"), col("e.w").as("w"))
       .groupBy(col("id")).agg(sum(col("w")).as("deg"))
-    val degWShared =
-      if (sweeps > 1) Some(CacheOps.persistMaterialized(degWPlan)) else None
-    val degW = degWShared.getOrElse(degWPlan)
+    val degW = if (sweeps > 1) g.persistMaterialized(degWPlan) else degWPlan
     // v's edge mass rides (node, nbr, w) rows; self-loops are excluded
     // (u ≠ v). Label-independent; persisted only when >1 sweep reads it
     // (a single sweep composes it into evd exactly as before).
@@ -1730,15 +1619,13 @@ object Graph {
         struct(col("b").as("node"), col("a").as("nbr"), col("w")))).as("e"))
       .select(col("e.node").as("node"), col("e.nbr").as("nbr"),
         col("e.w").as("w"))
-    val adjShared =
-      if (sweeps > 1) Some(CacheOps.persistMaterialized(adjPlan)) else None
-    val adj = adjShared.getOrElse(adjPlan)
+    val adj = if (sweeps > 1) g.persistMaterialized(adjPlan) else adjPlan
     // each sweep references its label frame twice (degree join + mass
     // join) — the loop persists the incoming frame, so a lazy caller
     // plan can't execute twice
-    try LoopSession.sweep(caller, org.apache.spark.sql.graftbridge.Bridge.rebind(
+    val out = LoopSession.sweep(g.caller, Bridge.rebind(
       labels0.select(col("id").cast("long"), col("community").cast("long")),
-      loopS), sweeps) { (scratch, lab, _) =>
+      g.loop), sweeps) { (scratch, lab, _) =>
       // per-sweep: the label-dependent joins only
       val degL = scratch.persistMaterialized(degW.join(lab, "id"))
       val dc = degL.groupBy(col("community"))
@@ -1776,10 +1663,9 @@ object Graph {
           when(col("nd").isNotNull && col("nd") < 0L, col("bd"))
             .otherwise(col("c")).as("community")), LoopSession.materialize)
     }._1
-    finally {
-      degWShared.foreach(_.unpersist(blocking = false))
-      adjShared.foreach(_.unpersist(blocking = false))
-    }
+    // the next level never reads this one's degree and adjacency caches
+    if (sweeps > 1) Seq(degW, adj).foreach(g.release)
+    out
   }
 
   /** Multi-level Louvain (Blondel et al. 2008, both phases): from
@@ -1809,108 +1695,52 @@ object Graph {
   def louvain(edges: DataFrame, levels: Int = 2, sweeps: Int = 2): DataFrame = {
     require(levels >= 1, s"louvain needs levels >= 1, got $levels")
     require(sweeps >= 1, s"louvain needs sweeps >= 1, got $sweeps")
-    import org.apache.spark.sql.graftbridge.Bridge
-    var (g, nG) = CacheOps.persistMaterializedCounted(
-      edges.select(col("a").cast("long"), col("b").cast("long"))
-        .withColumn("w", lit(1L)))
-    // composed original-id → current-community mapping (identity at entry)
-    var mapping = CacheOps.persistMaterialized(
-      g.select(explode(array(col("a"), col("b"))).as("id")).distinct()
-        .select(col("id"), col("id").as("community")))
-    // release list holds the PERSISTED frames (a truncated wrapper's
-    // unpersist is a no-op on the cache entry underneath it)
-    var released: List[DataFrame] = List(g, mapping)
-    try {
-      var finalMapped = mapping
-      // the NEXT level's singleton labeling — (id, id) over the level's
-      // node universe. Level 1's IS the identity mapping (same persisted
-      // frame); each contraction derives the next one nodes-sized from
-      // the level's final labels (nodes of the contracted graph = image
-      // of the communities — every node carries an edge, possibly a
-      // self-loop, so the sets are identical), where the r16 shape paid
-      // an edges-sized explode+distinct over the contracted graph.
-      var lab0: DataFrame = mapping
-      for (lvl <- 1 to levels) {
-        // all `sweeps` moves share one edge persist + level-invariant
-        // degree/adjacency frames (louvainSweeps; the r16 shape re-built
-        // them per sweep)
-        val lab = louvainSweeps(g, nG, Bridge.truncatePlan(lab0), sweeps)
-        released ::= lab
-        val labT = Bridge.truncatePlan(lab)
-        // phase 2: contract communities into super-nodes, and derive the
-        // next level's singleton labeling (image of this level's
-        // communities, see lab0 note above) — both skipped on the final
-        // level, whose only consumer is the composed mapping below (the
-        // r16 shape built a dead final contraction)
-        if (lvl < levels) {
-          val la = labT.select(col("id").as("a"), col("community").as("ca"))
-          val lb = labT.select(col("id").as("b"), col("community").as("cb"))
-          val (gNext, nNext) = CacheOps.persistMaterializedCounted(
-            g.join(la, "a").join(lb, "b")
-              .select(least(col("ca"), col("cb")).as("a"),
-                greatest(col("ca"), col("cb")).as("b"), col("w"))
-              .groupBy(col("a"), col("b")).agg(sum(col("w")).as("w")))
-          released ::= gNext
-          g = Bridge.truncatePlan(gNext)
-          nG = nNext
-          val nextLab0 = CacheOps.persistMaterialized(
-            labT.select(col("community")).distinct()
-              .select(col("community").as("id"), col("community")))
-          released ::= nextLab0
-          lab0 = nextLab0
-        }
-        val mapped = CacheOps.persistMaterialized(
-          Bridge.truncatePlan(mapping).join(
-              labT.select(col("community").as("next"),
-                col("id").as("community")),
-              "community")
-            .select(col("id"), col("next").as("community")))
-        released ::= mapped
-        mapping = mapped
-        finalMapped = mapped
+    // level `lvl` over its graph `g` from the singleton labeling `lab0`;
+    // `mapping` is the composed original-id → current-community frame
+    def level(g: LoopSession.Edges, lab0: DataFrame, mapping: DataFrame,
+              lvl: Int): DataFrame = {
+      // all `sweeps` moves share one edge persist + level-invariant
+      // degree/adjacency frames (louvainSweeps; the r16 shape re-built
+      // them per sweep)
+      val labT = Bridge.truncatePlan(
+        g.hold(louvainSweeps(g, Bridge.truncatePlan(lab0), sweeps)))
+      def composed(h: LoopSession.Scratch): DataFrame = h.persistMaterialized(
+        Bridge.truncatePlan(mapping).join(
+            labT.select(col("community").as("next"), col("id").as("community")),
+            "community")
+          .select(col("id"), col("next").as("community")))
+      // the final level's composed mapping is the RESULT, which its holder
+      // keeps; the caller owns its release. Phase 2 — contract communities
+      // into super-nodes, and derive the next level's singleton labeling —
+      // is skipped on the final level, whose only consumer is the composed
+      // mapping (the r16 shape built a dead final contraction)
+      if (lvl == levels) composed(g)
+      else LoopSession.onEdges({
+        val la = labT.select(col("id").as("a"), col("community").as("ca"))
+        val lb = labT.select(col("id").as("b"), col("community").as("cb"))
+        g.frame.join(la, "a").join(lb, "b")
+          .select(least(col("ca"), col("cb")).as("a"),
+            greatest(col("ca"), col("cb")).as("b"), col("w"))
+          .groupBy(col("a"), col("b")).agg(sum(col("w")).as("w"))
+      }) { next =>
+        // the next level's singleton labeling is the image of this level's
+        // communities, nodes-sized (nodes of the contracted graph =
+        // communities — every node carries an edge, possibly a self-loop);
+        // the r16 shape paid an edges-sized explode+distinct over the
+        // contracted graph
+        val nextLab0 = next.persistMaterialized(
+          labT.select(col("community")).distinct()
+            .select(col("community").as("id"), col("community")))
+        level(next, nextLab0, composed(next), lvl + 1)
       }
-      // the final level's mapping cache is the RESULT — the caller owns
-      // its release; every intermediate is dropped here
-      released.filterNot(_ eq finalMapped)
-        .foreach(_.unpersist(blocking = false))
-      finalMapped
-    } catch { case t: Throwable =>
-      released.foreach(_.unpersist(blocking = true))
-      throw t
     }
-  }
-
-  def pageRankWeighted(edges: DataFrame, iterations: Int = 5,
-                       scale: Long = 1000000L, salts: Int = 1): DataFrame = {
-    require(salts >= 0,
-      s"pageRankWeighted needs salts >= 1 (or 0 = auto-detect), got $salts")
-    if (salts == 0)
-      return withDerivedSalts(edges.select(col("src").cast("long"),
-        col("dst").cast("long"), col("w").cast("long")))(
-        (e, s) => pageRankWeighted(e, iterations, scale, s))
-    // same layout + loop-session + salting discipline as [[pageRank]]:
-    // src-partitioned edge persist + single-shuffle (id, wsum) node
-    // frame (null wsum = sink), fixed-count loop in the right-sized clone
-    val spark = edges.sparkSession
-    val (e0, nEdges) = CacheOps.persistMaterializedCounted(
-      saltEdges(edges.select(col("src").cast("long"), col("dst").cast("long"),
-        col("w").cast("long")), salts)
-        .repartition(saltKeys(salts): _*)
-        .sortWithinPartitions(saltKeys(salts): _*))
-    val loop = LoopSession.forGraph(spark, nEdges, rowsPerPartition = 100000L)
-    val e = org.apache.spark.sql.graftbridge.Bridge.rebind(e0, loop)
-    val nd = e.select(col("src").as("id"), col("w").as("c"))
-      .unionByName(e.select(col("dst").as("id"), lit(null).cast("long").as("c")))
-      .groupBy(col("id")).agg(sum(col("c")).as("wsum"))
-      .persist(MEMORY_AND_DISK)
-    LoopSession.handBack(spark, loopRanks(nd, ranks => {
-      // per-edge (rank·w) div wsum happens on the routed edge row: carry
-      // rank and wsum to the join, divide after multiplying by the edge w
-      val r = ranks.filter(col("wsum").isNotNull)
-        .select(col("id").as("csrc"), col("rank").as("crank"),
-          col("wsum").as("cwsum"))
-      saltedEdgeJoin(e, r, salts)
-        .select(col("dst"), expr("(crank * w) div cwsum").as("contrib"))
-    }, iterations, scale), Seq(e0, nd))
+    LoopSession.onEdges(edges.select(col("a").cast("long"), col("b").cast("long"))
+        .withColumn("w", lit(1L))) { g =>
+      // level 1's singleton labeling IS the identity mapping
+      val identity = g.persistMaterialized(
+        g.frame.select(explode(array(col("a"), col("b"))).as("id")).distinct()
+          .select(col("id"), col("id").as("community")))
+      level(g, identity, identity, 1)
+    }
   }
 }

@@ -4,11 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-/** ONE definition of the right-sized cloned session every iterative
-  * graph loop runs in (connected components, k-core, label propagation,
-  * HITS), and of the persisted-state loop itself ([[sweep]], whose
-  * scaladoc states the loop contract). The session is measured in
-  * representatives(): label/alive/score frames are
+/** ONE definition of how an iterative graph operator runs: its entry
+  * ([[onEdges]]: the persisted edge frame, the right-sized cloned loop
+  * session, and every cache the operator takes), and its persisted-state
+  * loop ([[sweep]], whose scaladoc states the loop contract). The session
+  * is measured in representatives(): label/alive/score frames are
   * nodes-sized, and at the caller's corpus-scale shuffle width each
   * sweep's stage-submission latency exceeds the data it moves, while
   * AQE's per-exchange materialize-and-replan and fresh per-sweep Janino
@@ -29,10 +29,23 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   * (every read of a persisted state) and `GenerateUnsafeRowJoiner` in
   * hash aggregation.
   *
-  * CONTRACT: frames the loop should execute must be rebound into the
-  * loop session ([[bindInto]]); frames handed BACK to the caller must
-  * be rebound to the caller's session (Bridge.rebind) or downstream
-  * queries inherit the loop's single-partition/no-broadcast confs. */
+  * CONTRACT of the operator entry:
+  *  1. ONE EDGE PERSIST. [[onEdges]] persists the shaped edge frame and
+  *     counts it in one job; the count sizes the loop session, built on
+  *     first use, so an operator that never loops never clones one.
+  *  2. BINDING IS THE OPERATOR'S. Frames the loop should execute are
+  *     rebound into [[Edges.loop]] by the operator (Bridge.rebind,
+  *     [[bindInto]] or a layout-keeping truncation — each chosen by a
+  *     measurement at its call site); frames handed BACK to the caller
+  *     are rebound to the caller's session, or downstream queries
+  *     inherit the loop's single-partition/no-broadcast confs.
+  *  3. EVERY CACHE THROUGH THE HOLDER. Each cache the operator takes is
+  *     persisted through its [[Scratch]] ([[holding]] gives one to
+  *     operators with no edge frame of their own); [[Scratch.release]]
+  *     drops one early once nothing later reads it.
+  *  4. RELEASE ON EXIT. When the body returns, every held cache but the
+  *     returned frame is released; when it throws, all of them are,
+  *     blocking, before the error propagates. */
 private[graft] object LoopSession {
 
   /** `rowsPerPartition` sizes the loop width to what the sweeps MOVE:
@@ -94,26 +107,68 @@ private[graft] object LoopSession {
     case object KeepAll extends Release
   }
 
-  /** Per-sweep scratch caches of a running [[sweep]] loop: persisted
-    * here, released once the sweep's state has materialized, or at once
-    * if anything throws. */
-  final class Scratch private[LoopSession] {
-    private var held: List[DataFrame] = Nil
-    def persist(df: DataFrame): DataFrame = {
-      val p = df.persist(MEMORY_AND_DISK)
-      held ::= p
-      p
+  /** The caches an operator holds: persisted here and released together
+    * — per sweep inside a [[sweep]] loop (once the sweep's state has
+    * materialized, or at once if anything throws), for the operator's
+    * lifetime under [[holding]] and [[onEdges]]. */
+  class Scratch private[LoopSession] (private var held: List[DataFrame] = Nil) {
+    /** Hold an already-persisted frame (a hand-back the operator reads
+      * but does not return). */
+    def hold(df: DataFrame): DataFrame = {
+      held ::= df
+      df
     }
-    /** [[persist]], eagerly materialized by a count. */
-    def persistMaterialized(df: DataFrame): DataFrame = {
+    def persist(df: DataFrame): DataFrame = hold(df.persist(MEMORY_AND_DISK))
+    /** [[persist]], eagerly materialized by a count, which is returned. */
+    def persistCounted(df: DataFrame): (DataFrame, Long) = {
       val p = persist(df)
-      p.count()
-      p
+      (p, p.count())
     }
-    private[LoopSession] def release(blocking: Boolean): Unit = {
-      held.foreach(_.unpersist(blocking))
+    def persistMaterialized(df: DataFrame): DataFrame = persistCounted(df)._1
+    /** Release `df` now: nothing the operator runs later reads it. */
+    def release(df: DataFrame): Unit = {
+      held = held.filterNot(_ eq df)
+      df.unpersist(blocking = false)
+    }
+    private[LoopSession] def releaseAll(blocking: Boolean, keep: Any = null): Unit = {
+      held.filterNot(_ eq keep.asInstanceOf[AnyRef]).foreach(_.unpersist(blocking))
       held = Nil
     }
+  }
+
+  /** The holder an [[onEdges]] body gets: the persisted edge `frame` (in
+    * the `caller` session), its row count, and the loop session sized
+    * from that count. */
+  final class Edges private[LoopSession] (val frame: DataFrame, val rows: Long,
+                                          rowsPerPartition: Long, codegenCutoff: Long)
+      extends Scratch(List(frame)) {
+    val caller: SparkSession = frame.sparkSession
+    lazy val loop: SparkSession = forGraph(caller, rows, rowsPerPartition, codegenCutoff)
+  }
+
+  /** Run `body` with an operator-lifetime [[Scratch]]: on return every
+    * cache it holds except the result is released, on a throw all of
+    * them, blocking. */
+  def holding[A](body: Scratch => A): A = within(new Scratch)(body)
+
+  /** The ONE entry of a graph operator over an edge frame: `edges` (the
+    * operator's shaped, lazy edge plan) is persisted and counted in one
+    * job, and `body` runs over the [[Edges]] holder, whose loop session
+    * `forGraph` sizes from the count with `rowsPerPartition` and
+    * `codegenCutoff`. Releases as [[holding]]; the edge cache goes with
+    * the rest unless `body` released it earlier. */
+  def onEdges[A](edges: DataFrame, rowsPerPartition: Long = 1000000L,
+                 codegenCutoff: Long = 10000000L)(body: Edges => A): A = {
+    val (frame, rows) = CacheOps.persistMaterializedCounted(edges)
+    within(new Edges(frame, rows, rowsPerPartition, codegenCutoff))(body)
+  }
+
+  private def within[S <: Scratch, A](held: S)(body: S => A): A = {
+    val out =
+      try body(held)
+      catch { case t: Throwable => held.releaseAll(blocking = true); throw t }
+    held.releaseAll(blocking = false, keep = out)
+    out
   }
 
   /** The ONE persisted-state loop every iterative operator runs:
@@ -141,10 +196,10 @@ private[graft] object LoopSession {
     *     persist — is released (blocking) before the error propagates.
     *  5. CALLER-SESSION HAND-BACK. `finish` maps the held states (oldest
     *     first) to the result. The final state itself is handed over as
-    *     is; anything else is persisted detached and the states released
-    *     ([[handBack]]). Either way the result is rebound to `caller`, so
-    *     downstream queries never inherit the loop session's confs, and
-    *     the caller's unpersist() releases its cache entry.
+    *     is; anything else is persisted detached ([[handBack]]). Every
+    *     other state is then released, and the result is rebound to
+    *     `caller`, so downstream queries never inherit the loop session's
+    *     confs, and the caller's unpersist() releases its cache entry.
     *
     * `init` is a lazy plan (not already cached): the loop persists and
     * owns it, and its cache fills during the first sweep's action. */
@@ -161,7 +216,7 @@ private[graft] object LoopSession {
         val Sweep(next, signal) = step(scratch, held.head, sweeps)
         held ::= Bridge.truncatePlan(next).persist(MEMORY_AND_DISK)
         converged = signal(held.head)
-        scratch.release(blocking = false)
+        scratch.releaseAll(blocking = false)
         if (policy == Release.Predecessor) {
           held.tail.foreach(_.unpersist(blocking = false))
           held = held.take(1)
@@ -169,13 +224,11 @@ private[graft] object LoopSession {
         sweeps += 1
       }
       val out = finish(held.reverse)
-      if (out eq held.head) {
-        held.tail.foreach(_.unpersist(blocking = false))
-        (Bridge.rebind(out, caller), sweeps)
-      }
-      else (handBack(caller, out, held), sweeps)
+      val result = if (out eq held.head) out else CacheOps.persistMaterializedDetached(out)
+      held.filterNot(_ eq result).foreach(_.unpersist(blocking = false))
+      (Bridge.rebind(result, caller), sweeps)
     } catch { case t: Throwable =>
-      scratch.release(blocking = true)
+      scratch.releaseAll(blocking = true)
       held.foreach(_.unpersist(blocking = true))
       throw t
     }
@@ -198,12 +251,10 @@ private[graft] object LoopSession {
     }
   }
 
-  /** Persist `result` detached, materialize it, release `release`, and
-    * hand the result back rebound to `caller` — the [[sweep]] hand-back,
-    * also used by the composed fixed-count loops (rank, fixed-sweep
-    * SSSP), whose single final action is this materialization. */
-  def handBack(caller: SparkSession, result: DataFrame,
-               release: Seq[DataFrame]): DataFrame =
-    try Bridge.rebind(CacheOps.persistMaterializedDetached(result), caller)
-    finally release.foreach(_.unpersist(blocking = false))
+  /** Persist `result` detached, materialize it, and hand it back rebound
+    * to `caller` — the [[sweep]] hand-back, also used by the composed
+    * fixed-count loops (rank, fixed-sweep SSSP), whose single final
+    * action is this materialization. */
+  def handBack(caller: SparkSession, result: DataFrame): DataFrame =
+    Bridge.rebind(CacheOps.persistMaterializedDetached(result), caller)
 }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
+import graft.Fields
 import graft.functions.Template
 import graft.operators.{Bucketing, CacheOps, Curation, Dedup, FuzzyJoin, Graph, Quantiles,
   Similarity, Skyline, TextAnalysis, Web}
@@ -175,19 +176,6 @@ object Pipeline {
     sb.result()
   }
 
-  /** Typed reads of a config node's optional fields, each with its default. */
-  private final class Fields(node: JsonNode) {
-    def str(k: String, d: String = ""): String = if (node.has(k)) node.get(k).asText() else d
-    def int(k: String, d: Int): Int = if (node.has(k)) node.get(k).asInt() else d
-    def long(k: String, d: Long): Long = if (node.has(k)) node.get(k).asLong() else d
-    def dbl(k: String, d: Double): Double = if (node.has(k)) node.get(k).asDouble() else d
-    def bool(k: String, d: Boolean): Boolean = if (node.has(k)) node.get(k).asBoolean() else d
-    def strs(k: String, d: Seq[String] = Nil): Seq[String] =
-      Option(node.get(k)).fold(d)(_.elements().asScala.map(_.asText()).toSeq)
-    def longs(k: String): Seq[Long] =
-      Option(node.get(k)).fold(Seq.empty[Long])(_.elements().asScala.map(_.asLong()).toSeq)
-  }
-
   /** One config step. A step other than the chewdata reader, writer,
     * transformer, validator, generator, eraser and templates is a
     * [[FrameStep]]: its case reads the step's fields here and returns the
@@ -204,7 +192,7 @@ object Pipeline {
         val d = new Fields(doc)
         Documents.DocOptions(
           delimiter = d.str("delimiter", ","),
-          header = !doc.has("header") || doc.get("header").asBoolean(true),
+          header = d.bool("header", true),
           quote = d.str("quote", "\""),
           rowTag = d.str("row_tag", "row"),
           // chewdata xml conventions (reference: src/document/xml.rs:98-99 —
@@ -263,10 +251,7 @@ object Pipeline {
         }.toSeq).getOrElse(Seq.empty)
         Validator(rules, str("error_separator", str("separator", "; ")), dataType, referentials)
       case "templates" | "tmpl" =>
-        val m = Option(node.get("templates")).map { t =>
-          t.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
-        }.getOrElse(Map.empty[String, String])
-        TemplatesStep(m)
+        TemplatesStep(strMap("templates"))
       case "referential" | "ref" =>
         // broadcast left join; the lookup's columns are prefixed `<name>_`
         val (name, conn, leftOn, rightOn) =

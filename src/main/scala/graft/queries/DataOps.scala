@@ -4446,27 +4446,25 @@ object DataOps {
     * maxSweeps = 8 matches the oracle's unrolled replay (converges ≤ 8
     * on this fixture at every SF — probed to sweep 14; extra sweeps
     * past the fixpoint are no-ops on both sides). */
-  def qKCore(spark: SparkSession, dir: String): DataFrame = {
-    val (e, nE) = graft.operators.CacheOps.persistMaterializedCounted(
-      rareShingleEdges(Tables(spark, dir).documents)
-        .select(col("a").cast("long"), col("b").cast("long")))
-    try {
-      val deg0 = Graph.degreeFrame(e)
+  def qKCore(spark: SparkSession, dir: String): DataFrame =
+    graft.operators.LoopSession.onEdges(rareShingleEdges(Tables(spark, dir).documents)
+        .select(col("a").cast("long"), col("b").cast("long"))) { g =>
+      val deg0 = Graph.degreeFrame(g.frame)
       val n = deg0.count()
       if (n == 0) {
         // no rare-shingle edges at all (all-unique or sub-3-token docs):
         // the core is empty, as the oracle's NULL-k filter also yields
         val sp = spark
         import sp.implicits._
-        return Seq.empty[(Long, Long)].toDF("id", "deg")
+        Seq.empty[(Long, Long)].toDF("id", "deg")
       }
-      val medianDeg = deg0.orderBy(col("deg"), col("id"))
-        .limit(((n + 1) / 2).toInt).agg(max(col("deg"))).head().getLong(0)
-      Graph.kCoreOn(e, k = math.max(2L, medianDeg / 2).toInt, maxSweeps = 8,
-          nEdges = nE, releaseInput = true)
-        .orderBy(col("id"))
-    } finally e.unpersist(blocking = false)
-  }
+      else {
+        val medianDeg = deg0.orderBy(col("deg"), col("id"))
+          .limit(((n + 1) / 2).toInt).agg(max(col("deg"))).head().getLong(0)
+        Graph.kCoreOn(g, k = math.max(2L, medianDeg / 2).toInt, maxSweeps = 8)
+          .orderBy(col("id"))
+      }
+    }
 
   val qKCoreSql: String = {
     // every aN/dN is MATERIALIZED: each step references the previous

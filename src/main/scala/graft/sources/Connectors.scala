@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import graft.Fields
 import graft.sources.Documents.DocOptions
 
 /** Connectors (reference: src/connector (Rust modules) — local, in_memory, cli, curl,
@@ -719,24 +720,20 @@ object Connector {
   /** Parse a chewdata authenticator config node → auth header
     * (reference: src/connector/authenticator/{basic,bearer,jwt}.rs). */
   def authHeader(a: JsonNode): (String, String) = {
-    def s(f: String, d: String = ""): String = if (a.has(f)) a.get(f).asText() else d
-    s("type") match {
-      case "basic" => basicAuth(
-        if (a.has("username")) s("username") else s("user"), s("password"))
-      case "bearer" => bearerAuth(s("token"))
+    val f = new Fields(a)
+    import f._
+    str("type") match {
+      case "basic" => basicAuth(str("username", str("user")), str("password"))
+      case "bearer" => bearerAuth(str("token"))
       // a pre-signed jwt travels as a bearer token
-      case "jwt" if a.has("token") => bearerAuth(s("token"))
+      case "jwt" if get("token").isDefined => bearerAuth(str("token"))
       case "jwt" =>
-        val claims =
-          if (a.has("claims")) a.get("claims").toString
-          else if (a.has("payload")) a.get("payload").toString
-          else "{}"
-        val signing = s("signing_type", s("signing", "secret"))
+        val claims = get("claims", "payload").fold("{}")(_.toString)
+        val signing = str("signing_type", str("signing", "secret"))
         // rsa_components keys travel as a JWK object (RFC 7517)
-        val key =
-          if (a.has("jwk") && signing.startsWith("rsa")) a.get("jwk").toString
-          else s("key")
-        bearerAuth(Jwt.sign(claims, key, s("algorithm", s("algo", "HS256")), signing))
+        val key = get("jwk").filter(_ => signing.startsWith("rsa"))
+          .fold(str("key"))(_.toString)
+        bearerAuth(Jwt.sign(claims, key, str("algorithm", str("algo", "HS256")), signing))
       case other => throw new IllegalArgumentException(
         s"unknown authenticator type: $other (basic/bearer/jwt)")
     }
@@ -744,13 +741,10 @@ object Connector {
 
   /** Parse a paginator config node (reference: src/connector/paginator). */
   def paginator(p: JsonNode): HttpPaginator = {
-    def int(f: String, d: Int): Int = if (p.has(f)) p.get(f).asInt() else d
-    if (p.has("type") && p.get("type").asText() == "cursor")
-      CursorPaginator(int("limit", 100),
-        if (p.has("entry_path")) p.get("entry_path").asText() else "/next")
-    else
-      OffsetPaginator(int("limit", 100), int("skip", 0),
-        if (p.has("count")) Some(p.get("count").asLong()) else None)
+    val f = new Fields(p)
+    import f._
+    if (str("type") == "cursor") CursorPaginator(int("limit", 100), str("entry_path", "/next"))
+    else OffsetPaginator(int("limit", 100), int("skip", 0), get("count").map(_.asLong()))
   }
 
   /** Build from a chewdata-style connector config node. `transport` is the
@@ -763,71 +757,44 @@ object Connector {
                  docType: String, opts: DocOptions,
                  transport: Http.FullTransport = Http.full(Http.noTransport),
                  mongoClient: Option[MongoConnector.Client] = None): Connector = {
-    def str(field: String, default: String = ""): String =
-      if (node.has(field)) node.get(field).asText() else default
+    val fields = new Fields(node)
+    import fields._
     str("type", "local") match {
-      case "local" | "l"          =>
-        val parts = Option(node.get("partition_by"))
-          .map(n => scala.jdk.CollectionConverters.IteratorHasAsScala(n.elements()).asScala.map(_.asText()).toSeq)
-          .getOrElse(Nil)
-        LocalConnector(str("path"), docType, opts, parts)
+      case "local" | "l"          => LocalConnector(str("path"), docType, opts, strs("partition_by"))
       case "mem" | "in_memory"    => InMemoryConnector(str("data"), docType, opts)
       case "cli" | "io"           => CliConnector(docType)
       case "bucket" | "bucket_select" => BucketConnector(str("bucket"), str("key"), docType, opts)
       case "psql" | "jdbc"        =>
-        def lng(f: String): Long = if (node.has(f)) node.get(f).asLong() else 0L
         JdbcConnector(str("url"), str("table"), str("user"), str("password"),
-          if (node.has("partition_column")) Some(node.get("partition_column").asText()) else None,
-          lng("lower_bound"), lng("upper_bound"),
-          if (node.has("num_partitions")) node.get("num_partitions").asInt() else 8,
+          get("partition_column").map(_.asText()),
+          long("lower_bound", 0L), long("upper_bound", 0L), int("num_partitions", 8),
           str("driver"))
       case "curl" =>
-        val headers = Option(node.get("headers")).map { h =>
-          val b = Map.newBuilder[String, String]
-          h.properties().forEach(e => b += (e.getKey -> e.getValue.asText()))
-          b.result()
-        }.getOrElse(Map.empty[String, String])
-        val auth = Option(node.get("authenticator_type"))
-          .orElse(Option(node.get("authenticator")))
-          .orElse(Option(node.get("auth")))
+        val auth = get("authenticator_type", "authenticator", "auth")
           .map(a => () => authHeader(a))
-        val pag = Option(node.get("paginator_type"))
-          .orElse(Option(node.get("paginator")))
-          .map(paginator)
+        val pag = get("paginator_type", "paginator").map(paginator)
           // legacy shorthand: "pages": N ≡ offset paginator of N known pages
-          .getOrElse(if (node.has("pages"))
-            OffsetPaginator(limit = 1, skip = 0, count = Some(node.get("pages").asLong()))
-          else OffsetPaginator())
-        val counter = Option(node.get("counter_type"))
-          .orElse(Option(node.get("counter")))
-          .map { c =>
-            val cpath = if (c.has("path")) Some(c.get("path").asText()) else None
-            if (c.has("type") && c.get("type").asText() == "header")
-              HeaderCounter(
-                if (c.has("name")) c.get("name").asText() else "X-Total-Count", cpath)
-            else
-              BodyCounter(
-                if (c.has("entry_path")) c.get("entry_path").asText() else "/count", cpath)
-          }
+          .getOrElse(get("pages").fold(OffsetPaginator())(n =>
+            OffsetPaginator(limit = 1, skip = 0, count = Some(n.asLong()))))
+        val counter = get("counter_type", "counter").map { c =>
+          val cf = new Fields(c)
+          val cpath = cf.get("path").map(_.asText())
+          if (cf.str("type") == "header") HeaderCounter(cf.str("name", "X-Total-Count"), cpath)
+          else BodyCounter(cf.str("entry_path", "/count"), cpath)
+        }
         // reference: curl.rs:181 — `is_cached`, aliases `cache`/`cache_enabled`
-        val isCached = Seq("is_cached", "cache", "cache_enabled")
-          .exists(f => node.has(f) && node.get(f).asBoolean())
-        CurlConnector(str("endpoint"), str("path"), headers, pag, transport,
+        val isCached = Seq("is_cached", "cache", "cache_enabled").exists(bool(_, false))
+        CurlConnector(str("endpoint"), str("path"), strMap("headers"), pag, transport,
           counter, auth, isCached = isCached, docType = docType, opts = opts)
       case "mongodb" | "mongo"    =>
         // reference: paginator/mongodb/{offset,cursor}.rs — the paginator
         // node picks the walk; limit maps onto the page/batch size
-        val pagNode = Option(node.get("paginator_type"))
-        val pagKind = pagNode.filter(p => p.has("type"))
-          .map(_.get("type").asText()).getOrElse("offset")
-        val pageSize = pagNode.filter(_.has("limit")).map(_.get("limit").asInt())
-        MongoConnector(str("endpoint"), str("database"),
-          str("collection"),
-          if (node.has("filter")) node.get("filter").toString else "{}",
-          pageSize.getOrElse(
-            if (node.has("batch_size")) node.get("batch_size").asInt() else 1000),
+        val pag = get("paginator_type").map(new Fields(_))
+        MongoConnector(str("endpoint"), str("database"), str("collection"),
+          get("filter").fold("{}")(_.toString),
+          pag.flatMap(_.get("limit")).fold(int("batch_size", 1000))(_.asInt()),
           client = mongoClient,
-          pagination = pagKind)
+          pagination = pag.fold("offset")(_.str("type", "offset")))
       case other => throw new IllegalArgumentException(s"unknown connector type: $other")
     }
   }

@@ -85,6 +85,82 @@ class LoopSessionSpec extends SparkSpec {
     assertNoCaches("failed representatives")
   }
 
+  /** A Range-backed frame with columns `cols` whose rows fail an
+    * assertion when they execute (a local Seq would be constant-folded
+    * during planning instead). */
+  private def throwing(cols: String*): DataFrame =
+    spark.range(1, 4).select(cols.map(c =>
+      when(assert_true(col("id") < 0L, lit("input fails")).isNull, col("id")).as(c)): _*)
+
+  private lazy val directed =
+    Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 4L)).toDF("src", "dst")
+  private lazy val weighted = directed.withColumn("w", col("src") + 1L)
+  // two triangles joined by the bridge 3-4, canonical a < b
+  private lazy val undirected =
+    Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 5L), (4L, 6L), (5L, 6L)).toDF("a", "b")
+  private lazy val labels =
+    Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 4L), (6L, 4L)).toDF("id", "community")
+  private lazy val seeds = Seq(1L).toDF("id")
+
+  /** Every operator that persists an edge frame: its call on good inputs,
+    * and its call on an input that throws — the second input where it has
+    * one, so the failure lands after the edge cache exists. */
+  private val operators: Seq[(String, () => DataFrame, () => DataFrame)] = Seq(
+    ("pageRank", () => Graph.pageRank(directed),
+      () => Graph.pageRank(throwing("src", "dst"))),
+    ("pageRankPersonalized", () => Graph.pageRankPersonalized(directed, seeds),
+      () => Graph.pageRankPersonalized(directed, throwing("id"))),
+    ("pageRankWeighted", () => Graph.pageRankWeighted(weighted),
+      () => Graph.pageRankWeighted(throwing("src", "dst", "w"))),
+    ("kCore", () => Graph.kCore(undirected, 2),
+      () => Graph.kCore(throwing("a", "b"), 2)),
+    ("hits", () => Graph.hits(directed), () => Graph.hits(throwing("src", "dst"))),
+    ("labelPropagation", () => Graph.labelPropagation(undirected),
+      () => Graph.labelPropagation(throwing("a", "b"))),
+    ("shortestPaths", () => Graph.shortestPaths(directed, seeds),
+      () => Graph.shortestPaths(directed, throwing("id"))),
+    ("shortestPaths to fixpoint",
+      () => Graph.shortestPaths(directed, seeds, runToFixpoint = true),
+      () => Graph.shortestPaths(directed, throwing("id"), runToFixpoint = true)),
+    ("stronglyConnectedComponents", () => Graph.stronglyConnectedComponents(directed),
+      () => Graph.stronglyConnectedComponents(throwing("src", "dst"))),
+    ("modularity", () => Graph.modularity(undirected, labels),
+      () => Graph.modularity(undirected, throwing("id", "community"))),
+    ("triangleCounts", () => Graph.triangleCounts(undirected),
+      () => Graph.triangleCounts(throwing("a", "b"))),
+    ("clusteringCoefficients", () => Graph.clusteringCoefficients(undirected),
+      () => Graph.clusteringCoefficients(throwing("a", "b"))),
+    ("assortativity", () => Graph.assortativity(undirected),
+      () => Graph.assortativity(throwing("a", "b"))),
+    ("randomWalks", () => Graph.randomWalks(directed, steps = 3),
+      () => Graph.randomWalks(throwing("src", "dst"), steps = 3)),
+    ("randomWalks weighted", () => Graph.randomWalks(weighted, steps = 3),
+      () => Graph.randomWalks(throwing("src", "dst", "w"), steps = 3)),
+    ("node2vecWalks", () => Graph.node2vecWalks(directed, steps = 3),
+      () => Graph.node2vecWalks(throwing("src", "dst"), steps = 3)),
+    ("louvainStep", () => Graph.louvainStep(undirected, labels),
+      () => Graph.louvainStep(undirected, throwing("id", "community"))),
+    ("louvain", () => Graph.louvain(undirected), () => Graph.louvain(throwing("a", "b"))),
+    ("representatives", () => Dedup.representatives(undirected),
+      () => Dedup.representatives(throwing("a", "b"))))
+
+  test("every edge-frame operator leaves only its result cache, and none when an input throws") {
+    operators.foreach { case (name, ok, failing) =>
+      clearCaches()
+      val out = ok()
+      assert(out.storageLevel.useMemory, s"$name returned an uncached result")
+      assert(spark.sparkContext.getPersistentRDDs.size == 1,
+        s"$name left ${spark.sparkContext.getPersistentRDDs.size} persisted RDDs")
+      out.unpersist(blocking = true)
+      assertNoCaches(s"released $name result")
+      val err = intercept[Exception](failing())
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("input fails")),
+        s"$name failed for another reason: $err")
+      assertNoCaches(s"failed $name")
+    }
+  }
+
   /** Janino compiles so far in this JVM. */
   private def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 

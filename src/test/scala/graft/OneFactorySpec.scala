@@ -10,7 +10,9 @@ import scala.util.Using
   * through `BenchUtil.session`) and every job/task count from
   * `pipeline.QueryMetricsListener`: no other main source may build a
   * session or define a listener of its own. Every source a config can
-  * name is built by `Connector.fromConfig`, and no other exists. */
+  * name is built by `Connector.fromConfig`, and no other exists. Every
+  * graph operator enters through `LoopSession.onEdges`, the one caller of
+  * `LoopSession.forGraph`. */
 class OneFactorySpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -33,6 +35,10 @@ class OneFactorySpec extends AnyFunSuite {
   test("the one SparkListener in main sources is pipeline/Metrics.scala's") {
     assert(sourcesMatching("""(new|extends|with)\s+SparkListener\b""") ==
       Set("pipeline/Metrics.scala"))
+  }
+
+  test("LoopSession.forGraph( appears only in operators/LoopSession.scala") {
+    assert(sourcesMatching("""\bforGraph\(""") == Set("operators/LoopSession.scala"))
   }
 
   test("every Connector class in main sources is built by Connector.fromConfig") {

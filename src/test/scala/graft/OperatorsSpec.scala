@@ -2231,8 +2231,8 @@ class OperatorsSpec extends SparkSpec {
     assert(Graph.hits(edges.limit(0)).count() == 0, "empty graph, empty scores")
   }
 
-  test("connectedComponents: graph-module surface labels components by min id") {
-    val cc = Graph.connectedComponents(
+  test("representatives: connected components of an (a, b) edge list, labelled by min id") {
+    val cc = Dedup.representatives(
       Seq((1L,2L),(2L,3L),(7L,8L),(9L,9L)).toDF("a","b")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cc == Map(1L->1L, 2L->1L, 3L->1L, 7L->7L, 8L->7L, 9L->9L), s"got $cc")

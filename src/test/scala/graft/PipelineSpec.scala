@@ -70,6 +70,30 @@ class PipelineSpec extends SparkSpec {
     assert(java.nio.file.Files.exists(target))
   }
 
+  test("a boolean config field reads only true/false; anything else throws at parse") {
+    Seq(
+      """{"type":"reader","connector":{"type":"mem","data":"a,b"},
+        | "document":{"type":"csv","header":"no"}}""".stripMargin -> "header",
+      """{"type":"reader","stream":1}""" -> "stream",
+      """{"type":"reader","connector":{"type":"curl","endpoint":"http://x","is_cached":"yes"}}"""
+        -> "is_cached"
+    ).foreach { case (step, key) =>
+      val err = intercept[IllegalArgumentException](Pipeline.parse(s"[$step]"))
+      assert(err.getMessage.contains(s"`$key`"), s"$key: ${err.getMessage}")
+    }
+    // a JSON boolean and the text true/false read as themselves
+    Seq("false" -> false, "\"false\"" -> false, "true" -> true, "\"true\"" -> true)
+      .foreach { case (v, want) =>
+        val steps = Pipeline.parse(
+          s"""[{"type":"reader","connector":{"type":"mem","data":"a"},
+             | "document":{"type":"csv","header":$v},"stream":$v}]""".stripMargin).steps
+        val reader = steps.head.asInstanceOf[Pipeline.Reader]
+        assert(reader.stream == want, s"stream: $v")
+        assert(reader.connector.asInstanceOf[graft.sources.InMemoryConnector].opts.header == want,
+          s"header: $v")
+      }
+  }
+
   test("pipeline run: read mem → transform → validate splits ok/err") {
     val flow = Pipeline.run(spark,
       """[

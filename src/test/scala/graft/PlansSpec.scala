@@ -625,9 +625,8 @@ class PlansSpec extends SparkSpec {
     // gate's persisted result replaces the whole tree with a cache scan.
     spark.catalog.clearCache()
     val table = queries.GateIndex.gatePrefix(spark, "graft_graph_gate", sf)
-    val (loopPlan, nd) = operators.Graph.indexRankPlan(spark, table, 5, 1000000L)
-    val plan = executed(loopPlan)
-    nd.unpersist(blocking = false)
+    val plan = operators.LoopSession.holding(held =>
+      executed(operators.Graph.indexRankPlan(held, spark, table, 5, 1000000L)))
     val joins = nodes(plan).flatMap {
       case j: SortMergeJoinExec => j.children
       case j: ShuffledHashJoinExec => j.children
