@@ -2231,7 +2231,7 @@ class OperatorsSpec extends SparkSpec {
     assert(Graph.hits(edges.limit(0)).count() == 0, "empty graph, empty scores")
   }
 
-  test("representatives: connected components of an (a, b) edge list, labelled by min id") {
+  test("representatives: edge-list components labelled by min id") {
     val cc = Dedup.representatives(
       Seq((1L,2L),(2L,3L),(7L,8L),(9L,9L)).toDF("a","b")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
