@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 /** The persist → materialize → release discipline shared by operators
@@ -36,9 +37,15 @@ private[graft] object CacheOps {
     * first read re-executes the whole pipeline (measured: the r16
     * per-job profile showed every graph gate paying its pipeline twice
     * — once materializing, once on the driver's count). Lineage-safe:
-    * the RDD recomputes through the original plan on eviction. */
-  def persistMaterializedDetached(df: DataFrame): DataFrame =
-    persistMaterialized(
-      org.apache.spark.sql.graftbridge.Bridge.truncatePlan(df))
+    * the RDD recomputes through the original plan on eviction. The
+    * materializing count is one raw-RDD job over the cached scan
+    * ([[Bridge.onRdd]]): the truncated plan has no exchange left to
+    * plan, so a Dataset count would only add an aggregate plan, a SQL
+    * execution and a stage. */
+  def persistMaterializedDetached(df: DataFrame): DataFrame = {
+    val p = Bridge.truncatePlan(df).persist(MEMORY_AND_DISK)
+    try { Bridge.onRdd(p)(_.count()); p }
+    catch { case t: Throwable => p.unpersist(blocking = true); throw t }
+  }
 
 }

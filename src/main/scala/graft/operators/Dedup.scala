@@ -416,14 +416,8 @@ object Dedup {
       // the data, dominated sweeps. It runs under the loop session's confs
       // (Bridge.onRdd). Row layout is (id, prev, rep).
       val unchanged: DataFrame => Boolean = state =>
-        org.apache.spark.sql.graftbridge.Bridge.onRdd(state)(_.mapPartitions { it =>
-          var c = 0L
-          while (it.hasNext) {
-            val r = it.next()
-            if (r.isNullAt(1) || r.getLong(1) != r.getLong(2)) c += 1
-          }
-          Iterator.single(c)
-        }.fold(0L)(_ + _)) == 0L
+        LoopSession.fold(state)(0L)((c, r) =>
+          if (r.isNullAt(1) || r.getLong(1) != r.getLong(2)) c + 1L else c)(_ + _) == 0L
       LoopSession.sweep(g.caller,
         edges.groupBy(col("a").as("id"))
           .agg(least(min(col("b")), first(col("a"))).as("rep")),

@@ -461,7 +461,7 @@ object Graph {
     // VERDICT r16 #6
     g.release(g.frame)
     // monotone peel: an unchanged alive count is an unchanged set
-    val stable = LoopSession.repeats(_.count())
+    val stable = LoopSession.repeats(LoopSession.rowCount)
     // the initial state is every node at its full degree; sweep 0's
     // semi-joins against it would filter nothing, so it peels directly
     LoopSession.sweep(g.caller, degreeFrame(eLoop), maxSweeps) { (_, alive, i) =>
@@ -716,6 +716,20 @@ object Graph {
             "id").filter(col("community") =!= col("__prev")).count() == 0L)
     }
 
+  /** `score(e, labels)` over `edges` persisted as `e` and its
+    * [[labelPropagation]] `labels` after `sweeps` sweeps — the modularity
+    * step and the gates that score or refine an LPA labeling. Both caches
+    * are held by one [[LoopSession.holding]] scratch: released when
+    * `score` returns, and (blocking) when the label propagation or
+    * `score` throws. The edge cache persists lazily: the label
+    * propagation's own edge persist fills it. */
+  private[graft] def scoreLabels(edges: DataFrame, sweeps: Int)
+                                (score: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    LoopSession.holding { h =>
+      val e = h.persist(edges)
+      score(e, h.hold(labelPropagation(e, sweeps)))
+    }
+
   /** Single-/multi-source shortest paths by synchronous integer
     * min-relaxation (Bellman-Ford sweeps; with unit weights this IS the
     * BFS depth layer — crawl-depth maps, link-distance features next to
@@ -813,15 +827,15 @@ object Graph {
     * sweep budget (VERDICT r14 #1: a fixed-sweep depth map on a deeper
     * graph silently returns the sweep-S state). Fixed sweeps stay the
     * oracle-gated default: their unrolled SQL replay is exact; this mode
-    * trades that for convergence DETECTION at one extra nodes-sized
-    * aggregate per sweep.
+    * trades that for convergence DETECTION at one nodes-sized fold per
+    * sweep.
     *
     * Convergence is the kCore count-equality trick extended to the
     * monotone PAIR (reached-count, Σdist): between sweeps the reached
     * set only grows and every distance only shrinks, so equal count ⟹
     * no new nodes, and then equal sum ⟹ every distance unchanged —
     * set equality proven from two scalars the per-sweep materializing
-    * aggregate computes in ONE job (the sum runs in decimal so a
+    * fold computes in ONE job (the sum is an exact BigInt, so a
     * planet-scale dist sum cannot wrap into a false equality). Sweeps
     * run through [[LoopSession.sweep]], whose per-sweep persistence also
     * bounds the plan at cache-scan + join + agg instead of the composed
@@ -870,12 +884,11 @@ object Graph {
   private def ssspFixpointLoop(caller: SparkSession,
                                e: DataFrame, d0: DataFrame,
                                maxSweeps: Int): (DataFrame, Int) = {
-    // the monotone-pair scan IS the materializing action: one job
-    val stable = LoopSession.repeats { d =>
-      val row = d.agg(count(lit(1)).as("n"),
-        sum(col("dist").cast("decimal(38,0)")).as("s")).head()
-      (row.getLong(0), String.valueOf(row.get(1)))
-    }
+    // the monotone-pair fold IS the materializing action: one job; the
+    // sum is an exact BigInt. Row layout is (id, dist).
+    val stable = LoopSession.repeats(LoopSession.fold(_)((0L, BigInt(0)))((c, r) =>
+      (c._1 + 1L, if (r.isNullAt(1)) c._2 else c._2 + r.getLong(1)))(
+      (a, b) => (a._1 + b._1, a._2 + b._2)))
     LoopSession.sweep(caller, d0, maxSweeps) { (_, d, _) =>
       LoopSession.Sweep(ssspSweep(e, d), stable)
     }
@@ -918,8 +931,9 @@ object Graph {
     * nodes-sized label/marked frames, and the round's state — every
     * node with its scc, null while still active — is one
     * [[LoopSession.sweep]] state: trim passes and coloring rounds are
-    * sweeps of one loop, nothing collected but a 1-row count pair per
-    * sweep; all in the right-sized cloned loop session. */
+    * sweeps of one loop, each ONE job (the state's count-pair fold,
+    * which fills the round's caches too); all in the right-sized cloned
+    * loop session. */
   /** `trimPasses` > 0 runs that many TRIM passes before each round's
     * coloring (the standard FW-BW accelerator — Hong et al. 2013's
     * trim step): a node with no in-edge or no out-edge WITHIN the
@@ -940,15 +954,16 @@ object Graph {
     LoopSession.onEdges(edges.select(col("src").cast("long"),
         col("dst").cast("long")).distinct()) { g =>
       val e = LoopSession.bindInto(g.frame, g.loop)
+      // Every scratch frame below persists LAZILY: the sweep's signal is
+      // its one job and fills them all (the LoopSession.sweep contract).
       // The node-sized frames a round composes into multi-reference joins
-      // (colors, marks) persist AND truncate: untruncated, the LOGICAL
+      // (colors, marks) persist and truncate: untruncated, the LOGICAL
       // plans grow combinatorially across rounds and the ANALYZER — not
       // the data — hangs by round 3 (measured: minutes on a 7-node
       // fixture). The composed sweeps between them reference their state
       // once per sweep and stay linear.
       def flat(scratch: LoopSession.Scratch, df: DataFrame): DataFrame =
-        Bridge.truncatePlan(
-          scratch.persistMaterialized(df))
+        Bridge.truncatePlan(scratch.persist(df))
       // Edge-shaped round frames (ae, ce) instead persist HASH-PARTITIONED
       // AND SORTED on their sweep-join key, NOT truncated (truncation
       // would erase the layout): the cached scan reports its partitioning
@@ -957,12 +972,11 @@ object Graph {
       // exchange-free and sort-free — only the nodes-sized label/mark
       // frame moves per sweep (guide §2.4).
       def keyed(scratch: LoopSession.Scratch, df: DataFrame, key: String) =
-        scratch.persistMaterialized(
-          df.repartition(col(key)).sortWithinPartitions(col(key)))
+        scratch.persist(df.repartition(col(key)).sortWithinPartitions(col(key)))
       // TRIM: a node with no active in-edge or no active out-edge is its
       // own SCC
       def trim(scratch: LoopSession.Scratch, active: DataFrame): DataFrame = {
-        val aeR = scratch.persistMaterialized(
+        val aeR = scratch.persist(
           e.join(active.select(col("id").as("src")), Seq("src"), "left_semi")
             .join(active.select(col("id").as("dst")), Seq("dst"), "left_semi"))
         val core = active
@@ -1007,14 +1021,16 @@ object Graph {
         fp.join(flat(scratch, m), "id").select(col("id"), col("f").as("found"))
       }
       // the state is every node with its scc label, null while active;
-      // one scan counts the still-active nodes (an empty active set exits)
-      // and the assigned ones (round 0 colors all nodes while it is 0)
+      // one fold counts the still-active nodes (an empty active set exits)
+      // and the assigned ones (round 0 colors all nodes while it is 0).
+      // Row layout is (id, scc).
       var nAssigned = 0L
       val signal: DataFrame => Boolean = state => {
-        val row = state.agg(count(when(col("scc").isNull, lit(1))),
-          count(col("scc"))).head()
-        nAssigned = row.getLong(1)
-        row.getLong(0) == 0L
+        val (active, assigned) = LoopSession.fold(state)((0L, 0L))((c, r) =>
+          if (r.isNullAt(1)) (c._1 + 1L, c._2) else (c._1, c._2 + 1L))(
+          (a, b) => (a._1 + b._1, a._2 + b._2))
+        nAssigned = assigned
+        active == 0L
       }
       // each round is trimPasses trim sweeps, then one coloring sweep
       LoopSession.sweep(g.caller,
@@ -1113,40 +1129,48 @@ object Graph {
     * released after the (triangle-sized) result materializes. */
   def triangleCounts(edges: DataFrame): DataFrame =
     LoopSession.onEdges(edges.select(col("a").cast("long"), col("b").cast("long"))) { g =>
-      val deg = degreeFrame(g.frame)
-      // total-order key packing (deg, id) into one long: orientation and
-      // every downstream comparison become plain integer < on kk.
-      // The packing contract (ids in [0, 2^40), degrees < 2^23) is
-      // ENFORCED here, not just documented — out-of-range ids (e.g. a
-      // config pipeline feeding xxhash64 ids) would otherwise collide
-      // keys and return silently wrong counts. The check rides the
-      // nodes-sized frame, never the edges.
-      val kmap = deg.select(col("id"),
-          assert_true(col("id") >= 0L && col("id") < lit(1099511627776L) &&
-              col("deg") < lit(8388608L),
-            lit("triangleCounts: node ids must be in [0, 2^40) and degrees" +
-              " < 2^23 (remap hashed/negative ids first)")).as("__ck"),
-          (col("deg") * lit(1099511627776L) + col("id")).as("kk"))
-        .filter(col("__ck").isNull).drop("__ck")
-      val ek = g.frame
-        .join(kmap.select(col("id").as("a"), col("kk").as("ka")), "a")
-        .join(kmap.select(col("id").as("b"), col("kk").as("kb")), "b")
-        .select(least(col("ka"), col("kb")).as("ks"),
-          greatest(col("ka"), col("kb")).as("kd"))
-      // oriented edges feed the wedge join twice + the closing probe
-      val ekp = g.persistMaterialized(ek)
-      val wedges = ekp.select(col("ks").as("x"), col("kd").as("y"))
-        .join(ekp.select(col("ks").as("x"), col("kd").as("z")), "x")
-        .filter(col("y") < col("z"))
-      val tri = wedges.join(
-        ekp.select(col("ks").as("y"), col("kd").as("z")), Seq("y", "z"))
-      // DETACHED: the ekp release on return would otherwise recache
-      // (invalidate) the result and re-run the wedge join on first read
-      CacheOps.persistMaterializedDetached(
-        tri.select(explode(array(col("x"), col("y"), col("z"))).as("kk"))
-          .groupBy(col("kk")).agg(count(lit(1)).as("tri"))
-          .select(pmod(col("kk"), lit(1099511627776L)).as("id"), col("tri")))
+      // DETACHED: the oriented-edge release on return would otherwise
+      // recache (invalidate) the result and re-run the wedge join on
+      // first read
+      CacheOps.persistMaterializedDetached(triangles(g))
     }
+
+  /** The (id, tri) plan of [[triangleCounts]] over the held edge frame
+    * of `g`, its oriented edges persisted through `g` — shared by
+    * [[triangleCounts]] and [[clusteringCoefficients]], so the edge frame
+    * is persisted once per call. */
+  private def triangles(g: LoopSession.Edges): DataFrame = {
+    val deg = degreeFrame(g.frame)
+    // total-order key packing (deg, id) into one long: orientation and
+    // every downstream comparison become plain integer < on kk.
+    // The packing contract (ids in [0, 2^40), degrees < 2^23) is
+    // ENFORCED here, not just documented — out-of-range ids (e.g. a
+    // config pipeline feeding xxhash64 ids) would otherwise collide
+    // keys and return silently wrong counts. The check rides the
+    // nodes-sized frame, never the edges.
+    val kmap = deg.select(col("id"),
+        assert_true(col("id") >= 0L && col("id") < lit(1099511627776L) &&
+            col("deg") < lit(8388608L),
+          lit("triangleCounts: node ids must be in [0, 2^40) and degrees" +
+            " < 2^23 (remap hashed/negative ids first)")).as("__ck"),
+        (col("deg") * lit(1099511627776L) + col("id")).as("kk"))
+      .filter(col("__ck").isNull).drop("__ck")
+    val ek = g.frame
+      .join(kmap.select(col("id").as("a"), col("kk").as("ka")), "a")
+      .join(kmap.select(col("id").as("b"), col("kk").as("kb")), "b")
+      .select(least(col("ka"), col("kb")).as("ks"),
+        greatest(col("ka"), col("kb")).as("kd"))
+    // oriented edges feed the wedge join twice + the closing probe
+    val ekp = g.persistMaterialized(ek)
+    val wedges = ekp.select(col("ks").as("x"), col("kd").as("y"))
+      .join(ekp.select(col("ks").as("x"), col("kd").as("z")), "x")
+      .filter(col("y") < col("z"))
+    val tri = wedges.join(
+      ekp.select(col("ks").as("y"), col("kd").as("z")), Seq("y", "z"))
+    tri.select(explode(array(col("x"), col("y"), col("z"))).as("kk"))
+      .groupBy(col("kk")).agg(count(lit(1)).as("tri"))
+      .select(pmod(col("kk"), lit(1099511627776L)).as("id"), col("tri"))
+  }
 
   /** Per-node local clustering coefficient (Watts & Strogatz 1998) —
     * [[triangleCounts]] normalized by the possible wedge count:
@@ -1157,12 +1181,12 @@ object Graph {
     * node in ≥ 1 triangle: (id, tri, deg, cc_num = 2·tri, cc_den =
     * deg·(deg−1), cc) — exact integer rational plus ONE IEEE division,
     * so any engine replays the doubles bit-for-bit. Scale shape: the
-    * triangle count's wedge join plus one nodes-sized keyed join. */
+    * triangle count's wedge join plus one nodes-sized keyed join, over
+    * one edge persist. */
   def clusteringCoefficients(edges: DataFrame): DataFrame =
     LoopSession.onEdges(edges.select(col("a").cast("long"), col("b").cast("long"))) { g =>
-      val tri = g.hold(triangleCounts(g.frame)) // persisted+materialized by contract
       CacheOps.persistMaterializedDetached(
-        tri.join(degreeFrame(g.frame), "id")
+        triangles(g).join(degreeFrame(g.frame), "id")
           .select(col("id"), col("tri"), col("deg"),
             (lit(2L) * col("tri")).as("cc_num"),
             (col("deg") * (col("deg") - 1L)).as("cc_den"),
@@ -1627,12 +1651,13 @@ object Graph {
       labels0.select(col("id").cast("long"), col("community").cast("long")),
       g.loop), sweeps) { (scratch, lab, _) =>
       // per-sweep: the label-dependent joins only
-      val degL = scratch.persistMaterialized(degW.join(lab, "id"))
+      // both per-sweep caches persist lazily: the signal fills them
+      val degL = scratch.persist(degW.join(lab, "id"))
       val dc = degL.groupBy(col("community"))
         .agg(sum(col("deg")).as("dsum"))
       // the one corpus-sized aggregation; referenced twice (own-community
       // lookup + move candidates), hence persisted
-      val evd = scratch.persistMaterialized(
+      val evd = scratch.persist(
         adj.join(lab.select(col("id").as("nbr"), col("community").as("d")),
             "nbr")
           .groupBy(col("node").as("id"), col("d"))

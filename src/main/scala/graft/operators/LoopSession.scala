@@ -42,7 +42,9 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   *  3. EVERY CACHE THROUGH THE HOLDER. Each cache the operator takes is
   *     persisted through its [[Scratch]] ([[holding]] gives one to
   *     operators with no edge frame of their own); [[Scratch.release]]
-  *     drops one early once nothing later reads it.
+  *     drops one early once nothing later reads it. A cache a sweep
+  *     step takes persists lazily, and the sweep's signal fills it
+  *     ([[sweep]], item 2).
   *  4. RELEASE ON EXIT. When the body returns, every held cache but the
   *     returned frame is released; when it throws, all of them are,
   *     blocking, before the error propagates. */
@@ -91,9 +93,9 @@ private[graft] object LoopSession {
     Bridge.rebind(Bridge.truncatePlan(df), loop)
 
   /** One sweep of a [[sweep]] loop: the next state's plan, and its
-    * signal — the sweep's ONE materializing action, run over the
-    * persisted next state (a count, a changed-label count, a
-    * convergence pair, a raw-RDD fold), true once the loop converged. */
+    * signal — the sweep's ONE job, run over the persisted next state
+    * ([[materialize]], [[rowCount]] or another [[fold]]), true once the
+    * loop converged. */
   final case class Sweep(next: DataFrame, signal: DataFrame => Boolean)
 
   /** Which states a [[sweep]] loop holds. */
@@ -118,6 +120,8 @@ private[graft] object LoopSession {
       held ::= df
       df
     }
+    /** Persist `df` lazily: the first job that reads it fills it (inside
+      * a [[sweep]] step, that job is the sweep's signal). */
     def persist(df: DataFrame): DataFrame = hold(df.persist(MEMORY_AND_DISK))
     /** [[persist]], eagerly materialized by a count, which is returned. */
     def persistCounted(df: DataFrame): (DataFrame, Long) = {
@@ -185,18 +189,25 @@ private[graft] object LoopSession {
     *     sweep chain on every later read. Truncation also keeps the
     *     logical plan O(1) per sweep while the RDD lineage keeps
     *     recompute-on-eviction.
-    *  2. SIGNAL IS THE MATERIALIZATION. The step's signal is the one
-    *     full-scan action per sweep: it fills the fresh cache and yields
-    *     the convergence test in the same job — no separate count.
+    *  2. THE SIGNAL IS THE SWEEP'S ONLY JOB, AND IT FILLS EVERY SCRATCH
+    *     CACHE. The step persists its scratch lazily ([[Scratch.persist]])
+    *     and the signal is a raw-RDD fold over the persisted state
+    *     ([[fold]]): one job fills the state's cache and every scratch
+    *     cache the state reads, and yields the convergence test — no
+    *     count per cache, no aggregate plan, no SQL execution. A step
+    *     that needs a value before it can plan the state (HITS's
+    *     per-half max) runs that action itself, and it fills the
+    *     scratch it reads.
     *  3. RELEASE ORDER. The predecessor (under [[Release.Predecessor]])
-    *     and the sweep's [[Scratch]] caches go only after the new state
-    *     has materialized.
+    *     and the sweep's [[Scratch]] caches go only after the signal has
+    *     filled the new state.
     *  4. FAILURE RELEASE. If the step, a signal or the hand-back throws,
     *     every cache the loop still holds — states, scratch, the fresh
     *     persist — is released (blocking) before the error propagates.
     *  5. CALLER-SESSION HAND-BACK. `finish` maps the held states (oldest
     *     first) to the result. The final state itself is handed over as
-    *     is; anything else is persisted detached ([[handBack]]). Every
+    *     is; anything else is persisted detached and filled by one
+    *     raw-RDD count job ([[handBack]]). Every
     *     other state is then released, and the result is rebound to
     *     `caller`, so downstream queries never inherit the loop session's
     *     confs, and the caller's unpersist() releases its cache entry.
@@ -234,9 +245,21 @@ private[graft] object LoopSession {
     }
   }
 
-  /** The fixed-sweep signal: a count materializes the state; never
+  /** The fixed-sweep signal: a [[rowCount]] fills the state; never
     * converges. */
-  val materialize: DataFrame => Boolean = df => { df.count(); false }
+  val materialize: DataFrame => Boolean = df => { rowCount(df); false }
+
+  /** A raw-RDD fold of `df`'s rows (InternalRows in `df`'s column order)
+    * as ONE job under `df`'s session confs ([[Bridge.onRdd]]): over a
+    * persisted state it fills the state's cache, and every lazily
+    * persisted cache the state reads, without planning an aggregate or
+    * opening a SQL execution. */
+  def fold[A: scala.reflect.ClassTag](df: DataFrame)(zero: A)(
+      add: (A, org.apache.spark.sql.catalyst.InternalRow) => A)(merge: (A, A) => A): A =
+    Bridge.onRdd(df)(_.aggregate(zero)(add, merge))
+
+  /** `df`'s row count as one raw-RDD job, like [[fold]]. */
+  def rowCount(df: DataFrame): Long = Bridge.onRdd(df)(_.count())
 
   /** A signal that converges once `measure` repeats the previous sweep's
     * value — the monotone-loop test (an alive count, a (count, Σdist)
@@ -251,10 +274,11 @@ private[graft] object LoopSession {
     }
   }
 
-  /** Persist `result` detached, materialize it, and hand it back rebound
+  /** Persist `result` detached, fill it with one raw-RDD count job
+    * ([[CacheOps.persistMaterializedDetached]]), and hand it back rebound
     * to `caller` — the [[sweep]] hand-back, also used by the composed
     * fixed-count loops (rank, fixed-sweep SSSP), whose single final
-    * action is this materialization. */
+    * action is this fill. */
   def handBack(caller: SparkSession, result: DataFrame): DataFrame =
     Bridge.rebind(CacheOps.persistMaterializedDetached(result), caller)
 }

@@ -4,7 +4,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
 import graft.Fields
 import graft.functions.Template
-import graft.operators.{Bucketing, CacheOps, Curation, Dedup, FuzzyJoin, Graph, Quantiles,
+import graft.operators.{Bucketing, Curation, Dedup, FuzzyJoin, Graph, Quantiles,
   Similarity, Skyline, TextAnalysis, Web}
 import graft.queries.DataOps
 import graft.sources.{CliConnector, Connector, Documents, Http, MongoConnector}
@@ -628,15 +628,7 @@ object Pipeline {
       // label propagation + modularity scoring: one row per community
       case "modularity" =>
         val (edges, sweeps) = (undirected, int("sweeps", 4))
-        rewrite { df =>
-          val e = CacheOps.persistMaterialized(edges(df))
-          val labels = Graph.labelPropagation(e, sweeps)
-          try Graph.modularity(e, labels)
-          finally {
-            e.unpersist(blocking = false)
-            labels.unpersist(blocking = false)
-          }
-        }
+        rewrite(df => Graph.scoreLabels(edges(df), sweeps)(Graph.modularity))
       case "louvain" =>
         val (edges, levels, sweeps) = (undirected, int("levels", 2), int("sweeps", 2))
         rewrite(df => Graph.louvain(edges(df), levels, sweeps))

@@ -4863,15 +4863,8 @@ object DataOps {
     * The oracle replays the 4 LPA sweeps through the shared CTE prefix,
     * then the identical move algebra with a window argmax. */
   def qLouvainStep(spark: SparkSession, dir: String): DataFrame = {
-    val e = graft.operators.CacheOps.persistMaterialized(
-      rareShingleEdges(Tables(spark, dir).documents)
-        .select(col("a").cast("long"), col("b").cast("long")))
-    val labels = Graph.labelPropagation(e, sweeps = 4)
-    try Graph.louvainStep(e, labels)
-    finally {
-      e.unpersist(blocking = false)
-      labels.unpersist(blocking = false)
-    }
+    Graph.scoreLabels(rareShingleEdges(Tables(spark, dir).documents)
+      .select(col("a").cast("long"), col("b").cast("long")), sweeps = 4)(Graph.louvainStep)
   }
 
   val qLouvainStepSql: String =
@@ -4984,15 +4977,8 @@ object DataOps {
     * the shared CTE prefix, then the exact integer contribution algebra
     * q_num = 4·m·m_c − d_c² and ONE IEEE division for q. */
   def qModularity(spark: SparkSession, dir: String): DataFrame = {
-    val e = graft.operators.CacheOps.persistMaterialized(
-      rareShingleEdges(Tables(spark, dir).documents)
-        .select(col("a").cast("long"), col("b").cast("long")))
-    val labels = Graph.labelPropagation(e, sweeps = 4)
-    try Graph.modularity(e, labels)
-    finally {
-      e.unpersist(blocking = false)
-      labels.unpersist(blocking = false)
-    }
+    Graph.scoreLabels(rareShingleEdges(Tables(spark, dir).documents)
+      .select(col("a").cast("long"), col("b").cast("long")), sweeps = 4)(Graph.modularity)
   }
 
   val qModularitySql: String =

@@ -1,8 +1,13 @@
 package graft
 
 import graft.operators.{Dedup, Graph, LoopSession}
+import graft.pipeline.{Pipeline, QueryMetricsListener}
+import graft.queries.DataOps
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, RepartitionByExpression}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -159,6 +164,146 @@ class LoopSessionSpec extends SparkSpec {
         s"$name failed for another reason: $err")
       assertNoCaches(s"failed $name")
     }
+  }
+
+  /** The message chain of `t` names `what`. */
+  private def causedBy(t: Throwable, what: String): Boolean =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains(what))
+
+  /** A clone of the test session whose optimizer rejects label
+    * propagation's adjacency plan (its repartition on `nbr`), so the
+    * labels step throws once the caller's edge cache exists. */
+  private def labelsFail: SparkSession = {
+    val s = Bridge.sessionWithConf(spark, Map.empty)
+    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+      .extraOptimizations = Seq(new Rule[LogicalPlan] {
+        def apply(plan: LogicalPlan): LogicalPlan = {
+          plan.foreach {
+            case r: RepartitionByExpression
+                if r.partitionExpressions.exists(_.references.exists(_.name == "nbr")) =>
+              throw new IllegalStateException("labels fail")
+            case _ => ()
+          }
+          plan
+        }
+      })
+    s
+  }
+
+  test("a modularity or louvain-step site whose labels step throws leaves no cache") {
+    val src = java.nio.file.Files.createTempDirectory("graft-mod").toString + "/edges.parquet"
+    undirected.toDF("src", "dst").write.parquet(src)
+    Seq[(String, SparkSession => Any)](
+      ("modularity step", s => Pipeline.run(s,
+        s"""[{"type":"reader","connector":{"type":"local","path":"$src"},
+           |  "document":{"type":"parquet"}},
+           | {"type":"modularity","src":"src","dst":"dst","sweeps":4}]""".stripMargin)),
+      ("q_modularity", s => DataOps.qModularity(s, sf)),
+      ("q_louvain_step", s => DataOps.qLouvainStep(s, sf))).foreach { case (site, run) =>
+      clearCaches()
+      val err = intercept[Exception](run(labelsFail))
+      assert(causedBy(err, "labels fail"), s"$site failed for another reason: $err")
+      assertNoCaches(s"failed $site")
+    }
+  }
+
+  /** Cancels, as it starts, the `n`-th job that runs outside any SQL
+    * execution (a raw-RDD signal or fill). */
+  private final class CancelRddJob(n: Int) extends SparkListener {
+    private var seen = 0
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (Option(e.properties).forall(_.getProperty("spark.sql.execution.id") == null)) {
+        seen += 1
+        if (seen == n) spark.sparkContext.cancelJob(e.jobId, "sweep 2's signal fails")
+      }
+  }
+
+  test("scc whose signal fails in its second sweep, over lazy scratch caches, leaves no cache") {
+    clearCaches()
+    // sweep 1 trims, sweep 2 colors: its signal is the job that would
+    // fill the lazily persisted ae/fp/ce/marks caches
+    val cancel = new CancelRddJob(2)
+    Bridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(cancel)
+    val err =
+      try intercept[Exception](Graph.stronglyConnectedComponents(directed, rounds = 3,
+        sweeps = 4, trimPasses = 1))
+      finally {
+        Bridge.drainListenerBus(spark)
+        spark.sparkContext.removeSparkListener(cancel)
+      }
+    assert(causedBy(err, "sweep 2's signal fails"), s"scc failed for another reason: $err")
+    assertNoCaches("failed scc")
+  }
+
+  test("every *FromIndex loop leaves only its result cache, and none when the index throws") {
+    // forward rows run even -> odd, so the symmetrized build's reverse
+    // rows are the ones with an odd src
+    val fwd = directed.select((col("src") * 2L).as("src"), (col("dst") * 2L + 1L).as("dst"))
+    spark.sql("DROP TABLE IF EXISTS loop_idx_spec")
+    Graph.buildGraphIndex(fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst"))),
+      "loop_idx_spec", buckets = 2)
+    try {
+      // the same rows, but reading a real row's dst throws (self rows
+      // pass, so the node frame persists before the failure)
+      spark.read.table("loop_idx_spec").withColumn("dst",
+          when(col("self"), col("dst"))
+            .when(assert_true(col("dst") < 0L, lit("input fails")).isNull, col("dst")))
+        .createOrReplaceTempView("loop_idx_spec_bad")
+      val forward = col("src") % 2L === 0L
+      Seq[(String, String => DataFrame)](
+        ("pageRankFromIndex", t => Graph.pageRankFromIndex(spark, t)),
+        ("hitsFromIndex", t => Graph.hitsFromIndex(spark, t, forward)),
+        ("randomWalksFromIndex", t => Graph.randomWalksFromIndex(spark, t, steps = 3)))
+        .foreach { case (name, run) =>
+          clearCaches()
+          val out = run("loop_idx_spec")
+          assert(out.storageLevel.useMemory, s"$name returned an uncached result")
+          assert(spark.sparkContext.getPersistentRDDs.size == 1,
+            s"$name left ${spark.sparkContext.getPersistentRDDs.size} persisted RDDs")
+          out.unpersist(blocking = true)
+          assertNoCaches(s"released $name result")
+          val err = intercept[Exception](run("loop_idx_spec_bad"))
+          assert(causedBy(err, "input fails"), s"$name failed for another reason: $err")
+          assertNoCaches(s"failed $name")
+        }
+    } finally {
+      spark.sql("DROP VIEW IF EXISTS loop_idx_spec_bad")
+      spark.sql("DROP TABLE IF EXISTS loop_idx_spec")
+    }
+  }
+
+  /** The jobs an edge-frame operator runs after its edge persist (the
+    * operator's only SQL execution), and the SQL executions it opens. */
+  private def jobsAfterEdgePersist(run: => DataFrame)
+      : (Seq[QueryMetricsListener.JobRecord], Long) = {
+    val (out, l) = QueryMetricsListener.during(spark)(run)
+    out.unpersist(blocking = true)
+    (l.jobs.dropWhile(_.sqlDesc.nonEmpty), l.sqlExecutionsStarted.sum())
+  }
+
+  test("a sweep runs one job, its signal, and opens no SQL execution") {
+    // OperatorsSpec's SCC fixture: two cycles joined by a tail
+    val twoCycles = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 6L),
+      (6L, 5L), (7L, 1L)).toDF("src", "dst")
+    Seq(
+      // rounds {1,2,3,7}, {4}, {5,6}: three coloring sweeps
+      ("scc", () => Graph.stronglyConnectedComponents(twoCycles, rounds = 3, sweeps = 4), 3),
+      // trim {7}, color {1,2,3}, trim {4}, color {5,6}: then nothing is active
+      ("scc with trim", () => Graph.stronglyConnectedComponents(twoCycles, rounds = 3,
+        sweeps = 4, trimPasses = 1), 4)).foreach { case (what, run, sweeps) =>
+      val (jobs, sqls) = jobsAfterEdgePersist(run())
+      // one signal per sweep, then the hand-back's fill
+      assert(jobs.size == sweeps + 1, s"$what ran ${jobs.size} jobs for $sweeps sweeps")
+      assert(jobs.forall(_.sqlDesc.isEmpty) && sqls == 1L,
+        s"$what opened ${sqls - 1} SQL executions after its edge persist")
+    }
+    // a fixed-sweep materialize loop whose final state is the hand-back
+    val (jobs, sqls) = jobsAfterEdgePersist(Graph.labelPropagation(undirected, sweeps = 4))
+    assert(jobs.size == 4, s"labelPropagation ran ${jobs.size} jobs for 4 sweeps")
+    assert(jobs.forall(_.sqlDesc.isEmpty) && sqls == 1L,
+      s"labelPropagation opened ${sqls - 1} SQL executions after its edge persist")
   }
 
   /** Janino compiles so far in this JVM. */

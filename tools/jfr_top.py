@@ -5,15 +5,22 @@ their CPU, and how much of it goes to code generation.
 Input is the JSON that the JDK's `jfr` tool prints for execution samples:
 
     jfr print --json --stack-depth 64 --events jdk.ExecutionSample g.jfr > g.json
-    python3 tools/jfr_top.py g.json [--skip 0.5] [--top 12] [--threads 6]
+    python3 tools/jfr_top.py g.json [--skip 0.5] [--window START:END]
+        [--top 12] [--threads 6]
 
-The leading `--skip` share of samples (by sample time) is dropped, so a
-recording that covers JVM start, Spark warm-up and the first executions
+`--window START:END` keeps the samples taken from START to END seconds after
+the first sample (either bound may be left out), so one execution, such as
+the cold first one, can be read alone. The leading `--skip` share of the
+samples kept is then dropped (default 0.5 without a window, 0 with one), so
+a recording that covers JVM start, Spark warm-up and the first executions
 can be read for its warm tail only. It prints samples per thread (numbered
 threads folded into one name: every task thread is one "Executor task launch
 worker"), each thread's top self and inclusive frames, and fixed buckets:
-Janino compile, code generation (Janino included), closure cleaning and
-analyzer. A sample counts in a bucket when any frame of its stack matches.
+Janino compile, code generation (Janino included), closure cleaning,
+analyzer, optimizer, call-site capture and task (de)serialization, each over
+all threads, the `main` thread (which plans and submits the jobs) and the
+executor task threads.
+A sample counts in a bucket when any frame of its stack matches.
 
 The file is read as a stream of events, so recordings of a few hundred MB
 of JSON do not have to fit in memory as one document. Stdlib only.
@@ -33,6 +40,11 @@ BUCKETS = [
     ("closure cleaning", lambda c, m: c.startswith("org.apache.spark.util.")
         and "ClosureCleaner" in c),
     ("analyzer", lambda c, m: c.startswith("org.apache.spark.sql.catalyst.analysis.")),
+    ("optimizer", lambda c, m: c.startswith("org.apache.spark.sql.catalyst.optimizer.")),
+    ("call-site capture", lambda c, m: c.startswith("org.apache.spark.util.Utils")
+        and m == "getCallSite"),
+    ("task (de)serialization", lambda c, m: c.startswith(
+        ("java.io.ObjectInputStream", "java.io.ObjectOutputStream"))),
 ]
 
 _TIME = re.compile(r"(\d+)-(\d+)-(\d+)T(\d+):(\d+):(\d+)(?:\.(\d+))?")
@@ -122,19 +134,37 @@ def load(path):
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("json", help="output of jfr print --json (- for stdin)")
-    ap.add_argument("--skip", type=float, default=0.5,
-                    help="leading share of samples to drop as warm-up (default 0.5)")
+    ap.add_argument("--skip", type=float, default=None,
+                    help="leading share of samples to drop as warm-up "
+                         "(default 0.5, or 0 with --window)")
+    ap.add_argument("--window", default=None, metavar="START:END",
+                    help="keep only samples START to END seconds after the first one")
     ap.add_argument("--top", type=int, default=12, help="frames listed per thread")
     ap.add_argument("--threads", type=int, default=6, help="threads listed")
     a = ap.parse_args()
-    if not 0.0 <= a.skip < 1.0:
+    window = None
+    if a.window is not None:
+        lo, sep, hi = a.window.partition(":")
+        try:
+            window = (float(lo) if lo else 0.0, float(hi) if hi else float("inf"))
+        except ValueError:
+            window = None
+        if not sep or window is None or window[0] >= window[1]:
+            ap.error("--window wants START:END seconds with START < END")
+    skip = a.skip if a.skip is not None else (0.0 if window else 0.5)
+    if not 0.0 <= skip < 1.0:
         ap.error("--skip must be in [0, 1)")
 
     samples = sorted(load(a.json), key=lambda s: s[0])
     total = len(samples)
-    samples = samples[int(total * a.skip):]
+    if window and samples:
+        t0 = samples[0][0]
+        samples = [s for s in samples if window[0] <= s[0] - t0 < window[1]]
+        print(f"window: {window[0]:g} s to {window[1]:g} s after the first sample, "
+              f"{len(samples)} samples")
+    samples = samples[int(len(samples) * skip):]
     n = len(samples)
-    print(f"samples: {total} recorded, {n} kept after skipping the first {a.skip:.0%}")
+    print(f"samples: {total} recorded, {n} kept after skipping the first {skip:.0%}")
     if not n:
         return
 
@@ -157,14 +187,16 @@ def main():
         for name, k in incl_c.most_common(a.top):
             print(f"    {k:7d}  {k / c:6.1%}  {name}")
 
-    executor = [s for s in samples if s[1].startswith("Executor task launch worker")]
-    print(f"\nbuckets (all threads: {n} samples; executor task threads: "
-          f"{len(executor)} samples)")
+    groups = [("all", samples), ("main", [s for s in samples if s[1] == "main"]),
+              ("executor", [s for s in samples
+                            if s[1].startswith("Executor task launch worker")])]
+    print("\nbuckets (" + "; ".join(f"{g}: {len(ss)} samples" for g, ss in groups) + ")")
     for label, match in BUCKETS:
-        hit = [any(match(cl, m) for cl, m in fr) for _, _, fr in samples]
-        ex = [any(match(cl, m) for cl, m in fr) for _, _, fr in executor]
-        print(f"  {label:17s} {sum(hit):7d}  {sum(hit) / n:6.1%}   "
-              f"executor {sum(ex):7d}  {sum(ex) / max(len(executor), 1):6.1%}")
+        cells = []
+        for g, ss in groups:
+            k = sum(any(match(cl, m) for cl, m in fr) for _, _, fr in ss)
+            cells.append(f"{g} {k:7d} {k / max(len(ss), 1):6.1%}")
+        print(f"  {label:22s} " + "   ".join(cells))
 
 
 if __name__ == "__main__":
