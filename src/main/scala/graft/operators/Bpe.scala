@@ -70,23 +70,14 @@ object Bpe {
   /** Train `numMerges` BPE merges over the corpus. Returns the ranked
     * merge list (apply in order to encode). Stops early if the symbol
     * table runs out of adjacent pairs (tiny corpora). */
-  def train(docs: DataFrame, textCol: String, numMerges: Int): Seq[(String, String)] = {
-    // Each localCheckpoint persists a fresh RDD; with numMerges iterations
-    // a training run would strand numMerges+1 vocab-sized persisted
-    // datasets for the JVM lifetime. The result is a driver-side Seq, so
-    // every checkpoint is released the moment its successor is
-    // materialized (tracked by persistent-RDD id diff — Dataset.unpersist
-    // doesn't reach localCheckpoint blocks, they live outside the
-    // CacheManager).
-    val sc = docs.sparkSession.sparkContext
-    def snap(): Set[Int] = sc.getPersistentRDDs.keySet.toSet
-    def drop(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    var before = snap()
-    var words = wordFreqs(docs, textCol)
-      .select(charSyms(col("word")).as("syms"), col("cnt"))
-      .localCheckpoint()
-    var prevIds = snap() -- before
+  def train(docs: DataFrame, textCol: String, numMerges: Int)
+      : Seq[(String, String)] = CacheOps.holding { h =>
+    // Each merge's symbol table is a local checkpoint held by `h`: the
+    // result is a driver-side Seq, so every checkpoint is released once
+    // its successor has materialized, and the last on return (or all of
+    // them, if a merge pass throws).
+    var words = h.checkpoint(wordFreqs(docs, textCol)
+      .select(charSyms(col("word")).as("syms"), col("cnt")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var exhausted = false
     while (merges.size < numMerges && !exhausted) {
@@ -96,15 +87,12 @@ object Bpe {
       else {
         val (a, b) = (top(0).getString(0), top(0).getString(1))
         merges += ((a, b))
-        before = snap()
-        words = words
-          .select(mergePass(col("syms"), a, b).as("syms"), col("cnt"))
-          .localCheckpoint()
-        drop(prevIds)
-        prevIds = snap() -- before
+        val next = h.checkpoint(
+          words.select(mergePass(col("syms"), a, b).as("syms"), col("cnt")))
+        h.release(words)
+        words = next
       }
     }
-    drop(prevIds)
     merges.toSeq
   }
 

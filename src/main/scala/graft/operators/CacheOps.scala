@@ -4,48 +4,110 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-/** The persist → materialize → release discipline shared by operators
-  * that reference a corpus-scale frame from several plan branches
-  * (Catalyst does not reuse common subtrees, so a lazy frame would
-  * re-execute per reference). */
+/** The ONE cache policy of every operator that references a frame from
+  * several plan branches (Catalyst does not reuse common subtrees, so a
+  * lazy frame would re-execute per reference): the operator persists
+  * that frame, reads it, and releases it. No operator or streaming
+  * operator names a storage level or calls `unpersist` or
+  * `localCheckpoint` itself (`OneFactorySpec` pins it); it takes every
+  * cache through a holder. Caches a caller owns past the call stay with
+  * that caller: `DataOps.stableRanks`, `Pipeline`'s incremental-dedup
+  * checkpoint and shared-split rows, and `sources.Pages`.
+  *
+  * CONTRACT of the holder ([[Scratch]], opened by [[holding]], by
+  * `LoopSession.onEdges` for a graph operator, and per sweep inside
+  * `LoopSession.sweep`):
+  *  1. ONE LEVEL. Every cache is `MEMORY_AND_DISK` and keeps its lineage,
+  *     so an evicted block recomputes ([[Scratch.checkpoint]] alone cuts
+  *     the lineage, for a loop whose plan would otherwise grow).
+  *  2. LAZY OR COUNTED. [[Scratch.persist]] marks a frame and lets the
+  *     first job that reads it fill it; [[Scratch.persistCounted]] fills
+  *     it at once with a count and returns the count.
+  *  3. DETACH A RESULT. A result materialized before the caches it was
+  *     computed from go is taken with [[Scratch.detached]]: its plan is
+  *     truncated to a flat scan of its execution RDD before it persists,
+  *     so its cache entry references no held cache. Spark's
+  *     non-cascading unpersist RECACHES dependent entries (discarding
+  *     their just-built buffers), so an undetached result would be
+  *     invalidated by the very release that follows it and the caller's
+  *     first read would re-execute the whole operator.
+  *  4. RELEASE ON EXIT. When the body returns, every held cache but the
+  *     returned frame is released, non-blocking; when it throws, all of
+  *     them are, blocking, before the error propagates — a failed
+  *     operator strands nothing in the CacheManager or the block
+  *     manager. [[Scratch.release]] drops one cache early, once nothing
+  *     the operator runs later reads it. */
 private[graft] object CacheOps {
 
-  /** Persist and eagerly materialize `df`; if the materializing action
-    * itself fails, the fresh cache is released before the error
-    * propagates — otherwise a failed operator strands a corpus-sized
-    * cache in the session's CacheManager with no owner. */
-  def persistMaterialized(df: DataFrame): DataFrame =
-    persistMaterializedCounted(df)._1
+  /** The caches an operator holds, each with its release. */
+  class Scratch private[operators] () {
+    private var held: List[(DataFrame, Boolean => Unit)] = Nil
 
-  /** [[persistMaterialized]], also returning the row count the
-    * materializing action produced — loops that need the count for
-    * convergence checks must not pay a second count job per round. */
-  def persistMaterializedCounted(df: DataFrame): (DataFrame, Long) = {
-    val p = df.persist(MEMORY_AND_DISK)
-    try { (p, p.count()) }
-    catch { case t: Throwable => p.unpersist(blocking = true); throw t }
+    private def take(df: DataFrame, release: Boolean => Unit): DataFrame = {
+      held ::= (df -> release)
+      df
+    }
+
+    /** Hold an already-persisted frame (a hand-back the operator reads
+      * but does not return). */
+    def hold(df: DataFrame): DataFrame = take(df, blocking => { df.unpersist(blocking); () })
+
+    /** Persist `df` lazily: the first job that reads it fills it (inside
+      * a `LoopSession.sweep` step, that job is the sweep's signal). */
+    def persist(df: DataFrame): DataFrame = hold(df.persist(MEMORY_AND_DISK))
+
+    /** [[persist]], eagerly filled by a count, which is returned. */
+    def persistCounted(df: DataFrame): (DataFrame, Long) = {
+      val p = persist(df)
+      (p, p.count())
+    }
+
+    def persistMaterialized(df: DataFrame): DataFrame = persistCounted(df)._1
+
+    /** `df` persisted over its truncated plan and filled by one raw-RDD
+      * count job ([[Bridge.onRdd]]: the truncated plan has no exchange
+      * left, so a Dataset count would only add an aggregate plan, a SQL
+      * execution and a stage) — the result form of item 3. */
+    def detached(df: DataFrame): DataFrame = {
+      val p = persist(Bridge.truncatePlan(df))
+      Bridge.onRdd(p)(_.count())
+      p
+    }
+
+    /** `df` as a local checkpoint, filled by one raw-RDD count job: its
+      * lineage is cut, so nothing recomputes it once released
+      * ([[Bridge.releaseLocalCheckpoint]], the block-manager release a
+      * Dataset unpersist does not reach). Held before it fills, so a
+      * failing fill releases it too. */
+    def checkpoint(df: DataFrame): DataFrame = {
+      val cp = df.localCheckpoint(eager = false)
+      take(cp, Bridge.releaseLocalCheckpoint(cp, _))
+      Bridge.onRdd(cp)(_.count())
+      cp
+    }
+
+    /** Release `df` now: nothing the operator runs later reads it. */
+    def release(df: DataFrame): Unit = {
+      val (mine, rest) = held.partition(_._1 eq df)
+      held = rest
+      mine.foreach(_._2(false))
+    }
+
+    private[operators] def releaseAll(blocking: Boolean, keep: Any = null): Unit = {
+      held.filterNot(_._1 eq keep.asInstanceOf[AnyRef]).foreach(_._2(blocking))
+      held = Nil
+    }
   }
 
-  /** [[persistMaterialized]] DECOUPLED from the input caches it was
-    * computed from: the plan is truncated to a flat scan of its
-    * execution RDD before persisting, so the cached plan references no
-    * upstream InMemoryRelation. Required for every RESULT an operator
-    * materializes immediately before releasing its inputs — Spark's
-    * non-cascading unpersist RECACHES dependent entries (discarding
-    * their just-built buffers), so an undetached result cache is
-    * invalidated by the very release that follows it and the caller's
-    * first read re-executes the whole pipeline (measured: the r16
-    * per-job profile showed every graph gate paying its pipeline twice
-    * — once materializing, once on the driver's count). Lineage-safe:
-    * the RDD recomputes through the original plan on eviction. The
-    * materializing count is one raw-RDD job over the cached scan
-    * ([[Bridge.onRdd]]): the truncated plan has no exchange left to
-    * plan, so a Dataset count would only add an aggregate plan, a SQL
-    * execution and a stage. */
-  def persistMaterializedDetached(df: DataFrame): DataFrame = {
-    val p = Bridge.truncatePlan(df).persist(MEMORY_AND_DISK)
-    try { Bridge.onRdd(p)(_.count()); p }
-    catch { case t: Throwable => p.unpersist(blocking = true); throw t }
-  }
+  /** Run `body` with an operator-lifetime [[Scratch]], released as the
+    * contract's item 4 states. */
+  def holding[A](body: Scratch => A): A = within(new Scratch)(body)
 
+  private[operators] def within[S <: Scratch, A](held: S)(body: S => A): A = {
+    val out =
+      try body(held)
+      catch { case t: Throwable => held.releaseAll(blocking = true); throw t }
+    held.releaseAll(blocking = false, keep = out)
+    out
+  }
 }

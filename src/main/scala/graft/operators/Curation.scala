@@ -60,6 +60,17 @@ object Curation {
       sum(when(col("is_t"), 1L).otherwise(0L)).as("t"),
       count(lit(1)).as("r"))
 
+  /** [[bucketCounts]] collected once (≤ `buckets` rows, driver-sized by
+    * construction — the ratio table broadcasts anyway) into a local
+    * (b, t, r) frame, with the target and raw totals (T, R). Every reuse
+    * reads the local rows, never the gram explode again. */
+  private def localCounts(stream: DataFrame): (DataFrame, Long, Long) = {
+    val rows = bucketCounts(stream).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    (stream.sparkSession.createDataFrame(rows).toDF("b", "t", "r"),
+      rows.map(_._2).sum, rows.map(_._3).sum)
+  }
+
   /** Deterministic oracle-exact selection — the FULL-gate path (the
     * portable-simhash-twin pattern; the paper's log estimator is
     * [[dsirLogWeights]]). Per bucket, with add-1 smoothed evidence
@@ -84,16 +95,10 @@ object Curation {
   def dsirSelect(docs: DataFrame, isTarget: Column, k: Int,
                  buckets: Int = 1024, scale: Long = 10000L): DataFrame = {
     val stream = featureStream(docs.withColumn("is_t", isTarget), buckets)
-    // the B-row count table feeds totals AND the ratio join — without the
-    // eager localCheckpoint each reuse re-derives the whole gram explode +
-    // two-phase agg (plan audit showed 3 redundant corpus passes)
-    val counts = bucketCounts(stream).localCheckpoint()
-    val totals = counts.agg(sum(col("t")).as("tt"), sum(col("r")).as("rr"))
-    val tn = (col("t") + 1L).cast("double") *
-      (col("rr") + buckets.toLong).cast("double")
-    val rn = (col("r") + 1L).cast("double") *
-      (col("tt") + buckets.toLong).cast("double")
-    val lr = counts.crossJoin(broadcast(totals)).select(col("b"),
+    val (counts, tt, rr) = localCounts(stream)
+    val tn = (col("t") + 1L).cast("double") * lit(rr + buckets).cast("double")
+    val rn = (col("r") + 1L).cast("double") * lit(tt + buckets).cast("double")
+    val lr = counts.select(col("b"),
       (floor(lit(2.0 * scale) * tn / (tn + rn)) - scale).as("lr"))
     stream.filter(!col("is_t"))
       .join(broadcast(lr), "b")
@@ -159,22 +164,20 @@ object Curation {
           .otherwise(array().cast("array<string>"))).as("g"))
       .select(col("s"), conv(substring(md5(col("g")), 1, 15), 16, 10)
         .cast("long").as("h"))
-    val sk = CacheOps.persistMaterialized(
-      hashed.groupBy(col("s"))
+    CacheOps.holding { h =>
+      val sk = h.persistMaterialized(hashed.groupBy(col("s"))
         .agg(graft.plans.Native.bottomKDistinct(col("h"), k).as("sk")))
-    try {
       val a = sk.select(col("s").as("src_a"), col("sk").as("sa"))
       val b = sk.select(col("s").as("src_b"), col("sk").as("sb"))
       val u = slice(array_sort(array_union(col("sa"), col("sb"))), 1, k)
       val both = size(array_intersect(array_intersect(u, col("sa")), col("sb")))
-      // DETACHED: the sk release right below would otherwise recache
+      // DETACHED: the sk release on return would otherwise recache
       // (invalidate) the result and re-run the sketch build on first read
-      CacheOps.persistMaterializedDetached(
-        a.join(b, col("src_a") < col("src_b"))
-          .select(col("src_a"), col("src_b"),
-            size(u).cast("bigint").as("n_union"), both.cast("bigint").as("n_both"),
-            (both.cast("double") / size(u).cast("double")).as("jaccard_est")))
-    } finally sk.unpersist(blocking = false)
+      h.detached(a.join(b, col("src_a") < col("src_b"))
+        .select(col("src_a"), col("src_b"),
+          size(u).cast("bigint").as("n_union"), both.cast("bigint").as("n_both"),
+          (both.cast("double") / size(u).cast("double")).as("jaccard_est")))
+    }
   }
 
   /** Ĵ from two one-row sketch frames (columns sa / sb). */
@@ -248,39 +251,36 @@ object Curation {
     * ulps, so the trained path is spec-gated on fixtures instead. */
   def trainQualityLR(docs: DataFrame, isTarget: Column, buckets: Int = 1024,
                      iters: Int = 8, lr: Double = 0.5,
-                     l2: Double = 0.0): DataFrame = {
+                     l2: Double = 0.0): DataFrame = CacheOps.holding { h =>
     val spark = docs.sparkSession
-    val feats = featureCounts(docs.withColumn("is_t", isTarget), buckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var w = Array.fill(buckets + 1)(0.0) // index buckets = bias
-      for (_ <- 0 until iters) {
-        val wDf = spark.createDataFrame(
-          w.zipWithIndex.map { case (v, i) =>
-            (if (i == buckets) -1L else i.toLong, v)
-          }.toIndexedSeq).toDF("b", "w")
-        val bias = w(buckets)
-        val margins = feats.join(broadcast(wDf), "b")
-          .groupBy(col("doc_id"), col("is_t"))
-          .agg(sum(col("c") * col("w")).as("dot"))
-          .select(col("doc_id"), col("is_t"),
-            (lit(1.0) / (lit(1.0) + exp(-(col("dot") + lit(bias)))) -
-              when(col("is_t"), 1.0).otherwise(0.0)).as("err"))
-        val grad = feats.join(margins.select(col("doc_id"), col("err")), "doc_id")
-          .groupBy(col("b")).agg(sum(col("err") * col("c")).as("g"))
-          .unionAll(margins.agg(sum(col("err")).as("g"))
-            .select(lit(-1L).as("b"), col("g")))
-          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-        w = w.zipWithIndex.map { case (v, i) =>
-          val b = if (i == buckets) -1L else i.toLong
-          v - lr * (grad.getOrElse(b, 0.0) + l2 * v)
-        }
-      }
-      spark.createDataFrame(
+    val feats = h.persist(featureCounts(docs.withColumn("is_t", isTarget), buckets))
+    var w = Array.fill(buckets + 1)(0.0) // index buckets = bias
+    for (_ <- 0 until iters) {
+      val wDf = spark.createDataFrame(
         w.zipWithIndex.map { case (v, i) =>
           (if (i == buckets) -1L else i.toLong, v)
         }.toIndexedSeq).toDF("b", "w")
-    } finally { feats.unpersist(); () }
+      val bias = w(buckets)
+      val margins = feats.join(broadcast(wDf), "b")
+        .groupBy(col("doc_id"), col("is_t"))
+        .agg(sum(col("c") * col("w")).as("dot"))
+        .select(col("doc_id"), col("is_t"),
+          (lit(1.0) / (lit(1.0) + exp(-(col("dot") + lit(bias)))) -
+            when(col("is_t"), 1.0).otherwise(0.0)).as("err"))
+      val grad = feats.join(margins.select(col("doc_id"), col("err")), "doc_id")
+        .groupBy(col("b")).agg(sum(col("err") * col("c")).as("g"))
+        .unionAll(margins.agg(sum(col("err")).as("g"))
+          .select(lit(-1L).as("b"), col("g")))
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      w = w.zipWithIndex.map { case (v, i) =>
+        val b = if (i == buckets) -1L else i.toLong
+        v - lr * (grad.getOrElse(b, 0.0) + l2 * v)
+      }
+    }
+    spark.createDataFrame(
+      w.zipWithIndex.map { case (v, i) =>
+        (if (i == buckets) -1L else i.toLong, v)
+      }.toIndexedSeq).toDF("b", "w")
   }
 
   /** Score every doc with trained weights: (doc_id, score) where score
@@ -306,13 +306,11 @@ object Curation {
   def dsirLogWeights(docs: DataFrame, isTarget: Column,
                      buckets: Int = 1024): DataFrame = {
     val stream = featureStream(docs.withColumn("is_t", isTarget), buckets)
-    val counts = bucketCounts(stream).localCheckpoint() // see dsirSelect
-    val totals = counts.agg(sum(col("t")).as("tt"), sum(col("r")).as("rr"))
-    val lr = counts.crossJoin(broadcast(totals))
-      .select(col("b"), log(
-        ((col("t") + 1L) * (col("rr") + buckets.toLong)).cast("double") /
-          ((col("r") + 1L) * (col("tt") + buckets.toLong)).cast("double"))
-        .as("lr"))
+    val (counts, tt, rr) = localCounts(stream)
+    val lr = counts.select(col("b"), log(
+        ((col("t") + 1L) * lit(rr + buckets)).cast("double") /
+          ((col("r") + 1L) * lit(tt + buckets)).cast("double"))
+      .as("lr"))
     stream.filter(!col("is_t"))
       .join(broadcast(lr), "b")
       .groupBy(col("doc_id")).agg(sum(col("lr")).as("logw"))

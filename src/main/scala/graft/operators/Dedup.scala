@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 /** Deduplication operators (SURVEY §2.5 #44-47): exact, MinHash+LSH,
   * SimHash, n-gram Jaccard verification.
@@ -228,7 +227,7 @@ object Dedup {
     * joined token sets. ⌈t·n⌉ is computed as (tNum·n + tDen − 1) div tDen
     * — all integer, so prefix lengths are reproducible anywhere. */
   def jaccardJoin(df: DataFrame, idCol: String, textCol: String,
-                  tNum: Int, tDen: Int, maxBucket: Int = 4096): DataFrame = {
+                  tNum: Int, tDen: Int, maxBucket: Int = 4096): DataFrame = CacheOps.holding { h =>
     require(tNum > 0 && tNum <= tDen, s"threshold must be in (0,1]: $tNum/$tDen")
     // strings never leave the scan: tokens become xxhash64 longs at the
     // explode (the MinHash-family precedent — hashed-set Jaccard equals
@@ -246,28 +245,24 @@ object Dedup {
     // Persist both, materialize in dependency order, release as soon as
     // the last consumer is materialized — 100 TB cost: one tokenize pass
     // + cached (spillable) reads, instead of six corpus scans.
-    val toks = sets.select(col("id"), explode(col("stoks")).as("stok"))
-      .select(col("id"), xxhash64(col("stok")).as("tok"))
-      .persist(MEMORY_AND_DISK)
+    val toks = h.persist(sets.select(col("id"), explode(col("stoks")).as("stok"))
+      .select(col("id"), xxhash64(col("stok")).as("tok")))
     // see cpuWidth below — the re-collect agg is equally CPU-dense
     val cpuWidth = math.max(
       df.sparkSession.sparkContext.defaultParallelism * 2,
       scala.util.Try(df.sparkSession.conf
         .get("spark.sql.shuffle.partitions").toInt).getOrElse(200))
-    val sorted =
-      try {
-        val freq = toks.groupBy(col("tok")).agg(count(lit(1)).as("f"))
-        // DETACHED: the toks release right below would otherwise
-        // recache (invalidate) this entry the moment it materializes,
-        // and all THREE consumers would re-run the tokenize+rank agg
-        CacheOps.persistMaterializedDetached(toks.join(freq, "tok")
-          .repartition(cpuWidth, col("id"))
-          .groupBy(col("id"))
-          .agg(sort_array(collect_list(struct(col("f"), col("tok")))).as("st"))
-          .select(col("id"), transform(col("st"), e => e.getField("tok")).as("toks"),
-            size(col("st")).cast("long").as("n")))
-      } finally toks.unpersist(blocking = false)
-    try {
+    val freq = toks.groupBy(col("tok")).agg(count(lit(1)).as("f"))
+    // DETACHED: the toks release right below would otherwise recache
+    // (invalidate) this entry the moment it materializes, and all THREE
+    // consumers would re-run the tokenize+rank agg
+    val sorted = h.detached(toks.join(freq, "tok")
+      .repartition(cpuWidth, col("id"))
+      .groupBy(col("id"))
+      .agg(sort_array(collect_list(struct(col("f"), col("tok")))).as("st"))
+      .select(col("id"), transform(col("st"), e => e.getField("tok")).as("toks"),
+        size(col("st")).cast("long").as("n")))
+    h.release(toks)
     // the set size rides the bucket in the payload's high bits (id < 2^40,
     // n < 2^23) so the LENGTH filter — J ≥ t forces tDen·min(n_a,n_b) ≥
     // tNum·max(n_a,n_b), sets >5% apart in size at t=19/20 can never pair
@@ -328,7 +323,7 @@ object Dedup {
     // tasks (63.7 s task time) while the other half of the machine
     // idled. The repartitions sit where the joins need an exchange
     // anyway, so no new shuffle is added.
-    CacheOps.persistMaterializedDetached(cands
+    h.detached(cands
       .repartition(cpuWidth, col("id_a"))
       .join(sorted.select(col("id").as("id_a"), col("toks").as("__ta")), "id_a")
       .repartition(cpuWidth, col("id_b"))
@@ -342,7 +337,6 @@ object Dedup {
       .filter(lit(tDen.toLong) * col("inter") >= lit(tNum.toLong) * col("uni"))
       .select(col("id_a"), col("id_b"), col("inter"), col("uni"),
         (col("inter").cast("double") / col("uni").cast("double")).as("jd")))
-    } finally sorted.unpersist(blocking = false)
   }
 
   /** Verified near-duplicate pairs: LSH candidates filtered by true

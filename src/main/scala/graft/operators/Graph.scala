@@ -97,7 +97,7 @@ object Graph {
       s"pageRank needs salts >= 1 (or 0 = auto-detect), got $salts")
     val base = edges.select(Seq(col("src").cast("long"), col("dst").cast("long")) ++
       (if (weighted) Seq(col("w").cast("long")) else Nil): _*)
-    if (salts == 0) return LoopSession.holding { h =>
+    if (salts == 0) return CacheOps.holding { h =>
       val (b0, n) = h.persistCounted(base)
       rankLoop(b0, weighted, seeds, iterations, scale, derivedSalts(b0, n))
     }
@@ -310,7 +310,7 @@ object Graph {
     // e feeds the degree aggregation, the node universe AND the probe
     // side of the deg join: unpersisted, a join-shaped upstream edge
     // plan would execute three times inside the one build action
-    LoopSession.holding { h =>
+    CacheOps.holding { h =>
       val e = h.persist(checked)
       import org.apache.spark.sql.expressions.Window
       val deg = e.groupBy(col("src").as("id"))
@@ -355,7 +355,7 @@ object Graph {
   def pageRankFromIndex(spark: SparkSession,
                         table: String, iterations: Int = 5,
                         scale: Long = 1000000L): DataFrame =
-    LoopSession.holding(h =>
+    CacheOps.holding(h =>
       LoopSession.handBack(spark, indexRankPlan(h, spark, table, iterations, scale)))
 
   /** The composed (unmaterialized) loop plan over a [[buildGraphIndex]]
@@ -363,7 +363,7 @@ object Graph {
     * [[pageRankFromIndex]] materializes and releases; plan-shape audits
     * read the composed tree directly (a materialized result is just a
     * cache scan and hides the loop). */
-  private[graft] def indexRankPlan(held: LoopSession.Scratch, spark: SparkSession,
+  private[graft] def indexRankPlan(held: CacheOps.Scratch, spark: SparkSession,
                                    table: String, iterations: Int,
                                    scale: Long): DataFrame = {
     val idx = Bucketing.readBucketed(spark, table)
@@ -496,8 +496,8 @@ object Graph {
     *
     * Scale shape: per iteration two keyed joins of the persisted edge
     * frame against nodes-sized score frames + two aggregations; the
-    * per-half max is a 1-row action over the persisted partial (the
-    * scalar the SQL replay reads as a subquery); iterations are
+    * per-half max is a raw-RDD fold that fills the persisted partial
+    * (the scalar the SQL replay reads as a subquery); iterations are
     * [[LoopSession.sweep]] sweeps in the right-sized cloned loop
     * session. Returns (id, hub, auth) for
     * every node in the edge list. */
@@ -568,7 +568,7 @@ object Graph {
     val real = idx.filter(!col("self"))
     val eFwd = real.filter(forward).select(col("src"), col("dst"))
     val eRev = real.filter(!forward).select(col("src"), col("dst"))
-    LoopSession.holding { h =>
+    CacheOps.holding { h =>
       val (nodes, nNodes) =
         h.persistCounted(idx.filter(col("self")).select(col("src").as("id")))
       if (nNodes == 0) noScores(spark) // no graph (matches the oracle's joins)
@@ -585,19 +585,22 @@ object Graph {
                        eFwd: DataFrame, eRev: DataFrame, nodes: DataFrame,
                        iterations: Int, scale: Long): DataFrame = {
     // one half-iteration: pull `score` mass along the src-keyed `e`, into
-    // a persisted partial whose max action materializes it (one job per
-    // half), then rescale by that max — the (max · scale) product is
-    // overflow-checked on the value already in hand
-    def half(scratch: LoopSession.Scratch, e: DataFrame, from: DataFrame,
+    // a lazily persisted partial whose max fold fills it (one raw-RDD job
+    // per half, no SQL execution), then rescale by that max — the
+    // (max · scale) product is overflow-checked on the value already in hand
+    def half(scratch: CacheOps.Scratch, e: DataFrame, from: DataFrame,
              score: String, out: String): DataFrame = {
       val raw = scratch.persist(e.join(from.select(col("id").as("src"),
         col(score).as("s")), "src").groupBy(col("dst").as("id"))
         .agg(sum(col("s")).as("r")))
-      val row = raw.agg(max(col("r"))).head()
-      require(!row.isNullAt(0),
+      // (id, r) rows; None when the orientation has no edges
+      val top = LoopSession.fold(raw)(Option.empty[Long])((m, row) =>
+        if (row.isNullAt(1)) m else (m ++ Some(row.getLong(1))).maxOption)(
+        (a, b) => (a ++ b).maxOption)
+      require(top.nonEmpty,
         "hits: an orientation has no edges — the mutual " +
           "reinforcement needs both halves non-empty")
-      val m = row.getLong(0)
+      val m = top.get
       require(m <= Long.MaxValue / scale,
         s"hits: summed score $m would overflow at scale $scale " +
           s"(max-degree * scale^2 must stay below 2^63) — lower `scale`")
@@ -719,13 +722,13 @@ object Graph {
   /** `score(e, labels)` over `edges` persisted as `e` and its
     * [[labelPropagation]] `labels` after `sweeps` sweeps — the modularity
     * step and the gates that score or refine an LPA labeling. Both caches
-    * are held by one [[LoopSession.holding]] scratch: released when
+    * are held by one [[CacheOps.holding]] scratch: released when
     * `score` returns, and (blocking) when the label propagation or
     * `score` throws. The edge cache persists lazily: the label
     * propagation's own edge persist fills it. */
   private[graft] def scoreLabels(edges: DataFrame, sweeps: Int)
                                 (score: (DataFrame, DataFrame) => DataFrame): DataFrame =
-    LoopSession.holding { h =>
+    CacheOps.holding { h =>
       val e = h.persist(edges)
       score(e, h.hold(labelPropagation(e, sweeps)))
     }
@@ -962,7 +965,7 @@ object Graph {
       // the data — hangs by round 3 (measured: minutes on a 7-node
       // fixture). The composed sweeps between them reference their state
       // once per sweep and stay linear.
-      def flat(scratch: LoopSession.Scratch, df: DataFrame): DataFrame =
+      def flat(scratch: CacheOps.Scratch, df: DataFrame): DataFrame =
         Bridge.truncatePlan(scratch.persist(df))
       // Edge-shaped round frames (ae, ce) instead persist HASH-PARTITIONED
       // AND SORTED on their sweep-join key, NOT truncated (truncation
@@ -971,11 +974,11 @@ object Graph {
       // (the loop session vetoes broadcast and shuffled-hash) is
       // exchange-free and sort-free — only the nodes-sized label/mark
       // frame moves per sweep (guide §2.4).
-      def keyed(scratch: LoopSession.Scratch, df: DataFrame, key: String) =
+      def keyed(scratch: CacheOps.Scratch, df: DataFrame, key: String) =
         scratch.persist(df.repartition(col(key)).sortWithinPartitions(col(key)))
       // TRIM: a node with no active in-edge or no active out-edge is its
       // own SCC
-      def trim(scratch: LoopSession.Scratch, active: DataFrame): DataFrame = {
+      def trim(scratch: CacheOps.Scratch, active: DataFrame): DataFrame = {
         val aeR = scratch.persist(
           e.join(active.select(col("id").as("src")), Seq("src"), "left_semi")
             .join(active.select(col("id").as("dst")), Seq("dst"), "left_semi"))
@@ -990,7 +993,7 @@ object Graph {
       // through the sweeps' aggregations — single-reference, linear
       // plans). `allActive` skips the two edge-sized semi-joins, which
       // filter nothing while no node has been assigned yet.
-      def color(scratch: LoopSession.Scratch, active: DataFrame,
+      def color(scratch: CacheOps.Scratch, active: DataFrame,
                 allActive: Boolean): DataFrame = {
         val aeEdges =
           if (allActive) e
@@ -1132,7 +1135,7 @@ object Graph {
       // DETACHED: the oriented-edge release on return would otherwise
       // recache (invalidate) the result and re-run the wedge join on
       // first read
-      CacheOps.persistMaterializedDetached(triangles(g))
+      g.detached(triangles(g))
     }
 
   /** The (id, tri) plan of [[triangleCounts]] over the held edge frame
@@ -1185,7 +1188,7 @@ object Graph {
     * one edge persist. */
   def clusteringCoefficients(edges: DataFrame): DataFrame =
     LoopSession.onEdges(edges.select(col("a").cast("long"), col("b").cast("long"))) { g =>
-      CacheOps.persistMaterializedDetached(
+      g.detached(
         triangles(g).join(degreeFrame(g.frame), "id")
           .select(col("id"), col("tri"), col("deg"),
             (lit(2L) * col("tri")).as("cc_num"),
@@ -1219,7 +1222,7 @@ object Graph {
         .join(deg.select(col("id").as("b"), col("deg").as("dy")), "b")
       val num = col("n") * col("sxy") - col("sx") * col("sx")
       val den = col("n") * col("sxx") - col("sx") * col("sx")
-      CacheOps.persistMaterializedDetached(
+      g.detached(
         j.agg(count(lit(1)).as("n"), sum(col("dx")).as("sx"),
             sum(col("dx") * col("dx")).as("sxx"),
             sum(col("dx") * col("dy")).as("sxy"))
@@ -1729,7 +1732,7 @@ object Graph {
       // them per sweep)
       val labT = Bridge.truncatePlan(
         g.hold(louvainSweeps(g, Bridge.truncatePlan(lab0), sweeps)))
-      def composed(h: LoopSession.Scratch): DataFrame = h.persistMaterialized(
+      def composed(h: CacheOps.Scratch): DataFrame = h.persistMaterialized(
         Bridge.truncatePlan(mapping).join(
             labT.select(col("community").as("next"), col("id").as("community")),
             "community")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
+import CacheOps.Scratch
+
 /** ONE definition of how an iterative graph operator runs: its entry
   * ([[onEdges]]: the persisted edge frame, the right-sized cloned loop
   * session, and every cache the operator takes), and its persisted-state
@@ -39,15 +41,16 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   *     measurement at its call site); frames handed BACK to the caller
   *     are rebound to the caller's session, or downstream queries
   *     inherit the loop's single-partition/no-broadcast confs.
-  *  3. EVERY CACHE THROUGH THE HOLDER. Each cache the operator takes is
-  *     persisted through its [[Scratch]] ([[holding]] gives one to
-  *     operators with no edge frame of their own); [[Scratch.release]]
-  *     drops one early once nothing later reads it. A cache a sweep
-  *     step takes persists lazily, and the sweep's signal fills it
-  *     ([[sweep]], item 2).
-  *  4. RELEASE ON EXIT. When the body returns, every held cache but the
-  *     returned frame is released; when it throws, all of them are,
-  *     blocking, before the error propagates. */
+  *  3. EVERY CACHE THROUGH THE HOLDER. [[Edges]] is a
+  *     [[CacheOps.Scratch]]: each cache the operator takes goes through
+  *     it, under the holder contract stated once in [[CacheOps]]
+  *     (operators with no edge frame of their own open one with
+  *     [[CacheOps.holding]]). A cache a sweep step takes persists
+  *     lazily, and the sweep's signal fills it ([[sweep]], item 2).
+  *  4. RELEASE ON EXIT. As [[CacheOps]] item 4: on return every held
+  *     cache but the result is released, on a throw all of them,
+  *     blocking — the edge cache with the rest unless the body released
+  *     it earlier. */
 private[graft] object LoopSession {
 
   /** `rowsPerPartition` sizes the loop width to what the sweeps MOVE:
@@ -109,71 +112,29 @@ private[graft] object LoopSession {
     case object KeepAll extends Release
   }
 
-  /** The caches an operator holds: persisted here and released together
-    * — per sweep inside a [[sweep]] loop (once the sweep's state has
-    * materialized, or at once if anything throws), for the operator's
-    * lifetime under [[holding]] and [[onEdges]]. */
-  class Scratch private[LoopSession] (private var held: List[DataFrame] = Nil) {
-    /** Hold an already-persisted frame (a hand-back the operator reads
-      * but does not return). */
-    def hold(df: DataFrame): DataFrame = {
-      held ::= df
-      df
-    }
-    /** Persist `df` lazily: the first job that reads it fills it (inside
-      * a [[sweep]] step, that job is the sweep's signal). */
-    def persist(df: DataFrame): DataFrame = hold(df.persist(MEMORY_AND_DISK))
-    /** [[persist]], eagerly materialized by a count, which is returned. */
-    def persistCounted(df: DataFrame): (DataFrame, Long) = {
-      val p = persist(df)
-      (p, p.count())
-    }
-    def persistMaterialized(df: DataFrame): DataFrame = persistCounted(df)._1
-    /** Release `df` now: nothing the operator runs later reads it. */
-    def release(df: DataFrame): Unit = {
-      held = held.filterNot(_ eq df)
-      df.unpersist(blocking = false)
-    }
-    private[LoopSession] def releaseAll(blocking: Boolean, keep: Any = null): Unit = {
-      held.filterNot(_ eq keep.asInstanceOf[AnyRef]).foreach(_.unpersist(blocking))
-      held = Nil
-    }
-  }
-
   /** The holder an [[onEdges]] body gets: the persisted edge `frame` (in
     * the `caller` session), its row count, and the loop session sized
     * from that count. */
-  final class Edges private[LoopSession] (val frame: DataFrame, val rows: Long,
-                                          rowsPerPartition: Long, codegenCutoff: Long)
-      extends Scratch(List(frame)) {
-    val caller: SparkSession = frame.sparkSession
+  final class Edges private[LoopSession] (edges: DataFrame, rowsPerPartition: Long,
+                                          codegenCutoff: Long) extends Scratch {
+    val caller: SparkSession = edges.sparkSession
+    private lazy val counted = persistCounted(edges)
+    def frame: DataFrame = counted._1
+    def rows: Long = counted._2
     lazy val loop: SparkSession = forGraph(caller, rows, rowsPerPartition, codegenCutoff)
   }
 
-  /** Run `body` with an operator-lifetime [[Scratch]]: on return every
-    * cache it holds except the result is released, on a throw all of
-    * them, blocking. */
-  def holding[A](body: Scratch => A): A = within(new Scratch)(body)
-
   /** The ONE entry of a graph operator over an edge frame: `edges` (the
     * operator's shaped, lazy edge plan) is persisted and counted in one
-    * job, and `body` runs over the [[Edges]] holder, whose loop session
-    * `forGraph` sizes from the count with `rowsPerPartition` and
-    * `codegenCutoff`. Releases as [[holding]]; the edge cache goes with
-    * the rest unless `body` released it earlier. */
+    * job through the [[Edges]] holder, whose loop session `forGraph`
+    * sizes from the count with `rowsPerPartition` and `codegenCutoff`,
+    * and `body` runs over the holder. */
   def onEdges[A](edges: DataFrame, rowsPerPartition: Long = 1000000L,
-                 codegenCutoff: Long = 10000000L)(body: Edges => A): A = {
-    val (frame, rows) = CacheOps.persistMaterializedCounted(edges)
-    within(new Edges(frame, rows, rowsPerPartition, codegenCutoff))(body)
-  }
-
-  private def within[S <: Scratch, A](held: S)(body: S => A): A = {
-    val out =
-      try body(held)
-      catch { case t: Throwable => held.releaseAll(blocking = true); throw t }
-    held.releaseAll(blocking = false, keep = out)
-    out
-  }
+                 codegenCutoff: Long = 10000000L)(body: Edges => A): A =
+    CacheOps.within(new Edges(edges, rowsPerPartition, codegenCutoff)) { g =>
+      g.rows // the edge persist's count: the operator's first job
+      body(g)
+    }
 
   /** The ONE persisted-state loop every iterative operator runs:
     * `step(scratch, state, i)` maps sweep i's input state to a [[Sweep]],
@@ -196,8 +157,9 @@ private[graft] object LoopSession {
     *     cache the state reads, and yields the convergence test — no
     *     count per cache, no aggregate plan, no SQL execution. A step
     *     that needs a value before it can plan the state (HITS's
-    *     per-half max) runs that action itself, and it fills the
-    *     scratch it reads.
+    *     per-half max) runs a [[fold]] of its own over the scratch
+    *     cache it reads, which fills that cache: one more job, and
+    *     still no SQL execution.
     *  3. RELEASE ORDER. The predecessor (under [[Release.Predecessor]])
     *     and the sweep's [[Scratch]] caches go only after the signal has
     *     filled the new state.
@@ -235,7 +197,7 @@ private[graft] object LoopSession {
         sweeps += 1
       }
       val out = finish(held.reverse)
-      val result = if (out eq held.head) out else CacheOps.persistMaterializedDetached(out)
+      val result = if (out eq held.head) out else CacheOps.holding(_.detached(out))
       held.filterNot(_ eq result).foreach(_.unpersist(blocking = false))
       (Bridge.rebind(result, caller), sweeps)
     } catch { case t: Throwable =>
@@ -275,10 +237,10 @@ private[graft] object LoopSession {
   }
 
   /** Persist `result` detached, fill it with one raw-RDD count job
-    * ([[CacheOps.persistMaterializedDetached]]), and hand it back rebound
-    * to `caller` — the [[sweep]] hand-back, also used by the composed
+    * ([[CacheOps.Scratch.detached]]), and hand it back rebound to
+    * `caller` — the [[sweep]] hand-back, also used by the composed
     * fixed-count loops (rank, fixed-sweep SSSP), whose single final
     * action is this fill. */
   def handBack(caller: SparkSession, result: DataFrame): DataFrame =
-    Bridge.rebind(CacheOps.persistMaterializedDetached(result), caller)
+    Bridge.rebind(CacheOps.holding(_.detached(result)), caller)
 }

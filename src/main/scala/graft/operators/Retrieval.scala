@@ -88,20 +88,17 @@ object Retrieval {
                idCol: String = "doc_id", textCol: String = "text",
                qIdCol: String = "q_id", qTextCol: String = "q_text",
                k1: Double = 1.25, b: Double = 0.75,
-               scale: Double = 1048576.0): DataFrame = {
+               scale: Double = 1048576.0): DataFrame = CacheOps.holding { h =>
     // the tokenized corpus feeds the length stats, the scoring join's
     // length side, AND the postings explode: left lazy, the corpus
     // scan+tokenize executes three times per run. Persist it, materialize
     // the (k per query)-sized result, release — the index path
     // ([[buildBm25Index]]) remains the build-once answer at 100 TB; this
     // keeps the direct path one-pass too.
-    val t = docs.select(col(idCol), toks(col(textCol)).as("__t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // DETACHED: the t release right below would otherwise recache
+    val t = h.persist(docs.select(col(idCol), toks(col(textCol)).as("__t")))
+    // DETACHED: the t release on return would otherwise recache
     // (invalidate) the result and re-run the tokenize on first read
-    try CacheOps.persistMaterializedDetached(
-      bm25PlanOn(t, queries, k, idCol, qIdCol, qTextCol, k1, b, scale))
-    finally t.unpersist(blocking = false)
+    h.detached(bm25PlanOn(t, queries, k, idCol, qIdCol, qTextCol, k1, b, scale))
   }
 
   /** The COMPOSED direct-BM25 plan over a (persisted) tokenized corpus —

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (SURVEY §2.5 #48-50):
@@ -142,20 +141,13 @@ object Similarity {
     * construction because its input is pre-capped. */
   private def bandedCosinePairs(sig0: DataFrame, threshold: Double,
                                 bands: Int, bandBits: Int,
-                                maxBucket: Int): DataFrame = {
+                                maxBucket: Int): DataFrame = CacheOps.holding { h =>
     val idType = sig0.schema("id").dataType
     // the signature frame feeds the banding explode AND the capped-id
     // vector fetch-back join — and callers hand in (possibly join-shaped)
     // signature plans that would re-execute per reference. Persist here,
     // materialize the pairs-sized result, release.
-    val sig = sig0.persist(MEMORY_AND_DISK)
-    try bandedCosinePairsOn(sig, threshold, bands, bandBits, maxBucket, idType)
-    finally sig.unpersist(blocking = false)
-  }
-
-  private def bandedCosinePairsOn(sig: DataFrame, threshold: Double,
-                                  bands: Int, bandBits: Int, maxBucket: Int,
-                                  idType: org.apache.spark.sql.types.DataType): DataFrame = {
+    val sig = h.persist(sig0)
     val mask = (1L << bandBits) - 1
     val banded = sig.select(col("id"), col("v"),
       posexplode(array((0 until bands).map(bi =>
@@ -179,10 +171,10 @@ object Similarity {
     val buckets = cappedIds.join(sig.select(col("id"), col("v")), "id")
       .groupBy(col("band"), col("bucket"))
       .agg(sort_array(collect_list(struct(col("id"), col("v")))).as("ms"))
-    // DETACHED: bandedCosinePairs releases sig right after this
-    // materializes — an attached entry would be recached (invalidated)
-    // and every later read would re-run the banding + fetch-back
-    CacheOps.persistMaterializedDetached(
+    // DETACHED: sig is released right after this materializes — an
+    // attached entry would be recached (invalidated) and every later
+    // read would re-run the banding + fetch-back
+    h.detached(
       buckets.select(explode(flatten(transform(col("ms"),
           (a, i) => transform(slice(col("ms"), i + 2, size(col("ms"))),
             b => struct(a.getField("id").as("a"), b.getField("id").as("b"),
@@ -199,11 +191,11 @@ object Similarity {
     * shuffles k·partitions buffers, not |corpus|·dim exploded rows;
     * centroids themselves never exceed k·dim doubles. */
   def trainCentroids(corpus: DataFrame, k: Int = 16, iterations: Int = 3,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+                     idCol: String = "vec_id", vecCol: String = "embedding")
+      : DataFrame = CacheOps.holding { h =>
     // iterative working set: cache the casted vectors once — every Lloyd
-    // iteration (and the caller's final assignment) re-reads them
-    val vecs = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // iteration re-reads them
+    val vecs = h.persist(corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v")))
     // seed selection, two deterministic stages:
     // (1) a candidate POOL of 8k vectors in xxhash64(id) order — TakeOrdered
     //     collects exactly 8k rows (a per-partition heap, never a global
@@ -273,7 +265,6 @@ object Similarity {
           transform(col("s"), x => x / col("n")).as("c_vec"))
     }
     val result = centroids.collect()  // materialize before releasing the cache
-    vecs.unpersist(blocking = false)
     corpus.sparkSession.createDataFrame(
       corpus.sparkSession.sparkContext.parallelize(result.toSeq, 1),
       centroids.schema)
@@ -312,30 +303,24 @@ object Similarity {
     // anchor vector fetch, candidate side, final anti-join): left lazy,
     // Catalyst re-executes the corpus-scale assign per reference — at
     // 100 TB that is four corpus scans plus four broadcast-join+argmax
-    // passes. Persist, hand to the shared on-cells pass, release.
-    val cells = assignCells(corpus, broadcast(centroids), idCol, vecCol)
-      .select(col(idCol).as("id"), col("__v").as("v"), col("cell"))
-      .persist(MEMORY_AND_DISK)
-    try semDedupOnCells(cells, tau, maxCell,
-      corpus.schema(idCol).dataType, idCol)
-    finally cells.unpersist(blocking = false)
+    // passes. Persist, materialize the kept frame DETACHED (the cell
+    // release on return would otherwise recache it), release.
+    CacheOps.holding(h => h.detached(semDedupPlanOnCells(
+      h.persist(cellFrame(corpus, centroids, idCol, vecCol)), tau, maxCell,
+      corpus.schema(idCol).dataType, idCol)))
   }
 
-  /** Keep-first SemDeDup over an ALREADY-ASSIGNED `(id, v, cell)` frame
-    * (callers persist it — every stage here references it). Returns the
-    * MATERIALIZED (idCol, cell) kept frame, so callers can release the
-    * cell cache on return. */
-  private def semDedupOnCells(cells: DataFrame, tau: Double, maxCell: Int,
-                              idT: org.apache.spark.sql.types.DataType,
-                              idCol: String): DataFrame =
-    // DETACHED: callers release the cell cache right after this
-    // materializes — an attached entry would be recached (invalidated)
-    CacheOps.persistMaterializedDetached(
-      semDedupPlanOnCells(cells, tau, maxCell, idT, idCol))
+  /** The assigned `(id, v, cell)` frame of `corpus` over `centroids`
+    * ([[assignCells]]), the input of every SemDeDup pass. */
+  private def cellFrame(corpus: DataFrame, centroids: DataFrame,
+                        idCol: String, vecCol: String): DataFrame =
+    assignCells(corpus, broadcast(centroids), idCol, vecCol)
+      .select(col(idCol).as("id"), col("__v").as("v"), col("cell"))
 
   /** The COMPOSED keep-first plan over an assigned `(id, v, cell)` frame
-    * — [[semDedupOnCells]] materializes it DETACHED (a flat cache scan),
-    * so plan-shape audits read this composed tree instead. */
+    * (callers persist it — every stage here references it); the public
+    * passes materialize it DETACHED (a flat cache scan), so plan-shape
+    * audits read this composed tree instead. */
   private[graft] def semDedupPlanOnCells(
       cells: DataFrame, tau: Double, maxCell: Int,
       idT: org.apache.spark.sql.types.DataType,
@@ -375,13 +360,11 @@ object Similarity {
     * same bounded min-k heap as [[semDedup]]. */
   def buildSemDedupIndex(corpus: DataFrame, centroids: DataFrame, table: String,
                          buckets: Int, idCol: String = "vec_id",
-                         vecCol: String = "embedding", maxCell: Int = 4096): Unit = {
+                         vecCol: String = "embedding",
+                         maxCell: Int = 4096): Unit = CacheOps.holding { h =>
     // referenced by the anchor agg AND the vector fetch-back join inside
     // the one build action: persist or the corpus assign runs twice
-    val cells = assignCells(corpus, broadcast(centroids), idCol, vecCol)
-      .select(col(idCol).as("id"), col("__v").as("v"), col("cell"))
-      .persist(MEMORY_AND_DISK)
-    try {
+    val cells = h.persist(cellFrame(corpus, centroids, idCol, vecCol))
     val anchorIds = cells.groupBy(col("cell"))
       .agg(graft.plans.Native.minKByKey(
         col("id").cast("long"), col("id").cast("long"), maxCell).as("ks"))
@@ -391,7 +374,6 @@ object Similarity {
       cells.join(anchorIds, cells("id").cast("long") === col("aid"))
         .select(col("cell"), col("id"), col("v")),
       table, buckets, keys = Seq("cell"))
-    } finally cells.unpersist(blocking = false)
   }
 
   /** The cross-drop probe over an assigned `(id, v, cell)` frame and a
@@ -416,28 +398,20 @@ object Similarity {
                                        table: String, tau: Double,
                                        idCol: String = "vec_id",
                                        vecCol: String = "embedding"): DataFrame =
-    crossDropIds(
-      assignCells(batch, broadcast(centroids), idCol, vecCol)
-        .select(col(idCol).as("id"), col("__v").as("v"), col("cell")),
-      table, tau)
+    crossDropIds(cellFrame(batch, centroids, idCol, vecCol), table, tau)
 
   /** The COMPOSED whole-pipeline [[semDedup]] plan for plan-shape
-    * audits (the public method's detached result is a flat cache scan):
-    * returns (plan, persisted cells frame) — the PERSISTED cells mirror
-    * the production shape (the two pair-join branches read one cached
-    * assignment), and the CALLER owns the cells' release. */
-  private[graft] def semDedupPlanForAudit(corpus: DataFrame,
+    * audits (the public method's detached result is a flat cache scan),
+    * its cells persisted through `held` — the PERSISTED cells mirror the
+    * production shape (the two pair-join branches read one cached
+    * assignment). */
+  private[graft] def semDedupPlanForAudit(held: CacheOps.Scratch, corpus: DataFrame,
                                           centroids: DataFrame, tau: Double,
                                           idCol: String = "vec_id",
                                           vecCol: String = "embedding",
-                                          maxCell: Int = 4096)
-      : (DataFrame, DataFrame) = {
-    val cells = assignCells(corpus, broadcast(centroids), idCol, vecCol)
-      .select(col(idCol).as("id"), col("__v").as("v"), col("cell"))
-      .persist(MEMORY_AND_DISK)
-    (semDedupPlanOnCells(cells, tau, maxCell,
-      corpus.schema(idCol).dataType, idCol), cells)
-  }
+                                          maxCell: Int = 4096): DataFrame =
+    semDedupPlanOnCells(held.persist(cellFrame(corpus, centroids, idCol, vecCol)),
+      tau, maxCell, corpus.schema(idCol).dataType, idCol)
 
   /** Incremental semantic dedup: drop batch vectors tau-similar to ANY
     * indexed corpus anchor in their assigned cell, then run keep-first
@@ -447,24 +421,18 @@ object Similarity {
   def semDedupAgainstIndex(batch: DataFrame, centroids: DataFrame, table: String,
                            tau: Double, idCol: String = "vec_id",
                            vecCol: String = "embedding",
-                           maxCell: Int = 4096): DataFrame = {
+                           maxCell: Int = 4096): DataFrame = CacheOps.holding { h =>
     // assign the batch ONCE and persist: the cross-drop, the anti-join,
     // and every stage of the intra-batch keep-first pass reuse the same
     // assignment (it is row-local and deterministic) — re-deriving it per
     // stage would rescan the batch embeddings several more times
-    val cells = assignCells(batch, broadcast(centroids), idCol, vecCol)
-      .select(col(idCol).as("id"), col("__v").as("v"), col("cell"))
-      .persist(MEMORY_AND_DISK)
-    try {
-      val dropped = crossDropIds(cells, table, tau)
-        .select(col("id").as("dropid"))
-      val freshCells = cells.join(dropped,
-          cells("id") === dropped("dropid"), "left_anti")
-        .persist(MEMORY_AND_DISK)
-      try semDedupOnCells(freshCells, tau, maxCell,
-        batch.schema(idCol).dataType, idCol)
-      finally freshCells.unpersist(blocking = false)
-    } finally cells.unpersist(blocking = false)
+    val cells = h.persist(cellFrame(batch, centroids, idCol, vecCol))
+    val dropped = crossDropIds(cells, table, tau)
+      .select(col("id").as("dropid"))
+    val freshCells = h.persist(cells.join(dropped,
+      cells("id") === dropped("dropid"), "left_anti"))
+    h.detached(semDedupPlanOnCells(freshCells, tau, maxCell,
+      batch.schema(idCol).dataType, idCol))
   }
 
   /** IVF-style ANN with trained coarse centroids: every corpus vector is
@@ -635,13 +603,10 @@ object Similarity {
     // released on return (the LoopSession.handBack discipline); callers doing
     // further passes over the graph (mutual filter, clustering sweeps)
     // then read the k·|corpus| edge cache, never the vectors again.
-    val ranked = knnRankedPlan(corpus, cents, nprobe, idCol, vecCol)
-      .persist(MEMORY_AND_DISK)
-    // DETACHED: the ranked release right below would otherwise
-    // recache (invalidate) the edge list just materialized
-    try CacheOps.persistMaterializedDetached(
-      knnGraphPlanOn(ranked, k, idCol, maxCell))
-    finally ranked.unpersist(blocking = false)
+    // DETACHED: the ranked release on return would otherwise recache
+    // (invalidate) the edge list just materialized
+    CacheOps.holding(h => h.detached(knnGraphPlanOn(
+      h.persist(knnRankedPlan(corpus, cents, nprobe, idCol, vecCol)), k, idCol, maxCell)))
   }
 
   /** The probe-ranked (id, top-nprobe cells, vector) frame feeding

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 /** 2-D Pareto frontier (skyline) over integral signal columns — the
   * multi-signal curation shape: "keep every document not dominated on
@@ -46,33 +45,30 @@ object Skyline {
     * with a loud error instead of a silent driver OOM. The width never
     * changes the answer — it only shapes the evaluation. */
   def paretoFront2(df: DataFrame, xCol: String, yCol: String,
-                   bucketWidth: Long = 0L): DataFrame = {
+                   bucketWidth: Long = 0L): DataFrame = CacheOps.holding { h =>
     val base = df
       .withColumn("__x", col(xCol).cast("bigint"))
       .withColumn("__y", col(yCol).cast("bigint"))
       .filter(col("__x").isNotNull && col("__y").isNotNull)
     // distinct-x groups; referenced by the bucket-max agg AND the exact
     // in-bucket pass — persist so the corpus collapse runs once
-    val g0 = base.groupBy(col("__x")).agg(max(col("__y")).as("__my"))
-      .persist(MEMORY_AND_DISK)
-    try {
-      // one cheap agg over the persisted distinct-x groups sizes the
-      // buckets (and the materializing job the persist needs anyway)
-      val ext = g0.agg(min(col("__x")), max(col("__x"))).head()
-      val span = if (ext.isNullAt(0)) 0L
-        else math.subtractExact(ext.getLong(1), ext.getLong(0))
-      val width =
-        if (bucketWidth > 0) bucketWidth
-        else span / 4096L + 1L
-      require(span / width < (1L << 20),
-        s"paretoFront2: bucketWidth=$bucketWidth over an x span of $span " +
-          s"implies ${span / width + 1} driver-collected bucket maxima — " +
-          "widen the buckets (or leave bucketWidth unset to auto-size)")
-      paretoFront2Bucketed(df, base, g0, width)
-    } finally g0.unpersist(blocking = false)
+    val g0 = h.persist(base.groupBy(col("__x")).agg(max(col("__y")).as("__my")))
+    // one cheap agg over the persisted distinct-x groups sizes the
+    // buckets (and the materializing job the persist needs anyway)
+    val ext = g0.agg(min(col("__x")), max(col("__x"))).head()
+    val span = if (ext.isNullAt(0)) 0L
+      else math.subtractExact(ext.getLong(1), ext.getLong(0))
+    val width =
+      if (bucketWidth > 0) bucketWidth
+      else span / 4096L + 1L
+    require(span / width < (1L << 20),
+      s"paretoFront2: bucketWidth=$bucketWidth over an x span of $span " +
+        s"implies ${span / width + 1} driver-collected bucket maxima — " +
+        "widen the buckets (or leave bucketWidth unset to auto-size)")
+    paretoFront2Bucketed(h, df, base, g0, width)
   }
 
-  private def paretoFront2Bucketed(df: DataFrame, base: DataFrame,
+  private def paretoFront2Bucketed(h: CacheOps.Scratch, df: DataFrame, base: DataFrame,
                                    g0: DataFrame, bucketWidth: Long): DataFrame = {
     val g = g0.withColumn("__bk", expr(s"__x DIV ${bucketWidth}L"))
     locally {
@@ -96,7 +92,7 @@ object Skyline {
         .select(col("__x"), col("__my"))
       // frontier-sized by construction — broadcast keeps the corpus side
       // exchange-free; materialize before g0's cache goes away
-      CacheOps.persistMaterializedDetached(
+      h.detached(
         base.join(broadcast(front), Seq("__x"))
           .filter(col("__y") === col("__my"))
           .select(df.columns.map(col): _*))

@@ -156,32 +156,22 @@ object EventStream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
         import org.apache.spark.sql.functions.col
-        // each batch's localCheckpoint scratch is released once consumed:
-        // a stream runs unboundedly, so anything left in the block manager
-        // per batch is a leak that grows with stream lifetime (the
+        // each batch's checkpoint is released once consumed: a stream
+        // runs unboundedly, so anything left in the block manager per
+        // batch is a leak that grows with stream lifetime (the
         // StreamingSpec 3-batch ballast audit pins this)
-        if (!spark.catalog.tableExists(indexTable)) {
-          val first = graft.operators.Dedup.exact(batch, idCol, col(keyCol))
-            .localCheckpoint()
-          try {
-            graft.operators.Dedup.buildFingerprintIndex(
-              first, indexTable, indexBuckets, idCol, col(keyCol))
-            write(first)
-          } finally org.apache.spark.sql.graftbridge.Bridge
-            .releaseLocalCheckpoint(first)
-        } else {
-          // localCheckpoint BEFORE the append: the table write invalidates
-          // caches referencing the index, and a recompute would dedup the
-          // batch against its own just-appended fingerprints
-          val kept = graft.operators.Dedup.dedupAgainstIndex(
-              batch, indexTable, idCol, col(keyCol))
-            .localCheckpoint()
-          try {
-            graft.operators.Dedup.appendToIndex(
-              kept, indexTable, indexBuckets, idCol, col(keyCol))
-            write(kept)
-          } finally org.apache.spark.sql.graftbridge.Bridge
-            .releaseLocalCheckpoint(kept)
+        // The checkpoint is taken BEFORE the index write: the write
+        // invalidates caches referencing the index, and a recompute would
+        // dedup the batch against its own just-appended fingerprints.
+        graft.operators.CacheOps.holding { h =>
+          import graft.operators.Dedup
+          val fresh = !spark.catalog.tableExists(indexTable)
+          val kept = h.checkpoint(
+            if (fresh) Dedup.exact(batch, idCol, col(keyCol))
+            else Dedup.dedupAgainstIndex(batch, indexTable, idCol, col(keyCol)))
+          if (fresh) Dedup.buildFingerprintIndex(kept, indexTable, indexBuckets, idCol, col(keyCol))
+          else Dedup.appendToIndex(kept, indexTable, indexBuckets, idCol, col(keyCol))
+          write(kept)
         }
       }.start()
 

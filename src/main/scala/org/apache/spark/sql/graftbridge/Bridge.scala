@@ -134,10 +134,11 @@ object Bridge {
     * checkpoint persists its RDD directly). Call ONLY when the frame is
     * fully consumed — the checkpoint's lineage is truncated, so the data
     * cannot be recomputed afterwards. */
-  def releaseLocalCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
+  def releaseLocalCheckpoint(df: org.apache.spark.sql.DataFrame,
+                             blocking: Boolean = false): Unit =
     ClassicConversions.castToImpl(df).queryExecution.analyzed.foreach {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
+        l.rdd.unpersist(blocking)
       case _ => ()
     }
 

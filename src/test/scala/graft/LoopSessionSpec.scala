@@ -17,19 +17,6 @@ import org.apache.spark.sql.graftbridge.Bridge
 class LoopSessionSpec extends SparkSpec {
   import spark.implicits._
 
-  private def clearCaches(): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-  }
-
-  private def assertNoCaches(what: String): Unit = {
-    val rdds = spark.sparkContext.getPersistentRDDs
-    assert(rdds.isEmpty, s"$what left ${rdds.size} persisted RDDs")
-    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sharedState.cacheManager
-    assert(cm.isEmpty, s"$what left CacheManager entries")
-  }
-
   /** A loop whose step persists scratch and throws at sweep 2. */
   private def failingLoop(policy: LoopSession.Release): Unit =
     LoopSession.sweep(spark, spark.range(20).toDF("id"), 5, policy,
@@ -241,36 +228,33 @@ class LoopSessionSpec extends SparkSpec {
     // forward rows run even -> odd, so the symmetrized build's reverse
     // rows are the ones with an odd src
     val fwd = directed.select((col("src") * 2L).as("src"), (col("dst") * 2L + 1L).as("dst"))
-    spark.sql("DROP TABLE IF EXISTS loop_idx_spec")
-    Graph.buildGraphIndex(fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst"))),
-      "loop_idx_spec", buckets = 2)
-    try {
-      // the same rows, but reading a real row's dst throws (self rows
-      // pass, so the node frame persists before the failure)
-      spark.read.table("loop_idx_spec").withColumn("dst",
-          when(col("self"), col("dst"))
-            .when(assert_true(col("dst") < 0L, lit("input fails")).isNull, col("dst")))
-        .createOrReplaceTempView("loop_idx_spec_bad")
-      val forward = col("src") % 2L === 0L
-      Seq[(String, String => DataFrame)](
-        ("pageRankFromIndex", t => Graph.pageRankFromIndex(spark, t)),
-        ("hitsFromIndex", t => Graph.hitsFromIndex(spark, t, forward)),
-        ("randomWalksFromIndex", t => Graph.randomWalksFromIndex(spark, t, steps = 3)))
-        .foreach { case (name, run) =>
-          clearCaches()
-          val out = run("loop_idx_spec")
-          assert(out.storageLevel.useMemory, s"$name returned an uncached result")
-          assert(spark.sparkContext.getPersistentRDDs.size == 1,
-            s"$name left ${spark.sparkContext.getPersistentRDDs.size} persisted RDDs")
-          out.unpersist(blocking = true)
-          assertNoCaches(s"released $name result")
-          val err = intercept[Exception](run("loop_idx_spec_bad"))
-          assert(causedBy(err, "input fails"), s"$name failed for another reason: $err")
-          assertNoCaches(s"failed $name")
-        }
-    } finally {
-      spark.sql("DROP VIEW IF EXISTS loop_idx_spec_bad")
-      spark.sql("DROP TABLE IF EXISTS loop_idx_spec")
+    withGraphIndex(fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst"))),
+      "loop_idx_spec", buckets = 2) {
+      try {
+        // the same rows, but reading a real row's dst throws (self rows
+        // pass, so the node frame persists before the failure)
+        spark.read.table("loop_idx_spec").withColumn("dst",
+            when(col("self"), col("dst"))
+              .when(assert_true(col("dst") < 0L, lit("input fails")).isNull, col("dst")))
+          .createOrReplaceTempView("loop_idx_spec_bad")
+        val forward = col("src") % 2L === 0L
+        Seq[(String, String => DataFrame)](
+          ("pageRankFromIndex", t => Graph.pageRankFromIndex(spark, t)),
+          ("hitsFromIndex", t => Graph.hitsFromIndex(spark, t, forward)),
+          ("randomWalksFromIndex", t => Graph.randomWalksFromIndex(spark, t, steps = 3)))
+          .foreach { case (name, run) =>
+            clearCaches()
+            val out = run("loop_idx_spec")
+            assert(out.storageLevel.useMemory, s"$name returned an uncached result")
+            assert(spark.sparkContext.getPersistentRDDs.size == 1,
+              s"$name left ${spark.sparkContext.getPersistentRDDs.size} persisted RDDs")
+            out.unpersist(blocking = true)
+            assertNoCaches(s"released $name result")
+            val err = intercept[Exception](run("loop_idx_spec_bad"))
+            assert(causedBy(err, "input fails"), s"$name failed for another reason: $err")
+            assertNoCaches(s"failed $name")
+          }
+      } finally spark.sql("DROP VIEW IF EXISTS loop_idx_spec_bad")
     }
   }
 
@@ -304,6 +288,14 @@ class LoopSessionSpec extends SparkSpec {
     assert(jobs.size == 4, s"labelPropagation ran ${jobs.size} jobs for 4 sweeps")
     assert(jobs.forall(_.sqlDesc.isEmpty) && sqls == 1L,
       s"labelPropagation opened ${sqls - 1} SQL executions after its edge persist")
+    // a fixed-sweep hits loop: each sweep's two per-half max folds, then
+    // its signal (iterations 3 against 1: two sweeps more)
+    val Seq((hits1, hitsSqls1), (hits3, hitsSqls3)) =
+      Seq(1, 3).map(n => jobsAfterEdgePersist(Graph.hits(directed, iterations = n)))
+    assert(hits3.size - hits1.size == 2 * 3,
+      s"hits ran ${hits3.size - hits1.size} jobs for 2 more sweeps")
+    assert(hits3.forall(_.sqlDesc.isEmpty) && hitsSqls3 == hitsSqls1,
+      s"hits opened ${hitsSqls3 - hitsSqls1} SQL executions in 2 more sweeps")
   }
 
   /** Janino compiles so far in this JVM. */

@@ -12,7 +12,8 @@ import scala.util.Using
   * session or define a listener of its own. Every source a config can
   * name is built by `Connector.fromConfig`, and no other exists. Every
   * graph operator enters through `LoopSession.onEdges`, the one caller of
-  * `LoopSession.forGraph`. */
+  * `LoopSession.forGraph`, and every operator cache goes through the
+  * `CacheOps` holder. */
 class OneFactorySpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -39,6 +40,13 @@ class OneFactorySpec extends AnyFunSuite {
 
   test("LoopSession.forGraph( appears only in operators/LoopSession.scala") {
     assert(sourcesMatching("""\bforGraph\(""") == Set("operators/LoopSession.scala"))
+  }
+
+  test("operator and streaming caches are taken and released only in CacheOps and LoopSession") {
+    val cacheCalls = """unpersist\(|localCheckpoint\(|MEMORY_AND_DISK|StorageLevel|getPersistentRDDs"""
+    assert(sourcesMatching(cacheCalls).filter(f =>
+        f.startsWith("operators/") || f.startsWith("streaming/")) ==
+      Set("operators/CacheOps.scala", "operators/LoopSession.scala"))
   }
 
   test("every Connector class in main sources is built by Connector.fromConfig") {

@@ -1995,28 +1995,24 @@ class OperatorsSpec extends SparkSpec {
       df.unpersist()
       rows.toSet
     }
-    spark.sql("DROP TABLE IF EXISTS rw_idx_spec")
-    Graph.buildGraphIndex(sym(dirEdges), "rw_idx_spec", buckets = 4)
-    try {
+    withGraphIndex(sym(dirEdges), "rw_idx_spec", buckets = 4) {
       val direct = corpus(Graph.randomWalks(sym(dirEdges), steps = 5,
         walksPerNode = 2))
       val fromIdx = corpus(Graph.randomWalksFromIndex(spark, "rw_idx_spec",
         steps = 5, walksPerNode = 2))
       assert(fromIdx == direct, "layout must change the plan, never a hop")
-    } finally spark.sql("DROP TABLE IF EXISTS rw_idx_spec")
+    }
     // weighted build: parallel-free weighted edges, same equivalence
     val wEdges = Seq((1L,2L,3L),(1L,3L,1L),(2L,4L,2L),(3L,4L,1L),(4L,1L,5L))
     val wDf = (wEdges ++ wEdges.map(e => (e._2, e._1, e._3)))
       .toDF("src", "dst", "w")
-    spark.sql("DROP TABLE IF EXISTS rw_widx_spec")
-    Graph.buildGraphIndex(wDf, "rw_widx_spec", buckets = 4)
-    try {
+    withGraphIndex(wDf, "rw_widx_spec", buckets = 4) {
       val direct = corpus(Graph.randomWalks(wDf, steps = 5, walksPerNode = 2))
       val fromIdx = corpus(Graph.randomWalksFromIndex(spark, "rw_widx_spec",
         steps = 5, walksPerNode = 2))
       assert(fromIdx == direct,
         "weighted layout must change the plan, never a hop")
-    } finally spark.sql("DROP TABLE IF EXISTS rw_widx_spec")
+    }
   }
 
   test("louvain step: ideal partition is a fixpoint; refinement raises Q from singletons") {

@@ -276,10 +276,9 @@ class PlansSpec extends SparkSpec {
     val cents = e.filter(col("vec_id") < 8)
       .select(col("vec_id").cast("int").as("c_id"),
         operators.Similarity.asDouble(col("embedding")).as("c_vec"))
-    val (plan, cells) =
-      operators.Similarity.semDedupPlanForAudit(e, cents, tau = 0.3)
-    try {
-      val s = planString(plan)
+    operators.CacheOps.holding { held =>
+      val s = planString(
+        operators.Similarity.semDedupPlanForAudit(held, e, cents, tau = 0.3))
       // centroid fan-out is a broadcast nested loop over k rows (fine);
       // the PAIR join must be keyed on cell, never all-pairs
       assert(!s.contains("CartesianProduct"), s)
@@ -289,7 +288,7 @@ class PlansSpec extends SparkSpec {
       // corpus-scale assign runs once, never per branch
       assert("InMemoryTableScan".r.findAllIn(s).size >= 2,
         s"both pair-join branches must read the cached cell assignment:\n$s")
-    } finally cells.unpersist(blocking = true)
+    }
   }
 
   test("histogram percentiles: cumulative and total sums share ONE Window operator") {
@@ -625,7 +624,7 @@ class PlansSpec extends SparkSpec {
     // gate's persisted result replaces the whole tree with a cache scan.
     spark.catalog.clearCache()
     val table = queries.GateIndex.gatePrefix(spark, "graft_graph_gate", sf)
-    val plan = operators.LoopSession.holding(held =>
+    val plan = operators.CacheOps.holding(held =>
       executed(operators.Graph.indexRankPlan(held, spark, table, 5, 1000000L)))
     val joins = nodes(plan).flatMap {
       case j: SortMergeJoinExec => j.children
